@@ -31,29 +31,39 @@ def _fresh_cache(spark):
     yield
 
 
-def _plan(df) -> str:
-    p = df._sc._jvm.PythonSQLUtils.explainString(
+def _explain(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
-    # Plan strings are capped (session.py maxPlanStringLength, ~2x
-    # headroom over the largest current plan). A plan outgrowing the
-    # cap is silently truncated with a marker — against which every
-    # absence/count assertion below would pass VACUOUSLY (r15 ADVICE:
-    # "'SortMergeJoin' not in p" is true of any truncated tail). Fail
-    # loudly instead so the cap gets raised with the plan.
+
+
+def _plan(df) -> str:
+    """The query's formatted plan plus the plans of the relations its
+    build materialised (``tracked_persist`` checkpoints read back as
+    ``Scan ExistingRDD``, so their subtrees live only in those)."""
+    from weatherflow_spark.operators.caching import materialised_plans
+
+    p = "\n".join([_explain(df), *materialised_plans()])
+    # A plan that outgrew spark.sql.maxPlanStringLength is truncated
+    # with a marker, against which every absence/count assertion below
+    # would pass VACUOUSLY ("'SortMergeJoin' not in p" is true of any
+    # truncated tail). Fail loudly instead.
     assert "more characters" not in p and "Truncated" not in p, (
-        "formatted plan hit spark.sql.maxPlanStringLength — raise the "
-        "cap in session.py before trusting any plan audit"
+        "formatted plan hit spark.sql.maxPlanStringLength"
     )
     return p
 
 
 def _detail_headers(plan: str, node: str) -> list[str]:
     """Unique physical nodes of a type, counted via the formatted
-    explain's detail-section headers (``(N) NodeName``) — one line per
-    node, no double counting from the tree section or from cached-plan
-    serializations inside InMemoryRelation arguments."""
-    return re.findall(rf"^\({{1}}\d+\) {re.escape(node)}\s*$", plan, flags=re.M)
+    explain's detail-section headers (``(N) NodeName``, plus the
+    ``[codegen id : K]`` suffix outside AQE) — one line per node, no
+    double counting from the tree section."""
+    return re.findall(
+        rf"^\(\d+\) {re.escape(node)}(?: \[codegen id : \d+\])?\s*$",
+        plan,
+        flags=re.M,
+    )
 
 
 def _detail_blocks(plan: str, node: str) -> list[str]:
@@ -576,10 +586,10 @@ def test_lp_round_plan_constant(spark):
     consumes the previous labels twice, so an unpersisted loop doubles
     the physical plan per round (measured r6: 180 parquet scans / 262
     Exchanges at LP_ROUNDS=3). With the per-round tracked_persist each
-    round plans against the previous round's InMemoryRelation, so the
-    printed plan grows LINEARLY (one nested cached block per round),
-    never geometrically — asserted as constant node-count increments
-    across rounds."""
+    round plans against the previous round's checkpoint, so the audited
+    plan (query plan plus every materialised round) grows LINEARLY (one
+    round's plan per round), never geometrically — asserted as constant
+    node-count increments across rounds."""
     from weatherflow_spark.operators.caching import tracked_persist
     from weatherflow_spark.plans.iterative import _lp_round
 
@@ -609,14 +619,15 @@ def test_dedup_clusters_plan_is_linear_in_rounds(spark):
     """The full q_dedup_clusters physical plan: r6 measured 180
     parquet scans / 262 Exchanges from the unpersisted loop doubling
     per round. With per-round persists the MinHash pipeline plans its
-    scans once and each round adds one cached block — single-digit
-    scan/exchange counts at LP_ROUNDS=3."""
+    scans once and each round reads the previous round's checkpoint —
+    single-digit scan/exchange counts at LP_ROUNDS=3, counted over the
+    query plan plus every checkpointed round's plan."""
     p = _plan(QUERIES["q_dedup_clusters"](spark, SF_SMALL))
     scans = _detail_headers(p, "Scan parquet")
     exchanges = _detail_headers(p, "Exchange")
     assert len(scans) <= 6, f"{len(scans)} parquet scans — lineage blowup is back:\n{p}"
     assert len(exchanges) <= 20, f"{len(exchanges)} Exchanges — lineage blowup:\n{p}"
-    assert _detail_headers(p, "InMemoryTableScan"), p
+    assert _detail_headers(p, "Scan ExistingRDD"), p
 
 
 def test_cluster_representatives_single_pass(spark):
@@ -713,28 +724,27 @@ def test_bigram_lm_scoring_is_broadcast_zero_join_on_docs(spark):
 def test_digest_subtree_shared_between_fingerprint_and_report(spark):
     """E71 (verdict r7 #1): a cycle that runs both the standalone
     digest and the full quality report must materialize the char-fold
-    digest ONCE — after q_table_fingerprint acts, the report's plan
-    substitutes the cached 3-row result (InMemoryTableScan) and drops
-    the digest's own parquet scans."""
-    from weatherflow_spark.operators.caching import release_caches
+    digest ONCE — the report's build gets the fingerprint's checkpoint
+    back from tracked_persist (same plan, one materialisation) and
+    reads it as one 3-row Scan ExistingRDD instead of planning the
+    digest's own parquet scans."""
+    from weatherflow_spark.operators.caching import (
+        materialised_plans,
+        release_caches,
+    )
     from weatherflow_spark.plans.quality import (
         q_data_quality_report,
         q_table_fingerprint,
     )
 
     try:
-        q_table_fingerprint(spark, SF_SMALL).count()  # materialize cache
-        warm = _plan(q_data_quality_report(spark, SF_SMALL))
-        # Exactly one cached digest subtree: the report reads the
-        # 3-row InMemoryRelation the standalone digest materialized
-        # (the second persist call logs "already cached" — same plan,
-        # same cache entry), and the char fold exists ONLY inside that
-        # cached subtree's serialization, never as a live node.
-        assert len(_detail_headers(warm, "InMemoryTableScan")) == 1, warm
-        assert len(_detail_headers(warm, "InMemoryRelation")) == 1, warm
-        live = warm.split("InMemoryRelation")[0]
+        q_table_fingerprint(spark, SF_SMALL).count()
+        live = _explain(q_data_quality_report(spark, SF_SMALL))
+        folds = [m for m in materialised_plans() if "bit_xor" in m]
+        assert len(folds) == 1, f"digest materialized {len(folds)} times"
+        assert len(_detail_headers(live, "Scan ExistingRDD")) == 1, live
         assert "bit_xor" not in live, (
-            f"digest re-planned outside the cached subtree:\n{warm}"
+            f"digest re-planned outside the shared checkpoint:\n{live}"
         )
     finally:
         release_caches()
@@ -764,10 +774,14 @@ def test_covariance_blocking_plans_per_tile_exchanges(spark):
     tile owns its keyed aggregation — the plan carries one (i, j)
     exchange PER TILE (bounded per-task hash-agg state), where the
     single-pass form has exactly one."""
+    from weatherflow_spark.operators.caching import release_caches
     from weatherflow_spark.plans.stats import q_covariance_matrix
 
     def ij_exchanges(df) -> int:
-        p = _plan(df)
+        try:
+            p = _plan(df)
+        finally:
+            release_caches()  # the next build audits its own checkpoints
         return sum(
             1
             for b in _detail_blocks(p, "Exchange")
@@ -834,8 +848,8 @@ def test_phash_near_dup_plan_is_band_equi_join(spark):
     assert joins and any("band_key" in b for b in joins), (
         f"candidate stage must equi-join on band_key:\n{p}"
     )
-    assert _detail_headers(p, "InMemoryTableScan"), (
-        f"phash signatures must be persisted (both join sides):\n{p}"
+    assert _detail_headers(p, "Scan ExistingRDD"), (
+        f"phash signatures must be checkpointed (both join sides):\n{p}"
     )
 
 

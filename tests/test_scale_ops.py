@@ -289,6 +289,17 @@ def test_grouped_rank_matches_window_spec(spark, tmp_path):
         spark.catalog.clearCache()
 
 
+def _plan_with_checkpoints(df) -> str:
+    """The formatted plan of ``df`` plus those of the relations its
+    build checkpointed (the range-partitioned rank input among them)."""
+    from weatherflow_spark.operators.caching import materialised_plans
+
+    own = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    return "\n".join([own, *materialised_plans()])
+
+
 def test_perplexity_skew_path_matches_window_path(spark, tmp_path):
     """E51 (verdict r7 #4): the distributed-rank skew path must be
     result-identical to the window path on a skewed corpus, and its
@@ -302,12 +313,11 @@ def test_perplexity_skew_path_matches_window_path(spark, tmp_path):
         window_rows = sorted(
             q_perplexity_filter(spark, d, skew_threshold=10**9).collect()
         )
+        release_caches()  # audit only the skew path's checkpoints
         skew_df = q_perplexity_filter(spark, d, skew_threshold=1)
         skew_rows = sorted(skew_df.collect())
         assert skew_rows == window_rows
-        p = skew_df._sc._jvm.PythonSQLUtils.explainString(
-            skew_df._jdf.queryExecution(), "formatted"
-        )
+        p = _plan_with_checkpoints(skew_df)
         assert "percent_rank" not in p, f"skew path still windows:\n{p}"
         assert "MapInPandas" in p, f"no streamed rank pass:\n{p}"
         assert "rangepartitioning" in p.lower(), (
@@ -328,12 +338,11 @@ def test_domain_quota_skew_path_matches_window_path(spark, tmp_path):
     d = _skewed_docs_dir(spark, tmp_path)
     try:
         window_rows = sorted(q_domain_quota(spark, d, skew_threshold=10**9).collect())
+        release_caches()  # audit only the skew path's checkpoints
         skew_df = q_domain_quota(spark, d, skew_threshold=1)
         skew_rows = sorted(skew_df.collect())
         assert skew_rows == window_rows
-        p = skew_df._sc._jvm.PythonSQLUtils.explainString(
-            skew_df._jdf.queryExecution(), "formatted"
-        )
+        p = _plan_with_checkpoints(skew_df)
         assert "row_number()" not in p, f"skew path still windows rows:\n{p}"
         assert "MapInPandas" in p and "rangepartitioning" in p.lower(), p
     finally:

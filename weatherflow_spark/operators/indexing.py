@@ -41,11 +41,10 @@ def assign_global_index(
     Two jobs: a per-partition count (tiny — one row per partition),
     then the indexed pass. Output schema: input columns + index.
     """
-    # persist BEFORE the count pass: repartitionByRange samples its
+    # checkpoint BEFORE the count pass: repartitionByRange samples its
     # boundaries per job, so without a shared materialization the
     # count job and the index job could see different partitionings
-    # (and the offsets would index the wrong partitions). In a
-    # production pipeline, checkpoint/write instead of cache.
+    # (and the offsets would index the wrong partitions).
     #
     # The partition id is BAKED INTO THE CACHED DATA as a column
     # (evaluated once, in the cache-build stage) rather than read

@@ -24,7 +24,8 @@ Safety preconditions (hold for every converted suite):
   grep-audited);
 - per-dataset commit locks are path-keyed, so concurrent branches
   never contend on a lock;
-- ``tracked_persist``'s registry is append-only under the GIL.
+- ``tracked_persist``'s registry is lock-guarded, and concurrent
+  builders of one plan share a single materialisation.
 
 Worker count: ``WF_SUITE_OVERLAP`` (default 4) — deliberately small.
 The point is back-fill, not saturation: branch jobs are short and
@@ -125,34 +126,29 @@ def overlap_branches(
 def overlap_materialize(
     thunks: Sequence[Callable[[], T]], max_workers: int | None = None
 ) -> list[T]:
-    """``overlap_branches`` for PURE-COMPUTE suites: build AND
-    materialize each branch concurrently (persist + count in the
-    pool), so the suite's single downstream action reads the branch
-    caches instead of executing one mega-union plan whose independent
-    legs the scheduler walks mostly serially.
+    """``overlap_branches`` for PURE-COMPUTE suites: build each branch
+    and materialise it through ``tracked_persist`` in the pool, so the
+    suite's single downstream action is a union over branch
+    checkpoints instead of one mega-union plan whose independent legs
+    the scheduler walks mostly serially.
 
-    Why this is the right shape for the compute suites (guide §2.6):
-    the serving suites' branches carry their own real I/O actions, so
-    overlapping the BUILDERS overlaps the work. A compute suite's
-    branches are lazy — all cost lands in one giant union action
-    where (a) catalyst analyzes/optimizes the whole 10-20-branch plan
-    as one unit and (b) each leg's stage chain serializes behind
-    shared scheduler breadth. Materializing per-branch turns that
-    into N small independent jobs that back-fill each other, while
-    the returned union — and therefore column order, row set, and
-    oracle hash — is byte-identical (branch outputs are the
-    certification digests themselves: top-k rows, merge tables,
-    grouped tallies — KBs, so the persists are negligible and are
-    released by the bench/parity harness via ``release_caches``).
+    A compute suite's branches are lazy, so overlapping only their
+    builders would overlap nothing: all the cost would land in one
+    union action, analysed and optimised as one 10-20-branch plan,
+    with each leg's stage chain queued behind shared scheduler
+    breadth. Materialising per branch turns that into N small
+    independent jobs that back-fill each other, and the checkpoint
+    cuts each branch's lineage, so the union's plan is N scans of
+    stored blocks rather than N printed branch plans. Column order,
+    row set and oracle hash are unchanged: branch outputs are the
+    certification digests themselves (top-k rows, merge tables,
+    grouped tallies — KBs), released by the caller through
+    ``release_caches``. A branch whose plan equals an earlier
+    tracked relation shares its materialisation.
     """
     from weatherflow_spark.operators.caching import tracked_persist
 
-    def _eager(build: Callable[[], T]) -> Callable[[], T]:
-        def run() -> T:
-            df = tracked_persist(build())
-            df.count()
-            return df
-
-        return run
-
-    return overlap_branches([_eager(t) for t in thunks], max_workers)
+    return overlap_branches(
+        [lambda build=build: tracked_persist(build()) for build in thunks],
+        max_workers,
+    )

@@ -32,6 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from weatherflow_spark.operators.caching import release_checkpoint
 from weatherflow_spark.operators.upsert import overwrite_partitions
 
 # Partial-state columns: everything needed to answer count/sum/avg/
@@ -122,22 +123,26 @@ def merge_rollup(
 
         existing = read_live(spark, path).where(pred)  # partition-pruned
     if existing is None:
-        merged = batch_partials
-    else:
-        merged = (
-            existing.unionByName(batch_partials)
-            .groupBy("event_date", "event_type")
-            .agg(
-                F.sum("n").alias("n"),
-                F.sum("sum_scaled").alias("sum_scaled"),
-                F.min("min_value").alias("min_value"),
-                F.max("max_value").alias("max_value"),
-            )
+        overwrite_partitions(batch_partials, path, ["event_date"])
+        return
+    merged = (
+        existing.unionByName(batch_partials)
+        .groupBy("event_date", "event_type")
+        .agg(
+            F.sum("n").alias("n"),
+            F.sum("sum_scaled").alias("sum_scaled"),
+            F.min("min_value").alias("min_value"),
+            F.max("max_value").alias("max_value"),
         )
-        # Materialize before the overwrite rewrites the files the
-        # merged plan reads (the upsert_by_key discipline).
-        merged = merged.localCheckpoint(eager=True)
-    overwrite_partitions(merged, path, ["event_date"])
+    )
+    # Materialize before the overwrite rewrites the files the merged
+    # plan reads (the upsert_by_key discipline), and drop the blocks
+    # once the overwrite has committed.
+    merged = merged.localCheckpoint(eager=True)
+    try:
+        overwrite_partitions(merged, path, ["event_date"])
+    finally:
+        release_checkpoint(merged)
 
 
 def read_rollup(

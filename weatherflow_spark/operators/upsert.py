@@ -29,6 +29,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from weatherflow_spark.operators.caching import release_checkpoint
+
 
 def _record_snapshot(
     path: str,
@@ -555,22 +557,25 @@ def _upsert_locked(
     # the overwrite replaces. localCheckpoint bounds the materialized
     # slice to the touched partitions (executor-local, spill-backed).
     merged = merged.localCheckpoint(eager=True)
-    if partition_cols:
-        # takes the lock; bumps the touched versions (choke point)
-        overwrite_partitions(
-            merged, path, partition_cols,
-            snapshot_batch_id=snapshot_batch_id,
-        )
-    elif _manifest_mode(path):
-        _manifest_full_replace(merged, path, keys, snapshot_batch_id)
-    else:
-        with dataset_lock(path):
-            merged.write.mode("overwrite").parquet(path)
-            check_and_bump_versions(path, keys)
-            # Unpartitioned full overwrite DELETES the old files —
-            # without this record the pre-merge state would be
-            # unrecoverable on a versioned table (r9 ADVICE).
-            _record_snapshot(path, batch_id=snapshot_batch_id)
+    try:
+        if partition_cols:
+            # takes the lock; bumps the touched versions (choke point)
+            overwrite_partitions(
+                merged, path, partition_cols,
+                snapshot_batch_id=snapshot_batch_id,
+            )
+        elif _manifest_mode(path):
+            _manifest_full_replace(merged, path, keys, snapshot_batch_id)
+        else:
+            with dataset_lock(path):
+                merged.write.mode("overwrite").parquet(path)
+                check_and_bump_versions(path, keys)
+                # Unpartitioned full overwrite DELETES the old files —
+                # without this record the pre-merge state would be
+                # unrecoverable on a versioned table (r9 ADVICE).
+                _record_snapshot(path, batch_id=snapshot_batch_id)
+    finally:
+        release_checkpoint(merged)
 
 
 def apply_changes(
@@ -745,84 +750,87 @@ def _apply_changes_locked(
     kept = current.join(F.broadcast(all_keys), on=key_cols, how="anti")
     merged = kept.unionByName(upserts.select(*current.columns))
     merged = merged.localCheckpoint(eager=True)
-    if partition_cols:
-        # Dynamic partition overwrite only rewrites partitions PRESENT
-        # in the output: a feed whose deletes empty a touched partition
-        # (and land no upsert in it) produces zero merged rows there,
-        # so the old files would silently survive the 'delete'. Remove
-        # those now-empty partition directories explicitly, under the
-        # same commit lock as the overwrite.
-        import shutil
+    try:
+        if partition_cols:
+            # Dynamic partition overwrite only rewrites partitions PRESENT
+            # in the output: a feed whose deletes empty a touched partition
+            # (and land no upsert in it) produces zero merged rows there,
+            # so the old files would silently survive the 'delete'. Remove
+            # those now-empty partition directories explicitly, under the
+            # same commit lock as the overwrite.
+            import shutil
 
-        remaining = {
-            tuple(r[c] for c in partition_cols)
-            for r in merged.select(*partition_cols).distinct().collect()
-        }
-        emptied = [t for t in touched if t not in remaining]
-        if _manifest_mode(path):
-            # Manifest mode needs no rmtree and no deferred record:
-            # passing the emptied partitions as replaced_keys carves
-            # their files out of the new version's list — the logical
-            # delete IS the manifest change, the files stay for time
-            # travel until vacuum.
-            from weatherflow_spark.operators.commit import partition_key
-
-            overwrite_partitions(
-                merged, path, partition_cols,
-                snapshot_batch_id=snapshot_batch_id,
-                replaced_keys=[
-                    partition_key(partition_cols, t) for t in emptied
-                ],
-            )
-            return
-        # takes the lock; bumps the MERGED partitions' versions. When
-        # deletes empty a partition the commit is NOT complete until
-        # the emptied directories are removed below — defer the
-        # snapshot record to that point, or the head version would
-        # still list the deleted rows' files and read_version() at
-        # the head would resurrect deleted data (r9 ADVICE, high).
-        overwrite_partitions(
-            merged, path, partition_cols, record_snapshot=not emptied,
-            snapshot_batch_id=snapshot_batch_id,
-        )
-        if emptied:
-            with dataset_lock(path):
+            remaining = {
+                tuple(r[c] for c in partition_cols)
+                for r in merged.select(*partition_cols).distinct().collect()
+            }
+            emptied = [t for t in touched if t not in remaining]
+            if _manifest_mode(path):
+                # Manifest mode needs no rmtree and no deferred record:
+                # passing the emptied partitions as replaced_keys carves
+                # their files out of the new version's list — the logical
+                # delete IS the manifest change, the files stay for time
+                # travel until vacuum.
                 from weatherflow_spark.operators.commit import partition_key
 
-                for t in emptied:
-                    # partition_key hive-escapes values exactly as
-                    # Spark wrote the directory — a raw f-string path
-                    # for a ':'-valued partition matches nothing and
-                    # the "deleted" files would silently survive
-                    # (r10 ADVICE).
-                    sub = os.path.join(path, partition_key(partition_cols, t))
-                    shutil.rmtree(sub, ignore_errors=True)
-                # Emptied partitions are content changes too, but they
-                # are absent from the merged output — bump them here.
-                check_and_bump_versions(
-                    path,
-                    [partition_key(partition_cols, t) for t in emptied],
-                )
-                # Deferred from overwrite_partitions: the live tree
-                # now matches the logical post-delete result. Scope =
-                # every feed-touched partition (merged AND emptied —
-                # emptied dirs walk to nothing, which is exactly the
-                # deletion the carried list must not resurrect).
-                _record_snapshot(
-                    path,
-                    scope=[
-                        partition_key(partition_cols, t) for t in touched
+                overwrite_partitions(
+                    merged, path, partition_cols,
+                    snapshot_batch_id=snapshot_batch_id,
+                    replaced_keys=[
+                        partition_key(partition_cols, t) for t in emptied
                     ],
-                    batch_id=snapshot_batch_id,
                 )
-    elif _manifest_mode(path):
-        _manifest_full_replace(merged, path, keys, snapshot_batch_id)
-    else:
-        with dataset_lock(path):
-            merged.write.mode("overwrite").parquet(path)
-            check_and_bump_versions(path, keys)
-            # full overwrite deletes old files
-            _record_snapshot(path, batch_id=snapshot_batch_id)
+                return
+            # takes the lock; bumps the MERGED partitions' versions. When
+            # deletes empty a partition the commit is NOT complete until
+            # the emptied directories are removed below — defer the
+            # snapshot record to that point, or the head version would
+            # still list the deleted rows' files and read_version() at
+            # the head would resurrect deleted data (r9 ADVICE, high).
+            overwrite_partitions(
+                merged, path, partition_cols, record_snapshot=not emptied,
+                snapshot_batch_id=snapshot_batch_id,
+            )
+            if emptied:
+                with dataset_lock(path):
+                    from weatherflow_spark.operators.commit import partition_key
+
+                    for t in emptied:
+                        # partition_key hive-escapes values exactly as
+                        # Spark wrote the directory — a raw f-string path
+                        # for a ':'-valued partition matches nothing and
+                        # the "deleted" files would silently survive
+                        # (r10 ADVICE).
+                        sub = os.path.join(path, partition_key(partition_cols, t))
+                        shutil.rmtree(sub, ignore_errors=True)
+                    # Emptied partitions are content changes too, but they
+                    # are absent from the merged output — bump them here.
+                    check_and_bump_versions(
+                        path,
+                        [partition_key(partition_cols, t) for t in emptied],
+                    )
+                    # Deferred from overwrite_partitions: the live tree
+                    # now matches the logical post-delete result. Scope =
+                    # every feed-touched partition (merged AND emptied —
+                    # emptied dirs walk to nothing, which is exactly the
+                    # deletion the carried list must not resurrect).
+                    _record_snapshot(
+                        path,
+                        scope=[
+                            partition_key(partition_cols, t) for t in touched
+                        ],
+                        batch_id=snapshot_batch_id,
+                    )
+        elif _manifest_mode(path):
+            _manifest_full_replace(merged, path, keys, snapshot_batch_id)
+        else:
+            with dataset_lock(path):
+                merged.write.mode("overwrite").parquet(path)
+                check_and_bump_versions(path, keys)
+                # full overwrite deletes old files
+                _record_snapshot(path, batch_id=snapshot_batch_id)
+    finally:
+        release_checkpoint(merged)
 
 
 def delete_where(
@@ -1059,7 +1067,10 @@ def delete_where(
             "files_total": total,
         }
     finally:
-        victims.unpersist()
+        if versioned:
+            victims.unpersist()
+        else:
+            release_checkpoint(victims)
 
 
 def _delete_where_dv(

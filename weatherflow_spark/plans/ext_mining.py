@@ -823,9 +823,9 @@ BPE_MERGES = 4
 
 def _bpe_word_types(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """The corpus collapsed to its word-type frequency table — the ONE
-    relation both BPE halves iterate on. Train persists it and encode
-    rebuilds the SAME lineage so the CacheManager substitutes the
-    cached relation (no second corpus pass); keep every change here
+    relation both BPE halves iterate on. Both halves pass it to
+    ``tracked_persist``, so encode gets training's checkpoint back (one
+    materialisation, no second corpus pass); keep every change here
     mirrored in both callers' expectations.
 
     The trailing hash repartition is a performance property, not a
@@ -1061,8 +1061,8 @@ def q_bpe_encode(
     The fold runs over word TYPES, not token instances — the same
     corpus-collapses-to-the-type-table move training itself makes:
     the trained rules (one broadcast row, sorted by round) encode the
-    word-frequency table once (its lineage is identical to training's
-    persisted aggregation, so the cached relation is reused — no
+    word-frequency table once (its plan is identical to training's
+    checkpointed aggregation, so that checkpoint is reused — no
     second corpus pass), and the per-type segmentations collapse to
     ONE broadcast map. The document pass is then a pure narrow map
     lookup per token (measured 8 s → sub-second at sf0.1 vs folding
@@ -1086,9 +1086,11 @@ def q_bpe_encode(
         ).alias("mlist")
     )
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # Same lineage as q_bpe_train's persisted word table → cache hit
+    # Same plan as q_bpe_train's word table → its checkpoint
     # (including the spread repartition — see _bpe_word_types).
-    types = _bpe_word_types(spark, docs)
+    from weatherflow_spark.operators.caching import tracked_persist
+
+    types = tracked_persist(_bpe_word_types(spark, docs))
     enc_word = (
         "aggregate(mlist, regexp_extract_all(word, '.', 0), (cursyms, m) -> "
         "aggregate(cursyms, cast(array() as array<string>), (acc, s) -> "

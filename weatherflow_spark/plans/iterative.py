@@ -228,14 +228,14 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(dup.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
     )
 
-    # Persist EVERY round's label state (the k-means pattern at
+    # Checkpoint EVERY round's label state (the k-means pattern at
     # :func:`q_kmeans`): each round consumes `labels` TWICE — as the
     # left side of the update join and feeding `nbr_min` — so an
-    # unpersisted loop doubles the physical plan per round (2^rounds
+    # unmaterialised loop doubles the physical plan per round (2^rounds
     # parquet scans; measured 180 scans / 262 Exchanges at 3 rounds).
-    # With the persist each round plans two InMemoryTableScans of the
-    # previous round instead, keeping plan size constant per added
-    # round (asserted by tests/test_plan_audit.py::test_lp_plan_constant).
+    # With the checkpoint each round plans two scans of the previous
+    # round's blocks instead, keeping plan size constant per added
+    # round (asserted by tests/test_plan_audit.py::test_lp_round_plan_constant).
     labels = tracked_persist(
         edges.select(F.col("src").alias("doc_id")).distinct().select(
             "doc_id", F.col("doc_id").alias("label")

@@ -124,7 +124,6 @@ def check_query(spark: SparkSession, name: str, sf_dir: str) -> ParityReport:
         return compare_frames(name, spark_pdf, oracle_pdf)
     finally:
         # Long-lived sessions (the parity pytest run) would otherwise
-        # accumulate every query's loop-invariant persists; worse, the
-        # CacheManager then substitutes those relations into LATER
-        # plans, perturbing the plan-audit suite's exchange counts.
+        # accumulate every query's checkpoints, and later builds of an
+        # equal plan would get them back instead of planning their own.
         release_caches()

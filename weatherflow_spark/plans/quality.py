@@ -51,11 +51,11 @@ def q_data_quality_report(
     fingerprints; ``skew`` = the E75 join-key diagnostics. The
     registered window query runs the FULL report (same rows, same
     hash); a scheduler gate calls ``sections=GATE_SECTIONS`` and
-    pays only the invariant tier. The digest subtree is persisted by
-    ``q_table_fingerprint`` itself, so a cycle that runs both the
-    report and the standalone digest materializes it once (the
-    CacheManager substitutes the cached 3-row result into whichever
-    plan runs second — audited in tests/test_plan_audit.py)."""
+    pays only the invariant tier. The digest subtree is checkpointed
+    by ``q_table_fingerprint`` itself through ``tracked_persist``, so
+    a cycle that runs both the report and the standalone digest
+    materializes it once (whichever builds second gets the 3-row
+    checkpoint back — audited in tests/test_plan_audit.py)."""
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     lineitem = load_table(spark, sf_dir, "lineitem")
@@ -313,12 +313,12 @@ def q_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id, user_id, event_type, "
         "cast(floor(value * 100 + 0.5) as bigint)",
     )
-    # Persist the 3-row digest: a verify/gate cycle runs BOTH the
+    # Checkpoint the 3-row digest: a verify/gate cycle runs BOTH the
     # standalone digest and the full quality report, and the char
-    # fold is the expensive subtree in each — caching it means the
-    # CacheManager substitutes the materialized rows into whichever
-    # plan acts second instead of re-folding every table (bench
-    # releases caches between reps, so timings stay honest).
+    # fold is the expensive subtree in each — tracked_persist hands
+    # whichever builds second the first one's checkpoint instead of
+    # re-folding every table (bench releases caches between reps, so
+    # timings stay honest).
     from weatherflow_spark.operators.caching import tracked_persist
 
     return tracked_persist(o.unionByName(c).unionByName(e))

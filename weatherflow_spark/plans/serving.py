@@ -31,6 +31,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from weatherflow_spark.io import load_table, table_bytes
+from weatherflow_spark.operators.caching import tracked_persist
 from weatherflow_spark.operators.indexing import assign_global_index
 from weatherflow_spark.operators.overlap import no_broadcast_session
 from weatherflow_spark.operators.rollup import (
@@ -713,7 +714,7 @@ def q_version_diff(
             pass
 
     feed = diff_versions(spark, path, 1, 2, ["o_orderkey"])
-    feed = feed.localCheckpoint(eager=True)  # consumed 3x below
+    feed = tracked_persist(feed)  # consumed 3x below
 
     # round-trip: v1 copy + derived feed must reconstruct v2
     read_version(spark, path, 1).write.mode("overwrite").partitionBy(
@@ -824,7 +825,7 @@ def q_ivm_rollup(
     v1 = read_version(spark, path, 1)
     old_agg = direct_agg(v1)  # the initial build — the only full scan
     feed = diff_versions(spark, path, 1, 2, ["o_orderkey"])
-    feed = feed.localCheckpoint(eager=True)  # consumed by plus + keys + minus
+    feed = tracked_persist(feed)  # consumed by plus + keys + minus
     u_rows = feed.where(F.col("op") == "U").drop("op")
     d_rows = feed.where(F.col("op") == "D").drop("op")
     # Pre-image of the changed keys. Two-level bound: the mirror read
@@ -956,7 +957,7 @@ def q_bucketed_join_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("bit_xor(l_orderkey)").alias("key_xor"),
     )
     # Materialize in the twin so the executed join is the certified one.
-    return out.localCheckpoint(eager=True)
+    return tracked_persist(out)
 
 
 ORACLE_BUCKETED_JOIN = """
@@ -1080,7 +1081,7 @@ def q_tpch_q3_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(10)
     )
     _require_zero_shuffle_smj(out, "tpch q3 (bucketed)")
-    return out.localCheckpoint(eager=True)
+    return tracked_persist(out)
 
 
 def q_tpch_q18_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1131,7 +1132,7 @@ def q_tpch_q18_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(20)
     )
     _require_zero_shuffle_smj(out, "tpch q18 (bucketed)")
-    return out.localCheckpoint(eager=True)
+    return tracked_persist(out)
 
 
 def _oracle_tpch_q3_bucketed() -> str:
@@ -1178,7 +1179,7 @@ def q_tpch_q4_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("order_count"))
     )
     _require_zero_shuffle_smj(out, "tpch q4 (bucketed)", max_exchanges=1)
-    return out.localCheckpoint(eager=True)
+    return tracked_persist(out)
 
 
 def q_tpch_q12_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1228,7 +1229,7 @@ def q_tpch_q12_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     _require_zero_shuffle_smj(out, "tpch q12 (bucketed)", max_exchanges=1)
-    return out.localCheckpoint(eager=True)
+    return tracked_persist(out)
 
 
 def q_tpch_q21_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1291,7 +1292,7 @@ def q_tpch_q21_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(Q21_TOP)
     )
     _require_zero_shuffle_smj(out, "tpch q21 (bucketed)", max_exchanges=1)
-    return out.localCheckpoint(eager=True)
+    return tracked_persist(out)
 
 
 def q_tpch_q13_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1329,7 +1330,7 @@ def q_tpch_q13_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("custdist"))
     )
     _require_zero_shuffle_smj(out, "tpch q13 (bucketed)", max_exchanges=1)
-    return out.localCheckpoint(eager=True)
+    return tracked_persist(out)
 
 
 def q_tpch_q10_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1403,7 +1404,7 @@ def q_tpch_q10_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(20)
     )
     _require_zero_shuffle_smj(out, "tpch q10 (bucketed)", max_exchanges=1)
-    return out.localCheckpoint(eager=True)
+    return tracked_persist(out)
 
 
 def _oracle_tpch_q13_bucketed() -> str:

@@ -1613,10 +1613,11 @@ def q_covariance_matrix(
     )
     from weatherflow_spark.operators.caching import tracked_persist
 
-    # Persisted: the D(D+1)/2-row matrix is tiny, and TWO consumers
+    # Checkpointed: the D(D+1)/2-row matrix is tiny, and TWO consumers
     # build this identical plan (the stats suite's cov branch and the
-    # PCA branch's iteration input) — the cache serves both, so the
-    # corpus-scale triangle explode runs once per job, not per branch.
+    # PCA branch's iteration input) — tracked_persist hands both one
+    # checkpoint, so the corpus-scale triangle explode runs once per
+    # job, not per branch.
     return tracked_persist(
         triangle.join(F.broadcast(di), "i")
         .join(F.broadcast(dj), "j")

@@ -39,45 +39,18 @@ _REQUIRED_RUNTIME_CONFS: dict[str, str] = {
     # Arrow for any pandas_udf / mapInPandas path (vector ops,
     # multimodal decode): batch columnar transfer, not per-row pickle.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Cap plan-string construction (r14). Every AQE plan update calls
-    # QueryExecution.explainString and the UI retains the result; the
-    # iterative/certification suites' loop plans run to hundreds of
-    # KB each, and on a DEFAULT-memory driver session (1 GiB heap, UI
-    # on — the harness posture) a long session accumulates retained
-    # plan strings until StringConcat.toString OOMs the driver
-    # (reproduced: q_iterative_suite Java-heap OOM inside
-    # AdaptiveSparkPlanExec.onUpdatePlan on the second same-session
-    # run). 1 M chars bounds any single build and the UI store while
-    # never truncating a current plan (largest formatted explain in
-    # plans/r14 is ~530 K chars; a 256 K cap was measured to truncate
-    # the loop-suite plans the pytest plan audits parse); diagnostics
-    # that need more (plan-capture scripts) raise it per-session —
-    # configure_session treats this knob as a FLOOR (r15 ADVICE: the
-    # old equality re-application silently reverted a per-session
-    # raise on the very next engine call), so a session that set it
-    # higher keeps its value.
-    "spark.sql.maxPlanStringLength": "1048576",
+    # No spark.sql.maxPlanStringLength cap: tracked_persist checkpoints
+    # every relation a plan re-reads, so iterative and suite plans stay
+    # the size of one round or branch and print in full
+    # (operators/caching.py).
 }
-
-# Floor-semantics knobs: configure_session raises them to the required
-# value when below it but never lowers a session that asked for more
-# (the escape-hatch contract documented on maxPlanStringLength above).
-_FLOOR_CONFS = {"spark.sql.maxPlanStringLength"}
 
 
 def configure_session(spark: SparkSession) -> SparkSession:
     """Apply required runtime confs to an existing session (idempotent)."""
     for key, value in _REQUIRED_RUNTIME_CONFS.items():
         try:
-            current = spark.conf.get(key, None)
-            if key in _FLOOR_CONFS:
-                try:
-                    if current is not None and int(current) >= int(value):
-                        continue
-                except (TypeError, ValueError):
-                    pass  # non-numeric current value: re-apply the floor
-                spark.conf.set(key, value)
-            elif current != value:
+            if spark.conf.get(key, None) != value:
                 spark.conf.set(key, value)
         except Exception:
             # Non-settable in this deployment: leave as-is rather than fail.
