@@ -110,11 +110,12 @@ def test_build_over_rewritten_path_is_not_shared(spark, tmp_path):
 
 
 def test_repeated_upserts_leave_no_pinned_blocks(spark, tmp_path):
-    """The merge checkpoint of every keyed write and rollup merge is
-    released once the write commits, so a loop of loads does not grow
-    executor storage."""
+    """The batch and merge checkpoints of every keyed write and rollup
+    merge are released once the write commits or refuses, so a loop of
+    loads does not grow executor storage."""
     import datetime as dt
 
+    from weatherflow_spark.operators.commit import UpsertConflict
     from weatherflow_spark.operators.rollup import merge_rollup, write_rollup
     from weatherflow_spark.operators.upsert import apply_changes, upsert_by_key
 
@@ -130,6 +131,15 @@ def test_repeated_upserts_leave_no_pinned_blocks(spark, tmp_path):
         spark.createDataFrame([Row(k=0, day="2026-01-01", v=0.0, op="D")]),
         path, ["k"], partition_cols=["day"],
     )
+    assert _n_persistent(spark) == before
+    assert spark.read.parquet(path).count() == 5
+
+    dup = spark.createDataFrame([Row(k=1, day="2026-01-02", v=9.0)] * 2)
+    with pytest.raises(ValueError, match="duplicate or NULL keys"):
+        upsert_by_key(spark, dup, path, ["k"], ["day"])
+    with pytest.raises(UpsertConflict):
+        # every touched partition has moved past version 0
+        upsert_by_key(spark, batch, path, ["k"], ["day"], expected_versions={})
     assert _n_persistent(spark) == before
     assert spark.read.parquet(path).count() == 5
 

@@ -120,3 +120,67 @@ def test_load_star_warehouse_is_one_transaction(spark, tmp_path):
     assert sorted(r.temp for r in j2.collect()) == [15.0, 17.0]
     # fact row count stable across loads (keys deterministic)
     assert t1["w_fact"].count() == t2["w_fact"].count() == 2
+
+
+# Spark jobs one load of a small two-date batch into an existing
+# partitioned warehouse may run: five keyed merges (batch checkpoint,
+# key check, touched-partition collect, merge checkpoint, write) plus
+# the load commit. A change that brings back a rescan of the batch
+# exceeds it.
+STAR_LOAD_JOB_BUDGET = 55
+
+
+def _poll(spark, minute: int, stations: int = 20):
+    rows = [
+        Row(
+            station_id=s,
+            recorded_datetime_local=f"2024-01-0{1 + s % 2} 10:{minute:02d}:00",
+            recorded_date_local=f"2024-01-0{1 + s % 2}",
+            recorded_month_local="January",
+            recorded_quarter_local="Q1",
+            recorded_season_local="Winter",
+            recorded_weekday_local="Monday",
+            recorded_year_local=2024,
+            temp=5.0 + s,
+            humidity=80.0,
+            dew_point=1.0,
+            heat_index=4.0 + s,
+        )
+        for s in range(stations)
+    ]
+    return build_weather_star(spark.createDataFrame(rows), denormalize_date=True)
+
+
+def test_star_load_job_budget(spark, tmp_path):
+    """The loader's pool threads do not inherit a job group, so the
+    load is bracketed by two marker jobs: job ids are monotone, and
+    every job between the markers belongs to the load."""
+    from weatherflow_spark.operators.star import (
+        STAR_DATE_PARTITIONING,
+        load_star_warehouse,
+    )
+
+    wh = str(tmp_path / "wh")
+    load_star_warehouse(
+        spark, _poll(spark, 0), wh, batch_id="b0",
+        partition_cols=STAR_DATE_PARTITIONING,
+    )
+    sc = spark.sparkContext
+    group = "star-load-job-budget"
+
+    def marker() -> int:
+        sc.parallelize([0], 1).count()
+        return max(sc.statusTracker().getJobIdsForGroup(group))
+
+    sc.setJobGroup(group, "markers")
+    try:
+        first = marker()
+        load_star_warehouse(
+            spark, _poll(spark, 5), wh, batch_id="b1",
+            partition_cols=STAR_DATE_PARTITIONING,
+        )
+        jobs = marker() - first - 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert 0 < jobs <= STAR_LOAD_JOB_BUDGET, jobs

@@ -778,6 +778,28 @@ def test_streaming_admission_replay_does_not_flip_verdicts(spark, tmp_path):
     assert v2 == {10: "new"}  # unchanged — no self-match
 
 
+def test_streaming_admission_releases_batch_checkpoints(spark, tmp_path):
+    """The admission sink checkpoints each micro-batch and its
+    verdicts; both are released once the verdicts are written, so a
+    long-running stream does not accumulate blocks."""
+    from weatherflow_spark.streaming.pipeline import foreach_batch_admission
+
+    mk = lambda *items: spark.createDataFrame(
+        [(i, t, "en", "s0", len(t)) for i, t in items],
+        ["doc_id", "text", "lang", "source", "n_chars"],
+    )
+    n_persistent = lambda: spark.sparkContext._jsc.getPersistentRDDs().size()
+    sink = foreach_batch_admission(
+        str(tmp_path / "idx"), str(tmp_path / "verdicts")
+    )
+    before = n_persistent()
+    for b in range(3):  # a cold-start batch, then two index probes
+        sink(mk((10 * b, f"document {b} about warehouse tables and loads"),
+                (10 * b + 1, f"another text {b} describing shuffle exchanges")), b)
+    assert n_persistent() == before
+    assert spark.read.parquet(str(tmp_path / "verdicts")).count() == 6
+
+
 def test_streaming_admission_replay_does_not_grow_index(spark, tmp_path):
     """r9 ADVICE fix: the admission sink's signature writes are
     batch_id-keyed OVERWRITES, so a re-delivered micro-batch (crash

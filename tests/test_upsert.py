@@ -708,44 +708,170 @@ def test_concurrent_merges_into_different_tables_stay_scoped(spark, tmp_path):
         assert (1, "2026-01-01", 99.0) in rows and len(rows) == 4, (p, rows)
 
 
-def test_star_load_merges_dims_before_fact(spark, tmp_path, monkeypatch):
-    """The concurrent dim merges must still ALL complete before the
-    fact merge starts (crash-safety: never facts whose dims don't
-    exist)."""
-    import threading
+def _star_batch(spark, ids):
+    from weatherflow_spark.operators.star import build_weather_star
 
-    from weatherflow_spark.operators import upsert as upsert_mod
+    events = spark.createDataFrame(
+        [
+            (i, 7, f"2026-01-0{1 + i % 2} 00:00:{i:02d}",
+             f"2026-01-0{1 + i % 2}", 20.0 + i)
+            for i in ids
+        ],
+        "event_id long, station_id long, recorded_datetime_local string, "
+        "recorded_date_local string, temp double",
+    )
+    return build_weather_star(
+        events, station_col="station_id", natural_key_cols=["event_id"],
+        denormalize_date=True,
+    )
+
+
+def _spy_bumps(monkeypatch, fail: str | None = None) -> list[str]:
+    """Record, in order, the table of every committed version bump.
+    ``w_temp_dim`` validates only after ``w_fact`` has validated (plus
+    a beat), so without the fact's gate the fact would commit first;
+    with ``fail`` set it raises there instead."""
+    import threading
+    import time
+
+    from weatherflow_spark.operators import commit as commit_mod
+
+    real = commit_mod.check_and_bump_versions
+    bumps, lock = [], threading.Lock()
+    fact_validated = threading.Event()
+
+    def spy(path, keys, expected_versions=None, *, bump=True):
+        name = os.path.basename(path)
+        if not bump and name == "w_fact":
+            fact_validated.set()
+        if not bump and name == "w_temp_dim":
+            fact_validated.wait(timeout=30)
+            time.sleep(0.5)
+            if fail:
+                raise RuntimeError(fail)
+        real(path, keys, expected_versions, bump=bump)
+        if bump:
+            with lock:
+                bumps.append(name)
+
+    # upsert.py imports the CAS core at call time from the commit module
+    monkeypatch.setattr(commit_mod, "check_and_bump_versions", spy)
+    return bumps
+
+
+def test_star_load_commits_fact_after_every_dim(spark, tmp_path, monkeypatch):
+    """Dims and fact prepare concurrently, but the fact's version bump
+    lands after every dim's, on the first load (seed writes) and on a
+    later one (partition merges), even when a dim commits late."""
     from weatherflow_spark.operators.star import (
-        build_weather_star,
+        STAR_DATE_PARTITIONING,
+        STAR_KEYS,
         load_star_warehouse,
     )
 
-    events = spark.createDataFrame(
-        [(i, 7, f"2026-01-01 00:00:{i:02d}", 20.0) for i in range(5)],
-        "event_id long, station_id long, "
-        "recorded_datetime_local string, temp double",
+    bumps = _spy_bumps(monkeypatch)
+    wh = str(tmp_path / "wh")
+    for n, (batch_id, ids) in enumerate(
+        [("b1", range(0, 6)), ("b2", range(3, 9))], start=1
+    ):
+        bumps.clear()
+        assert load_star_warehouse(
+            spark, _star_batch(spark, ids), wh, batch_id=batch_id,
+            partition_cols=STAR_DATE_PARTITIONING,
+        ) == n
+        star = [b for b in bumps if b in STAR_KEYS]
+        assert sorted(star) == sorted(STAR_KEYS), (batch_id, bumps)
+        assert star[-1] == "w_fact", (batch_id, bumps)
+
+
+def _data_files(path):
+    return sorted(
+        os.path.relpath(os.path.join(d, f), path)
+        for d, _, fs in os.walk(path)
+        for f in fs
+        if not f.startswith(("_", "."))
+        and not any(
+            part.startswith(("_", "."))
+            for part in os.path.relpath(d, path).split(os.sep)
+            if part != "."
+        )
     )
-    tables = build_weather_star(
-        events, station_col="station_id", natural_key_cols=["event_id"]
+
+
+@pytest.mark.parametrize("first_load", [True, False], ids=["first", "later"])
+def test_star_load_dim_failure_writes_no_fact(
+    spark, tmp_path, monkeypatch, first_load
+):
+    """A dim merge that raises leaves w_fact without a new version or
+    file, and no load entry is written."""
+    from weatherflow_spark.operators.commit import partition_versions
+    from weatherflow_spark.operators.star import (
+        STAR_DATE_PARTITIONING,
+        load_star_warehouse,
     )
-    seen, lock = [], threading.Lock()
-    real = upsert_mod.upsert_by_key
+    from weatherflow_spark.operators.whlog import head_load
 
-    def spy(spark_, batch, path, keys, pc=None, **kw):
-        import os as _os
+    wh = str(tmp_path / "wh")
+    fact = os.path.join(wh, "w_fact")
+    if not first_load:
+        load_star_warehouse(
+            spark, _star_batch(spark, range(0, 6)), wh, batch_id="b1",
+            partition_cols=STAR_DATE_PARTITIONING,
+        )
+    versions, head, files = (
+        partition_versions(fact), head_load(wh), _data_files(fact)
+    )
+    bumps = _spy_bumps(monkeypatch, fail="w_temp_dim merge failed")
+    with pytest.raises(RuntimeError, match="w_temp_dim merge failed"):
+        load_star_warehouse(
+            spark, _star_batch(spark, range(3, 9)), wh, batch_id="b2",
+            partition_cols=STAR_DATE_PARTITIONING,
+        )
+    assert "w_fact" not in bumps, bumps
+    assert partition_versions(fact) == versions
+    assert _data_files(fact) == files
+    assert head_load(wh) == head
 
-        with lock:
-            seen.append(_os.path.basename(path))
-        return real(spark_, batch, path, keys, pc, **kw)
 
-    # the loader imports upsert_by_key at call time from the upsert
-    # module, so patch it at the source
-    monkeypatch.setattr(upsert_mod, "upsert_by_key", spy)
-    load_star_warehouse(spark, tables, str(tmp_path / "wh"), batch_id="b1")
-    assert len(seen) == 5 and seen[-1] == "w_fact", seen
-    assert set(seen[:4]) == {
-        "w_time_dim", "w_param_dim", "w_temp_dim", "w_heat_index_dim"
-    }, seen
+@pytest.mark.parametrize(
+    "branch",
+    ["seed", "partitioned", "unpartitioned", "manifest", "manifest_unpartitioned"],
+)
+def test_before_write_gates_every_write_branch(spark, tmp_path, branch):
+    """upsert_by_key calls before_write once on every write branch,
+    before any file is written; a gate that raises leaves the table's
+    files and versions as they were."""
+    from weatherflow_spark.operators.commit import partition_versions
+    from weatherflow_spark.operators.snaplog import (
+        init_snapshot_log,
+        record_commit,
+    )
+
+    path = str(tmp_path / "t")
+    pc = None if branch.endswith("unpartitioned") else ["day"]
+    if branch != "seed":
+        writer = _mk(spark, DAY1 + DAY2).write
+        (writer.partitionBy(*pc) if pc else writer).parquet(path)
+        if branch.startswith("manifest"):
+            init_snapshot_log(path, mode="manifest")
+            record_commit(path)
+    files, versions = _data_files(path), partition_versions(path)
+    batch = _mk(spark, [{"k": 1, "day": "2026-01-01", "v": 99.0}])
+
+    def closed():
+        raise RuntimeError("gate closed")
+
+    with pytest.raises(RuntimeError, match="gate closed"):
+        upsert_by_key(spark, batch, path, ["k"], pc, before_write=closed)
+    assert _data_files(path) == files
+    assert partition_versions(path) == versions
+
+    calls = []
+    upsert_by_key(
+        spark, batch, path, ["k"], pc, before_write=lambda: calls.append(1)
+    )
+    assert calls == [1]
+    assert partition_versions(path) != versions
 
 
 def test_delete_where_serializable_holds_the_lock(spark, tmp_path):

@@ -209,9 +209,12 @@ def load_star_warehouse(
       would make the warehouse-as-of-load contract unanswerable for
       the missing members and let ``vacuum_warehouse`` sweep their
       as-of versions.
-    - Dims write first, ``w_fact`` LAST: a crash mid-load strands at
-      worst unreferenced dim rows — never facts whose dims don't
-      exist — so the next distinct load's entry stays join-complete.
+    - Dims and fact prepare concurrently; only the fact's write
+      waits: no ``w_fact`` file is written before every dim has
+      committed, and a failed dim means no fact write. A crash
+      mid-load strands at worst unreferenced dim rows — never facts
+      whose dims don't exist — so the next distinct load's entry
+      stays join-complete.
     - In-batch duplicate keys collapse before the merge; otherwise an
       at-least-once double delivery poison-loops on the upsert's
       duplicate-key guard (the streaming-sink lesson). NOTE the
@@ -257,7 +260,9 @@ def load_star_warehouse(
         prior = committed_load(wh_dir, batch_id)
         if prior is not None:
             return prior  # replayed load: nothing touched
-    def _merge(name: str) -> None:
+    from concurrent.futures import ThreadPoolExecutor
+
+    def _merge(name: str, before_write=None) -> None:
         key = STAR_KEYS[name]
         upsert_by_key(
             spark,
@@ -265,25 +270,25 @@ def load_star_warehouse(
             os.path.join(wh_dir, name),
             [key],
             (partition_cols or {}).get(name),
+            before_write=before_write,
         )
 
-    # Dims-before-fact is the ONLY ordering constraint (crash-safety:
-    # never facts whose dims don't exist) — the four dim merges are
-    # independent tables and run CONCURRENTLY (r12): each holds its
-    # own dataset lock, the overwrite choke point scopes its dynamic
-    # mode per-writer (no shared session-conf mutation), and Spark's
-    # scheduler interleaves the jobs. At any scale the load's wall
-    # clock is max(dim merge) + fact merge instead of the sum of all
-    # five — on a 1000-executor cluster the five merges are far too
-    # small individually to saturate it serially. (dataset_lock's
-    # reentrancy counter is per-path: concurrent holders of DISTINCT
-    # paths are safe; same-path writers stay single-threaded by the
-    # loader's contract.)
-    from concurrent.futures import ThreadPoolExecutor
-
+    # Dims and fact prepare concurrently; only the fact's write waits.
+    # The five merges run at once, each under its own dataset lock, so
+    # the fact's validation, read and merge checkpoint overlap the
+    # dims. Its before_write gate joins the dim merges before its first
+    # file is written; a dim's failure re-raises there and the fact
+    # writes nothing. Same-path writers stay single-threaded by the
+    # loader's contract.
     dims = sorted(n for n in tables if n != "w_fact")
-    with ThreadPoolExecutor(max_workers=len(dims)) as pool:
-        for fut in [pool.submit(_merge, d) for d in dims]:
-            fut.result()  # re-raise the first failure; fact not yet touched
-    _merge("w_fact")
+    with ThreadPoolExecutor(max_workers=len(tables)) as pool:
+        dim_futs = [pool.submit(_merge, d) for d in dims]
+
+        def dims_committed() -> None:
+            for f in dim_futs:
+                f.result()
+
+        fact_fut = pool.submit(_merge, "w_fact", dims_committed)
+        for fut in [*dim_futs, fact_fut]:
+            fut.result()  # the first dim failure wins over the fact's echo
     return commit_warehouse(wh_dir, sorted(tables), batch_id=batch_id)

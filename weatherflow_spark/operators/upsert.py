@@ -26,6 +26,7 @@ Scale posture:
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -69,6 +70,7 @@ def _manifest_overwrite_partitions(
     df: DataFrame,
     path: str,
     partition_cols: list[str],
+    keys: list[str],
     replaced_keys: list[str],
     snapshot_batch_id: object | None,
 ) -> None:
@@ -77,10 +79,10 @@ def _manifest_overwrite_partitions(
     APPENDED under job-unique part names and the logical replace
     happens in the version entry (new version = previous entry minus
     every replaced partition's files, plus exactly the files this
-    append created). ``replaced_keys`` is the full replaced set —
-    the partitions present in ``df`` plus any partitions a delete
-    emptied (present in neither the output nor the new file walk, so
-    the carve-out is the only thing that removes them). Runs under
+    append created). ``keys`` are the partitions present in ``df``;
+    ``replaced_keys`` adds any partitions a delete emptied (present
+    in neither the output nor the new file walk, so the carve-out is
+    the only thing that removes them). Runs under
     the dataset lock; superseded files stay on disk for time travel
     until :func:`~weatherflow_spark.operators.snaplog.
     vacuum_versions` sweeps them."""
@@ -89,7 +91,6 @@ def _manifest_overwrite_partitions(
     from weatherflow_spark.operators.commit import (
         check_and_bump_versions,
         dataset_lock,
-        partition_key,
     )
     from weatherflow_spark.operators.snaplog import (
         _walk_data_files,
@@ -98,14 +99,7 @@ def _manifest_overwrite_partitions(
         record_commit,
     )
 
-    spark = df.sparkSession
     with dataset_lock(path):
-        keys = [
-            partition_key(
-                partition_cols, tuple(r[c] for c in partition_cols)
-            )
-            for r in df.select(*partition_cols).distinct().collect()
-        ]
         all_replaced = sorted(set(keys) | set(replaced_keys))
         head = head_version(path)  # pointer-resolved: no per-commit listdir
         if head is None and _walk_data_files(path):
@@ -177,6 +171,7 @@ def overwrite_partitions(
     snapshot_batch_id: object | None = None,
     replaced_keys: list[str] | None = None,
     presorted: bool = False,
+    touched_keys: list[str] | None = None,
 ) -> None:
     """Replace exactly the partitions present in ``df`` (INSERT
     OVERWRITE semantics), leaving all other partitions' files
@@ -189,16 +184,23 @@ def overwrite_partitions(
     dataset's manifest here, under the same lock as the write. A CAS
     caller (``upsert_by_key(expected_versions=...)``) therefore
     conflicts on ANY concurrent content merge, not only on other
-    upserts. Costs one distinct-collect of the batch's partition
-    values (callers materialize ``df`` before overwriting anyway).
-    Direct bulk writers (initial table builds) bypass this helper and
-    the manifest — they create tables, they don't merge into them."""
+    upserts. The touched keys are ``touched_keys`` when the caller
+    already holds them (``commit.partition_key`` form, exactly the
+    partitions present in ``df``: the keyed upsert and the CDC apply
+    pass them), else one distinct-collect of ``df``'s partition
+    values. Direct bulk writers (initial table builds) bypass this
+    helper and the manifest — they create tables, they don't merge
+    into them."""
     from weatherflow_spark.operators.commit import (
         check_and_bump_versions,
         dataset_lock,
-        partition_key,
     )
 
+    keys = (
+        touched_keys
+        if touched_keys is not None
+        else _touched_keys(df, partition_cols)[1]
+    )
     # Cluster the batch by its partition values before the write
     # (r12): a dynamic overwrite otherwise emits one file per
     # (upstream task × touched partition) — a 32-task batch touching
@@ -224,7 +226,7 @@ def overwrite_partitions(
         # defer past, the carve-out already excludes emptied
         # partitions — so the version is always recorded here.
         _manifest_overwrite_partitions(
-            df, path, partition_cols, replaced_keys or [],
+            df, path, partition_cols, keys, replaced_keys or [],
             snapshot_batch_id,
         )
         return
@@ -247,12 +249,6 @@ def overwrite_partitions(
         df.write.option(
             "partitionOverwriteMode", "dynamic"
         ).mode("overwrite").partitionBy(*partition_cols).parquet(path)
-        keys = [
-            partition_key(
-                partition_cols, tuple(r[c] for c in partition_cols)
-            )
-            for r in df.select(*partition_cols).distinct().collect()
-        ]
         check_and_bump_versions(path, keys)
         # ``record_snapshot=False`` lets a caller whose commit is
         # NOT finished at this point (apply_changes with emptied
@@ -273,6 +269,7 @@ def upsert_by_key(
     snapshot_batch_id: object | None = None,
     merge_schema: bool = False,
     allow_missing_columns: bool = False,
+    before_write: Callable[[], None] | None = None,
 ) -> None:
     """MERGE-style upsert into a parquet table: rows whose key appears
     in ``new_batch`` are replaced, all others kept. Without a
@@ -293,26 +290,43 @@ def upsert_by_key(
     into a touched partition since, the upsert raises
     :class:`~weatherflow_spark.operators.commit.UpsertConflict`
     BEFORE writing — re-read, recompute, retry — instead of silently
-    losing that writer's merge (last-writer-wins)."""
+    losing that writer's merge (last-writer-wins).
+
+    ``before_write`` is called under the dataset lock once the merged
+    slice is materialised and before the first file is written, on
+    every write branch; if it raises, nothing is written. The star
+    loader uses it to hold the fact's write until every dimension has
+    committed while the fact's read and merge run beside them."""
     from weatherflow_spark.operators.commit import dataset_lock
 
-    # Validation job runs BEFORE the lock (it must not lengthen the
-    # critical section that serializes every writer on the dataset).
-    _require_unique_keys(new_batch, key_cols, "batch", path)
-    # The lock covers the WHOLE read-modify-write (reentrant through
-    # the overwrite helper): without it, a compaction swap landing
-    # between this read's file listing and the checkpoint would
-    # delete the listed files mid-job — a FileNotFoundException
-    # instead of an orderly wait. Compaction's long rewrite phase
-    # stays unlocked; only its validate+swap contends here. The CAS
-    # validate and the version bump run under this same hold, so
-    # there is no validate→write→bump window.
-    with dataset_lock(path):
-        _upsert_locked(
-            spark, new_batch, path, key_cols, partition_cols,
-            expected_versions, snapshot_batch_id, merge_schema,
-            allow_missing_columns,
-        )
+    # The batch is materialised once: the key check, the touched-
+    # partition collect, the anti-join keys and the union all read
+    # these blocks instead of each re-running the batch's lineage, and
+    # they see the same rows even when that lineage is nondeterministic
+    # (a dropDuplicates pick).
+    batch = new_batch.localCheckpoint(eager=True)
+    try:
+        # Validation job runs BEFORE the lock (it must not lengthen
+        # the critical section that serializes every writer on the
+        # dataset).
+        _require_unique_keys(batch, key_cols, "batch", path)
+        # The lock covers the WHOLE read-modify-write (reentrant
+        # through the overwrite helper): without it, a compaction swap
+        # landing between this read's file listing and the checkpoint
+        # would delete the listed files mid-job — a
+        # FileNotFoundException instead of an orderly wait.
+        # Compaction's long rewrite phase stays unlocked; only its
+        # validate+swap contends here. The CAS validate and the
+        # version bump run under this same hold, so there is no
+        # validate→write→bump window.
+        with dataset_lock(path):
+            _upsert_locked(
+                spark, batch, path, key_cols, partition_cols,
+                expected_versions, snapshot_batch_id, merge_schema,
+                allow_missing_columns, before_write,
+            )
+    finally:
+        release_checkpoint(batch)
 
 
 def _require_unique_keys(
@@ -487,6 +501,7 @@ def _upsert_locked(
     snapshot_batch_id: object | None = None,
     merge_schema: bool = False,
     allow_missing_columns: bool = False,
+    before_write: Callable[[], None] | None = None,
 ) -> None:
     from weatherflow_spark.operators import commit as _commit
     from weatherflow_spark.operators.commit import (
@@ -494,6 +509,7 @@ def _upsert_locked(
         dataset_lock,
     )
 
+    gate = before_write or (lambda: None)
     # Same lock contract as _apply_changes_locked: the whole
     # read-modify-write must run inside the caller's hold.
     if not _commit.lock_held_by_me(path):
@@ -516,6 +532,7 @@ def _upsert_locked(
         writer = new_batch.write.mode("overwrite")
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
+        gate()
         with dataset_lock(path):
             writer.parquet(path)
             check_and_bump_versions(path, keys)
@@ -558,11 +575,15 @@ def _upsert_locked(
     # slice to the touched partitions (executor-local, spill-backed).
     merged = merged.localCheckpoint(eager=True)
     try:
+        gate()
         if partition_cols:
-            # takes the lock; bumps the touched versions (choke point)
+            # takes the lock; bumps the touched versions (choke point).
+            # merged holds exactly the touched partitions (the batch
+            # has rows in each), so the keys need no second collect.
             overwrite_partitions(
                 merged, path, partition_cols,
                 snapshot_batch_id=snapshot_batch_id,
+                touched_keys=keys,
             )
         elif _manifest_mode(path):
             _manifest_full_replace(merged, path, keys, snapshot_batch_id)
@@ -646,6 +667,7 @@ def _apply_changes_locked(
     from weatherflow_spark.operators.commit import (
         check_and_bump_versions,
         dataset_lock,
+        partition_key,
     )
 
     # The emptied-partition branch below DEFERS the snapshot record
@@ -765,20 +787,20 @@ def _apply_changes_locked(
                 for r in merged.select(*partition_cols).distinct().collect()
             }
             emptied = [t for t in touched if t not in remaining]
+            merged_keys = [partition_key(partition_cols, t) for t in remaining]
             if _manifest_mode(path):
                 # Manifest mode needs no rmtree and no deferred record:
                 # passing the emptied partitions as replaced_keys carves
                 # their files out of the new version's list — the logical
                 # delete IS the manifest change, the files stay for time
                 # travel until vacuum.
-                from weatherflow_spark.operators.commit import partition_key
-
                 overwrite_partitions(
                     merged, path, partition_cols,
                     snapshot_batch_id=snapshot_batch_id,
                     replaced_keys=[
                         partition_key(partition_cols, t) for t in emptied
                     ],
+                    touched_keys=merged_keys,
                 )
                 return
             # takes the lock; bumps the MERGED partitions' versions. When
@@ -790,11 +812,10 @@ def _apply_changes_locked(
             overwrite_partitions(
                 merged, path, partition_cols, record_snapshot=not emptied,
                 snapshot_batch_id=snapshot_batch_id,
+                touched_keys=merged_keys,
             )
             if emptied:
                 with dataset_lock(path):
-                    from weatherflow_spark.operators.commit import partition_key
-
                     for t in emptied:
                         # partition_key hive-escapes values exactly as
                         # Spark wrote the directory — a raw f-string path

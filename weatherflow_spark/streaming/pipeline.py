@@ -47,6 +47,7 @@ from pyspark.sql.types import (
 from weatherflow_spark.functions.calendar import enrich_datetime
 from weatherflow_spark.functions.weather import add_calc_attributes
 from weatherflow_spark.io import normalize_events
+from weatherflow_spark.operators.caching import release_checkpoint
 from weatherflow_spark.operators.star import build_weather_star
 from weatherflow_spark.session import configure_session
 
@@ -1074,34 +1075,45 @@ def foreach_batch_admission(index_path: str, verdicts_path: str):
 
         spark = batch_df.sparkSession
         batch_df = batch_df.localCheckpoint(eager=True)  # stable for 3 uses
-        # Upgrade path: an index built by the flat batch API must move
-        # its root files into a batch_id=-1 slice before this sink
-        # writes batch_id=N siblings — Spark cannot read a root that
-        # mixes leaf files with partition dirs (r9 review).
-        migrate_flat_index_to_batched(index_path)
-        sig_dir = _os.path.join(index_path, "sigs")
-        if not _os.path.exists(sig_dir):
-            # Cold start: the first batch seeds the index; everything
-            # in it is 'new' by definition. Seeded through the same
-            # per-batch slice so the index stays one partitioned
-            # layout and the seed itself is replay-idempotent.
-            write_signature_batch(batch_df, index_path, batch_id)
-            verdicts = batch_df.select(
-                "doc_id",
-                F.lit("new").alias("verdict"),
-                F.lit(None).cast("double").alias("best_jaccard"),
+        checkpoints = [batch_df]
+        try:
+            # Upgrade path: an index built by the flat batch API must
+            # move its root files into a batch_id=-1 slice before this
+            # sink writes batch_id=N siblings — Spark cannot read a
+            # root that mixes leaf files with partition dirs (r9
+            # review).
+            migrate_flat_index_to_batched(index_path)
+            sig_dir = _os.path.join(index_path, "sigs")
+            if not _os.path.exists(sig_dir):
+                # Cold start: the first batch seeds the index;
+                # everything in it is 'new' by definition. Seeded
+                # through the same per-batch slice so the index stays
+                # one partitioned layout and the seed itself is
+                # replay-idempotent.
+                write_signature_batch(batch_df, index_path, batch_id)
+                verdicts = batch_df.select(
+                    "doc_id",
+                    F.lit("new").alias("verdict"),
+                    F.lit(None).cast("double").alias("best_jaccard"),
+                )
+            else:
+                verdicts = admit_with_index(spark, batch_df, index_path)
+                verdicts = verdicts.localCheckpoint(eager=True)
+                checkpoints.append(verdicts)
+                new_ids = verdicts.where(F.col("verdict") == "new").select(
+                    "doc_id"
+                )
+                write_signature_batch(
+                    batch_df.join(F.broadcast(new_ids), "doc_id"),
+                    index_path,
+                    batch_id,
+                )
+            verdicts.write.mode("overwrite").parquet(
+                _os.path.join(verdicts_path, f"batch_id={batch_id}")
             )
-        else:
-            verdicts = admit_with_index(spark, batch_df, index_path)
-            verdicts = verdicts.localCheckpoint(eager=True)
-            new_ids = verdicts.where(F.col("verdict") == "new").select("doc_id")
-            write_signature_batch(
-                batch_df.join(F.broadcast(new_ids), "doc_id"),
-                index_path,
-                batch_id,
-            )
-        verdicts.write.mode("overwrite").parquet(
-            _os.path.join(verdicts_path, f"batch_id={batch_id}")
-        )
+        finally:
+            # a long-running stream must not keep every batch's blocks
+            for cp in checkpoints:
+                release_checkpoint(cp)
 
     return _sink
