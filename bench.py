@@ -15,6 +15,11 @@ between reps so the min is still the query's own cost, not a
 residual-cache artifact; a warm-up query runs first so JVM/codegen
 warm-up isn't billed to the first headline query. Execution is via a
 noop sink — full computation without driver result serialization.
+
+A query that raises on any rep is recorded under ``failed`` (error
+class and the first line of its message) and left out of ``value``;
+the rest of the set still runs, the line is still printed, and the
+process then exits non-zero.
 """
 
 from __future__ import annotations
@@ -334,15 +339,18 @@ def main() -> None:
 
     def run_once(name: str) -> float:
         t0 = time.perf_counter()
-        QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        elapsed = round(time.perf_counter() - t0, 3)
-        # Queries that persist loop-invariant relations (near-dup
-        # signatures, pagerank edges) would otherwise accumulate
-        # cache across reps — drop it so every timing is the query's
-        # own cost and memory pressure stays flat.
-        release_caches()
-        spark.catalog.clearCache()
-        return elapsed
+        try:
+            QUERIES[name](spark, SF_DIR).write.format("noop").mode(
+                "overwrite"
+            ).save()
+            return round(time.perf_counter() - t0, 3)
+        finally:
+            # Queries that persist loop-invariant relations (near-dup
+            # signatures, pagerank edges) would otherwise accumulate
+            # cache across reps — drop it so every timing is the
+            # query's own cost and memory pressure stays flat.
+            release_caches()
+            spark.catalog.clearCache()
 
     # warm-up (JVM + parquet footer caches), not billed
     QUERIES["q_flagship_season_rollup"](spark, SF_DIR).count()
@@ -360,7 +368,14 @@ def main() -> None:
             extra += 1
         return reps
 
-    runs = {name: run_reps(name) for name in names}
+    runs: dict[str, list[float]] = {}
+    failed: dict[str, str] = {}
+    for name in names:
+        try:
+            runs[name] = run_reps(name)
+        except Exception as exc:
+            first = (str(exc).strip().splitlines() or [""])[0]
+            failed[name] = f"{type(exc).__name__}: {first[:200]}"
     timings = {name: min(reps) for name, reps in runs.items()}
     total = round(sum(timings.values()), 3)
 
@@ -415,6 +430,7 @@ def main() -> None:
         "ambient_factor": ambient,
         "ambient_factor_long": ambient_long,
         "pin_generation": {**PIN_GENERATION, "hash": _pin_hash()},
+        "failed": failed,
     }
     # The driver only keeps a ~2,000-char stdout tail, which the full
     # per-query payload outgrew rounds ago (BENCH_r04..r07 all recorded
@@ -470,9 +486,12 @@ def main() -> None:
         "ambient_factor_long": ambient_long,
         "pin_generation": payload["pin_generation"],
         "full_payload": "bench_last.json",
+        "failed": failed,
     }
     print(json.dumps(compact, separators=(",", ":")))
     spark.stop()
+    if failed:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

@@ -1069,11 +1069,12 @@ def test_version_diff_plans_no_cartesian_or_python(spark):
 
 
 def test_dim_broadcast_degrades_to_shuffle_by_size(spark):
-    """Size-based broadcast decision (r13 verdict #8): under the
-    bucketed routes' broadcast-off conf, _dim_broadcast pins the hint
-    only while the dim's on-disk bytes are under the ceiling — an
-    outgrown dim must plan a shuffle join instead of OOMing the
-    driver with a pinned broadcast."""
+    """Size-based broadcast decision (r13 verdict #8): _dim_broadcast
+    pins the hint only while the dim's on-disk bytes are under the
+    ceiling — an outgrown dim must plan a shuffle join instead of
+    OOMing the driver with a pinned broadcast. Auto-broadcast is off
+    for the duration, so the plan shows _dim_broadcast's own decision
+    rather than Spark's size estimate."""
     from weatherflow_spark.plans.serving import (
         DIM_BROADCAST_MAX_BYTES,
         _dim_broadcast,
@@ -1108,36 +1109,3 @@ def test_table_bytes_reads_real_sizes():
     assert n == os.path.getsize(os.path.join(SF_SMALL, "nation.parquet"))
     assert table_bytes(SF_SMALL, "customer") > n
     assert table_bytes(SF_SMALL, "no_such_table") == 0
-
-
-def test_no_broadcast_twin_scopes_the_guard(spark):
-    """r15 (VERDICT r14 #5): forcing sort-merge for the bucketed-layout
-    certifications must not leak into sibling branches. The guard is a
-    CLONED planning session holding autoBroadcastJoinThreshold=-1; the
-    parent session — where every other overlapped branch plans — keeps
-    its threshold, so a dim-join sibling still plans BroadcastHashJoin
-    WHILE a guarded branch is active."""
-    from weatherflow_spark.io import load_table
-    from weatherflow_spark.operators.overlap import no_broadcast_session
-
-    twin = no_broadcast_session(spark)
-    assert twin is not spark
-    assert twin.conf.get("spark.sql.autoBroadcastJoinThreshold") == "-1"
-    # one twin per parent, shared by all guarded branches
-    assert no_broadcast_session(spark) is twin
-    # the parent's threshold is untouched by the twin's existence
-    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") != "-1"
-
-    def small_join(sess):
-        o = load_table(sess, SF_SMALL, "orders").select(
-            "o_orderkey", "o_custkey"
-        )
-        c = load_table(sess, SF_SMALL, "customer").select("c_custkey")
-        return o.join(c, o.o_custkey == c.c_custkey)
-
-    # identical join, both built while the guard session is live:
-    # sibling (parent) broadcasts, guarded (twin) sort-merges.
-    assert "BroadcastHashJoin" in _plan(small_join(spark))
-    twin_plan = _plan(small_join(twin))
-    assert "BroadcastHashJoin" not in twin_plan, twin_plan
-    assert "SortMergeJoin" in twin_plan or "ShuffledHashJoin" in twin_plan

@@ -7,13 +7,16 @@ from __future__ import annotations
 
 import os
 import shutil
+import subprocess
+import sys
 import tempfile
+import textwrap
 
 import pytest
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMALL
+from tests.conftest import REPO_DIR, SF_SMALL
 from weatherflow_spark.io import load_table
 from weatherflow_spark.operators.rollup import (
     event_partials,
@@ -401,3 +404,36 @@ def test_rollup_maintenance_is_manifest_safe(spark, tmp_path):
         ).collect()
     }
     assert got == want  # raw-read double counting would inflate n
+
+
+_SCRATCH_CHILD = textwrap.dedent(
+    """
+    import os, sys
+    sys.path.insert(0, {repo!r})
+    from pyspark.sql import SparkSession
+    from weatherflow_spark.plans import QUERIES
+    from weatherflow_spark.plans.serving import _scratch_dir
+
+    spark = SparkSession.builder.master("local[2]").getOrCreate()
+    QUERIES["q_rollup_serve"](spark, {sf!r}).count()
+    print("pid", os.getpid(), os.path.isdir(_scratch_dir({sf!r})))
+    spark.stop()
+    """
+)
+
+
+def test_process_scratch_is_removed_at_exit(tmp_path):
+    """The per-process serving scratch dir (wf_rollup_serve_<sf>_<pid>)
+    goes away when its process exits: a child runs one scratch-writing
+    row and exits, and no dir tagged with its pid is left in its TMPDIR."""
+    env = {k: v for k, v in os.environ.items() if k != "PYSPARK_SUBMIT_ARGS"}
+    env["TMPDIR"] = str(tmp_path)
+    proc = subprocess.run(
+        [sys.executable, "-c", _SCRATCH_CHILD.format(repo=REPO_DIR, sf=SF_SMALL)],
+        capture_output=True, text=True, env=env, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    pid, existed = proc.stdout.split("pid ", 1)[1].split()[:2]
+    assert existed == "True", "the row wrote no scratch dir"
+    left = [n for n in os.listdir(tmp_path) if n.endswith(f"_{pid}")]
+    assert left == [], left

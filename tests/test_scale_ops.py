@@ -485,19 +485,14 @@ def test_bucketed_warehouse_is_durable_across_sessions(spark, tmp_path):
 
     # The re-registered tables still carry bucket metadata: the
     # co-located join plans with zero Exchange.
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = spark.table(t_li2).join(
-            spark.table(t_ord2),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        j.collect()
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan, plan
-        assert colocated_join_is_shuffle_free(j), plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    j = spark.table(t_li2).join(
+        spark.table(t_ord2).hint("merge"),
+        F.col("l_orderkey") == F.col("o_orderkey"),
+    )
+    j.collect()
+    plan = j._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" in plan, plan
+    assert colocated_join_is_shuffle_free(j), plan
 
     # Spec change invalidates the marker and rebuilds exactly once.
     t_li3, _ = bucketed_warehouse(spark, SF_SMALL, scratch, n_buckets=2)
@@ -547,17 +542,12 @@ def test_bucketed_warehouse_cust_is_durable_across_sessions(spark, tmp_path):
     assert (t_ord2, t_cust2) == (t_ord, t_cust)
     assert file_set() == built, "reuse path wrote/touched data files"
 
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = spark.table(t_cust2).join(
-            spark.table(t_ord2),
-            F.col("c_custkey") == F.col("o_custkey"),
-            "left",
-        )
-        j.collect()
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan, plan
-        assert colocated_join_is_shuffle_free(j), plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    j = spark.table(t_cust2).join(
+        spark.table(t_ord2).hint("merge"),
+        F.col("c_custkey") == F.col("o_custkey"),
+        "left",
+    )
+    j.collect()
+    plan = j._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" in plan, plan
+    assert colocated_join_is_shuffle_free(j), plan

@@ -425,8 +425,9 @@ def colocated_join_is_shuffle_free(joined: DataFrame) -> bool:
     hash flavor would let a range-partitioned or rebalanced plan pass
     as "shuffle-free" (r10 verdict). ``BroadcastExchange`` is NOT a
     shuffle and is deliberately excluded: callers certifying a
-    co-located layout must separately disable broadcast and require a
-    SortMergeJoin, or a small build side makes the check vacuous.
+    co-located layout must force the sort-merge path (a ``merge`` join
+    hint) and require a SortMergeJoin, or a small build side makes the
+    check vacuous.
     (AQE wraps the plan; inspect the executed/final plan string.)"""
     return count_shuffle_exchanges(joined) == 0
 
@@ -445,6 +446,3 @@ def count_shuffle_exchanges(df: DataFrame) -> int:
     plan = df._jdf.queryExecution().executedPlan().toString()
     return len(re.findall(r"\bExchange\b", plan))
 
-
-# Backwards-compatible alias for the typo'd pre-r11 name.
-cocated_join_is_shuffle_free = colocated_join_is_shuffle_free

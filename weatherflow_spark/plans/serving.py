@@ -24,7 +24,9 @@ partial-aggregate table is the posture that survives 100 TB.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 from collections.abc import Callable
 
@@ -33,7 +35,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from weatherflow_spark.io import load_table, table_bytes
 from weatherflow_spark.operators.caching import tracked_persist
 from weatherflow_spark.operators.indexing import assign_global_index
-from weatherflow_spark.operators.overlap import no_broadcast_session
 from weatherflow_spark.operators.rollup import (
     read_rollup,
     refresh_rollup,
@@ -43,15 +44,23 @@ from weatherflow_spark.operators.rollup import (
 ROLLUP_SCALE = 100  # cents — the partial state's exact integer unit
 
 
+_SCRATCH_AT_EXIT: set[str] = set()
+
+
 def _scratch_dir(sf_dir: str) -> str:
     """Stable per-(SF, process) scratch path: stable within a process
     so repeated builds/reps are idempotent overwrites (bounded /tmp
     growth), per-process so a driver run and a concurrent pytest
-    session can never interleave writes on the same table paths."""
+    session can never interleave writes on the same table paths.
+    The directory is removed when the process exits."""
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    return os.path.join(
+    path = os.path.join(
         tempfile.gettempdir(), f"wf_rollup_serve_{tag}_{os.getpid()}"
     )
+    if path not in _SCRATCH_AT_EXIT:
+        _SCRATCH_AT_EXIT.add(path)
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def q_rollup_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -69,8 +78,6 @@ def q_rollup_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from weatherflow_spark.operators.rollup import merge_rollup
 
     path = os.path.join(_scratch_dir(sf_dir), "partials")
-    import shutil
-
     shutil.rmtree(path, ignore_errors=True)  # full reset: replayable
     events = load_table(spark, sf_dir, "events")
     day = F.dayofmonth(F.to_date("ts"))
@@ -185,8 +192,6 @@ def q_upsert_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge directly from raw orders — a hash match certifies
     replace-by-key, keep-others, partition pruning, AND idempotent
     replay in one row set."""
-    import shutil
-
     from weatherflow_spark.operators.upsert import upsert_by_key
 
     path = os.path.join(_scratch_dir(sf_dir), "upsert_tbl")
@@ -249,8 +254,6 @@ def q_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders, so a hash match certifies that the rewrite lost nothing,
     duplicated nothing, and changed no value — the anti-entropy
     discipline (E71) applied to the layout operator."""
-    import shutil
-
     from weatherflow_spark.operators.layout import compact
 
     path = os.path.join(_scratch_dir(sf_dir), "compact_tbl")
@@ -303,8 +306,6 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     table on disk. The oracle derives the expected single-apply state
     from raw orders, so one hash certifies delete-by-tombstone,
     replace-by-key, partition-scoped rewrites, and idempotent replay."""
-    import shutil
-
     from weatherflow_spark.operators.upsert import apply_changes
 
     path = os.path.join(_scratch_dir(sf_dir), "cdc_tbl")
@@ -409,8 +410,6 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     never history semantics. 100 TB posture: versions are O(touched
     files) metadata + hard links, reads are manifest-driven scans —
     nothing here rescans or copies data."""
-    import shutil
-
     from weatherflow_spark.operators.snaplog import (
         init_snapshot_log,
         read_version,
@@ -544,8 +543,6 @@ def q_time_travel_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORACLE_TIME_TRAVEL **verbatim**: both modes must reconstruct
     identical logical history, so one hash certifies the manifest
     read path AND its equivalence to the mirror form."""
-    import shutil
-
     from weatherflow_spark.operators.snaplog import (
         init_snapshot_log,
         read_version,
@@ -622,8 +619,6 @@ def _build_versioned_orders(
     builds this ONCE and serves both the version-diff and the IVM
     branches from it (the builds are identical by construction; the
     singles keep building their own)."""
-    import shutil
-
     from weatherflow_spark.operators.snaplog import (
         init_snapshot_log,
         record_commit,
@@ -696,8 +691,6 @@ def q_version_diff(
     ``_table``: suite-internal hook — a prebuilt fixture path from
     :func:`_build_versioned_orders` (the suite builds one fixture for
     the E91 and E92 branches); the registered single builds its own."""
-    import shutil
-
     from weatherflow_spark.operators.snaplog import (
         diff_versions,
         read_version,
@@ -898,8 +891,6 @@ def q_bucketed_join_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, so one row certifies the layout is both shuffle-free AND
     lossless. Scratch-backed external tables (per-SF, per-process
     names) keep replays idempotent and the warehouse dir untouched."""
-    import shutil
-
     from weatherflow_spark.operators.bucketing import (
         colocated_join_is_shuffle_free,
         write_bucketed,
@@ -929,13 +920,11 @@ def q_bucketed_join_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Broadcast would make the zero-Exchange check vacuous (a small
     # orders side planning BroadcastHashJoin has no shuffle either,
-    # so a lost bucket layout would still "pass" — r10 review): build
-    # the certification join in the no-broadcast planning twin so the
-    # property asserted is the bucketed co-location itself — without
-    # ever touching the shared session's threshold (r15).
-    nbs = no_broadcast_session(spark)
-    joined = nbs.table(t_li).join(
-        nbs.table(t_orders),
+    # so a lost bucket layout would still "pass"): the ``merge`` hint
+    # forces the sort-merge path for this join alone, so the property
+    # asserted is the bucketed co-location itself.
+    joined = spark.table(t_li).join(
+        spark.table(t_orders).hint("merge"),
         F.col("l_orderkey") == F.col("o_orderkey"),
     )
     plan = joined._jdf.queryExecution().executedPlan().toString()
@@ -956,7 +945,6 @@ def q_bucketed_join_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("price_c"),
         F.expr("bit_xor(l_orderkey)").alias("key_xor"),
     )
-    # Materialize in the twin so the executed join is the certified one.
     return tracked_persist(out)
 
 
@@ -988,9 +976,9 @@ def _require_zero_shuffle_smj(
 ) -> None:
     """The adoption certification's teeth: RAISE unless the executed
     plan is a SortMergeJoin plan with at most ``max_exchanges``
-    shuffle Exchanges. Broadcast is disabled by the caller for the
-    fact⋈fact join (a small build side would make the check vacuous —
-    r10 review), so SortMergeJoin must appear; the Exchange count
+    shuffle Exchanges. The caller puts a ``merge`` hint on the
+    fact⋈fact join (a broadcast build side would make the check
+    vacuous), so SortMergeJoin must appear; the Exchange count
     rejects every shuffle flavor (hash, range, rebalance) while
     permitting the deliberate BroadcastExchange of the dimension
     side. ``max_exchanges=0`` is the fully co-located form (Q3/Q18);
@@ -1030,10 +1018,10 @@ def _dim_broadcast(df: DataFrame, nbytes: int) -> DataFrame:
     :func:`~weatherflow_spark.io.table_bytes` for raw tables, or
     ``table_status(path)['bytes']`` for versioned ones) is under
     :data:`DIM_BROADCAST_MAX_BYTES`; otherwise return it unhinted so
-    the join degrades to shuffle. The bucketed routes disable the
-    auto-broadcast threshold to protect the fact⋈fact merge, which
-    also disables Spark's own size fallback — this check reinstates
-    it from real file sizes instead of plan estimates."""
+    Spark's own choice decides the join. The ceiling is on real file
+    sizes, not Spark's plan estimate, and sits above the session's
+    32 MiB auto-broadcast threshold, so dims up to it stay broadcast
+    beside the hinted fact⋈fact merge."""
     return F.broadcast(df) if nbytes <= DIM_BROADCAST_MAX_BYTES else df
 
 
@@ -1056,21 +1044,22 @@ def q_tpch_q3_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from weatherflow_spark.plans.queries import scaled_sum
 
     t_li, t_ord = bucketed_warehouse(spark, sf_dir, _durable_scratch_base())
-    nbs = no_broadcast_session(spark)  # scoped -1: plan in the twin
     cust = (
-        load_table(nbs, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .where(F.col("c_mktsegment") == "BUILDING")
         .select("c_custkey")
     )
-    orders = nbs.table(t_ord).where(
+    orders = spark.table(t_ord).where(
         F.col("o_orderdate") < F.lit("1998-07-01").cast("timestamp")
     )
-    li = nbs.table(t_li).where(
+    li = spark.table(t_li).where(
         F.col("l_shipdate") > F.lit("1998-07-01").cast("timestamp")
     )
     rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     out = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        li.join(
+            orders.hint("merge"), F.col("l_orderkey") == F.col("o_orderkey")
+        )
         .join(
             _dim_broadcast(cust, table_bytes(sf_dir, "customer")),
             F.col("o_custkey") == F.col("c_custkey"),
@@ -1099,18 +1088,18 @@ def q_tpch_q18_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from weatherflow_spark.plans.tpch import Q18_QTY_THRESHOLD
 
     t_li, t_ord = bucketed_warehouse(spark, sf_dir, _durable_scratch_base())
-    nbs = no_broadcast_session(spark)  # scoped -1: plan in the twin
-    customer = load_table(nbs, sf_dir, "customer").select(
+    customer = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name"
     )
     big = (
-        nbs.table(t_li)
+        spark.table(t_li)
         .groupBy("l_orderkey")
         .agg(scaled_sum(F.col("l_quantity"), 100).alias("total_qty"))
         .where(F.col("total_qty") > Q18_QTY_THRESHOLD)
     )
     out = (
-        nbs.table(t_ord)
+        spark.table(t_ord)
+        .hint("merge")
         .join(big, F.col("o_orderkey") == F.col("l_orderkey"))
         .join(
             _dim_broadcast(customer, table_bytes(sf_dir, "customer")),
@@ -1161,16 +1150,16 @@ def q_tpch_q4_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from weatherflow_spark.plans.tpch import with_commit_receipt
 
     t_li, t_ord = bucketed_warehouse(spark, sf_dir, _durable_scratch_base())
-    nbs = no_broadcast_session(spark)  # scoped -1: plan in the twin
-    orders = nbs.table(t_ord).where(
+    orders = spark.table(t_ord).where(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp"))
     )
     li = with_commit_receipt(
-        nbs.table(t_li).select("l_orderkey", "l_linenumber", "l_shipdate")
+        spark.table(t_li).select("l_orderkey", "l_linenumber", "l_shipdate")
     ).where(F.col("l_commitdate") < F.col("l_receiptdate"))
     out = (
-        orders.join(
+        orders.hint("merge")
+        .join(
             li.select("l_orderkey"),
             F.col("o_orderkey") == F.col("l_orderkey"),
             "left_semi",
@@ -1194,8 +1183,7 @@ def q_tpch_q12_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from weatherflow_spark.plans.tpch_ps import SHIP_MODES
 
     t_li, t_ord = bucketed_warehouse(spark, sf_dir, _durable_scratch_base())
-    nbs = no_broadcast_session(spark)  # scoped -1: plan in the twin
-    li = nbs.table(t_li).where(
+    li = spark.table(t_li).where(
         (F.col("l_shipdate") >= F.lit("1995-12-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
     )
@@ -1214,10 +1202,12 @@ def q_tpch_q12_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = li.withColumn("l_shipmode", mode).where(
         F.col("l_shipmode").isin("MAIL", "SHIP")
     )
-    orders = nbs.table(t_ord).select("o_orderkey", "o_orderpriority")
+    orders = spark.table(t_ord).select("o_orderkey", "o_orderpriority")
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     out = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        li.join(
+            orders.hint("merge"), F.col("l_orderkey") == F.col("o_orderkey")
+        )
         .groupBy("l_shipmode")
         .agg(
             F.sum(F.when(high, 1).otherwise(0))
@@ -1254,21 +1244,22 @@ def q_tpch_q21_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from weatherflow_spark.plans.tpch_ext import Q21_TOP
 
     t_li, t_ord = bucketed_warehouse(spark, sf_dir, _durable_scratch_base())
-    nbs = no_broadcast_session(spark)  # scoped -1: plan in the twin
     orders = (
-        nbs.table(t_ord)
+        spark.table(t_ord)
         .where(F.col("o_orderstatus") == "F")
         .select("o_orderkey")
     )
     li = with_commit_receipt(
-        nbs.table(t_li).select("l_orderkey", "l_linenumber", "l_suppkey", "l_shipdate")
+        spark.table(t_li).select("l_orderkey", "l_linenumber", "l_suppkey", "l_shipdate")
     ).select("l_orderkey", "l_suppkey", "l_commitdate", "l_receiptdate")
     late = F.col("l_receiptdate") > F.col("l_commitdate")
-    supplier = load_table(nbs, sf_dir, "supplier").select(
+    supplier = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name"
     )
     per_supp = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        li.join(
+            orders.hint("merge"), F.col("l_orderkey") == F.col("o_orderkey")
+        )
         .groupBy("l_orderkey", "l_suppkey")
         .agg(F.max(late.cast("int")).alias("was_late"))
     )
@@ -1303,9 +1294,9 @@ def q_tpch_q13_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH sides of customer⟕orders at every scale; here the outer join
     merges bucket-to-bucket and the per-customer order count groups
     on the bucket key, so the ONLY Exchange in the whole plan is the
-    tiny (c_count) distribution re-group (``max_exchanges=1``,
-    broadcast disabled — raise-checked). Hash-matches ORACLE_TPCH_Q13
-    verbatim."""
+    tiny (c_count) distribution re-group (``max_exchanges=1``, the
+    outer join ``merge``-hinted — raise-checked). Hash-matches
+    ORACLE_TPCH_Q13 verbatim."""
     from weatherflow_spark.operators.bucketing import (
         bucketed_warehouse_cust,
     )
@@ -1313,16 +1304,17 @@ def q_tpch_q13_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     t_ord, t_cust = bucketed_warehouse_cust(
         spark, sf_dir, _durable_scratch_base()
     )
-    nbs = no_broadcast_session(spark)  # scoped -1: plan in the twin
-    customer = nbs.table(t_cust).select("c_custkey")
+    customer = spark.table(t_cust).select("c_custkey")
     orders = (
-        nbs.table(t_ord)
+        spark.table(t_ord)
         .where(F.col("o_orderpriority") != "1-URGENT")
         .select("o_custkey", "o_orderkey")
     )
     out = (
         customer.join(
-            orders, F.col("c_custkey") == F.col("o_custkey"), "left"
+            orders.hint("merge"),
+            F.col("c_custkey") == F.col("o_custkey"),
+            "left",
         )
         .groupBy("c_custkey")
         .agg(F.count("o_orderkey").alias("c_count"))
@@ -1341,10 +1333,10 @@ def q_tpch_q10_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer WITHOUT a shuffle. The aggregate's single re-key
     (``repartition(n_buckets, o_custkey)`` — REPARTITION_BY_NUM, so
     AQE cannot coalesce it away from the bucket count) is the one
-    Exchange in the plan (``max_exchanges=1``, broadcast disabled
-    except the explicit 25-row nation hint — raise-checked): its
-    output partitioning matches customer's bucketing exactly, so the
-    join-back merges in place. The plain form (broadcast off) pays
+    Exchange in the plan (``max_exchanges=1``, both fact joins
+    ``merge``-hinted, the 25-row nation dim broadcast — raise-checked):
+    its output partitioning matches customer's bucketing exactly, so
+    the join-back merges in place. The plain form, sort-merged, pays
     FOUR shuffles on the same shape. Hash-matches ORACLE_TPCH_Q10
     verbatim."""
     from weatherflow_spark.operators.bucketing import (
@@ -1360,21 +1352,22 @@ def q_tpch_q10_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, t_cust = bucketed_warehouse_cust(
         spark, sf_dir, _durable_scratch_base(), n_buckets=n_buckets
     )
-    nbs = no_broadcast_session(spark)  # scoped -1: plan in the twin
-    li = nbs.table(t_li).where(F.col("l_returnflag") == "R")
-    orders = nbs.table(t_ord).where(
+    li = spark.table(t_li).where(F.col("l_returnflag") == "R")
+    orders = spark.table(t_ord).where(
         (F.col("o_orderdate") >= F.lit("1996-10-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    customer = nbs.table(t_cust).select(
+    customer = spark.table(t_cust).select(
         "c_custkey", "c_name", "c_acctbal", "c_nationkey"
     )
-    nation = load_table(nbs, sf_dir, "nation").select(
+    nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name"
     )
     rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     per_cust = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        li.join(
+            orders.hint("merge"), F.col("l_orderkey") == F.col("o_orderkey")
+        )
         # ONE re-key, placed BEFORE the aggregate so the groupBy
         # reuses it and its count equals the custkey bucket count
         # — the join-back then needs no further exchange on
@@ -1385,7 +1378,7 @@ def q_tpch_q10_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = (
         per_cust.join(
-            customer, F.col("o_custkey") == F.col("c_custkey")
+            customer.hint("merge"), F.col("o_custkey") == F.col("c_custkey")
         )
         .join(
             _dim_broadcast(nation, table_bytes(sf_dir, "nation")),
@@ -1435,8 +1428,6 @@ def q_partition_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     table; the oracle derives it from raw orders, so one hash
     certifies the maintenance rewrote the right partition and changed
     nothing."""
-    import shutil
-
     from weatherflow_spark.operators.layout import compact_partitions
     from weatherflow_spark.operators.snaplog import (
         entry_files,
@@ -1535,8 +1526,6 @@ def q_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     Serve a per-priority digest of the head; the oracle applies
     ``WHERE NOT (predicate)`` to raw orders, so one hash certifies
     the delete removed exactly the matching rows and nothing else."""
-    import shutil
-
     from weatherflow_spark.operators.snaplog import (
         init_snapshot_log,
         read_version,
@@ -1670,8 +1659,6 @@ def q_delete_where_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: ``WHERE NOT (predicate)`` on raw orders — one hash
     certifies the merge-on-read read path AND the fold rewrite
     produce exactly the eager delete's answer."""
-    import shutil
-
     from weatherflow_spark.operators.layout import compact_partitions
     from weatherflow_spark.operators.snaplog import (
         head_dv,
@@ -1826,7 +1813,6 @@ def q_forget_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     queue, never table data), and the sink's min/max prune bound
     routes each victim scan through the o_orderkey zone maps."""
     import json as _json
-    import shutil
 
     from weatherflow_spark.operators.snaplog import (
         head_dv,
@@ -1986,8 +1972,6 @@ def q_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     between a point/range lookup reading a handful of files and
     reading the table; no footer is opened at read time (bounds come
     from the manifest segments)."""
-    import shutil
-
     from weatherflow_spark.operators.snaplog import (
         init_snapshot_log,
         record_commit,
@@ -2107,8 +2091,6 @@ def q_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is fold-invariant). A fold that 1-D-sorts or skips the
     re-interleave trips the fraction check here instead of silently
     decaying E106's pruning."""
-    import shutil
-
     from weatherflow_spark.operators.snaplog import (
         init_snapshot_log,
         record_commit,
@@ -2263,8 +2245,6 @@ def q_tpch_q6_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     this turns the canonical 'did every predicate reach the scan'
     query into one that never opens six sevenths of the table; the
     surviving footers still get the pushed residual predicates."""
-    import shutil
-
     from weatherflow_spark.operators.snaplog import (
         init_snapshot_log,
         record_commit,
@@ -2362,8 +2342,6 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     column per priority; the oracle derives the same from raw orders
     with a CASE for batch membership — one hash certifies evolution,
     NULL backfill, replay idempotence, and the merge-read path."""
-    import shutil
-
     from weatherflow_spark.operators.upsert import upsert_by_key
 
     path = os.path.join(_scratch_dir(sf_dir), "evolve_tbl")
@@ -2442,8 +2420,6 @@ def q_change_feed(
     certifies the diff-once/stream-many CDC fan-out shape: the feed a
     downstream consumer reads equals the changes the table actually
     committed."""
-    import shutil
-
     from weatherflow_spark.operators.snaplog import (
         export_change_feed,
         read_change_feed,
@@ -2512,8 +2488,6 @@ def q_table_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     the clone's completeness AND the isolation. 100 TB posture: a
     full-table test/dev clone costs O(files) metadata, zero bytes —
     the experiment-branch workflow a copy-based clone cannot afford."""
-    import shutil
-
     from weatherflow_spark.operators.snaplog import clone_table
     from weatherflow_spark.operators.upsert import upsert_by_key
 
@@ -2662,8 +2636,6 @@ def q_star_transaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     CONCURRENTLY (star.py — safe since the overwrite mode rides on
     each writer) and each load's enriched frame is persisted for the
     load's duration; min-of-3 24.5 → 11.3 s on an idle session."""
-    import shutil
-
     from weatherflow_spark.operators.star import (
         STAR_DATE_PARTITIONING,
         build_weather_star,
@@ -2808,8 +2780,6 @@ def _build_wh_tx(spark: SparkSession, sf_dir: str, name: str) -> str:
     reuse) and raise unless the replayed load-2 batch id is
     exactly-once. Returns the warehouse path (a per-(sf, pid) scratch
     reset on every call, so replays are idempotent)."""
-    import shutil
-
     from weatherflow_spark.operators.upsert import upsert_by_key
     from weatherflow_spark.operators.whlog import (
         commit_warehouse,
@@ -2915,8 +2885,6 @@ def q_warehouse_replica(
     digests FROM THE REPLICA. Oracle: ORACLE_WAREHOUSE_SNAPSHOT
     verbatim — replication correctness IS digest identity with the
     source's own oracle."""
-    import shutil
-
     from weatherflow_spark.operators.whlog import (
         apply_warehouse_feed,
         export_warehouse_feed,
@@ -3005,8 +2973,6 @@ def q_warehouse_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the post-load-2 state from raw orders+customer — one hash
     certifies the whole maintenance pass changed layout and history
     bounds, never data."""
-    import shutil
-
     from weatherflow_spark.operators.snaplog import entry_files, versions
     from weatherflow_spark.operators.upsert import upsert_by_key
     from weatherflow_spark.operators.whlog import (
@@ -3170,8 +3136,6 @@ def q_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     Serve the per-priority digest of the head; the oracle is the
     plain derivation from raw orders — the restore must reproduce the
     seed exactly."""
-    import shutil
-
     from weatherflow_spark.operators.snaplog import (
         init_snapshot_log,
         read_version,
@@ -3520,8 +3484,6 @@ def q_index_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT SAME oracle as q_incremental_dedup, so a match proves
     index-served admission is decision-identical to full
     recomputation."""
-    import shutil
-
     from weatherflow_spark.operators.sig_index import (
         admit_with_index,
         build_signature_index,
@@ -3598,8 +3560,6 @@ def q_shard_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents with ``row_number() OVER (PARTITION BY shard)`` — a
     hash match certifies assignment, ordering, and the write/read
     round-trip in one row set."""
-    import shutil
-
     base = os.path.join(_scratch_dir(sf_dir), "shards")
     shutil.rmtree(base, ignore_errors=True)  # full reset: replayable
     docs = load_table(spark, sf_dir, "documents").select(
@@ -3668,8 +3628,6 @@ def q_sketch_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     rescans the facts. (The exact-count column is the certification
     companion, computed from raw events here as in q_hll_grouped; a
     production cube would serve the estimate alone.)"""
-    import shutil
-
     from weatherflow_spark.plans.sketches import (
         grouped_hll_rows,
         serve_grouped_hll,
@@ -3737,7 +3695,6 @@ def q_stream_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing directory and a real sink; the operators under test
     (file source, watermark state, dedup, windowed agg) are the
     production ones, with state bounded by the watermark horizon."""
-    import shutil
     import time as _time
 
     from weatherflow_spark.streaming.pipeline import (
@@ -3919,8 +3876,6 @@ def q_ann_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME oracle as the one-shot ``q_ann_ivf_topk``, so a match proves
     index-served search is decision-identical to full recomputation —
     the sig_index/sketch-cube discipline applied to the vector tier."""
-    import shutil
-
     from weatherflow_spark.operators.vec_index import (
         build_ivf_index,
         search_ivf_index,
