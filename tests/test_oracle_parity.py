@@ -14,8 +14,8 @@ exercised while finishing inside the window:
   (one representative per operator family's module, so a module-wide
   breakage — an io/session/oracle-harness change — still trips).
 
-``WF_FULL_PARITY=1`` restores the exhaustive 250-way matrix; the
-builder runs that form at least once per round before committing.
+``WF_FULL_PARITY=1`` restores the exhaustive 250-way matrix; run
+that form before committing an engine change.
 
 Repeat safety: a query run twice in one session must give one result
 (the bench's min-of-reps depends on it). The default run repeats the
