@@ -1007,6 +1007,7 @@ def test_tpch_q21_one_pass_profile_no_self_join(spark):
     )
     assert "CartesianProduct" not in p, p
     assert "TakeOrderedAndProject" in p, f"top-20 must be a heap:\n{p}"
+    assert "Expand" not in p, f"profile must not row-multiply:\n{p}"
 
 
 def test_tpch_q22_anti_join_and_broadcast_scalar(spark):
@@ -1069,15 +1070,15 @@ def test_version_diff_plans_no_cartesian_or_python(spark):
 
 
 def test_dim_broadcast_degrades_to_shuffle_by_size(spark):
-    """Size-based broadcast decision (r13 verdict #8): _dim_broadcast
-    pins the hint only while the dim's on-disk bytes are under the
-    ceiling — an outgrown dim must plan a shuffle join instead of
-    OOMing the driver with a pinned broadcast. Auto-broadcast is off
-    for the duration, so the plan shows _dim_broadcast's own decision
-    rather than Spark's size estimate."""
-    from weatherflow_spark.plans.serving import (
+    """Size-based broadcast decision: dim_broadcast pins the hint
+    only while the dim's on-disk bytes are under the ceiling — an
+    outgrown dim must plan a shuffle join instead of OOMing the
+    driver with a pinned broadcast. Auto-broadcast is off for the
+    duration, so the plan shows dim_broadcast's own decision rather
+    than Spark's size estimate."""
+    from weatherflow_spark.operators.bucketing import (
         DIM_BROADCAST_MAX_BYTES,
-        _dim_broadcast,
+        dim_broadcast,
     )
 
     fact = spark.range(0, 10_000).withColumnRenamed("id", "k")
@@ -1085,17 +1086,92 @@ def test_dim_broadcast_degrades_to_shuffle_by_size(spark):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        small = fact.join(_dim_broadcast(dim, 1024), "k")
+        small = fact.join(dim_broadcast(dim, 1024), "k")
         p_small = _plan(small)
         assert "BroadcastHashJoin" in p_small, p_small
         big = fact.join(
-            _dim_broadcast(dim, DIM_BROADCAST_MAX_BYTES + 1), "k"
+            dim_broadcast(dim, DIM_BROADCAST_MAX_BYTES + 1), "k"
         )
         p_big = _plan(big)
         assert "BroadcastHashJoin" not in p_big, p_big
         assert "SortMergeJoin" in p_big or "ShuffledHashJoin" in p_big
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+# (SortMergeJoin, BroadcastHashJoin, shuffle Exchange) counts at
+# sf0.001 in the executed plan of the frame each TPC-H join-family row
+# returns (plain rows) or certifies (bucketed rows, which persist it).
+JOIN_FAMILY_SHAPES = {
+    "q_tpch_q3": (0, 2, 1),
+    "q_tpch_q18": (0, 2, 1),
+    "q_tpch_q4": (0, 1, 1),
+    "q_tpch_q12": (0, 1, 1),
+    "q_tpch_q21": (0, 2, 3),
+    "q_tpch_q13": (0, 1, 2),
+    "q_tpch_q10": (0, 3, 1),
+    "q_tpch_q3_bucketed": (1, 1, 0),
+    "q_tpch_q18_bucketed": (1, 1, 0),
+    "q_tpch_q4_bucketed": (1, 0, 1),
+    "q_tpch_q12_bucketed": (1, 0, 1),
+    "q_tpch_q21_bucketed": (1, 1, 1),
+    "q_tpch_q13_bucketed": (1, 0, 1),
+    "q_tpch_q10_bucketed": (2, 1, 1),
+    "q_bucketed_join_serve": (1, 0, 0),
+}
+
+BUCKETED_ROWS = [n for n in QUERIES if "bucketed" in n]
+
+
+def _certified_plan(spark, monkeypatch, name: str) -> str:
+    """Executed plan string of the frame ``name``'s bucketed
+    certification checks, or of the frame it returns when it has no
+    certification."""
+    from weatherflow_spark.plans import serving
+
+    plans = []
+    certify = serving.require_zero_shuffle_smj
+
+    def spy(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        certify(df, *args, **kwargs)
+
+    monkeypatch.setattr(serving, "require_zero_shuffle_smj", spy)
+    df = QUERIES[name](spark, SF_SMALL)
+    if plans:
+        return plans[0]
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("name", list(JOIN_FAMILY_SHAPES))
+def test_tpch_join_family_plan_shape(spark, monkeypatch, name):
+    """The plain and bucketed rows share one builder body per query;
+    each row's join strategies and shuffle count stay pinned, so a
+    change to a shared body cannot silently re-plan either form."""
+    p = _certified_plan(spark, monkeypatch, name)
+    got = tuple(
+        len(re.findall(rf"\b{node}\b", p))
+        for node in ("SortMergeJoin", "BroadcastHashJoin", "Exchange")
+    )
+    assert got == JOIN_FAMILY_SHAPES[name], p
+
+
+@pytest.mark.parametrize("name", BUCKETED_ROWS)
+def test_bucketed_certification_raises_without_hints(spark, name):
+    """The bucketed certifications cannot pass vacuously: with join
+    hints disabled the fact⋈fact joins plan as broadcasts, and every
+    row must raise instead of serving an uncertified plan."""
+    key = "spark.sql.optimizer.disableHints"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "true")
+    try:
+        with pytest.raises(RuntimeError, match="layout regressed"):
+            QUERIES[name](spark, SF_SMALL)
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def test_table_bytes_reads_real_sizes():

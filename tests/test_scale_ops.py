@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from weatherflow_spark.io import load_table
 from weatherflow_spark.operators.bucketing import (
-    colocated_join_is_shuffle_free,
+    count_shuffle_exchanges,
     write_bucketed,
 )
 from weatherflow_spark.operators.skew import salted_broadcast_join, salted_count_sum
@@ -30,7 +30,7 @@ def test_bucketed_join_no_shuffle(spark):
     o, l = spark.table("wf_orders_b"), spark.table("wf_lineitem_b")
     joined = l.join(o, l.l_orderkey == o.o_orderkey, "inner")
     joined.collect()
-    assert colocated_join_is_shuffle_free(joined), (
+    assert count_shuffle_exchanges(joined) == 0, (
         "bucketed fact-fact join must plan without Exchange"
     )
 
@@ -50,7 +50,7 @@ def test_bucketed_join_no_shuffle(spark):
     ranged.collect()
     rplan = ranged._jdf.queryExecution().executedPlan().toString()
     assert "Exchange rangepartitioning" in rplan, rplan
-    assert not colocated_join_is_shuffle_free(ranged), (
+    assert count_shuffle_exchanges(ranged) != 0, (
         "range-partitioned plan passed the shuffle-free check"
     )
 
@@ -446,6 +446,21 @@ def test_bucketed_tpch_adoption_plans_zero_shuffle(spark):
         ), bucketed.__name__
 
 
+@pytest.mark.parametrize(
+    "q",
+    [
+        "q_tpch_q3", "q_tpch_q18", "q_tpch_q4", "q_tpch_q12",
+        "q_tpch_q21", "q_tpch_q13", "q_tpch_q10",
+    ],
+)
+def test_bucketed_row_shares_the_plain_oracle(q):
+    """A bucketed row's adoption claim is identity with the plain
+    query: both rows are certified by the one oracle."""
+    from weatherflow_spark.plans import ORACLES
+
+    assert ORACLES[f"{q}_bucketed"] == ORACLES[q]
+
+
 def test_bucketed_warehouse_is_durable_across_sessions(spark, tmp_path):
     """r11 verdict #2: a layout 'amortized forever' must survive the
     session. Build once; wipe the catalog entries (what a fresh
@@ -492,7 +507,7 @@ def test_bucketed_warehouse_is_durable_across_sessions(spark, tmp_path):
     j.collect()
     plan = j._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" in plan, plan
-    assert colocated_join_is_shuffle_free(j), plan
+    assert count_shuffle_exchanges(j) == 0, plan
 
     # Spec change invalidates the marker and rebuilds exactly once.
     t_li3, _ = bucketed_warehouse(spark, SF_SMALL, scratch, n_buckets=2)
@@ -550,4 +565,4 @@ def test_bucketed_warehouse_cust_is_durable_across_sessions(spark, tmp_path):
     j.collect()
     plan = j._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" in plan, plan
-    assert colocated_join_is_shuffle_free(j), plan
+    assert count_shuffle_exchanges(j) == 0, plan

@@ -4,11 +4,12 @@ At warehouse scale the dominant cost of fact⋈fact joins (e.g.
 lineitem⋈orders) is the shuffle of both sides. Writing both tables
 bucketed by the join key with the same bucket count lets Spark plan a
 sort-merge join with **zero Exchange**: each task reads bucket i of
-both tables. This module wraps the write/read pattern and is verified
-by tests/test_scale_ops.py::test_bucketed_join_no_shuffle (the layout
-primitive) and tests/test_scale_ops.py::
-test_bucketed_tpch_adoption_plans_zero_shuffle (the adopted TPC-H
-family) asserting the join plans contain no shuffle Exchange operator.
+both tables. This module writes and re-registers those layouts, lets
+a TPC-H builder read them (:func:`layout_table`), and certifies that a
+plan over them really is shuffle-free
+(:func:`require_zero_shuffle_smj`). tests/test_scale_ops.py checks the
+layout primitive and the adopted TPC-H family; tests/test_plan_audit.py
+pins each row's join and Exchange counts.
 
 Notes:
 - Bucketing requires ``saveAsTable`` (metastore-backed); plain
@@ -31,18 +32,20 @@ import hashlib
 import json
 import os
 import shutil
+import re
 import threading
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from weatherflow_spark.io import load_table
+
+N_BUCKETS = 8  # bucket count of both standing layouts
 
 # Columns the bucketed warehouse keeps — the orderkey join family's
-# working set (Q3/Q4/Q12/Q18/Q21 and kin). A layout is a standing
+# working set (Q3/Q4/Q10/Q12/Q18/Q21). A layout is a standing
 # decision: add columns here rather than minting per-query layouts;
 # the marker records the column spec, so a spec change triggers ONE
 # rebuild and every session after that reuses the widened layout.
-# (r12: + l_linenumber/l_suppkey for the derived commit/receipt dates
-# and Q21's supplier profile; + o_orderstatus for Q21's finished-order
-# filter; r13: + l_returnflag for Q10's returned-item scan.)
 BW_LINEITEM_COLS = [
     "l_orderkey", "l_linenumber", "l_suppkey", "l_quantity",
     "l_extendedprice", "l_discount", "l_returnflag", "l_shipdate",
@@ -52,12 +55,12 @@ BW_ORDERS_COLS = [
     "o_orderpriority", "o_orderstatus",
 ]
 
-# The CUSTKEY join family's working set (r13, VERDICT r12 #5): the
-# second standing layout — orders⋈customer (Q13's outer-join
-# distribution, Q10's join-back, Q22's shape) shuffles both sides at
-# every scale without it. Storage trade: orders is stored TWICE
-# (once per layout, pruned to each family's columns) — the standard
-# warehouse answer, documented in ARCHITECTURE.md.
+# The CUSTKEY join family's working set: the second standing layout —
+# orders⋈customer (Q13's outer-join distribution, Q10's join-back,
+# Q22's shape) shuffles both sides at every scale without it. Storage
+# trade: orders is stored TWICE (once per layout, pruned to each
+# family's columns) — the standard warehouse answer, documented in
+# ARCHITECTURE.md.
 BWC_ORDERS_COLS = [
     "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate",
     "o_orderpriority",
@@ -88,10 +91,6 @@ def write_bucketed(
     if path is not None:
         writer = writer.option("path", path)
     writer.format("parquet").saveAsTable(table)
-
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
 
 
 def register_bucketed(
@@ -130,7 +129,7 @@ def _bw_spec(n_buckets: int) -> dict:
 
 def _sf_tag(sf_dir: str) -> str:
     # Hashes realpath(sf_dir) so two scale dirs sharing a basename can
-    # never alias (r12 advice).
+    # never alias.
     return (
         sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
         + "_"
@@ -142,9 +141,9 @@ def bucketed_warehouse(
     spark: SparkSession,
     sf_dir: str,
     scratch_base: str,
-    n_buckets: int = 8,
+    n_buckets: int = N_BUCKETS,
 ) -> tuple[str, str]:
-    """The WAREHOUSE-ADOPTED bucketed layout (r10 verdict #2): build
+    """The WAREHOUSE-ADOPTED bucketed layout: build
     lineitem and orders ONCE as co-bucketed tables (bucketBy + sortBy
     ``orderkey``, same bucket count) and return their catalog names
     ``(lineitem_table, orders_table)``. Every orderkey-join query
@@ -154,14 +153,14 @@ def bucketed_warehouse(
     whole TPC-H orderkey family (module doc), paid once at layout
     time instead of per query.
 
-    DURABLE across sessions (r11 verdict #2): the build is cached per
+    DURABLE across sessions: the build is cached per
     (scratch_base, sf_dir) on DISK — the ``_WF_BUILT`` marker records
     the layout spec (bucket count, column sets) plus both schemas, and
     a fresh process finding a valid marker RE-REGISTERS the external
     tables from it via :func:`register_bucketed` (metadata-only DDL,
     no data writes) instead of rewriting two fact tables per session.
     The tag hashes ``realpath(sf_dir)`` so two scale dirs sharing a
-    basename can never alias (r12 advice). A spec change (new columns,
+    basename can never alias. A spec change (new columns,
     different bucket count) invalidates the marker and rebuilds once.
 
     Concurrent-builder safe: the build lands in a pid-tagged sibling
@@ -197,9 +196,9 @@ def bucketed_warehouse_cust(
     spark: SparkSession,
     sf_dir: str,
     scratch_base: str,
-    n_buckets: int = 8,
+    n_buckets: int = N_BUCKETS,
 ) -> tuple[str, str]:
-    """The SECOND standing layout (r13, VERDICT r12 #5): orders and
+    """The SECOND standing layout: orders and
     customer co-bucketed + sorted by the CUSTKEY, returned as
     ``(orders_table, customer_table)``. The custkey join family —
     Q13's customer⟕orders distribution, Q10's per-customer revenue
@@ -247,7 +246,7 @@ def _layout_lock(base: str) -> threading.Lock:
     """Per-layout-path thread lock: the builder below is race-safe
     ACROSS processes (pid-tagged scratch + atomic rename) but its
     scratch names key on the pid alone, so two THREADS of one process
-    (overlapped suite branches, r14) would share a __building_ dir
+    (overlapped suite branches) would share a __building_ dir
     and rmtree each other mid-build; catalog DROP/CREATE of the
     durable names races the same way. Serialize per layout path —
     the loser of the race reuses the winner's marker instantly."""
@@ -283,11 +282,9 @@ def _standing_layout_unlocked(
     """Shared builder for marker-durable co-bucketed layouts (see
     :func:`bucketed_warehouse` for the full contract). ``members``:
     ``{name, source, table, cols, key}`` per table — ``name`` keys the
-    marker's DDL entries (``<name>_ddl``, the pre-r13 format, so
-    existing orderkey-pair markers keep validating), ``table`` is the
-    durable catalog name, ``key`` the bucket+sort column."""
-    from weatherflow_spark.io import load_table
-
+    marker's DDL entries (``<name>_ddl``, the format the orderkey-pair
+    markers already on disk use), ``table`` is the durable catalog
+    name, ``key`` the bucket+sort column."""
     base = os.path.join(scratch_base, dir_name)
     marker = os.path.join(base, "_WF_BUILT")
 
@@ -318,7 +315,7 @@ def _standing_layout_unlocked(
     # names ended in the builder's decimal pid; the durable tag ends
     # in an 8-char hex hash, so a 1-7 digit numeric tail is
     # unambiguously legacy — each strands a full bucketed copy
-    # forever otherwise, r12 review).
+    # forever otherwise).
     prefix = dir_name.split("_", 2)
     prefix = "_".join(prefix[:2]) + "_"  # "bucketed_wh_" / "bucketed_whc_"
     try:
@@ -378,7 +375,7 @@ def _standing_layout_unlocked(
     with open(os.path.join(tmp, "_WF_BUILT"), "w") as f:
         json.dump({"spec": spec, **ddls}, f)
     # Enter service via rename, NEVER rmtree-then-rename of a possibly
-    # LIVE tree (r12 review: an unconditional rmtree(base) deletes the
+    # LIVE tree (an unconditional rmtree(base) deletes the
     # parquet files a concurrent winner's registered tables are
     # actively scanning). If base exists it is either (a) a valid
     # same-spec build a racer just landed — reuse it, discard ours —
@@ -405,7 +402,7 @@ def _standing_layout_unlocked(
                 # the moved-aside tree is stale by construction
                 # (invalid/mismatched marker) — reclaim it on BOTH
                 # exits, or a lost second race strands a full
-                # bucketed copy for the process lifetime (r12 review)
+                # bucketed copy for the process lifetime
                 shutil.rmtree(aside, ignore_errors=True)
     got = _try_reuse()
     if got is None:
@@ -416,33 +413,71 @@ def _standing_layout_unlocked(
     return got
 
 
-def colocated_join_is_shuffle_free(joined: DataFrame) -> bool:
-    """True iff the physical plan contains no shuffle Exchange of ANY
-    flavor — ``Exchange hashpartitioning``, ``Exchange
-    rangepartitioning`` (an AQE re-plan or a sort can insert one),
-    ``Exchange SinglePartition``, round-robin REBALANCE — the
-    assertion that bucketing actually paid off. Matching only the
-    hash flavor would let a range-partitioned or rebalanced plan pass
-    as "shuffle-free" (r10 verdict). ``BroadcastExchange`` is NOT a
-    shuffle and is deliberately excluded: callers certifying a
-    co-located layout must force the sort-merge path (a ``merge`` join
-    hint) and require a SortMergeJoin, or a small build side makes the
-    check vacuous.
-    (AQE wraps the plan; inspect the executed/final plan string.)"""
-    return count_shuffle_exchanges(joined) == 0
+def layout_table(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    layout: dict[str, str] | None,
+) -> DataFrame:
+    """Table ``name``: the bucketed catalog table ``layout`` maps it
+    to, else the raw testdata table. ``layout`` is how a TPC-H builder
+    runs over a standing layout with one query body."""
+    if layout and name in layout:
+        return spark.table(layout[name])
+    return load_table(spark, sf_dir, name)
+
+
+# On-disk (compressed parquet) bytes of a dimension above which
+# :func:`dim_broadcast` stops pinning a broadcast. 256 MiB on disk is
+# ~1-2 GiB deserialized, past any sane driver/executor broadcast
+# budget: erring small only costs a shuffle, erring big OOMs the
+# driver once customer/supplier outgrow a hard-coded hint. Every
+# test-scale dim is KBs-MBs, so those plans broadcast.
+DIM_BROADCAST_MAX_BYTES = 256 * 1024 * 1024
+
+
+def dim_broadcast(df: DataFrame, nbytes: int) -> DataFrame:
+    """Broadcast ``df`` only when its on-disk footprint ``nbytes``
+    (:func:`~weatherflow_spark.io.table_bytes`) is at most
+    :data:`DIM_BROADCAST_MAX_BYTES`; otherwise return it unhinted so
+    Spark's own choice decides the join. The ceiling is on real file
+    sizes, not Spark's plan estimate, and sits above the session's
+    32 MiB auto-broadcast threshold, so dims up to it stay broadcast
+    beside a hinted fact⋈fact merge."""
+    return F.broadcast(df) if nbytes <= DIM_BROADCAST_MAX_BYTES else df
 
 
 def count_shuffle_exchanges(df: DataFrame) -> int:
-    """Number of shuffle ``Exchange`` operators (any flavor) in the
-    executed plan. ``BroadcastExchange`` is excluded by the word
-    boundary — the shuffle operator's node name IS "Exchange". Used
-    by the adopted-layout certifications: a fully co-located join is
-    0; a query whose ONLY exchange is a tiny post-aggregation
-    re-group (e.g. TPC-H Q4's 5-row priority agg) certifies ≤ 1 —
-    if the fact⋈fact join itself had shuffled, both join sides would
-    add their own Exchanges and the count check still has teeth."""
-    import re
-
+    """Number of shuffle ``Exchange`` operators of ANY flavor (hash,
+    range, single-partition, rebalance) in the executed plan.
+    ``BroadcastExchange`` is excluded by the word boundary — the
+    shuffle operator's node name IS "Exchange" — because a broadcast
+    is not a shuffle."""
     plan = df._jdf.queryExecution().executedPlan().toString()
     return len(re.findall(r"\bExchange\b", plan))
 
+
+def require_zero_shuffle_smj(
+    df: DataFrame, what: str, max_exchanges: int = 0
+) -> None:
+    """The bucketed certifications' teeth: RAISE unless the executed
+    plan is a SortMergeJoin plan with at most ``max_exchanges``
+    shuffle Exchanges. The caller puts a ``merge`` hint on the
+    fact⋈fact join (a broadcast build side has no Exchange either,
+    which would make the check vacuous), so SortMergeJoin must
+    appear; the Exchange count rejects every shuffle flavor while
+    permitting the deliberate BroadcastExchange of a dimension side.
+    ``max_exchanges=0`` is the fully co-located form; a query whose
+    FINAL aggregate re-groups on a non-bucket key certifies with
+    ``max_exchanges=1`` — the one allowed Exchange moves the tiny
+    post-aggregation partials, and had the fact⋈fact join itself
+    shuffled, BOTH join sides would add Exchanges and the bound
+    still trips."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    n = count_shuffle_exchanges(df)
+    if "SortMergeJoin" not in plan or n > max_exchanges:
+        raise RuntimeError(
+            f"{what}: expected a sort-merge plan with <= {max_exchanges} "
+            f"shuffle Exchange(s) over bucketed tables (got {n}) "
+            "— the co-located layout regressed"
+        )

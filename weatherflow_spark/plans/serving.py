@@ -32,7 +32,14 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from weatherflow_spark.io import load_table, table_bytes
+from weatherflow_spark.io import load_table
+from weatherflow_spark.operators.bucketing import (
+    N_BUCKETS,
+    bucketed_warehouse,
+    bucketed_warehouse_cust,
+    require_zero_shuffle_smj,
+    write_bucketed,
+)
 from weatherflow_spark.operators.caching import tracked_persist
 from weatherflow_spark.operators.indexing import assign_global_index
 from weatherflow_spark.operators.rollup import (
@@ -40,6 +47,23 @@ from weatherflow_spark.operators.rollup import (
     refresh_rollup,
     write_rollup,
 )
+from weatherflow_spark.plans.stats import ORACLE_TPCH_Q3, q_tpch_q3
+from weatherflow_spark.plans.tpch import (
+    ORACLE_TPCH_Q4,
+    ORACLE_TPCH_Q18,
+    q_tpch_q4,
+    q_tpch_q18,
+)
+from weatherflow_spark.plans.tpch_ext import (
+    ORACLE_TPCH_Q6,
+    ORACLE_TPCH_Q10,
+    ORACLE_TPCH_Q13,
+    ORACLE_TPCH_Q21,
+    q_tpch_q10,
+    q_tpch_q13,
+    q_tpch_q21,
+)
+from weatherflow_spark.plans.tpch_ps import ORACLE_TPCH_Q12, q_tpch_q12
 
 ROLLUP_SCALE = 100  # cents — the partial state's exact integer unit
 
@@ -876,26 +900,18 @@ ORACLE_IVM_ROLLUP = f"""
 """
 
 
-BUCKETS = 8  # bucket count for the co-located join certification
-
-
 def q_bucketed_join_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E93 driver row: the bucketed co-located fact⋈fact join
-    certified through real writes — lineitem and orders are BOTH
-    persisted bucketed (and sorted) by the join key with the same
-    bucket count, then joined; the query RAISES unless the planned
-    join has zero shuffle Exchange (each task streams bucket i of
-    both sides — at 100 TB this removes the dominant cost of the
-    fact-fact join family entirely, the layout decision the module
-    doc calls out). The served digest hash-matches the oracle's plain
-    join, so one row certifies the layout is both shuffle-free AND
-    lossless. Scratch-backed external tables (per-SF, per-process
-    names) keep replays idempotent and the warehouse dir untouched."""
-    from weatherflow_spark.operators.bucketing import (
-        colocated_join_is_shuffle_free,
-        write_bucketed,
-    )
-
+    """The bucketed co-located fact⋈fact join certified through real
+    writes — lineitem and orders are BOTH persisted bucketed (and
+    sorted) by the join key with the same bucket count, then joined;
+    the query RAISES unless the planned join has zero shuffle
+    Exchange (each task streams bucket i of both sides — at 100 TB
+    this removes the dominant cost of the fact-fact join family
+    entirely, the layout decision the module doc calls out). The
+    served digest hash-matches the oracle's plain join, so one row
+    certifies the layout is both shuffle-free AND lossless.
+    Scratch-backed external tables (per-SF, per-process names) keep
+    replays idempotent and the warehouse dir untouched."""
     base = os.path.join(_scratch_dir(sf_dir), "bucketed")
     shutil.rmtree(base, ignore_errors=True)
     tag = (
@@ -911,11 +927,11 @@ def q_bucketed_join_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_returnflag", "l_quantity"
     )
     write_bucketed(
-        orders, t_orders, ["o_orderkey"], BUCKETS,
+        orders, t_orders, ["o_orderkey"], N_BUCKETS,
         sort_cols=["o_orderkey"], path=os.path.join(base, "orders"),
     )
     write_bucketed(
-        li, t_li, ["l_orderkey"], BUCKETS,
+        li, t_li, ["l_orderkey"], N_BUCKETS,
         sort_cols=["l_orderkey"], path=os.path.join(base, "lineitem"),
     )
     # Broadcast would make the zero-Exchange check vacuous (a small
@@ -927,14 +943,7 @@ def q_bucketed_join_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.table(t_orders).hint("merge"),
         F.col("l_orderkey") == F.col("o_orderkey"),
     )
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    if "SortMergeJoin" not in plan or not colocated_join_is_shuffle_free(
-        joined
-    ):
-        raise RuntimeError(
-            "bucketed lineitem⋈orders did not plan a zero-Exchange "
-            "sort-merge join — the co-located layout regressed"
-        )
+    require_zero_shuffle_smj(joined, "bucketed lineitem⋈orders")
     out = joined.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(
@@ -965,451 +974,82 @@ def _durable_scratch_base() -> str:
     """Scratch base for CROSS-SESSION layouts (the bucketed warehouse):
     deliberately NOT pid-tagged — the whole point of a standing layout
     is that a fresh session re-registers the on-disk build instead of
-    rewriting two fact tables (r11 verdict #2). Concurrent processes
+    rewriting two fact tables. Concurrent processes
     are safe because bucketed_warehouse enters service via one atomic
     rename and validates its marker+spec before reuse."""
     return tempfile.gettempdir()
 
 
-def _require_zero_shuffle_smj(
-    df: DataFrame, what: str, max_exchanges: int = 0
-) -> None:
-    """The adoption certification's teeth: RAISE unless the executed
-    plan is a SortMergeJoin plan with at most ``max_exchanges``
-    shuffle Exchanges. The caller puts a ``merge`` hint on the
-    fact⋈fact join (a broadcast build side would make the check
-    vacuous), so SortMergeJoin must appear; the Exchange count
-    rejects every shuffle flavor (hash, range, rebalance) while
-    permitting the deliberate BroadcastExchange of the dimension
-    side. ``max_exchanges=0`` is the fully co-located form (Q3/Q18);
-    queries whose FINAL aggregate re-groups on a non-bucket key
-    (Q4's 5-priority count, Q12's ship-mode counts, Q21's
-    per-supplier tally) certify with ``max_exchanges=1`` — the one
-    allowed Exchange moves the tiny post-aggregation partials, and if
-    the fact⋈fact join itself had shuffled, BOTH join sides would add
-    Exchanges and the bound still trips."""
-    from weatherflow_spark.operators.bucketing import (
-        count_shuffle_exchanges,
-    )
-
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n = count_shuffle_exchanges(df)
-    if "SortMergeJoin" not in plan or n > max_exchanges:
-        raise RuntimeError(
-            f"{what}: expected a sort-merge plan with <= {max_exchanges} "
-            f"shuffle Exchange(s) over the bucketed warehouse (got {n}) "
-            "— the adopted layout regressed"
-        )
-
-
-# Size-based broadcast ceiling (r13 verdict #8): on-disk compressed
-# parquet bytes of the DIM side above which the bucketed TPC-H routes
-# degrade the dimension join to shuffle instead of pinning a
-# broadcast. 256 MiB on disk is ~1-2 GiB deserialized — past any sane
-# driver/executor broadcast budget; erring small only costs a shuffle,
-# erring big OOMs the driver at SF where customer/supplier outgrow the
-# hint the old code hard-coded. At the test SFs every dim is KBs-MBs,
-# so the certified ≤1-Exchange plans are unchanged.
-DIM_BROADCAST_MAX_BYTES = 256 * 1024 * 1024
-
-
-def _dim_broadcast(df: DataFrame, nbytes: int) -> DataFrame:
-    """Broadcast ``df`` only when its on-disk footprint (from
-    :func:`~weatherflow_spark.io.table_bytes` for raw tables, or
-    ``table_status(path)['bytes']`` for versioned ones) is under
-    :data:`DIM_BROADCAST_MAX_BYTES`; otherwise return it unhinted so
-    Spark's own choice decides the join. The ceiling is on real file
-    sizes, not Spark's plan estimate, and sits above the session's
-    32 MiB auto-broadcast threshold, so dims up to it stay broadcast
-    beside the hinted fact⋈fact merge."""
-    return F.broadcast(df) if nbytes <= DIM_BROADCAST_MAX_BYTES else df
-
-
-def q_tpch_q3_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E98 driver row: the E93 bucketed layout ADOPTED by the real
-    TPC-H Q3 (r10 verdict #2 — E93 certified the layout on scratch
-    digests while every TPC-H fact⋈fact plan still shuffled both
-    sides). Q3 runs over :func:`~weatherflow_spark.operators.
-    bucketing.bucketed_warehouse` tables: lineitem⋈orders is a pure
-    bucket-to-bucket streaming merge, the revenue groupBy reuses the
-    same partitioning (its keys are a superset of the orderkey), the
-    segment dim stays an explicit broadcast, and the top-10 is a
-    TakeOrdered heap — the ONLY exchange in the whole plan is the
-    deliberate dimension broadcast. The query RAISES unless exactly
-    that plan executed, and hash-matches the UNBUCKETED Q3 oracle
-    verbatim, so one row certifies the layout is both adopted and
-    lossless. At 100 TB the removed shuffle is both sides of the
-    biggest join in the query."""
-    from weatherflow_spark.operators.bucketing import bucketed_warehouse
-    from weatherflow_spark.plans.queries import scaled_sum
-
+def _orderkey_layout(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     t_li, t_ord = bucketed_warehouse(spark, sf_dir, _durable_scratch_base())
-    cust = (
-        load_table(spark, sf_dir, "customer")
-        .where(F.col("c_mktsegment") == "BUILDING")
-        .select("c_custkey")
-    )
-    orders = spark.table(t_ord).where(
-        F.col("o_orderdate") < F.lit("1998-07-01").cast("timestamp")
-    )
-    li = spark.table(t_li).where(
-        F.col("l_shipdate") > F.lit("1998-07-01").cast("timestamp")
-    )
-    rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    out = (
-        li.join(
-            orders.hint("merge"), F.col("l_orderkey") == F.col("o_orderkey")
-        )
-        .join(
-            _dim_broadcast(cust, table_bytes(sf_dir, "customer")),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(scaled_sum(rev, 10_000).alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-    )
-    _require_zero_shuffle_smj(out, "tpch q3 (bucketed)")
-    return tracked_persist(out)
+    return {"lineitem": t_li, "orders": t_ord}
 
 
-def q_tpch_q18_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E98 driver row, second family member: TPC-H Q18 over the
-    bucketed warehouse. Unlike the plain form (which broadcasts the
-    qualifying-orders set), here the per-order quantity aggregate
-    runs WITHOUT an exchange (groupBy on the bucket key), keeps the
-    bucketed partitioning through the HAVING filter, and sort-merges
-    back to orders bucket-to-bucket — the whole agg→join chain plans
-    zero shuffle Exchange (certified by raise), with only the
-    customer dim broadcast. Hash-matches the unbucketed Q18 oracle
-    verbatim."""
-    from weatherflow_spark.operators.bucketing import bucketed_warehouse
-    from weatherflow_spark.plans.queries import scaled_sum
-    from weatherflow_spark.plans.tpch import Q18_QTY_THRESHOLD
-
-    t_li, t_ord = bucketed_warehouse(spark, sf_dir, _durable_scratch_base())
-    customer = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name"
-    )
-    big = (
-        spark.table(t_li)
-        .groupBy("l_orderkey")
-        .agg(scaled_sum(F.col("l_quantity"), 100).alias("total_qty"))
-        .where(F.col("total_qty") > Q18_QTY_THRESHOLD)
-    )
-    out = (
-        spark.table(t_ord)
-        .hint("merge")
-        .join(big, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(
-            _dim_broadcast(customer, table_bytes(sf_dir, "customer")),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .select(
-            "c_custkey",
-            "c_name",
-            "o_orderkey",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias(
-                "o_orderdate"
-            ),
-            F.expr(
-                "cast(floor(o_totalprice * 100 + 0.5) as bigint)"
-            ).alias("price_cents"),
-            "total_qty",
-        )
-        .orderBy(F.desc("total_qty"), F.asc("o_orderkey"))
-        .limit(20)
-    )
-    _require_zero_shuffle_smj(out, "tpch q18 (bucketed)")
-    return tracked_persist(out)
-
-
-def _oracle_tpch_q3_bucketed() -> str:
-    # The adoption claim IS oracle identity with the plain form.
-    from weatherflow_spark.plans.stats import ORACLE_TPCH_Q3
-
-    return ORACLE_TPCH_Q3
-
-
-def _oracle_tpch_q18_bucketed() -> str:
-    from weatherflow_spark.plans.tpch import ORACLE_TPCH_Q18
-
-    return ORACLE_TPCH_Q18
-
-
-def q_tpch_q4_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E98 (r12): TPC-H Q4 routed through the bucketed warehouse —
-    the EXISTS semi-join (orders ⋉ late lineitem) is bucket-to-bucket
-    on the orderkey with zero Exchange; the only shuffle left in the
-    whole plan is the 5-row priority re-group after the semi join
-    (``max_exchanges=1``). Predicate shape identical to the plain Q4
-    (plans/tpch.py): derived commit/receipt lateness is line-LOCAL,
-    filtering lineitem before the join. Hash-matches ORACLE_TPCH_Q4
-    verbatim."""
-    from weatherflow_spark.operators.bucketing import bucketed_warehouse
-    from weatherflow_spark.plans.tpch import with_commit_receipt
-
-    t_li, t_ord = bucketed_warehouse(spark, sf_dir, _durable_scratch_base())
-    orders = spark.table(t_ord).where(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp"))
-    )
-    li = with_commit_receipt(
-        spark.table(t_li).select("l_orderkey", "l_linenumber", "l_shipdate")
-    ).where(F.col("l_commitdate") < F.col("l_receiptdate"))
-    out = (
-        orders.hint("merge")
-        .join(
-            li.select("l_orderkey"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-            "left_semi",
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-    )
-    _require_zero_shuffle_smj(out, "tpch q4 (bucketed)", max_exchanges=1)
-    return tracked_persist(out)
-
-
-def q_tpch_q12_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E98 (r12): TPC-H Q12 routed through the bucketed warehouse —
-    lineitem⋈orders is a pure bucket-to-bucket merge (the orderkey
-    equi-join), leaving only the 2-mode conditional-count re-group
-    (``max_exchanges=1``). Same predicate sandwich + derived shipmode
-    dictionary as the plain Q12 (plans/tpch_ps.py); hash-matches
-    ORACLE_TPCH_Q12 verbatim."""
-    from weatherflow_spark.operators.bucketing import bucketed_warehouse
-    from weatherflow_spark.plans.tpch import with_commit_receipt
-    from weatherflow_spark.plans.tpch_ps import SHIP_MODES
-
-    t_li, t_ord = bucketed_warehouse(spark, sf_dir, _durable_scratch_base())
-    li = spark.table(t_li).where(
-        (F.col("l_shipdate") >= F.lit("1995-12-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-    )
-    li = with_commit_receipt(li).where(
-        (F.col("l_receiptdate") >= F.lit("1996-01-01").cast("date"))
-        & (F.col("l_receiptdate") < F.lit("1997-01-01").cast("date"))
-        & (F.col("l_commitdate") < F.col("l_receiptdate"))
-        & (F.col("l_shipdate").cast("date") < F.col("l_commitdate"))
-    )
-    mode = F.element_at(
-        F.array(*[F.lit(m) for m in SHIP_MODES]),
-        ((F.col("l_orderkey") + F.col("l_linenumber") * 3) % 7 + 1).cast(
-            "int"
-        ),
-    )
-    li = li.withColumn("l_shipmode", mode).where(
-        F.col("l_shipmode").isin("MAIL", "SHIP")
-    )
-    orders = spark.table(t_ord).select("o_orderkey", "o_orderpriority")
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    out = (
-        li.join(
-            orders.hint("merge"), F.col("l_orderkey") == F.col("o_orderkey")
-        )
-        .groupBy("l_shipmode")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0))
-            .cast("long")
-            .alias("high_line_count"),
-            F.sum(F.when(high, 0).otherwise(1))
-            .cast("long")
-            .alias("low_line_count"),
-        )
-    )
-    _require_zero_shuffle_smj(out, "tpch q12 (bucketed)", max_exchanges=1)
-    return tracked_persist(out)
-
-
-def q_tpch_q21_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E98 (r12): TPC-H Q21 routed through the bucketed warehouse —
-    the heaviest member of the orderkey family. BOTH heavy stages ride
-    the bucket partitioning: the lineitem⋈orders join merges
-    bucket-to-bucket AND the per-order supplier profile re-uses the
-    same hash partitioning, so neither shuffles. The plain form's two
-    countDistinct aggregates would break that — Spark rewrites
-    multi-distinct via ``Expand``, whose physical node reports
-    UnknownPartitioning and forces a full re-shuffle of the 3×
-    row-multiplied stream — so the profile is restated as a TWO-LEVEL
-    exact aggregation: dedupe to (order, supplier, was_late) first
-    (keys ⊇ the bucket key → no exchange, and no Expand row
-    multiplication at all), then fold per order (key = the bucket key
-    → no exchange). The only Exchange is the final per-supplier tally
-    re-group (``max_exchanges=1``); the supplier dim stays an
-    explicit broadcast and the top-20 is a TakeOrdered heap.
-    Hash-matches ORACLE_TPCH_Q21 verbatim."""
-    from weatherflow_spark.operators.bucketing import bucketed_warehouse
-    from weatherflow_spark.plans.tpch import with_commit_receipt
-    from weatherflow_spark.plans.tpch_ext import Q21_TOP
-
-    t_li, t_ord = bucketed_warehouse(spark, sf_dir, _durable_scratch_base())
-    orders = (
-        spark.table(t_ord)
-        .where(F.col("o_orderstatus") == "F")
-        .select("o_orderkey")
-    )
-    li = with_commit_receipt(
-        spark.table(t_li).select("l_orderkey", "l_linenumber", "l_suppkey", "l_shipdate")
-    ).select("l_orderkey", "l_suppkey", "l_commitdate", "l_receiptdate")
-    late = F.col("l_receiptdate") > F.col("l_commitdate")
-    supplier = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_name"
-    )
-    per_supp = (
-        li.join(
-            orders.hint("merge"), F.col("l_orderkey") == F.col("o_orderkey")
-        )
-        .groupBy("l_orderkey", "l_suppkey")
-        .agg(F.max(late.cast("int")).alias("was_late"))
-    )
-    profile = per_supp.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).alias("n_supp"),
-        F.sum("was_late").alias("n_late"),
-        F.max(
-            F.when(F.col("was_late") == 1, F.col("l_suppkey"))
-        ).alias("late_suppkey"),
-    )
-    out = (
-        profile.where((F.col("n_supp") >= 2) & (F.col("n_late") == 1))
-        .groupBy("late_suppkey")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-        .join(
-            _dim_broadcast(supplier, table_bytes(sf_dir, "supplier")),
-            F.col("late_suppkey") == F.col("s_suppkey"),
-        )
-        .select("s_suppkey", "s_name", "numwait")
-        .orderBy(F.desc("numwait"), F.asc("s_suppkey"))
-        .limit(Q21_TOP)
-    )
-    _require_zero_shuffle_smj(out, "tpch q21 (bucketed)", max_exchanges=1)
-    return tracked_persist(out)
-
-
-def q_tpch_q13_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E98 continuation (r13, VERDICT r12 #5): TPC-H Q13 routed
-    through the SECOND standing layout — orders and customer
-    co-bucketed + sorted by the custkey
-    (``bucketing.bucketed_warehouse_cust``). The plain form shuffles
-    BOTH sides of customer⟕orders at every scale; here the outer join
-    merges bucket-to-bucket and the per-customer order count groups
-    on the bucket key, so the ONLY Exchange in the whole plan is the
-    tiny (c_count) distribution re-group (``max_exchanges=1``, the
-    outer join ``merge``-hinted — raise-checked). Hash-matches
-    ORACLE_TPCH_Q13 verbatim."""
-    from weatherflow_spark.operators.bucketing import (
-        bucketed_warehouse_cust,
-    )
-
+def _custkey_layout(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     t_ord, t_cust = bucketed_warehouse_cust(
         spark, sf_dir, _durable_scratch_base()
     )
-    customer = spark.table(t_cust).select("c_custkey")
-    orders = (
-        spark.table(t_ord)
-        .where(F.col("o_orderpriority") != "1-URGENT")
-        .select("o_custkey", "o_orderkey")
-    )
-    out = (
-        customer.join(
-            orders.hint("merge"),
-            F.col("c_custkey") == F.col("o_custkey"),
-            "left",
-        )
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-        .groupBy("c_count")
-        .agg(F.count(F.lit(1)).alias("custdist"))
-    )
-    _require_zero_shuffle_smj(out, "tpch q13 (bucketed)", max_exchanges=1)
+    return {"orders": t_ord, "customer": t_cust}
+
+
+def _certified(out: DataFrame, what: str, max_exchanges: int) -> DataFrame:
+    require_zero_shuffle_smj(out, f"{what} (bucketed)", max_exchanges)
     return tracked_persist(out)
+
+
+# The bucketed TPC-H rows: each runs the plain builder over a standing
+# layout (``layout=``), RAISES unless the plan is a sort-merge with at
+# most the stated shuffle Exchanges, and hash-matches the plain
+# query's oracle, so one row certifies the layout is both adopted and
+# lossless. Each builder's docstring describes its layout plan.
+
+
+def q_tpch_q3_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q3 over the orderkey layout: zero shuffle Exchange."""
+    out = q_tpch_q3(spark, sf_dir, _orderkey_layout(spark, sf_dir))
+    return _certified(out, "tpch q3", max_exchanges=0)
+
+
+def q_tpch_q18_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q18 over the orderkey layout: zero shuffle Exchange."""
+    out = q_tpch_q18(spark, sf_dir, _orderkey_layout(spark, sf_dir))
+    return _certified(out, "tpch q18", max_exchanges=0)
+
+
+def q_tpch_q4_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q4 over the orderkey layout: ≤ 1 shuffle Exchange."""
+    out = q_tpch_q4(spark, sf_dir, _orderkey_layout(spark, sf_dir))
+    return _certified(out, "tpch q4", max_exchanges=1)
+
+
+def q_tpch_q12_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q12 over the orderkey layout: ≤ 1 shuffle Exchange."""
+    out = q_tpch_q12(spark, sf_dir, _orderkey_layout(spark, sf_dir))
+    return _certified(out, "tpch q12", max_exchanges=1)
+
+
+def q_tpch_q21_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q21 over the orderkey layout: ≤ 1 shuffle Exchange."""
+    out = q_tpch_q21(spark, sf_dir, _orderkey_layout(spark, sf_dir))
+    return _certified(out, "tpch q21", max_exchanges=1)
+
+
+def q_tpch_q13_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q13 over the custkey layout: ≤ 1 shuffle Exchange."""
+    out = q_tpch_q13(spark, sf_dir, _custkey_layout(spark, sf_dir))
+    return _certified(out, "tpch q13", max_exchanges=1)
 
 
 def q_tpch_q10_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E98 continuation (r13): TPC-H Q10 composed over BOTH standing
-    layouts — the orderkey pair makes lineitem(R)⋈orders(quarter) a
-    bucket-to-bucket merge (zero Exchange on either side), and the
-    custkey pair makes the per-customer revenue join-back read
-    customer WITHOUT a shuffle. The aggregate's single re-key
-    (``repartition(n_buckets, o_custkey)`` — REPARTITION_BY_NUM, so
-    AQE cannot coalesce it away from the bucket count) is the one
-    Exchange in the plan (``max_exchanges=1``, both fact joins
-    ``merge``-hinted, the 25-row nation dim broadcast — raise-checked):
-    its output partitioning matches customer's bucketing exactly, so
-    the join-back merges in place. The plain form, sort-merged, pays
-    FOUR shuffles on the same shape. Hash-matches ORACLE_TPCH_Q10
-    verbatim."""
-    from weatherflow_spark.operators.bucketing import (
-        bucketed_warehouse,
-        bucketed_warehouse_cust,
-    )
-    from weatherflow_spark.plans.queries import scaled_sum
-
-    n_buckets = 8
-    t_li, t_ord = bucketed_warehouse(
-        spark, sf_dir, _durable_scratch_base(), n_buckets=n_buckets
-    )
-    _, t_cust = bucketed_warehouse_cust(
-        spark, sf_dir, _durable_scratch_base(), n_buckets=n_buckets
-    )
-    li = spark.table(t_li).where(F.col("l_returnflag") == "R")
-    orders = spark.table(t_ord).where(
-        (F.col("o_orderdate") >= F.lit("1996-10-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
-    )
-    customer = spark.table(t_cust).select(
-        "c_custkey", "c_name", "c_acctbal", "c_nationkey"
-    )
-    nation = load_table(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_name"
-    )
-    rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    per_cust = (
-        li.join(
-            orders.hint("merge"), F.col("l_orderkey") == F.col("o_orderkey")
-        )
-        # ONE re-key, placed BEFORE the aggregate so the groupBy
-        # reuses it and its count equals the custkey bucket count
-        # — the join-back then needs no further exchange on
-        # either side.
-        .repartition(n_buckets, F.col("o_custkey"))
-        .groupBy("o_custkey")
-        .agg(scaled_sum(rev, 10_000).alias("revenue"))
-    )
-    out = (
-        per_cust.join(
-            customer.hint("merge"), F.col("o_custkey") == F.col("c_custkey")
-        )
-        .join(
-            _dim_broadcast(nation, table_bytes(sf_dir, "nation")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .select(
-            "c_custkey",
-            "c_name",
-            "revenue",
-            F.expr(
-                "cast(floor(c_acctbal * 100 + 0.5) as bigint)"
-            ).alias("acctbal_cents"),
-            "n_name",
-        )
-        .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-        .limit(20)
-    )
-    _require_zero_shuffle_smj(out, "tpch q10 (bucketed)", max_exchanges=1)
-    return tracked_persist(out)
-
-
-def _oracle_tpch_q13_bucketed() -> str:
-    from weatherflow_spark.plans.tpch_ext import ORACLE_TPCH_Q13
-
-    return ORACLE_TPCH_Q13
-
-
-def _oracle_tpch_q10_bucketed() -> str:
-    from weatherflow_spark.plans.tpch_ext import ORACLE_TPCH_Q10
-
-    return ORACLE_TPCH_Q10
+    """TPC-H Q10 over both layouts — lineitem and orders from the
+    orderkey pair, customer from the custkey pair: ≤ 1 shuffle
+    Exchange."""
+    layout = {
+        **_orderkey_layout(spark, sf_dir),
+        "customer": _custkey_layout(spark, sf_dir)["customer"],
+    }
+    out = q_tpch_q10(spark, sf_dir, layout)
+    return _certified(out, "tpch q10", max_exchanges=1)
 
 
 PC_HOT = "1-URGENT"  # the partition seeded with small files
@@ -2298,30 +1938,6 @@ def q_tpch_q6_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("revenue")
         )
     )
-
-
-def _oracle_tpch_q6_skipping() -> str:
-    from weatherflow_spark.plans.tpch_ext import ORACLE_TPCH_Q6
-
-    return ORACLE_TPCH_Q6
-
-
-def _oracle_tpch_q4_bucketed() -> str:
-    from weatherflow_spark.plans.tpch import ORACLE_TPCH_Q4
-
-    return ORACLE_TPCH_Q4
-
-
-def _oracle_tpch_q12_bucketed() -> str:
-    from weatherflow_spark.plans.tpch_ps import ORACLE_TPCH_Q12
-
-    return ORACLE_TPCH_Q12
-
-
-def _oracle_tpch_q21_bucketed() -> str:
-    from weatherflow_spark.plans.tpch_ext import ORACLE_TPCH_Q21
-
-    return ORACLE_TPCH_Q21
 
 
 def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3357,8 +2973,6 @@ def q_maintenance2_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_maintenance_suite() -> str:
-    from weatherflow_spark.plans.tpch_ext import ORACLE_TPCH_Q6
-
     return f"""
         WITH dw AS ({ORACLE_DELETE_WHERE}),
         wm AS ({ORACLE_WAREHOUSE_MAINTENANCE}),
@@ -3920,17 +3534,17 @@ def q_pipeline_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
       written partition-by-shard and digested from disk.
     - ``ann_serve``     (E88, r9): ANN served from the persisted IVF
       index — probed cells only, decision-identical to one-shot.
-    - ``bucketed_join`` (E93, r10): co-located fact⋈fact join —
+    - ``bucketed_join``: co-located fact⋈fact join —
       raises unless zero-Exchange sort-merge, digest == plain join.
     - ``file_skip``     (E100, r12): zone-map file-skipping on the
       segmented log — a selective range scan opens ≤¼ of the files
       (raise-checked) and hash-matches the plain BETWEEN oracle.
-    - ``tpch_bucketed`` (E98, r11; family widened r12): the bucketed
-      layout ADOPTED by real TPC-H Q3+Q18 (zero-Exchange plans,
-      raise-checked) and Q4+Q12+Q21 (≤ 1 Exchange — the tiny
-      post-agg re-group — raise-checked), hash == the unbucketed
-      oracles verbatim. The layout itself is DURABLE: a fresh session
-      re-registers the on-disk build instead of rewriting.
+    - ``tpch_bucketed``: the plain TPC-H Q3+Q18 builders over the
+      bucketed layout (zero-Exchange plans, raise-checked) and
+      Q4+Q12+Q21 (≤ 1 Exchange — the tiny post-agg re-group —
+      raise-checked), hash == the plain oracles verbatim. The layout
+      itself is DURABLE: a fresh session re-registers the on-disk
+      build instead of rewriting.
 
     r12 split (VERDICT r11 'What's wrong' #2): the eight
     lakehouse-HISTORY branches moved to :func:`q_lakehouse_suite` so
@@ -4043,7 +3657,6 @@ def q_pipeline_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             "'c_custkey', cast(c_custkey as bigint)) AS (metric, value)",
         )
     ).unionByName(
-        # r12: the rest of the orderkey family, routed + raise-checked.
         tb4_df.selectExpr(
             "'tpch_bucketed' AS op",
             "concat('q4|', o_orderpriority) AS key",
@@ -4285,10 +3898,10 @@ def _oracle_pipeline_suite() -> str:
            'q3|' || l_orderkey || '|' || strftime(o_orderdate, '%Y-%m-%d')
                || '|' || o_orderpriority,
            'revenue_e4', CAST(floor(revenue * 1e4 + 0.5) AS BIGINT)
-    FROM ({_oracle_tpch_q3_bucketed()})
+    FROM ({ORACLE_TPCH_Q3})
     UNION ALL
     SELECT 'tpch_bucketed', 'q18|' || o_orderkey, u.metric, u.value
-    FROM ({_oracle_tpch_q18_bucketed()}) s,
+    FROM ({ORACLE_TPCH_Q18}) s,
          (VALUES ('total_qty_c'), ('price_cents'), ('c_custkey'))
              AS m(metric),
          LATERAL (SELECT m.metric AS metric,
@@ -4299,10 +3912,10 @@ def _oracle_pipeline_suite() -> str:
     UNION ALL
     SELECT 'tpch_bucketed', 'q4|' || o_orderpriority,
            'order_count', CAST(order_count AS BIGINT)
-    FROM ({_oracle_tpch_q4_bucketed()})
+    FROM ({ORACLE_TPCH_Q4})
     UNION ALL
     SELECT 'tpch_bucketed', 'q12|' || l_shipmode, u.metric, u.value
-    FROM ({_oracle_tpch_q12_bucketed()}) s,
+    FROM ({ORACLE_TPCH_Q12}) s,
          (VALUES ('high_line_count'), ('low_line_count')) AS m(metric),
          LATERAL (SELECT m.metric AS metric,
                   CAST(CASE m.metric WHEN 'high_line_count'
@@ -4312,7 +3925,7 @@ def _oracle_pipeline_suite() -> str:
     SELECT 'tpch_bucketed',
            'q21|' || s_suppkey || '|' || s_name,
            'numwait', CAST(numwait AS BIGINT)
-    FROM ({_oracle_tpch_q21_bucketed()})
+    FROM ({ORACLE_TPCH_Q21})
     UNION ALL
     SELECT 'file_skip', o_orderpriority, u.metric, u.value
     FROM ({ORACLE_FILE_SKIPPING}) s,
@@ -4527,23 +4140,21 @@ SERVING_ORACLES: dict[str, str] = {
     "q_forget_stream": ORACLE_FORGET_STREAM,
     "q_warehouse_maintenance": ORACLE_WAREHOUSE_MAINTENANCE,
     # E100 adoption: identity with the plain Q6 oracle verbatim.
-    "q_tpch_q6_skipping": _oracle_tpch_q6_skipping(),
+    "q_tpch_q6_skipping": ORACLE_TPCH_Q6,
     # E104: the restore must reproduce the seed exactly — plain
     # raw-orders digest, shared with the compaction row.
     "q_restore_version": ORACLE_PARTITION_COMPACTION,
     "q_maintenance_suite": _oracle_maintenance_suite(),
     "q_maintenance2_suite": _oracle_maintenance2_suite(),
-    "q_tpch_q3_bucketed": _oracle_tpch_q3_bucketed(),
-    "q_tpch_q18_bucketed": _oracle_tpch_q18_bucketed(),
-    # r12: the rest of the orderkey family routed through the layout —
-    # the adoption claim IS oracle identity with the plain forms.
-    "q_tpch_q4_bucketed": _oracle_tpch_q4_bucketed(),
-    "q_tpch_q12_bucketed": _oracle_tpch_q12_bucketed(),
-    "q_tpch_q21_bucketed": _oracle_tpch_q21_bucketed(),
-    # r13: the custkey family routed through the second standing
-    # layout — adoption claim IS oracle identity with the plain forms.
-    "q_tpch_q13_bucketed": _oracle_tpch_q13_bucketed(),
-    "q_tpch_q10_bucketed": _oracle_tpch_q10_bucketed(),
+    # The bucketed rows' adoption claim IS oracle identity with the
+    # plain forms.
+    "q_tpch_q3_bucketed": ORACLE_TPCH_Q3,
+    "q_tpch_q18_bucketed": ORACLE_TPCH_Q18,
+    "q_tpch_q4_bucketed": ORACLE_TPCH_Q4,
+    "q_tpch_q12_bucketed": ORACLE_TPCH_Q12,
+    "q_tpch_q21_bucketed": ORACLE_TPCH_Q21,
+    "q_tpch_q13_bucketed": ORACLE_TPCH_Q13,
+    "q_tpch_q10_bucketed": ORACLE_TPCH_Q10,
     # E99: the manifest-mode walk must reconstruct the SAME logical
     # history as the mirror-mode walk — oracle reused verbatim.
     "q_time_travel_manifest": ORACLE_TIME_TRAVEL,

@@ -35,7 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from weatherflow_spark.functions import text as T
-from weatherflow_spark.io import load_table
+from weatherflow_spark.io import load_table, table_bytes
+from weatherflow_spark.operators.bucketing import dim_broadcast, layout_table
 from weatherflow_spark.plans.queries import scaled_sum, scaled_sum_sql
 
 
@@ -497,7 +498,9 @@ ORACLE_EXPLODE_POS = f"""
 # ---------------------------------------------------------------------------
 
 
-def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_tpch_q3(
+    spark: SparkSession, sf_dir: str, layout: dict[str, str] | None = None
+) -> DataFrame:
     """TPC-H Q3 shape: top-10 unshipped orders by revenue for one
     market segment — the canonical selective-star composition
     (SURVEY §2.4 J2 + §2.7 O2).
@@ -512,22 +515,34 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort. Group key (orderkey, orderdate, priority) is functionally
     dependent on orderkey, so the limit's (revenue, orderkey) order
     is total — deterministic under ties.
+
+    ``layout`` maps lineitem and orders to the orderkey-bucketed
+    tables (``bucketing.layout_table``); orders then carries a
+    ``merge`` hint, so the join streams bucket to bucket and the
+    revenue groupBy (keys ⊇ the orderkey) reuses its partitioning:
+    the only exchange left is the customer broadcast.
     """
     cust = (
         load_table(spark, sf_dir, "customer")
         .where(F.col("c_mktsegment") == "BUILDING")
         .select("c_custkey")
     )
-    orders = load_table(spark, sf_dir, "orders").where(
+    orders = layout_table(spark, sf_dir, "orders", layout).where(
         F.col("o_orderdate") < F.lit("1998-07-01").cast("timestamp")
     )
-    li = load_table(spark, sf_dir, "lineitem").where(
+    li = layout_table(spark, sf_dir, "lineitem", layout).where(
         F.col("l_shipdate") > F.lit("1998-07-01").cast("timestamp")
     )
     rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
+        li.join(
+            orders.hint("merge") if layout else orders,
+            F.col("l_orderkey") == F.col("o_orderkey"),
+        )
+        .join(
+            dim_broadcast(cust, table_bytes(sf_dir, "customer")),
+            F.col("o_custkey") == F.col("c_custkey"),
+        )
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(scaled_sum(rev, 10_000).alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("l_orderkey"))

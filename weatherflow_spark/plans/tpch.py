@@ -21,7 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from weatherflow_spark.io import load_table
+from weatherflow_spark.io import load_table, table_bytes
+from weatherflow_spark.operators.bucketing import dim_broadcast, layout_table
 from weatherflow_spark.plans.queries import scaled_sum, scaled_sum_sql
 
 
@@ -689,28 +690,33 @@ COMMIT_RECEIPT_SQL = """
 # ---------------------------------------------------------------------------
 
 
-def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4, REAL predicate shape (r10): per priority, how many
-    1996-Q1 orders had at least one line that missed its commitment
-    (``l_commitdate < l_receiptdate`` over the derived date columns —
-    through r9 this was the shipped-late stand-in). Plans as a LEFT
+def q_tpch_q4(
+    spark: SparkSession, sf_dir: str, layout: dict[str, str] | None = None
+) -> DataFrame:
+    """TPC-H Q4: per priority, how many 1996-Q1 orders had at least
+    one line that missed its commitment (``l_commitdate <
+    l_receiptdate`` over the derived date columns). Plans as a LEFT
     SEMI join on the order key with the line-side lateness as a
     join-side filter — each order counts ONCE no matter how many
     lines are late (the EXISTS semantics the naive
     inner-join-then-distinct shape pays a dedup shuffle for), then a
-    5-group aggregate. The lateness predicate is line-LOCAL (unlike
-    the old stand-in it doesn't reference o_orderdate), so it filters
-    lineitem BEFORE the join — strictly less exchange input."""
-    orders = load_table(spark, sf_dir, "orders").where(
+    5-group aggregate. The lateness predicate is line-LOCAL, so it
+    filters lineitem BEFORE the join — strictly less exchange input.
+
+    ``layout`` maps lineitem and orders to the orderkey-bucketed
+    tables (``bucketing.layout_table``); orders then carries a
+    ``merge`` hint, so the semi join is bucket to bucket and the
+    only shuffle left is the 5-row priority re-group."""
+    orders = layout_table(spark, sf_dir, "orders", layout).where(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp"))
     )
     li = with_commit_receipt(
-        load_table(spark, sf_dir, "lineitem").select(
+        layout_table(spark, sf_dir, "lineitem", layout).select(
             "l_orderkey", "l_linenumber", "l_shipdate"
         )
     ).where(F.col("l_commitdate") < F.col("l_receiptdate"))
-    late = orders.join(
+    late = (orders.hint("merge") if layout else orders).join(
         li.select("l_orderkey"),
         F.col("o_orderkey") == F.col("l_orderkey"),
         "left_semi",
@@ -740,27 +746,43 @@ ORACLE_TPCH_Q4 = f"""
 Q18_QTY_THRESHOLD = 250  # sf0.001: 25 qualifying orders; sf0.01: 204
 
 
-def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 (r9): the 20 largest-volume orders — aggregate
-    lineitem quantities per order (exact scaled-integer sum), keep
-    orders whose total exceeds the threshold (the HAVING filter runs
-    on the AGGREGATED side, so the join back to orders/customer
-    carries only qualifying keys — at 100 TB that is a few hundred
-    rows, broadcastable), then enrich with customer and take the
-    top-20 heap by (total_qty, o_orderkey)."""
-    li = load_table(spark, sf_dir, "lineitem")
+def q_tpch_q18(
+    spark: SparkSession, sf_dir: str, layout: dict[str, str] | None = None
+) -> DataFrame:
+    """TPC-H Q18: the 20 largest-volume orders — aggregate lineitem
+    quantities per order (exact scaled-integer sum), keep orders
+    whose total exceeds the threshold (the HAVING filter runs on the
+    AGGREGATED side, so the join back to orders/customer carries
+    only qualifying keys — at 100 TB that is a few hundred rows,
+    broadcastable), then enrich with customer and take the top-20
+    heap by (total_qty, o_orderkey).
+
+    ``layout`` maps lineitem and orders to the orderkey-bucketed
+    tables (``bucketing.layout_table``). The per-order aggregate then
+    groups on the bucket key without an exchange, and instead of
+    broadcasting the qualifying set, orders sort-merges with it
+    bucket to bucket (``merge`` hint): the whole agg→join chain plans
+    zero shuffle Exchange, with only the customer dim broadcast."""
     big = (
-        li.groupBy("l_orderkey")
+        layout_table(spark, sf_dir, "lineitem", layout)
+        .groupBy("l_orderkey")
         .agg(scaled_sum(F.col("l_quantity"), 100).alias("total_qty"))
         .where(F.col("total_qty") > Q18_QTY_THRESHOLD)
     )
-    orders = load_table(spark, sf_dir, "orders")
+    orders = layout_table(spark, sf_dir, "orders", layout)
     customer = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name"
     )
+    if layout:
+        orders = orders.hint("merge")
+    else:
+        big = F.broadcast(big)
     return (
-        orders.join(F.broadcast(big), F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(customer), F.col("o_custkey") == F.col("c_custkey"))
+        orders.join(big, F.col("o_orderkey") == F.col("l_orderkey"))
+        .join(
+            dim_broadcast(customer, table_bytes(sf_dir, "customer")),
+            F.col("o_custkey") == F.col("c_custkey"),
+        )
         .select(
             "c_custkey",
             "c_name",

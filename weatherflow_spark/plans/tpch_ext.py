@@ -37,7 +37,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from weatherflow_spark.io import load_table
+from weatherflow_spark.io import load_table, table_bytes
+from weatherflow_spark.operators.bucketing import (
+    N_BUCKETS,
+    dim_broadcast,
+    layout_table,
+)
 from weatherflow_spark.plans.queries import scaled_sum, scaled_sum_sql
 from weatherflow_spark.plans.tpch import COMMIT_RECEIPT_SQL, with_commit_receipt
 
@@ -256,34 +261,52 @@ ORACLE_TPCH_Q8 = f"""
 # ---------------------------------------------------------------------------
 
 
-def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_tpch_q10(
+    spark: SparkSession, sf_dir: str, layout: dict[str, str] | None = None
+) -> DataFrame:
     """TPC-H Q10: the 20 customers who returned the most 1996-Q4
     revenue — lineitem(R-flag)⋈orders(quarter) is the one wide
     shuffle, customer and nation broadcast AFTER the aggregate (the
     grouped side is already small), and the top-20 heap orders by the
-    exact scaled revenue with c_custkey as the total tiebreak."""
-    li = load_table(spark, sf_dir, "lineitem").where(
+    exact scaled revenue with c_custkey as the total tiebreak.
+
+    ``layout`` maps lineitem and orders to the orderkey-bucketed
+    tables and customer to the custkey-bucketed one
+    (``bucketing.layout_table``). Both fact joins then carry a
+    ``merge`` hint: lineitem⋈orders merges bucket to bucket, and one
+    ``repartition(N_BUCKETS, o_custkey)`` before the aggregate
+    (REPARTITION_BY_NUM, so AQE cannot coalesce it away from the
+    bucket count) is the plan's only Exchange — its output
+    partitioning matches customer's bucketing, so the join-back
+    merges in place."""
+    li = layout_table(spark, sf_dir, "lineitem", layout).where(
         F.col("l_returnflag") == "R"
     )
-    orders = load_table(spark, sf_dir, "orders").where(
+    orders = layout_table(spark, sf_dir, "orders", layout).where(
         (F.col("o_orderdate") >= F.lit("1996-10-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    customer = load_table(spark, sf_dir, "customer").select(
+    customer = layout_table(spark, sf_dir, "customer", layout).select(
         "c_custkey", "c_name", "c_acctbal", "c_nationkey"
     )
     nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    per_cust = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("o_custkey")
-        .agg(scaled_sum(rev, 10_000).alias("revenue"))
+    if layout:
+        orders, customer = orders.hint("merge"), customer.hint("merge")
+    else:
+        customer = dim_broadcast(customer, table_bytes(sf_dir, "customer"))
+    joined = li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+    if layout:
+        joined = joined.repartition(N_BUCKETS, F.col("o_custkey"))
+    per_cust = joined.groupBy("o_custkey").agg(
+        scaled_sum(rev, 10_000).alias("revenue")
     )
     return (
-        per_cust.join(
-            F.broadcast(customer), F.col("o_custkey") == F.col("c_custkey")
+        per_cust.join(customer, F.col("o_custkey") == F.col("c_custkey"))
+        .join(
+            dim_broadcast(nation, table_bytes(sf_dir, "nation")),
+            F.col("c_nationkey") == F.col("n_nationkey"),
         )
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .select(
             "c_custkey",
             "c_name",
@@ -326,21 +349,33 @@ ORACLE_TPCH_Q10 = f"""
 # ---------------------------------------------------------------------------
 
 
-def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_tpch_q13(
+    spark: SparkSession, sf_dir: str, layout: dict[str, str] | None = None
+) -> DataFrame:
     """TPC-H Q13: how many customers placed exactly k non-urgent
     orders, for every k INCLUDING 0 — the left-outer-join-then-
     double-aggregate shape (the outer join is what makes k=0 rows
     exist; an inner join silently loses them). First shuffle keys by
     customer, second groups the tiny (c_count) domain. The priority
     exclusion stands in for the canonical o_comment NOT LIKE filter
-    (no comment column in the testdata)."""
-    customer = load_table(spark, sf_dir, "customer").select("c_custkey")
-    orders = load_table(spark, sf_dir, "orders").where(
+    (no comment column in the testdata).
+
+    ``layout`` maps orders and customer to the custkey-bucketed
+    tables (``bucketing.layout_table``); orders then carries a
+    ``merge`` hint, so the outer join merges bucket to bucket, the
+    per-customer count groups on the bucket key, and the only
+    Exchange left is the tiny (c_count) re-group."""
+    customer = layout_table(spark, sf_dir, "customer", layout).select(
+        "c_custkey"
+    )
+    orders = layout_table(spark, sf_dir, "orders", layout).where(
         F.col("o_orderpriority") != "1-URGENT"
     ).select("o_custkey", "o_orderkey")
     return (
         customer.join(
-            orders, F.col("c_custkey") == F.col("o_custkey"), "left"
+            orders.hint("merge") if layout else orders,
+            F.col("c_custkey") == F.col("o_custkey"),
+            "left",
         )
         .groupBy("c_custkey")
         .agg(F.count("o_orderkey").alias("c_count"))
@@ -493,51 +528,67 @@ ORACLE_TPCH_Q17 = f"""
 Q21_TOP = 20
 
 
-def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21, REAL predicate shape (r10): suppliers who were the
-    SOLE late supplier on a finished multi-supplier order ("kept the
-    order waiting"), top 20 by how many orders they stalled. Lateness
-    is the canonical ``l_receiptdate > l_commitdate`` over the
-    derived date columns (tpch.py ``with_commit_receipt``; through r9
-    this was a shipped-late stand-in referencing o_orderdate — the
-    real predicate is line-LOCAL, so the orders join now carries no
-    date term at all).
+def q_tpch_q21(
+    spark: SparkSession, sf_dir: str, layout: dict[str, str] | None = None
+) -> DataFrame:
+    """TPC-H Q21: suppliers who were the SOLE late supplier on a
+    finished multi-supplier order ("kept the order waiting"), top 20
+    by how many orders they stalled. Lateness is the canonical
+    ``l_receiptdate > l_commitdate`` over the derived date columns
+    (tpch.py ``with_commit_receipt``); the predicate is line-LOCAL, so
+    the orders join carries no date term.
 
     The canonical EXISTS(other supplier) + NOT EXISTS(other LATE
-    supplier) pair decorrelates into ONE per-order profile:
-    ``n_supp = countDistinct(suppkey)``, ``n_late = countDistinct(
-    suppkey WHERE late)``, and the sole late suppkey via max(CASE) —
-    an order qualifies iff n_supp ≥ 2 AND n_late = 1. One shuffle on
-    l_orderkey replaces two correlated self-joins of lineitem (at
-    100 TB: the profile agg is map-side partial; the self-join form
-    re-shuffles lineitem twice more)."""
-    orders = load_table(spark, sf_dir, "orders").where(
-        F.col("o_orderstatus") == "F"
-    ).select("o_orderkey")
+    supplier) pair decorrelates into ONE per-order profile — an order
+    qualifies iff it has ≥ 2 suppliers of which exactly 1 was late —
+    computed as a TWO-LEVEL exact aggregation: dedupe to (order,
+    supplier, was_late) first, then fold per order. Both levels group
+    on keys ⊇ the orderkey, so they share the join's partitioning,
+    and there is no ``Expand`` (the 3× row multiplication Spark's
+    multi-countDistinct rewrite plans). This replaces two correlated
+    self-joins of lineitem.
+
+    ``layout`` maps lineitem and orders to the orderkey-bucketed
+    tables (``bucketing.layout_table``); orders then carries a
+    ``merge`` hint, so the join merges bucket to bucket, neither
+    profile level shuffles, and the only Exchange is the final
+    per-supplier tally re-group."""
+    orders = (
+        layout_table(spark, sf_dir, "orders", layout)
+        .where(F.col("o_orderstatus") == "F")
+        .select("o_orderkey")
+    )
     li = with_commit_receipt(
-        load_table(spark, sf_dir, "lineitem").select(
+        layout_table(spark, sf_dir, "lineitem", layout).select(
             "l_orderkey", "l_linenumber", "l_suppkey", "l_shipdate"
         )
     ).select("l_orderkey", "l_suppkey", "l_commitdate", "l_receiptdate")
     late = F.col("l_receiptdate") > F.col("l_commitdate")
-    profile = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("l_orderkey")
-        .agg(
-            F.countDistinct("l_suppkey").alias("n_supp"),
-            F.countDistinct(F.when(late, F.col("l_suppkey"))).alias("n_late"),
-            F.max(F.when(late, F.col("l_suppkey"))).alias("late_suppkey"),
-        )
-    )
     supplier = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name"
+    )
+    per_supp = (
+        li.join(
+            orders.hint("merge") if layout else orders,
+            F.col("l_orderkey") == F.col("o_orderkey"),
+        )
+        .groupBy("l_orderkey", "l_suppkey")
+        .agg(F.max(late.cast("int")).alias("was_late"))
+    )
+    profile = per_supp.groupBy("l_orderkey").agg(
+        F.count(F.lit(1)).alias("n_supp"),
+        F.sum("was_late").alias("n_late"),
+        F.max(
+            F.when(F.col("was_late") == 1, F.col("l_suppkey"))
+        ).alias("late_suppkey"),
     )
     return (
         profile.where((F.col("n_supp") >= 2) & (F.col("n_late") == 1))
         .groupBy("late_suppkey")
         .agg(F.count(F.lit(1)).alias("numwait"))
         .join(
-            F.broadcast(supplier), F.col("late_suppkey") == F.col("s_suppkey")
+            dim_broadcast(supplier, table_bytes(sf_dir, "supplier")),
+            F.col("late_suppkey") == F.col("s_suppkey"),
         )
         .select("s_suppkey", "s_name", "numwait")
         .orderBy(F.desc("numwait"), F.asc("s_suppkey"))

@@ -61,6 +61,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from weatherflow_spark.io import load_table
+from weatherflow_spark.operators.bucketing import layout_table
 from weatherflow_spark.plans.tpch import COMMIT_RECEIPT_SQL, with_commit_receipt
 
 
@@ -331,22 +332,28 @@ ORACLE_TPCH_Q11 = f"""
 SHIP_MODES = ["AIR", "FOB", "MAIL", "RAIL", "REG AIR", "SHIP", "TRUCK"]
 
 
-def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12, REAL predicate shape (r10): for MAIL/SHIP lines
-    RECEIVED in 1996 that were late against their commitment
-    (``l_commitdate < l_receiptdate``) after shipping before it
-    (``l_shipdate < l_commitdate``) — the canonical three-way date
-    sandwich over the derived commit/receipt columns (tpch.py; the
-    r9 form substituted one shipped-late join term) — how many belong
-    to high- vs low-priority orders, per mode. ``l_shipmode`` is the
-    derived 7-value dictionary column (module doc). The receipt-year
-    filter can't reach the parquet scan (the column is derived), so
-    the IMPLIED shipdate superset range (receipt ∈ ship+1..ship+30 ⟹
-    ship ∈ [1995-12-02, 1996-12-31)) is stated explicitly and pushes
-    down — the standard derived-column residual-predicate pattern.
-    The orders join is back to a pure key equi-join (no date term),
-    followed by a 2-group conditional count — one pass."""
-    li = load_table(spark, sf_dir, "lineitem").where(
+def q_tpch_q12(
+    spark: SparkSession, sf_dir: str, layout: dict[str, str] | None = None
+) -> DataFrame:
+    """TPC-H Q12: for MAIL/SHIP lines RECEIVED in 1996 that were late
+    against their commitment (``l_commitdate < l_receiptdate``) after
+    shipping before it (``l_shipdate < l_commitdate``) — the
+    canonical three-way date sandwich over the derived commit/receipt
+    columns (tpch.py) — how many belong to high- vs low-priority
+    orders, per mode. ``l_shipmode`` is the derived 7-value
+    dictionary column (module doc). The receipt-year filter can't
+    reach the parquet scan (the column is derived), so the IMPLIED
+    shipdate superset range (receipt ∈ ship+1..ship+30 ⟹ ship ∈
+    [1995-12-02, 1996-12-31)) is stated explicitly and pushes down —
+    the standard derived-column residual-predicate pattern. The
+    orders join is a pure key equi-join, followed by a 2-group
+    conditional count — one pass.
+
+    ``layout`` maps lineitem and orders to the orderkey-bucketed
+    tables (``bucketing.layout_table``); orders then carries a
+    ``merge`` hint, so the join merges bucket to bucket and the only
+    shuffle left is the 2-mode re-group."""
+    li = layout_table(spark, sf_dir, "lineitem", layout).where(
         (F.col("l_shipdate") >= F.lit("1995-12-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
     )
@@ -365,12 +372,15 @@ def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = li.withColumn("l_shipmode", mode).where(
         F.col("l_shipmode").isin("MAIL", "SHIP")
     )
-    orders = load_table(spark, sf_dir, "orders").select(
+    orders = layout_table(spark, sf_dir, "orders", layout).select(
         "o_orderkey", "o_orderpriority"
     )
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        li.join(
+            orders.hint("merge") if layout else orders,
+            F.col("l_orderkey") == F.col("o_orderkey"),
+        )
         .groupBy("l_shipmode")
         .agg(
             F.sum(F.when(high, 1).otherwise(0))
