@@ -20,6 +20,11 @@ A query that raises on any rep is recorded under ``failed`` (error
 class and the first line of its message) and left out of ``value``;
 the rest of the set still runs, the line is still printed, and the
 process then exits non-zero.
+
+``codegen_compiles[name]`` in ``bench_last.json`` counts the classes
+Spark compiled during each rep (``CodegenMetrics``' compilation
+histogram, which the JVM-wide codegen cache skips on a hit): with the
+cache sized to the working set, reps after the first compile nothing.
 """
 
 from __future__ import annotations
@@ -336,8 +341,14 @@ def main() -> None:
     from weatherflow_spark.operators.caching import release_caches
 
     spark = get_spark(app_name="weatherflow-bench", master=f"local[{CPUS}]")
+    compilations = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    compiles: dict[str, list[int]] = {}
 
     def run_once(name: str) -> float:
+        n0 = compilations.getCount()
         t0 = time.perf_counter()
         try:
             QUERIES[name](spark, SF_DIR).write.format("noop").mode(
@@ -351,6 +362,7 @@ def main() -> None:
             # query's own cost and memory pressure stays flat.
             release_caches()
             spark.catalog.clearCache()
+            compiles.setdefault(name, []).append(compilations.getCount() - n0)
 
     # warm-up (JVM + parquet footer caches), not billed
     QUERIES["q_flagship_season_rollup"](spark, SF_DIR).count()
@@ -431,6 +443,7 @@ def main() -> None:
         "ambient_factor_long": ambient_long,
         "pin_generation": {**PIN_GENERATION, "hash": _pin_hash()},
         "failed": failed,
+        "codegen_compiles": compiles,
     }
     # The driver only keeps a ~2,000-char stdout tail, which the full
     # per-query payload outgrew rounds ago (BENCH_r04..r07 all recorded

@@ -15,6 +15,21 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_MEDIUM = "/root/testdata/sf0.01"
 
 
+def group_jobs(spark, group: str, action) -> int:
+    """Run ``action()`` under Spark job group ``group`` and return how
+    many jobs it started, counting those its pool threads submit."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # The status tracker is fed by the listener bus: drain it first.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     from weatherflow_spark.session import get_spark

@@ -3,7 +3,7 @@ test_oracle_parity)."""
 
 from __future__ import annotations
 
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, group_jobs
 from weatherflow_spark.plans.graph import PR_SCALE, PR_TOP, q_pagerank
 
 
@@ -69,3 +69,25 @@ def test_degree_ordered_triangles_match_brute_force(spark):
         tuple(sorted((r.wa, r.wb, r.wc))) for r in tri.collect()
     )
     assert got == [(1, 2, 3), (1, 3, 5), (3, 4, 5)]
+
+
+# Measured at sf0.001 (test session, 8 shuffle partitions): 26 jobs
+# when round 1 joined the seed ranks, 19 with round 1 folded into a
+# select over the weighted-edge checkpoint.
+PAGERANK_JOB_BUDGET = 19
+
+
+def test_pagerank_job_budget(spark):
+    """Round 1 needs no join and nothing after the weighted-edge
+    checkpoint re-runs the edge pipeline."""
+    from weatherflow_spark.operators.caching import release_caches
+
+    release_caches()  # a shared edge checkpoint would hide its build
+    try:
+        jobs = group_jobs(
+            spark, "pagerank-job-budget",
+            lambda: q_pagerank(spark, SF_SMALL).collect(),
+        )
+    finally:
+        release_caches()
+    assert 0 < jobs <= PAGERANK_JOB_BUDGET, jobs

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import Row
 
+from tests.conftest import group_jobs
 from weatherflow_spark.operators.star import build_weather_star, with_star_keys
 
 
@@ -152,9 +153,9 @@ def _poll(spark, minute: int, stations: int = 20):
 
 
 def test_star_load_job_budget(spark, tmp_path):
-    """The loader's pool threads do not inherit a job group, so the
-    load is bracketed by two marker jobs: job ids are monotone, and
-    every job between the markers belongs to the load."""
+    """Jobs of one load into an existing partitioned warehouse, counted
+    through the caller's job group, which the loader's pool threads
+    inherit."""
     from weatherflow_spark.operators.star import (
         STAR_DATE_PARTITIONING,
         load_star_warehouse,
@@ -165,22 +166,11 @@ def test_star_load_job_budget(spark, tmp_path):
         spark, _poll(spark, 0), wh, batch_id="b0",
         partition_cols=STAR_DATE_PARTITIONING,
     )
-    sc = spark.sparkContext
-    group = "star-load-job-budget"
-
-    def marker() -> int:
-        sc.parallelize([0], 1).count()
-        return max(sc.statusTracker().getJobIdsForGroup(group))
-
-    sc.setJobGroup(group, "markers")
-    try:
-        first = marker()
-        load_star_warehouse(
+    jobs = group_jobs(
+        spark, "star-load-job-budget",
+        lambda: load_star_warehouse(
             spark, _poll(spark, 5), wh, batch_id="b1",
             partition_cols=STAR_DATE_PARTITIONING,
-        )
-        jobs = marker() - first - 1
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+        ),
+    )
     assert 0 < jobs <= STAR_LOAD_JOB_BUDGET, jobs

@@ -42,6 +42,7 @@ from concurrent.futures import ThreadPoolExecutor
 from typing import TypeVar
 
 from pyspark import inheritable_thread_target
+from pyspark.sql import SparkSession
 
 T = TypeVar("T")
 
@@ -53,13 +54,15 @@ def overlap_branches(thunks: Sequence[Callable[[], T]]) -> list[T]:
     order. Falls back to serial for a single branch."""
     if len(thunks) <= 1:
         return [t() for t in thunks]
+    spark = SparkSession.active()
     with ThreadPoolExecutor(
         max_workers=min(OVERLAP_WORKERS, len(thunks))
     ) as pool:
-        # inheritable_thread_target: the documented way to run driver
-        # threads so JVM thread-local properties (job group and
-        # description) are inherited and cleaned up.
-        futures = [pool.submit(inheritable_thread_target(t)) for t in thunks]
+        # Each branch runs with the caller's job group, description and
+        # session tags, so its jobs count towards the caller's query.
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(t)) for t in thunks
+        ]
         # Collect in order; .result() re-raises a branch's raise check.
         return [f.result() for f in futures]
 

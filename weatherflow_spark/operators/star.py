@@ -24,6 +24,7 @@ Spark-first re-expression:
 
 from __future__ import annotations
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, functions as F
 
 # Dimension tags baked into each surrogate key so the five ids of one
@@ -279,16 +280,24 @@ def load_star_warehouse(
     # dims. Its before_write gate joins the dim merges before its first
     # file is written; a dim's failure re-raises there and the fact
     # writes nothing. Same-path writers stay single-threaded by the
-    # loader's contract.
+    # loader's contract. Every merge runs with the caller's job group
+    # and tags, so the load's jobs count towards the caller.
     dims = sorted(n for n in tables if n != "w_fact")
+
+    def submit(*args):
+        # One wrap per submission: a wrap clones the caller's local
+        # properties once, and threads must not share a clone because
+        # Spark sets per-query properties on it.
+        return pool.submit(inheritable_thread_target(spark)(_merge), *args)
+
     with ThreadPoolExecutor(max_workers=len(tables)) as pool:
-        dim_futs = [pool.submit(_merge, d) for d in dims]
+        dim_futs = [submit(d) for d in dims]
 
         def dims_committed() -> None:
             for f in dim_futs:
                 f.result()
 
-        fact_fut = pool.submit(_merge, "w_fact", dims_committed)
+        fact_fut = submit("w_fact", dims_committed)
         for fut in [*dim_futs, fact_fut]:
             fut.result()  # the first dim failure wins over the fact's echo
     return commit_warehouse(wh_dir, sorted(tables), batch_id=batch_id)

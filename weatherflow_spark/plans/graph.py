@@ -23,7 +23,8 @@ construction (symmetry), so no dangling-mass term is needed.
 Scale posture (100 TB): each round is one shuffle join
 (edges ⋈ ranks on src — ranks is node-sized, edges dominate) plus one
 keyed aggregation with map-side partials; the per-round degree join
-is precomputed once. State lives in DataFrames, nothing on the
+is precomputed once, and round 1 (uniform seed ranks) reads the
+weighted edges alone. State lives in DataFrames, nothing on the
 driver. This is the canonical Spark iteration shape; production runs
 checkpoint lineage every ~5 rounds and iterate to an L1 fixpoint with
 the identical round body.
@@ -81,13 +82,22 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (at cluster scale: cache/checkpoint the edge relation, or
     # write it bucketed by src, before iterating).
     ew = tracked_persist(edges.join(deg, "src").repartition("src"))
-    ranks = deg.select(F.col("src").alias("node"), F.lit(PR_SCALE).cast("long").alias("r"))
-    for _ in range(PR_ROUNDS):
-        contribs = ew.join(ranks, ew["src"] == ranks["node"]).select(
-            F.col("dst").alias("node"), F.expr("r div d").alias("c")
-        )
-        ranks = contribs.groupBy("node").agg(
+
+    def step(contribs: DataFrame) -> DataFrame:
+        return contribs.groupBy("node").agg(
             (F.lit(_TELEPORT) + F.expr("85 * sum(c) div 100")).cast("long").alias("r")
+        )
+
+    # Every seed rank is PR_SCALE, so round 1 needs no join: each edge
+    # contributes PR_SCALE div d. Later rounds read only the checkpoint.
+    ranks = step(
+        ew.select(F.col("dst").alias("node"), F.expr(f"{PR_SCALE} div d").alias("c"))
+    )
+    for _ in range(PR_ROUNDS - 1):
+        ranks = step(
+            ew.join(ranks, ew["src"] == ranks["node"]).select(
+                F.col("dst").alias("node"), F.expr("r div d").alias("c")
+            )
         )
     return (
         ranks.orderBy(F.desc("r"), F.asc("node"))
