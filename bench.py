@@ -49,11 +49,9 @@ REPS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
 # ≥15 s certification suite's min is stable by rep 3, and two extra
 # runs of each such row cost ~5-10 min of wall clock across the set —
 # enough to push the whole bench past a scheduler window.
-SLOW_SEC = float(os.environ.get("SPARK_GRAFT_BENCH_SLOW_SEC", "2.0"))
-VERY_SLOW_SEC = float(
-    os.environ.get("SPARK_GRAFT_BENCH_VERY_SLOW_SEC", "15.0")
-)
-EXTRA_REPS = max(0, int(os.environ.get("SPARK_GRAFT_BENCH_EXTRA_REPS", "2")))
+SLOW_SEC = 2.0
+VERY_SLOW_SEC = 15.0
+EXTRA_REPS = 2
 
 # Ambient-session controls (round-9, VERDICT r8 'Next round' #5):
 # whole-SESSION inflation up to ~2x on untouched queries is a measured
@@ -457,31 +455,13 @@ def main() -> None:
             f.write(json.dumps(payload) + "\n")
     except OSError as exc:  # read-only checkout: stdout line still stands
         print(f"bench_last.json not written: {exc}", file=sys.stderr)
-    # Compact "queries" content (r15, VERDICT r14 'What's wrong' #2):
-    # the old top-12-slowest selection made the driver's PERF diff
-    # structurally unreliable — five of r14's biggest WINS left the
-    # top-12 and were reported as "dropped_from_bench" while four
-    # noise-entrants appeared "new", and the round-over-round geomean
-    # rested on 7 rows. stdout now carries the FULL 50-row
-    # certification window (the driver's own correctness set) at 0.1 s
-    # precision, PLUS the 12 slowest overall (so big tail rows like
-    # q_star_transaction keep their trend line), PLUS every name the
-    # previous round's compact line carried (so a row that got FASTER
-    # and left the top-12 can never again read as "dropped"). Additions
-    # only — no key renamed or removed; full 3-decimal payload stays in
-    # bench_last.json. Measured line length ~1.7 KB, inside the
-    # driver's ~2,000-char stdout tail.
+    # Compact "queries" content: the full 50-row certification window
+    # (the driver's own correctness set) at 0.1 s precision plus the
+    # 12 slowest overall, so big tail rows keep their trend line. The
+    # full 3-decimal payload stays in bench_last.json. Measured line
+    # length ~1.7 KB, inside the driver's ~2,000-char stdout tail.
     slowest = sorted(timings.items(), key=lambda kv: (-kv[1], kv[0]))[:12]
-    prev_compact_rows = [
-        # BENCH_r14 compact stdout "queries" keys (carry-forward set)
-        "q_tpch_suite", "q_maintenance2_suite", "q_star_transaction",
-        "q_graph_suite", "q_text_mining_suite", "q_pipeline_suite",
-        "q_iterative_suite", "q_delete_where_dv", "q_lakehouse_suite",
-        "q_ann_suite", "q_stats_suite", "q_near_dup_suite",
-    ]
-    stdout_rows = dict.fromkeys(
-        window + [n for n, _ in slowest] + prev_compact_rows
-    )
+    stdout_rows = dict.fromkeys(window + [n for n, _ in slowest])
     compact_queries = {
         n: round(timings[n], 1) for n in stdout_rows if n in timings
     }

@@ -16,7 +16,7 @@ import pytest
 
 from pyspark.sql import Row, functions as F
 
-from weatherflow_spark.operators.caching import release_caches, tracked_persist
+from weatherflow_spark.operators.caching import release_caches
 from weatherflow_spark.plans import QUERIES
 from tests.conftest import REPO_DIR, SF_SMALL
 
@@ -51,62 +51,24 @@ def test_release_caches_leaves_no_blocks(spark, name):
     )
 
 
-def test_semantically_equal_builds_materialise_once(spark):
-    """Two independent builds of one plan (the stats cov/PCA branches,
-    the quality digest in fingerprint + report) share a checkpoint.
-    Plan equality erases alias names, so builds that differ only in
-    their output names (two aliases swapped) share one too, and each
-    gets it back under its own names."""
+# Checkpoints one run may take: a relation several branches read is
+# built once by its suite and passed on, so each count is at most the
+# number of distinct relations the query materialises.
+CHECKPOINT_BUDGETS = {
+    "q_ann_suite": 15,
+    "q_text_mining_suite": 17,
+    "q_lakehouse_suite": 1,
+    "q_stats_suite": 1,
+    "q_bpe_encode": 5,
+}
+
+
+@pytest.mark.parametrize("name", CHECKPOINT_BUDGETS)
+def test_checkpoint_budget(spark, name):
     release_caches()
-
-    def build():
-        return (
-            spark.range(200)
-            .withColumn("g", F.col("id") % 7)
-            .groupBy("g")
-            .agg(F.sum("id").alias("s"))
-        )
-
-    x = spark.range(5).select(
-        F.col("id").alias("a"), (F.col("id") * 10).alias("b")
-    )
-    try:
-        a = tracked_persist(build())
-        b = tracked_persist(build())
-        assert b is a
-        assert _n_persistent(spark) == 1
-        c = tracked_persist(build().where("g > 2"))
-        assert c is not a
-        assert _n_persistent(spark) == 2
-        assert sorted(b.collect()) == sorted(build().collect())
-
-        pq = tracked_persist(x.select(F.col("a").alias("p"), F.col("b").alias("q")))
-        qp = tracked_persist(x.select(F.col("a").alias("q"), F.col("b").alias("p")))
-        assert _n_persistent(spark) == 3
-        assert pq.columns == ["p", "q"] and qp.columns == ["q", "p"]
-        want = [(i, 10 * i) for i in range(5)]
-        assert sorted(map(tuple, pq.collect())) == want  # p = a, q = b
-        assert sorted(map(tuple, qp.collect())) == want  # q = a, p = b
-    finally:
-        assert release_caches() == 3
-    assert _n_persistent(spark) == 0
-
-
-def test_build_over_rewritten_path_is_not_shared(spark, tmp_path):
-    """A path rewritten between two builds of one plan holds new
-    files, so the second build materialises the new contents instead
-    of getting the first build's checkpoint back."""
-    release_caches()
-    path = str(tmp_path / "t")
-    spark.range(3).write.parquet(path)
-    try:
-        first = tracked_persist(spark.read.parquet(path).groupBy().sum("id"))
-        spark.range(10).write.mode("overwrite").parquet(path)
-        second = tracked_persist(spark.read.parquet(path).groupBy().sum("id"))
-        assert _n_persistent(spark) == 2
-        assert first.collect()[0][0] == 3 and second.collect()[0][0] == 45
-    finally:
-        release_caches()
+    QUERIES[name](spark, SF_SMALL).collect()
+    n, budget = release_caches(), CHECKPOINT_BUDGETS[name]
+    assert 1 <= n <= budget, f"{name} took {n} checkpoints (budget {budget})"
 
 
 def test_repeated_upserts_leave_no_pinned_blocks(spark, tmp_path):

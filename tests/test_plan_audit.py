@@ -430,14 +430,13 @@ def test_unigram_lm_one_token_exchange_narrow_scoring(spark):
 
 
 def test_bpe_encode_one_corpus_exchange_per_round_pair_aggs(spark):
-    """E43 BPE encode: the word-frequency exchange appears twice in
-    the PLAN (training's aggregation + the type table the encoder
-    folds over) but the lineages are identical, so the persisted
-    training relation serves both at runtime — and the pair-count
-    exchanges stay at exactly BPE_MERGES because per-round argmax
-    rows are persisted (no round's aggregation re-executes per
-    downstream reference). The document pass itself is narrow
-    (broadcast vocab map, per-token lookup, no keyed join)."""
+    """E43 BPE encode: the word-frequency table is aggregated ONCE —
+    the encoder folds over training's own checkpointed table, so the
+    corpus pass is not repeated — and the pair-count exchanges stay at
+    exactly BPE_MERGES because per-round argmax rows are persisted (no
+    round's aggregation re-executes per downstream reference). The
+    document pass itself is narrow (broadcast vocab map, per-token
+    lookup, no keyed join)."""
     from weatherflow_spark.plans.ext_mining import BPE_MERGES
 
     p = _plan(QUERIES["q_bpe_encode"](spark, SF_SMALL))
@@ -446,17 +445,17 @@ def test_bpe_encode_one_corpus_exchange_per_round_pair_aggs(spark):
     ]
     word_ex = [b for b in hash_ex if "hashpartitioning(word" in b]
     pair_ex = [b for b in hash_ex if "hashpartitioning(x#" in b]
-    # r14: each word-type lineage is agg exchange + the explicit
+    # The word-type table is one agg exchange + the explicit
     # REPARTITION_BY_NUM spread that keeps the per-type symbol folds
     # off a single AQE-coalesced partition (_bpe_word_types). The
     # spread MUST survive optimization — a dropped spread silently
-    # single-cores the fold again — and the agg count stays ≤2.
+    # single-cores the fold again.
     word_spread = [b for b in word_ex if "REPARTITION_BY_NUM" in b]
     word_agg = [b for b in word_ex if "REPARTITION_BY_NUM" not in b]
-    assert 1 <= len(word_spread) <= 2, (
+    assert len(word_spread) == 1, (
         f"word-type spread repartition missing or multiplied:\n{p}"
     )
-    assert len(word_agg) <= 2, f"expected at most two word agg exchanges:\n{p}"
+    assert len(word_agg) == 1, f"expected one word agg exchange:\n{p}"
     assert len(pair_ex) == BPE_MERGES, (
         f"expected {BPE_MERGES} pair exchanges, got {len(pair_ex)}:\n{p}"
     )
@@ -722,29 +721,23 @@ def test_bigram_lm_scoring_is_broadcast_zero_join_on_docs(spark):
 
 
 def test_digest_subtree_shared_between_fingerprint_and_report(spark):
-    """E71 (verdict r7 #1): a cycle that runs both the standalone
-    digest and the full quality report must materialize the char-fold
-    digest ONCE — the report's build gets the fingerprint's checkpoint
-    back from tracked_persist (same plan, one materialisation) and
-    reads it as one 3-row Scan ExistingRDD instead of planning the
-    digest's own parquet scans."""
+    """E71: the full quality report materialises the char-fold digest
+    once, through q_table_fingerprint's checkpoint, and reads it as one
+    3-row Scan ExistingRDD instead of planning the digest's own parquet
+    scans."""
     from weatherflow_spark.operators.caching import (
         materialised_plans,
         release_caches,
     )
-    from weatherflow_spark.plans.quality import (
-        q_data_quality_report,
-        q_table_fingerprint,
-    )
+    from weatherflow_spark.plans.quality import q_data_quality_report
 
     try:
-        q_table_fingerprint(spark, SF_SMALL).count()
         live = _explain(q_data_quality_report(spark, SF_SMALL))
         folds = [m for m in materialised_plans() if "bit_xor" in m]
         assert len(folds) == 1, f"digest materialized {len(folds)} times"
         assert len(_detail_headers(live, "Scan ExistingRDD")) == 1, live
         assert "bit_xor" not in live, (
-            f"digest re-planned outside the shared checkpoint:\n{live}"
+            f"digest planned outside its checkpoint:\n{live}"
         )
     finally:
         release_caches()

@@ -3,7 +3,7 @@
 
 from __future__ import annotations
 
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, group_jobs
 
 
 def _plan(df) -> str:
@@ -119,22 +119,13 @@ def test_first_last_single_window_node(spark):
 
 
 def test_quality_gate_budget_pinned(spark):
-    """r9 (VERDICT r8 'Next round' #8): the scheduler gate
-    (q_quality_gate, sections=GATE_SECTIONS) must stay the CHEAP
-    invariant pass a scheduler polls before every load. r13: the pin
-    is a RATIO against the full report measured in the SAME session —
-    min-of-3 gate < half the min-of-3 full report — because the old
-    absolute 1.0 s wall pin tracked the box's ambient load, not the
-    gate (it blew at ~1.5 s on sessions whose bench controls measured
-    1.5x ambient while the warm-bench gate cost was 0.76 s, and the
-    UNCHANGED r12 code failed it identically). The ratio is
-    ambient-immune — both sides inflate together — and it IS the
-    documented claim: the gate tier must be materially cheaper than
-    the full report (bench r13: 0.76 s vs 3.76 s, ratio 0.20; the
-    absolute trend stays visible in bench_last.json). min-of-N
-    because this sandbox's rep-to-rep noise is one-sided."""
-    import time
-
+    """The scheduler gate (q_quality_gate, sections=GATE_SECTIONS) must
+    stay the CHEAP invariant pass a scheduler polls before every load:
+    at sf0.1 it runs fewer than half the Spark jobs of the full report,
+    which adds the digest folds and the skew windows. A job count is
+    the cost the gate's sections decide, and unlike wall time it does
+    not move with the box's load (measured: gate 16 jobs, report 36)."""
+    from weatherflow_spark.operators.caching import release_caches
     from weatherflow_spark.plans.quality import (
         q_data_quality_report,
         q_quality_gate,
@@ -142,20 +133,17 @@ def test_quality_gate_budget_pinned(spark):
 
     sf01 = "/root/testdata/sf0.1"
 
-    def min_of_3(fn):
-        # One untimed warm-up rep — bench.py's own methodology: JVM /
-        # codegen / first-file-listing warm-up is not the query's
-        # cost (r12.2).
-        fn(spark, sf01).write.format("noop").mode("overwrite").save()
-        times = []
-        for _ in range(3):
-            t0 = time.perf_counter()
+    def jobs(fn) -> int:
+        def run():
             fn(spark, sf01).write.format("noop").mode("overwrite").save()
-            times.append(time.perf_counter() - t0)
-        return min(times)
 
-    gate, report = min_of_3(q_quality_gate), min_of_3(q_data_quality_report)
+        try:
+            return group_jobs(spark, f"quality-{fn.__name__}", run)
+        finally:
+            release_caches()
+
+    gate, report = jobs(q_quality_gate), jobs(q_data_quality_report)
     assert gate < report / 2, (
-        f"gate budget blown: gate {gate:.2f}s vs full report "
-        f"{report:.2f}s (must be < half)"
+        f"gate budget blown: gate {gate} jobs vs full report "
+        f"{report} jobs (must be < half)"
     )

@@ -17,16 +17,9 @@ that holds its blocks dies, every action that reads the relation fails
 and the query must be re-run from its builder; a ``persist`` would have
 recomputed the lost partitions from lineage.
 
-Builders that pass semantically equal plans (``semanticHash`` +
-``sameSemantics``) over the same input files share one
-materialisation: the stats covariance and PCA branches read one
-triangle matrix, BPE encode reads training's word table, and a verify
-cycle folds the quality digest once for the fingerprint and the
-report. Plan equality ignores output names, so a shared checkpoint is
-handed back under the asking build's column names. File sources
-compare by root path, so the input-file check is what keeps a build
-over a path the query has rewritten (every Spark write names its
-files afresh) from getting the old contents back.
+Every call materialises: a relation two consumers read is built once
+by their caller and passed to both (a suite hands its branches the
+shared kNN graph, BM25 table or BPE word table).
 
 A query builder returns a LAZY frame that still reads its checkpoints,
 so it cannot release them itself. Callers in long-lived sessions call
@@ -50,42 +43,20 @@ from pyspark.sql import DataFrame
 _LOCK = threading.Lock()
 # every tracked checkpoint, until the next release
 _CHECKPOINTS: list[DataFrame] = []
-# semanticHash -> [(source frame, its checkpoint)]
-_MEMO: dict[int, list[tuple[DataFrame, DataFrame]]] = {}
-# one lock per semanticHash, so concurrent builders of equal plans
-# (overlapped suite branches) wait for one materialisation
-_KEY_LOCKS: dict[int, threading.Lock] = {}
 # an unexecuted copy of every materialised source, for plan audits
 _SOURCES: list[DataFrame] = []
 
 
 def tracked_persist(df: DataFrame) -> DataFrame:
-    """Materialise ``df`` now and return the lineage-cut frame; an
-    earlier call with a semantically equal plan over the same input
-    files returns its checkpoint, under ``df``'s column names."""
-    key = df.semanticHash()
+    """Materialise ``df`` now and return the lineage-cut frame."""
+    # The checkpoint executes df's own QueryExecution, after which it
+    # explains as the final AQE plan next to the initial one; the copy
+    # keeps the plan as a fresh build would print it.
+    audit_copy = df.select("*")
+    checkpoint = df.localCheckpoint(eager=True)
     with _LOCK:
-        key_lock = _KEY_LOCKS.setdefault(key, threading.Lock())
-    with key_lock:
-        for source, checkpoint in _MEMO.get(key, ()):
-            if source.sameSemantics(df) and sorted(source.inputFiles()) == sorted(
-                df.inputFiles()
-            ):
-                # Equal canonical plans match column for column, so a
-                # positional rename restores names that differed only
-                # in their aliases.
-                if checkpoint.columns == df.columns:
-                    return checkpoint
-                return checkpoint.toDF(*df.columns)
-        # The checkpoint executes df's own QueryExecution, after which
-        # it explains as the final AQE plan next to the initial one;
-        # the copy keeps the plan as a fresh build would print it.
-        audit_copy = df.select("*")
-        checkpoint = df.localCheckpoint(eager=True)
-        with _LOCK:
-            _CHECKPOINTS.append(checkpoint)
-            _MEMO.setdefault(key, []).append((df, checkpoint))
-            _SOURCES.append(audit_copy)
+        _CHECKPOINTS.append(checkpoint)
+        _SOURCES.append(audit_copy)
     return checkpoint
 
 
@@ -100,8 +71,6 @@ def release_caches() -> int:
     with _LOCK:
         checkpoints = list(_CHECKPOINTS)
         _CHECKPOINTS.clear()
-        _MEMO.clear()
-        _KEY_LOCKS.clear()
         _SOURCES.clear()
     for cp in checkpoints:
         release_checkpoint(cp)

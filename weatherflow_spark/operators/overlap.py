@@ -24,8 +24,8 @@ Safety preconditions (hold for every converted suite):
   grep-audited);
 - per-dataset commit locks are path-keyed, so concurrent branches
   never contend on a lock;
-- ``tracked_persist``'s registry is lock-guarded, and concurrent
-  builders of one plan share a single materialisation.
+- ``tracked_persist``'s registry is lock-guarded; a relation two
+  branches read is built once by the suite and passed to both.
 
 Worker count: a constant 4 — deliberately small. The point is
 back-fill, not saturation: branch jobs are short and
@@ -85,8 +85,7 @@ def overlap_materialize(thunks: Sequence[Callable[[], T]]) -> list[T]:
     row set and oracle hash are unchanged: branch outputs are the
     certification digests themselves (top-k rows, merge tables,
     grouped tallies — KBs), released by the caller through
-    ``release_caches``. A branch whose plan equals an earlier
-    tracked relation shares its materialisation.
+    ``release_caches``.
     """
     from weatherflow_spark.operators.caching import tracked_persist
 

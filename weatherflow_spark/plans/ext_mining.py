@@ -121,9 +121,8 @@ def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         score = piece if score is None else score + piece
     from weatherflow_spark.operators.caching import tracked_persist
 
-    # Persisted: the 25-row result is replayed by the hybrid fusion
-    # AND the rerank's internal hybrid AND the suite's own bm branch —
-    # caching the tiny output saves two full corpus-scoring replays.
+    # Persisted: the 25-row result is read by the hybrid fusion, the
+    # retrieval evaluation and the suite's own bm branch.
     return tracked_persist(
         per_doc.select(
             "doc_id",
@@ -240,10 +239,12 @@ def q_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the eval cost is the ground-truth census (one narrow
     token scan with the tokenization let-bound once per row); the
     per-ranking arithmetic is constant-size."""
-    from pyspark.sql import Window
+    return _retrieval_eval(spark, sf_dir, q_tfidf_topk(spark, sf_dir))
 
+
+def _retrieval_eval(spark: SparkSession, sf_dir: str, bm: DataFrame) -> DataFrame:
+    """q_retrieval_eval over an already built q_tfidf_topk."""
     n_terms = len(QUERY_TERMS)
-    bm = q_tfidf_topk(spark, sf_dir)
     ranked = bm.withColumn(
         "rank",
         F.row_number().over(
@@ -472,7 +473,10 @@ def q_text_mining_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-op twins stay registered in the tail."""
     from weatherflow_spark.operators.overlap import overlap_materialize
 
-    bm = q_tfidf_topk(spark, sf_dir).selectExpr(
+    # The BM25 table is built once and read by the bm, hybrid and
+    # retrieval-eval branches.
+    bm_topk = q_tfidf_topk(spark, sf_dir)
+    bm = bm_topk.selectExpr(
         "'bm25' AS op",
         "cast(doc_id as string) AS key",
         "stack(2, 'score_e6', score_e6, "
@@ -484,7 +488,10 @@ def q_text_mining_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stack(4, 'pmi_e9', pmi_e9, 'c_xy', c_xy, "
         "'c_x', c_x, 'c_y', c_y) AS (metric, value)",
     )
-    bpe = q_bpe_train(spark, sf_dir).selectExpr(
+    # BPE: one word table, trained once; encode reads both.
+    bpe_words = _bpe_word_types(spark, sf_dir)
+    bpe_merges = _bpe_train(bpe_words)
+    bpe = bpe_merges.selectExpr(
         "'bpe' AS op",
         "concat(cast(merge_round as string), ':', left_sym, '>', right_sym) AS key",
         "stack(1, 'pair_count', pair_count) AS (metric, value)",
@@ -492,7 +499,7 @@ def q_text_mining_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # E43 encode branch: the full segmented text collapses to the
     # cross-engine rolling char-fold hash so the LONG value stays a
     # bigint while still pinning every piece boundary.
-    enc = q_bpe_encode(spark, sf_dir).selectExpr(
+    enc = _bpe_encode(spark, sf_dir, bpe_words, bpe_merges).selectExpr(
         "'bpe_encode' AS op",
         "cast(doc_id as string) AS key",
         "stack(2, 'n_pieces', n_pieces, "
@@ -509,10 +516,8 @@ def q_text_mining_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # E52: the fused retrieval ranks — NULL ranks (one-list docs)
     # surface as -1 so the LONG value stays non-null bigint. Built
-    # ONCE and shared with the rerank branch below (the persisted
-    # fused shortlist previously planned twice — suite cost ~11.4 s
-    # vs ~7.5 s for its singles, VERDICT r6 What's wrong #3).
-    hyb_df = q_hybrid_retrieval(spark, sf_dir)
+    # once and passed to the rerank and hard-negative branches below.
+    hyb_df = _hybrid_retrieval(spark, sf_dir, bm_topk)
     hyb = hyb_df.selectExpr(
         "'hybrid' AS op",
         "cast(doc_id as string) AS key",
@@ -537,22 +542,19 @@ def q_text_mining_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "'lex_rank', lex_rank, 'vec_rank', vec_rank, "
         "'neg_rank', neg_rank) AS (metric, value)",
     )
-    # E84 (r8): the metrics layer over the same persisted BM25 ranking
+    # E84: the metrics layer over the same BM25 ranking
     # — one LONG row per (cutoff, metric), the hash pins every score.
-    ev = q_retrieval_eval(spark, sf_dir).selectExpr(
+    ev = _retrieval_eval(spark, sf_dir, bm_topk).selectExpr(
         "'retrieval_eval' AS op",
         "cast(k as string) AS key",
         "stack(5, 'n_rel', n_rel, 'n_hits', n_hits, 'mrr_e6', mrr_e6, "
         "'ndcg_e6', ndcg_e6, 'precision_e6', precision_e6) "
         "AS (metric, value)",
     )
-    # r14: materialize the nine branches concurrently (guide §2.6 —
-    # persist + count in a bounded pool). Every fixture branches share
-    # (the persisted BM25 table, the BPE word/argmax tables, the fused
-    # shortlist hyb_df) is tracked-persisted, so concurrent branches
-    # compute it once through the cache; the union action then reads
-    # nine small branch caches instead of walking one nine-leg
-    # mega-plan serially. Union order and oracle hash unchanged.
+    # Materialise the nine branches concurrently in a bounded pool, so
+    # the union action reads nine small branch checkpoints instead of
+    # walking one nine-leg plan serially. Union order and oracle hash
+    # unchanged.
     bm, pm, bpe, enc, fh, hyb, rr, hn, ev = overlap_materialize(
         [lambda d=d: d for d in (bm, pm, bpe, enc, fh, hyb, rr, hn, ev)]
     )
@@ -821,42 +823,30 @@ def _oracle_text_profile_suite() -> str:
 BPE_MERGES = 4
 
 
-def _bpe_word_types(spark: SparkSession, docs: DataFrame) -> DataFrame:
-    """The corpus collapsed to its word-type frequency table — the ONE
-    relation both BPE halves iterate on. Both halves pass it to
-    ``tracked_persist``, so encode gets training's checkpoint back (one
-    materialisation, no second corpus pass); keep every change here
-    mirrored in both callers' expectations.
+def _bpe_word_types(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus collapsed to its word-type frequency table, checkpointed
+    — the ONE relation both BPE halves iterate on: encode takes
+    training's table, so the corpus is aggregated once.
 
-    The trailing hash repartition is a performance property, not a
-    semantic one (r14, guide §2.5/§1 'AQE byte-coalescing single-tasks
-    CPU-bound kB-scale shuffles'): the aggregated type table is only
-    KBs, so AQE coalesces the post-agg exchange to ONE partition — and
-    every downstream BPE round then runs its interpreted
-    per-type symbol folds (the expensive part of both train and
-    encode) on a single core. REPARTITION_BY_NUM is immune to AQE
-    coalescing; 2×defaultParallelism keeps the spread scale-adaptive
-    (core count locally, executor total on a cluster). The factor of
-    two is load-bearing, not tuning: a repartition whose (keys, n)
-    equal the upstream agg exchange's is dropped by the optimizer as
-    redundant (verified in the formatted plan — 0 REPARTITION_BY_NUM
-    markers at n=defaultParallelism when shuffle.partitions matches),
-    and AQE then coalesces the agg exchange to one partition anyway;
-    at 2× the node survives and pins the spread (1 marker, measured
-    coalesce-off min 4.5 s vs coalesced 9.8 s same-session). The +1
-    guard (r15 ADVICE): the agg exchange's partition count is
-    ``spark.sql.shuffle.partitions``, not defaultParallelism — on a
-    session where 2×dp happens to EQUAL shuffle.partitions (e.g.
-    dp=100 under Spark's default 200) the same-(keys, n) redundancy
-    elision would silently drop the spread again; bumping off the
-    collision keeps the node alive in every config."""
+    The trailing hash repartition is a performance property: the type
+    table is only KBs, so AQE would coalesce the post-agg exchange to
+    ONE partition and every BPE round would run its per-type symbol
+    folds on a single core. REPARTITION_BY_NUM is immune to AQE
+    coalescing. The count must differ from the agg exchange's
+    (``spark.sql.shuffle.partitions``): the optimizer drops a
+    repartition whose (keys, n) equal its input's as redundant, so the
+    spread is 2×defaultParallelism, bumped by one on a collision
+    (measured min 4.5 s spread vs 9.8 s coalesced at sf0.1)."""
     n_spread = 2 * spark.sparkContext.defaultParallelism
     try:
         if n_spread == int(spark.conf.get("spark.sql.shuffle.partitions")):
             n_spread += 1
     except (TypeError, ValueError):
         pass  # "auto"/unset: no equal-(keys, n) exchange to collide with
-    return (
+    from weatherflow_spark.operators.caching import tracked_persist
+
+    docs = load_table(spark, sf_dir, "documents")
+    return tracked_persist(
         docs.select(F.explode(T.tokens("text")).alias("word"))
         .where(F.col("word") != "")
         .groupBy("word")
@@ -900,10 +890,13 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fully hash-checked: counts are exact integers, ties lexicographic,
     merges replayed by the DuckDB oracle as unrolled CTEs (the
     PageRank precedent)."""
+    return _bpe_train(_bpe_word_types(spark, sf_dir))
+
+
+def _bpe_train(words: DataFrame) -> DataFrame:
+    """q_bpe_train over an already built ``_bpe_word_types`` table."""
     from weatherflow_spark.operators.caching import tracked_persist
 
-    docs = load_table(spark, sf_dir, "documents")
-    words = tracked_persist(_bpe_word_types(spark, docs))
     cur = words.select(
         "word", "freq", F.expr("regexp_extract_all(word, '.', 0)").alias("syms")
     )
@@ -1061,8 +1054,7 @@ def q_bpe_encode(
     The fold runs over word TYPES, not token instances — the same
     corpus-collapses-to-the-type-table move training itself makes:
     the trained rules (one broadcast row, sorted by round) encode the
-    word-frequency table once (its plan is identical to training's
-    checkpointed aggregation, so that checkpoint is reused — no
+    word-frequency table once (training's own checkpointed table — no
     second corpus pass), and the per-type segmentations collapse to
     ONE broadcast map. The document pass is then a pure narrow map
     lookup per token (measured 8 s → sub-second at sf0.1 vs folding
@@ -1077,7 +1069,19 @@ def q_bpe_encode(
     Output per doc: word/piece counts and the segmented text
     (pieces '|'-joined within a word, words ' '-joined) — the full
     segmentation is what the hash certifies."""
-    merges = q_bpe_train(spark, sf_dir)
+    types = _bpe_word_types(spark, sf_dir)
+    return _bpe_encode(spark, sf_dir, types, _bpe_train(types), join_threshold)
+
+
+def _bpe_encode(
+    spark: SparkSession,
+    sf_dir: str,
+    types: DataFrame,
+    merges: DataFrame,
+    join_threshold: int = BPE_JOIN_DOC_THRESHOLD,
+) -> DataFrame:
+    """q_bpe_encode over an already built word table and the merges
+    trained on it."""
     model = merges.agg(
         F.expr(
             "transform(array_sort(collect_list(struct(merge_round, "
@@ -1086,11 +1090,6 @@ def q_bpe_encode(
         ).alias("mlist")
     )
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # Same plan as q_bpe_train's word table → its checkpoint
-    # (including the spread repartition — see _bpe_word_types).
-    from weatherflow_spark.operators.caching import tracked_persist
-
-    types = tracked_persist(_bpe_word_types(spark, docs))
     enc_word = (
         "aggregate(mlist, regexp_extract_all(word, '.', 0), (cursyms, m) -> "
         "aggregate(cursyms, cast(array() as array<string>), (acc, s) -> "
@@ -1206,9 +1205,13 @@ def q_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction, never data-scale. The fused rank orders by the
     e9-ROUNDED RRF score (bigint) with a doc_id tie-break, so rank
     boundaries cannot sit on a cross-engine double ulp."""
+    return _hybrid_retrieval(spark, sf_dir, q_tfidf_topk(spark, sf_dir))
+
+
+def _hybrid_retrieval(spark: SparkSession, sf_dir: str, lex: DataFrame) -> DataFrame:
+    """q_hybrid_retrieval over an already built q_tfidf_topk."""
     from weatherflow_spark.plans.ext_similarity import q_similarity_topk
 
-    lex = q_tfidf_topk(spark, sf_dir)
     wl = Window.orderBy(F.desc("score_e6"), F.asc("doc_id"))
     lexr = lex.select(
         "doc_id", F.row_number().over(wl).cast("long").alias("lex_rank")

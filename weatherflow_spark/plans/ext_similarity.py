@@ -689,8 +689,8 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cast(0.0 as double), (acc, v) -> acc + v)"
     )
     w = Window.partitionBy("src_id").orderBy(F.desc("cosine"), F.asc("nb_id"))
-    # Persisted: N·k edge rows, replayed by the classifier vote layer
-    # and the ANN suite's knn + knn_vote branches.
+    # Persisted: N·k edge rows, read by the classifier vote layer, the
+    # margin miner and the ANN suite's knn branch.
     return tracked_persist(
         shortlist.join(
             hashed.select(
@@ -812,7 +812,11 @@ def q_margin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum would be summation-order-dependent), and the margin is a
     single double expression over exact integers, spelled with the
     same text in the DuckDB oracle."""
-    knn = q_knn_graph(spark, sf_dir)
+    return _margin_pairs(q_knn_graph(spark, sf_dir))
+
+
+def _margin_pairs(knn: DataFrame) -> DataFrame:
+    """q_margin_pairs over an already built q_knn_graph."""
     cross = knn.where(
         (F.col("src_id") % 2) != (F.col("nb_id") % 2)
     ).select(
@@ -906,7 +910,12 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     each method's id list against the exact list and count. All
     integer except the final e6-scaled ratio (exact division of two
     small ints, floor-rounded)."""
-    exact = q_similarity_topk(spark, sf_dir).select("vec_id")
+    return _ann_recall(spark, sf_dir, q_similarity_topk(spark, sf_dir))
+
+
+def _ann_recall(spark: SparkSession, sf_dir: str, exact_topk: DataFrame) -> DataFrame:
+    """q_ann_recall against an already built q_similarity_topk."""
+    exact = exact_topk.select("vec_id")
     rows = []
     for method, q in (
         ("ivf", q_ann_ivf_topk),
@@ -973,7 +982,12 @@ def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     (src, label) count, one per-src argmax window, one broadcast join
     back to the true labels. Emits per-vector rows so the hash pins
     every single prediction, not just the aggregate accuracy."""
-    edges = q_knn_graph(spark, sf_dir).select("src_id", "nb_label")
+    return _knn_classify(spark, sf_dir, q_knn_graph(spark, sf_dir))
+
+
+def _knn_classify(spark: SparkSession, sf_dir: str, knn: DataFrame) -> DataFrame:
+    """q_knn_classify over an already built q_knn_graph."""
+    edges = knn.select("src_id", "nb_label")
     votes = edges.groupBy("src_id", "nb_label").agg(
         F.count(F.lit(1)).alias("n_votes")
     )
@@ -1373,7 +1387,11 @@ def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     window); the union is plan-level only — no cross-branch shuffle.
     Single-method twins stay registered in the tail."""
     qid = F.lit(QUERY_VEC_ID).cast("long").alias("q_id")
-    brute = q_similarity_topk(spark, sf_dir).select(
+    # Built once and read by several branches: the exact top-k (brute,
+    # recall) and the kNN graph (knn, vote, margin).
+    exact = q_similarity_topk(spark, sf_dir)
+    graph = q_knn_graph(spark, sf_dir)
+    brute = exact.select(
         F.lit("brute").alias("method"), qid, "vec_id", "label", "cosine"
     )
     ivf = q_ann_ivf_topk(spark, sf_dir).select(
@@ -1386,7 +1404,7 @@ def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("batch").alias("method"), "q_id", "vec_id", "label", "cosine"
     )
     # E44: the all-vectors k-NN graph — every vector is a query.
-    knn = q_knn_graph(spark, sf_dir).select(
+    knn = graph.select(
         F.lit("knn").alias("method"),
         F.col("src_id").alias("q_id"),
         F.col("nb_id").alias("vec_id"),
@@ -1397,7 +1415,7 @@ def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shape — vec_id carries the PREDICTED label, label the true one,
     # cosine the 0/1 correctness flag (documented column reuse; the
     # hash pins every per-vector prediction).
-    vote = q_knn_classify(spark, sf_dir).select(
+    vote = _knn_classify(spark, sf_dir, graph).select(
         F.lit("knn_vote").alias("method"),
         F.col("src_id").alias("q_id"),
         F.col("pred_label").cast("long").alias("vec_id"),
@@ -1407,7 +1425,7 @@ def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # E57: index-quality self-eval projected onto the suite shape —
     # q_id carries k, vec_id the hit count, cosine the e6-scaled
     # recall (documented column reuse; 2 rows, hash pins both).
-    recall = q_ann_recall(spark, sf_dir).select(
+    recall = _ann_recall(spark, sf_dir, exact).select(
         F.concat(F.lit("recall_"), F.col("method")).alias("method"),
         F.col("k").cast("long").alias("q_id"),
         F.col("n_hits").cast("long").alias("vec_id"),
@@ -1435,7 +1453,7 @@ def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("int").alias("label"),
         F.col("err_e6").cast("double").alias("cosine"),
     )
-    # E79 (r8): batch-vs-corpus admission verdicts projected onto the
+    # E79: batch-vs-corpus admission verdicts projected onto the
     # suite shape — q_id the batch vector, vec_id its best corpus
     # match (-1 when none), label the dup flag, cosine the e6 best
     # cosine (documented column reuse; hash pins every verdict).
@@ -1446,21 +1464,18 @@ def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("verdict") == "dup").cast("int").alias("label"),
         F.col("best_cos_e6").cast("double").alias("cosine"),
     )
-    # E83 (r8): mutual-kNN margin pairs on the same persisted graph —
+    # E83: mutual-kNN margin pairs on the same kNN graph —
     # q_id/vec_id the pair, cosine the e6 margin (documented column
     # reuse; the hash pins every mined pair and its score).
-    margin = q_margin_pairs(spark, sf_dir).select(
+    margin = _margin_pairs(graph).select(
         F.lit("margin").alias("method"),
         F.col("a_id").alias("q_id"),
         F.col("b_id").alias("vec_id"),
         F.lit(None).cast("int").alias("label"),
         F.col("margin_e6").cast("double").alias("cosine"),
     )
-    # r14: materialize the eleven branches concurrently (guide §2.6 —
-    # persist + count in a bounded pool); the fixtures branches share
-    # (the persisted kNN graph, the corpus-side persisted relations)
-    # are tracked-persisted so they compute once through the cache.
-    # Union order and oracle hash unchanged.
+    # Materialise the eleven branches concurrently in a bounded pool;
+    # union order and oracle hash unchanged.
     from weatherflow_spark.operators.overlap import overlap_materialize
 
     (brute, ivf, lsh, batch, knn, vote, recall, srp, pq, admit,

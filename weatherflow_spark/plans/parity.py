@@ -124,6 +124,5 @@ def check_query(spark: SparkSession, name: str, sf_dir: str) -> ParityReport:
         return compare_frames(name, spark_pdf, oracle_pdf)
     finally:
         # Long-lived sessions (the parity pytest run) would otherwise
-        # accumulate every query's checkpoints, and later builds of an
-        # equal plan would get them back instead of planning their own.
+        # accumulate every query's checkpoints.
         release_caches()

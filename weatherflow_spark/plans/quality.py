@@ -52,10 +52,8 @@ def q_data_quality_report(
     registered window query runs the FULL report (same rows, same
     hash); a scheduler gate calls ``sections=GATE_SECTIONS`` and
     pays only the invariant tier. The digest subtree is checkpointed
-    by ``q_table_fingerprint`` itself through ``tracked_persist``, so
-    a cycle that runs both the report and the standalone digest
-    materializes it once (whichever builds second gets the 3-row
-    checkpoint back — audited in tests/test_plan_audit.py)."""
+    by ``q_table_fingerprint``, so the report reads it as a 3-row
+    scan."""
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     lineitem = load_table(spark, sf_dir, "lineitem")
@@ -313,12 +311,8 @@ def q_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id, user_id, event_type, "
         "cast(floor(value * 100 + 0.5) as bigint)",
     )
-    # Checkpoint the 3-row digest: a verify/gate cycle runs BOTH the
-    # standalone digest and the full quality report, and the char
-    # fold is the expensive subtree in each — tracked_persist hands
-    # whichever builds second the first one's checkpoint instead of
-    # re-folding every table (bench releases caches between reps, so
-    # timings stay honest).
+    # Checkpoint the 3-row digest, so the quality report's plan reads
+    # three rows instead of carrying the char folds.
     from weatherflow_spark.operators.caching import tracked_persist
 
     return tracked_persist(o.unionByName(c).unionByName(e))
@@ -546,9 +540,10 @@ def q_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the ``sections=GATE_SECTIONS`` form a scheduler blocks a
     load on — row counts, pk dupes, fk orphans, bounds, null tallies;
     no digests, no skew diagnostics. Registered so the gate has its
-    own BENCH row and a pytest timing guard pins its budget (< 1 s
-    min-of-3 at sf0.1, tests/test_plans.py) — a scheduler that polls
-    this before every load needs a cost contract, not a vibe."""
+    own BENCH row and a pytest guard pins its budget (fewer than half
+    the full report's Spark jobs at sf0.1, tests/test_plans.py) — a
+    scheduler that polls this before every load needs a cost
+    contract, not a vibe."""
     return q_data_quality_report(spark, sf_dir, sections=GATE_SECTIONS)
 
 

@@ -687,8 +687,19 @@ def _build_versioned_orders(
     return path
 
 
+def _diff_feed(spark: SparkSession, path: str) -> DataFrame:
+    """The v1 → v2 change feed of a :func:`_build_versioned_orders`
+    table, checkpointed: every reader consumes it more than once."""
+    from weatherflow_spark.operators.snaplog import diff_versions
+
+    return tracked_persist(diff_versions(spark, path, 1, 2, ["o_orderkey"]))
+
+
 def q_version_diff(
-    spark: SparkSession, sf_dir: str, _table: str | None = None
+    spark: SparkSession,
+    sf_dir: str,
+    _table: str | None = None,
+    _feed: DataFrame | None = None,
 ) -> DataFrame:
     """E91 driver row: the snaplog version-diff certified as an
     OPERATIONAL CDC feed through real writes. Build a versioned
@@ -712,13 +723,11 @@ def q_version_diff(
     (dags/utils/database.py:25-34); with the retention mirror it
     falls out of two exchanges over any two retained versions.
 
-    ``_table``: suite-internal hook — a prebuilt fixture path from
-    :func:`_build_versioned_orders` (the suite builds one fixture for
-    the E91 and E92 branches); the registered single builds its own."""
-    from weatherflow_spark.operators.snaplog import (
-        diff_versions,
-        read_version,
-    )
+    ``_table`` / ``_feed``: suite-internal hooks — a prebuilt fixture
+    path from :func:`_build_versioned_orders` and its
+    :func:`_diff_feed` (the suite builds one of each for the E91 and
+    E92 branches); the registered single builds its own."""
+    from weatherflow_spark.operators.snaplog import read_version
     from weatherflow_spark.operators.upsert import apply_changes
 
     path = _table or _build_versioned_orders(spark, sf_dir, "vdiff_tbl")
@@ -730,8 +739,7 @@ def q_version_diff(
         except OSError:
             pass
 
-    feed = diff_versions(spark, path, 1, 2, ["o_orderkey"])
-    feed = tracked_persist(feed)  # consumed 3x below
+    feed = _diff_feed(spark, path) if _feed is None else _feed
 
     # round-trip: v1 copy + derived feed must reconstruct v2
     read_version(spark, path, 1).write.mode("overwrite").partitionBy(
@@ -790,7 +798,10 @@ ORACLE_VERSION_DIFF = f"""
 
 
 def q_ivm_rollup(
-    spark: SparkSession, sf_dir: str, _table: str | None = None
+    spark: SparkSession,
+    sf_dir: str,
+    _table: str | None = None,
+    _feed: DataFrame | None = None,
 ) -> DataFrame:
     """E92 driver row: incremental view maintenance — a per-priority
     aggregate kept current from the E91 change feed, the FACTS NEVER
@@ -812,10 +823,7 @@ def q_ivm_rollup(
     cost tracks the change feed, never the fact table (the reference
     re-reads its tables wholesale per load, dags/etl.py)."""
     from weatherflow_spark.operators.ivm import delta_update_agg
-    from weatherflow_spark.operators.snaplog import (
-        diff_versions,
-        read_version,
-    )
+    from weatherflow_spark.operators.snaplog import read_version
 
     path = _table or _build_versioned_orders(spark, sf_dir, "ivm_tbl")
 
@@ -841,8 +849,7 @@ def q_ivm_rollup(
 
     v1 = read_version(spark, path, 1)
     old_agg = direct_agg(v1)  # the initial build — the only full scan
-    feed = diff_versions(spark, path, 1, 2, ["o_orderkey"])
-    feed = tracked_persist(feed)  # consumed by plus + keys + minus
+    feed = _diff_feed(spark, path) if _feed is None else _feed
     u_rows = feed.where(F.col("op") == "U").drop("op")
     d_rows = feed.where(F.col("op") == "D").drop("op")
     # Pre-image of the changed keys. Two-level bound: the mirror read
@@ -3692,19 +3699,15 @@ def q_pipeline_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_lakehouse_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lakehouse-HISTORY certification row (r12, split out of
-    ``q_pipeline_suite``; r13: the three WAREHOUSE-tier branches
-    split again into ``q_warehouse_suite`` — VERDICT r12 'What's
-    wrong' #1: nine branches / one red-or-green bit was the same
-    monolith problem the r12 split fixed). Six single-table history
-    branches, LONG format (op, key, metric, value:bigint), all
-    doubles pinned to integers per branch:
+    """Lakehouse-HISTORY certification row (the multi-table branches
+    are ``q_warehouse_suite``). Six single-table history branches,
+    LONG format (op, key, metric, value:bigint), all doubles pinned
+    to integers per branch:
 
     - ``time_travel``   (E90): snapshot-log versions + as-of reads —
-      v1/v2/replay/head digests from the retention mirror. r14: the
-      head read RAISES unless its version resolution performed ZERO
-      log-directory listings (E108, the checkpoint pointer — driver-
-      certified instead of pytest-only per r13 verdict #6).
+      v1/v2/replay/head digests from the retention mirror. The head
+      read RAISES unless its version resolution performed ZERO
+      log-directory listings (E108, the checkpoint pointer).
     - ``version_diff``  (E91): between-versions CDC feed + the
       round-trip law (apply(diff(v1,v2)) to v1 reconstructs v2).
     - ``ivm_rollup``    (E92): delta-maintained aggregate == direct
@@ -3717,25 +3720,24 @@ def q_lakehouse_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
       complete AND divergence-isolated in one hash.
 
     Every branch performs its real versioned I/O because that I/O IS
-    the certified claim; E91/E92/E95 share one versioned fixture by
-    construction (built once per call)."""
-    # E91 + E92 + E95 certify against the SAME versioned fixture by
-    # construction — build it once for the three branches (the
-    # singles keep building their own; claims and oracles unchanged).
+    the certified claim. E91/E92/E95 read one versioned fixture, and
+    E91/E92 its one change feed, built here once per call (the singles
+    build their own). The branches only READ what they share, so they
+    run concurrently; union, raise checks and hash unchanged."""
     shared_tbl = _build_versioned_orders(spark, sf_dir, "pipe_vdiff_tbl")
-    # r14 (optimization round): after the shared fixture lands, the
-    # six branches are independent (the three fixture consumers only
-    # READ it; the rest build their own tables) — builders run
-    # through ``overlap_branches`` (guide §2.6); union, raise
-    # checks, and oracle hash unchanged.
+    shared_feed = _diff_feed(spark, shared_tbl)
     from weatherflow_spark.operators.overlap import overlap_branches
 
     vd_df, tc_df, cf_df, sev_df, iv_df, tt_df = overlap_branches([
-        lambda: q_version_diff(spark, sf_dir, _table=shared_tbl),
+        lambda: q_version_diff(
+            spark, sf_dir, _table=shared_tbl, _feed=shared_feed
+        ),
         lambda: q_table_clone(spark, sf_dir),
         lambda: q_change_feed(spark, sf_dir, _table=shared_tbl),
         lambda: q_schema_evolution(spark, sf_dir),
-        lambda: q_ivm_rollup(spark, sf_dir, _table=shared_tbl),
+        lambda: q_ivm_rollup(
+            spark, sf_dir, _table=shared_tbl, _feed=shared_feed
+        ),
         lambda: q_time_travel(spark, sf_dir),
     ])
     vd = vd_df.selectExpr(

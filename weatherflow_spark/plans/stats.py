@@ -1366,14 +1366,14 @@ def q_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics families (exact moments, OLS regression, mode,
     histogram, entropy) projected to one tagged (part, key, n, v1..v4)
     shape and unioned — plus the E10 distribution-window family
-    (percent_rank / cume_dist / lead / nth_value, r13: folded in from
-    the q_window_dist window slot, which rotated to the split-out
-    warehouse suite; the single keeps tail parity). Each branch keeps
+    (percent_rank / cume_dist / lead / nth_value; the q_window_dist
+    single keeps tail parity). Each branch keeps
     its own physical plan — every one is a single partial-agg or
     window pass over its scan (see the per-query docstrings); the
     union is plan-level only, no cross-branch shuffle. Single-family
     twins stay registered in the tail."""
-    cov = q_covariance_matrix(spark, sf_dir).select(
+    cov_matrix = q_covariance_matrix(spark, sf_dir)
+    cov = cov_matrix.select(
         F.lit("cov_matrix").alias("part"),
         F.concat_ws("|", F.col("dim_i"), F.col("dim_j")).alias("key"),
         F.col("n"),
@@ -1382,7 +1382,7 @@ def q_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cov_e9").cast("double").alias("v3"),
         F.lit(None).cast("double").alias("v4"),
     )
-    pca = q_pca_power(spark, sf_dir).select(
+    pca = _pca_power(cov_matrix).select(
         F.lit("pca").alias("part"),
         F.col("dim").cast("string").alias("key"),
         F.lit(None).cast("long").alias("n"),
@@ -1628,11 +1628,8 @@ def q_covariance_matrix(
     )
     from weatherflow_spark.operators.caching import tracked_persist
 
-    # Checkpointed: the D(D+1)/2-row matrix is tiny, and TWO consumers
-    # build this identical plan (the stats suite's cov branch and the
-    # PCA branch's iteration input) — tracked_persist hands both one
-    # checkpoint, so the corpus-scale triangle explode runs once per
-    # job, not per branch.
+    # Checkpointed: the D(D+1)/2-row matrix is tiny, and the stats
+    # suite reads it twice (its cov branch and the PCA iteration).
     return tracked_persist(
         triangle.join(F.broadcast(di), "i")
         .join(F.broadcast(dj), "j")
@@ -1737,9 +1734,12 @@ def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB nothing changes: D is fixed, the moment matrix is the
     only corpus-scale stage, and the iteration cost is O(D²) on one
     row regardless of corpus size."""
-    cov = q_covariance_matrix(spark, sf_dir).select(
-        "dim_i", "dim_j", "cov_num", "n"
-    )
+    return _pca_power(q_covariance_matrix(spark, sf_dir))
+
+
+def _pca_power(cov_matrix: DataFrame) -> DataFrame:
+    """q_pca_power over an already built q_covariance_matrix."""
+    cov = cov_matrix.select("dim_i", "dim_j", "cov_num", "n")
     nrow = cov.agg(F.max("n").alias("n"))
     cov = cov.drop("n")
     full = cov.select(
