@@ -117,220 +117,10 @@ def _pin_hash() -> str:
     ).encode()
     return hashlib.sha256(blob).hexdigest()[:12]
 
-# Every certified-window query gets a timing row (round-5 change: a
-# certified query with no timing history can regress silently — the
-# window IS the headline set). The window is the registry's first 50
-# names, resolved at runtime so slot swaps are benched automatically.
+# Every registered query gets a timing row, in registry order. The
+# certification window is the registry's first 50 names; the compact
+# stdout line carries all of them.
 WINDOW_SIZE = 50
-# Legacy / tail extras kept for round-over-round timing continuity
-# (single-op twins that moved into consolidated suites, plus
-# non-window ops benched since round 1).
-OPTIONAL = [
-    "q_window_rank",
-    "q_tumbling_window_agg",
-    "q_session_window",
-    "q_corpus_curation",
-    "q_token_topk",
-    "q_doc_fingerprint",
-    "q_similarity_topk",
-    "q_ann_ivf_topk",
-    "q_minhash_near_dup",
-    # statistics / TPC-H singles (round 1 widening)
-    "q_stats_moments",
-    "q_tpch_q3",
-    "q_tpch_q5",
-    # round 2: re-blocked near-dup families (now in q_near_dup_suite)
-    "q_simhash_near_dup",
-    "q_ngram_jaccard",
-    "q_ann_lsh_topk",
-    "q_ann_batch_topk",
-    # graph single (now in q_iterative_suite, with q_kmeans)
-    "q_pagerank",
-    "q_kmeans",
-    # round 4/5 singles (now in q_curation_suite / q_product_analytics_suite)
-    "q_decontaminate",
-    "q_funnel",
-    "q_retention",
-    "q_source_mixture",
-    "q_pii_redact",
-    "q_doc_chunks",
-    "q_sequence_pack",
-    "q_grouped_topk",
-    # round 6: displaced window singles + new mining/dim singles
-    "q_text_stats",
-    "q_lang_id",
-    "q_date_dim",
-    "q_tfidf_topk",
-    "q_pmi_cooc",
-    "q_scd2_dim",
-    "q_domain_quota",
-    "q_quality_filter",
-    "q_dedup_clusters",
-    "q_triangle_count",
-    "q_event_transitions",
-    "q_cms_heavy_hitters",
-    "q_hll_distinct",
-    "q_bloom_semi_join",
-    "q_weighted_sample",
-    "q_inverted_index",
-    "q_bpe_train",
-    "q_boilerplate_detect",
-    "q_mixture_weights",
-    # round 6: semantic dedup / LM scoring / tokenizer-apply / kNN graph
-    "q_semantic_dedup",
-    "q_unigram_lm_score",
-    "q_bpe_encode",
-    "q_knn_graph",
-    # round 6: timeseries singles (window slot now q_timeseries_suite)
-    "q_gap_fill_interpolate",
-    "q_ewma",
-    "q_feature_hash",
-    "q_covariance_matrix",
-    "q_pca_power",
-    "q_hll_grouped",
-    "q_knn_classify",
-    "q_perplexity_filter",
-    "q_hybrid_retrieval",
-    "q_grouped_quantiles_udf",
-    # displaced window singles (now in q_udf_suite)
-    "q_pandas_udf_metric",
-    "q_multimodal_features",
-    "q_multimodal_frames",
-    "q_embedding_outliers",
-    "q_data_quality_report",
-    "q_ann_recall",
-    "q_rerank_topk",
-    "q_cluster_representatives",
-    "q_containment",
-    # round 7: new tail singles (suite branches get window rows)
-    "q_snapshot_diff",
-    "q_train_split",
-    "q_assoc_rules",
-    "q_hard_negatives",
-    "q_equidepth_histogram",
-    "q_corpus_drift",
-    "q_winnow_fingerprint",
-    "q_random_projection",
-    "q_bigram_lm_score",
-    "q_pq_encode",
-    "q_table_fingerprint",
-    "q_event_sequences",
-    "q_seasonal_anomaly",
-    "q_entity_clusters",
-    "q_skew_report",
-    "q_release_datasheet",
-    # round 8: serving tier singles (suite has the window row) +
-    # displaced window single
-    "q_rollup_serve",
-    "q_global_index",
-    "q_embedding_near_dup",
-    "q_containment_sweep",
-    "q_incremental_embedding",
-    "q_upsert_serve",
-    "q_compact_serve",
-    "q_grouped_rank",
-    "q_cdc_apply",
-    "q_index_admit",
-    "q_stream_serve",
-    "q_sketch_serve",
-    "q_margin_pairs",
-    "q_retrieval_eval",
-    "q_shard_export",
-    # round 9: multimodal near-dup single (suite carries the window row)
-    "q_phash_near_dup",
-    # round 9: scheduler-gate form of the quality report (pinned budget)
-    "q_quality_gate",
-    "q_media_segments",
-    "q_ann_index_serve",
-    "q_tpch_q1",
-    "q_tpch_q4",
-    "q_tpch_q18",
-    "q_tpch_q19",
-    # round 9 continuation: TPC-H completion singles (suite branches
-    # carry the window rows)
-    "q_tpch_q6",
-    "q_tpch_q7",
-    "q_tpch_q8",
-    "q_tpch_q10",
-    "q_tpch_q13",
-    "q_tpch_q15",
-    "q_tpch_q17",
-    "q_tpch_q21",
-    "q_tpch_q22",
-    # round 9 continuation: repeated-span dedup single (suite branch
-    # carries the window row)
-    "q_span_dedup",
-    # round 9 continuation: derived-partsupp TPC-H completion (22/22;
-    # suite branches carry the window rows)
-    "q_tpch_q2",
-    "q_tpch_q9",
-    "q_tpch_q11",
-    "q_tpch_q12",
-    "q_tpch_q16",
-    "q_tpch_q20",
-    # round 10: snapshot time-travel + version-diff singles (suite
-    # branches carry the window rows)
-    "q_time_travel",
-    "q_version_diff",
-    "q_ivm_rollup",
-    "q_bucketed_join_serve",
-    "q_schema_evolution",
-    "q_change_feed",
-    "q_table_clone",
-    # round 11: cross-table warehouse snapshot + bucketed-layout TPC-H
-    # adoption singles (suite branch carries the window rows); the
-    # plain q_tpch_q3/q_tpch_q18 stay benched above, so BENCH_r11
-    # carries the measured bucketed-vs-plain delta side by side
-    "q_warehouse_snapshot",
-    "q_tpch_q3_bucketed",
-    "q_tpch_q18_bucketed",
-    # r12: the rest of the orderkey family routed through the durable
-    # layout (plain q4/q12/q21 stay benched above for the delta)
-    "q_tpch_q4_bucketed",
-    "q_tpch_q12_bucketed",
-    "q_tpch_q21_bucketed",
-    "q_time_travel_manifest",
-    # r11: the five-table transactional star load (2 loads x 5 keyed
-    # merges of REAL I/O — the cost IS the certified claim)
-    "q_star_transaction",
-    # r12: displaced from the window by q_lakehouse_suite (family
-    # certified via q_text_mining_suite's bpe branches)
-    "q_bpe_token_count",
-    # r12: per-load multi-table replication single (suite branch
-    # carries the window row)
-    "q_warehouse_replica",
-    # r12: E100 file-skipping single (suite branch carries the window row)
-    "q_file_skipping",
-    "q_partition_compaction",
-    # r12.2: maintenance-tier singles + the slots q_order_suite
-    # consolidated (window rows ride q_maintenance_suite /
-    # q_order_suite; the singles keep their own bench trend lines)
-    "q_delete_where",
-    "q_warehouse_maintenance",
-    "q_tpch_q6_skipping",
-    "q_restore_version",
-    "q_sort",
-    "q_topk",
-    # r13: displaced from the window by q_warehouse_suite (family
-    # certified via q_stats_suite's 'window_dist' branch)
-    "q_window_dist",
-    # r13: merge-on-read deletion-vector single (suite branch
-    # 'delete_dv' carries the window row)
-    "q_delete_where_dv",
-    # r13: conjunctive two-column skipping over the Morton layout
-    # (suite branch 'zorder_skipping' carries the window row)
-    "q_zorder_skipping",
-    # r13: the custkey family routed through the second standing
-    # layout (plain q10/q13 stay benched above for the delta)
-    "q_tpch_q13_bucketed",
-    "q_tpch_q10_bucketed",
-    # r14: displaced from the window by q_maintenance2_suite (E19
-    # certified via that row's 'zorder_skipping' branch)
-    "q_zorder_key",
-    # r14: streaming right-to-be-forgotten single (suite branch
-    # 'forget_stream' carries the window row)
-    "q_forget_stream",
-]
 
 
 def main() -> None:
@@ -365,8 +155,8 @@ def main() -> None:
     # warm-up (JVM + parquet footer caches), not billed
     QUERIES["q_flagship_season_rollup"](spark, SF_DIR).count()
 
-    window = list(QUERIES)[:WINDOW_SIZE]
-    names = window + [n for n in OPTIONAL if n in QUERIES and n not in window]
+    names = list(QUERIES)
+    window = names[:WINDOW_SIZE]
 
     def run_reps(name: str) -> list[float]:
         reps = [run_once(name) for _ in range(REPS)]

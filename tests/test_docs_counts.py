@@ -5,6 +5,7 @@ now asserted against the live registry."""
 from __future__ import annotations
 
 import os
+import re
 
 from weatherflow_spark.plans import ORACLES, QUERIES
 
@@ -120,4 +121,97 @@ def test_every_engine_module_is_cited_in_survey():
     assert not missing, (
         "engine modules with no SURVEY citation (add a §2 row or cite "
         f"them in the owning row): {missing}"
+    )
+
+
+# Engine modules whose comments or docstrings still carry round or
+# experiment tags. ROADMAP item 7 moves that history into CHANGES.md
+# module by module; a cleaned module leaves this list, and the item is
+# done when the list is empty.
+STILL_TAGGED = {
+    "curate.py",
+    "io.py",
+    "jobs.py",
+    "operators/commit.py",
+    "operators/indexing.py",
+    "operators/ivm.py",
+    "operators/layout.py",
+    "operators/rollup.py",
+    "operators/sig_index.py",
+    "operators/snaplog.py",
+    "operators/star.py",
+    "operators/upsert.py",
+    "operators/vec_index.py",
+    "operators/zorder.py",
+    "plans/__init__.py",
+    "plans/analytics.py",
+    "plans/ext_dedup.py",
+    "plans/ext_mining.py",
+    "plans/ext_similarity.py",
+    "plans/ext_text.py",
+    "plans/ext_udf.py",
+    "plans/graph.py",
+    "plans/iterative.py",
+    "plans/quality.py",
+    "plans/relational.py",
+    "plans/serving.py",
+    "plans/sketches.py",
+    "plans/stats.py",
+    "plans/timeseries.py",
+    "plans/tpch.py",
+    "plans/tpch_ext.py",
+    "plans/tpch_ps.py",
+    "sources/stream_bus.py",
+    "sql.py",
+    "streaming/pipeline.py",
+}
+
+# Round numbers (r12, r12.2), experiment ids (E97) and the words the
+# round notes were filed under.
+_ROUND_TAG = re.compile(
+    r"\b(?:r\d{1,2}(?:\.\d+)?|E\d{2,3})\b|(?i:verdict|\breview\b|\badvice\b)"
+)
+
+
+def _prose_lines(src: str) -> list[str]:
+    """Every comment and every module/class/function docstring line;
+    lint pragmas (``# noqa: E731``) are not prose."""
+    import ast
+    import io
+    import tokenize
+
+    out = [
+        re.sub(r"noqa:[\w, ]*", "", tok.string)
+        for tok in tokenize.generate_tokens(io.StringIO(src).readline)
+        if tok.type == tokenize.COMMENT
+    ]
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(
+            node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+        ):
+            doc = ast.get_docstring(node, clean=False)
+            if doc:
+                out.extend(doc.splitlines())
+    return out
+
+
+def test_round_tags_only_shrink():
+    """A module off STILL_TAGGED (every new module, too) carries no
+    round or experiment tag in its comments or docstrings, and a module
+    on it still carries one — so the list can only shrink."""
+    root = os.path.join(REPO, "weatherflow_spark")
+    tagged = set()
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            if f.endswith(".py"):
+                p = os.path.join(dirpath, f)
+                if any(_ROUND_TAG.search(x) for x in _prose_lines(open(p).read())):
+                    tagged.add(os.path.relpath(p, root).replace(os.sep, "/"))
+    assert not tagged - STILL_TAGGED, (
+        f"round/experiment tags in {sorted(tagged - STILL_TAGGED)}: say what "
+        "the code does and why, and put the history in CHANGES.md"
+    )
+    assert not STILL_TAGGED - tagged, (
+        f"{sorted(STILL_TAGGED - tagged)} no longer carry tags: take them "
+        "off STILL_TAGGED"
     )

@@ -743,6 +743,28 @@ def test_batch_markers_collision_proof_and_crash_safe(spark, tmpdir, snap_mode):
     assert committed_batch_version(path, "later") == v3
 
 
+def test_stale_marker_never_vouches_for_a_gone_version(spark, tmpdir, snap_mode):
+    """The snapshot-log twin of test_whlog's stale-marker test: a
+    marker whose version entry is gone must not answer
+    committed_batch_version, and the recycled batch id must then
+    commit a fresh version instead of being swallowed."""
+    import glob
+
+    from weatherflow_spark.operators.snaplog import committed_batch_version
+
+    path = f"{tmpdir}/stale"
+    load_table(spark, SF_SMALL, "nation").write.mode("overwrite").parquet(path)
+    init_snapshot_log(path)
+    assert record_commit(path, batch_id="r:0") == 1
+    # entry gone, marker left behind
+    os.remove(path + ".__snaplog/v000001.json")
+    assert glob.glob(path + ".__snaplog/b_r_0_*.json")
+    assert committed_batch_version(path, "r:0") is None
+    assert record_commit(path, batch_id="r:0") == 1
+    assert versions(path) == [1]
+    assert committed_batch_version(path, "r:0") == 1
+
+
 def test_change_feed_streams_with_checkpoint_continuity(spark, tmpdir, snap_mode):
     """E95 (r10): the materialized change feed is stream-consumable —
     a file-source stream over the feed dir delivers every exported

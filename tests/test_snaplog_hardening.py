@@ -496,10 +496,10 @@ def test_checkpoint_pointer_bounds_head_resolution_io(
     listing; vacuum refreshes it."""
     import json as _json
 
-    from weatherflow_spark.operators.snaplog import (
-        _ckpt_path,
-        head_version,
-    )
+    from weatherflow_spark.operators.snaplog import _log, head_version
+
+    def _ckpt_path(p):
+        return _log(p).pointer
 
     path = f"{tmpdir}/ckpt_{mode}"
     s = "k int, v string"

@@ -734,10 +734,13 @@ def test_load_checkpoint_bounds_head_resolution_io(spark, wh, monkeypatch):
     import json as _json
 
     from weatherflow_spark.operators.whlog import (
-        _load_ckpt_path,
+        _loads,
         head_load,
         vacuum_warehouse,
     )
+
+    def _load_ckpt_path(wh_dir):
+        return _loads(wh_dir).pointer
 
     _seed(spark, wh)
     for i in range(1, 4):

@@ -28,7 +28,7 @@ object store, the same two ideas become a catalog pointer swap with a
 conditional-put (compare-and-set on the manifest version) — the
 validate step IS the compare, the swap IS the set.
 
-3. **Partition-version manifest** (r9): row-level conflict detection
+3. **Partition-version manifest**: row-level conflict detection
    for keyed content merges. Each partition carries a monotone
    version in ``<path>.__versions.json`` — a SIBLING of the dataset
    directory, like the lock file, so a full-table overwrite cannot
@@ -47,16 +47,186 @@ validate step IS the compare, the swap IS the set.
    a table format's row lineage; partition granularity is the honest
    limit for plain parquet and is exactly what the bounded
    read-modify-write touches anyway.)
+
+4. **Numbered logs** (:class:`NumberedLog`): the append-only JSON log
+   shape the snapshot log and the warehouse load log share — numbered
+   entries, a head pointer, batch-id markers — plus the one atomic
+   metadata write (:func:`write_json_atomic`).
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import socket
 import threading
 import time
 from contextlib import contextmanager
+from dataclasses import dataclass
+
+
+def write_atomic(path: str, text: str) -> None:
+    """Write ``text`` to ``path`` via a tmp file + ``os.replace``, so a
+    reader sees the old file or the complete new one, never a torn
+    write."""
+    tmp = f"{path}.tmp.{os.getpid()}"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
+
+
+def write_json_atomic(path: str, obj, **dump_kw) -> None:
+    """:func:`write_atomic` of ``json.dumps(obj, **dump_kw)``."""
+    write_atomic(path, json.dumps(obj, **dump_kw))
+
+
+@dataclass(frozen=True)
+class NumberedLog:
+    """An append-only log of JSON entries ``<entry_prefix>NNNNNN.json``
+    in ``dir``, numbered 1, 2, … without gaps above the vacuum horizon
+    (dropping only ever removes a prefix).
+
+    - ``pointer_name`` holds ``{number_key: n}``, the last appended
+      number, so :meth:`head` costs one read plus a forward probe over
+      entries appended since, not a listing of the whole log.
+    - An entry appended with a batch id records it as ``"batch_id"``;
+      a marker ``<marker_prefix>_<id>_<hash>.json`` holding
+      ``{"batch_id", number_key}`` indexes it. The entry is the source
+      of truth: the marker is written after it, and a marker is
+      believed only while its entry exists."""
+
+    dir: str
+    entry_prefix: str
+    pointer_name: str = ""
+    number_key: str = ""
+    marker_prefix: str = ""
+
+    def path(self, n: int) -> str:
+        return os.path.join(self.dir, f"{self.entry_prefix}{n:06d}.json")
+
+    @property
+    def pointer(self) -> str:
+        return os.path.join(self.dir, self.pointer_name)
+
+    def numbers(self) -> list[int]:
+        """Every entry number, ascending (empty if the log is absent).
+        Lists the directory: full-history callers only."""
+        try:
+            names = os.listdir(self.dir)
+        except OSError:
+            return []
+        k = len(self.entry_prefix)
+        out = []
+        for n in names:
+            if n.startswith(self.entry_prefix) and n.endswith(".json"):
+                try:
+                    out.append(int(n[k:-5]))
+                except ValueError:
+                    continue
+        return sorted(out)
+
+    def pointed(self) -> int | None:
+        """The number the head pointer holds; None if missing or
+        unreadable."""
+        try:
+            with open(self.pointer) as f:
+                return int(json.load(f)[self.number_key])
+        except (OSError, ValueError, KeyError, TypeError):
+            return None
+
+    def head(self) -> int | None:
+        """The newest entry number: the pointer, then a forward probe
+        (a crash between entry and pointer leaves it lagging). A
+        missing or corrupt pointer, or one at a dropped entry, falls
+        back to the listing."""
+        n = self.pointed()
+        if n is not None:
+            while os.path.isfile(self.path(n + 1)):
+                n += 1
+            if os.path.isfile(self.path(n)):
+                return n
+        ns = self.numbers()
+        return ns[-1] if ns else None
+
+    def marker(self, batch_id: object) -> str:
+        """The batch id's marker path: the sanitised id plus a hash of
+        the raw id, because sanitising alone maps distinct ids ('8.1',
+        '8_1') to one name and a replay check would then swallow a
+        batch that never committed."""
+        raw = str(batch_id)
+        safe = "".join(c if c.isalnum() or c in "-_" else "_" for c in raw)[:40]
+        digest = hashlib.sha256(raw.encode()).hexdigest()[:12]
+        return os.path.join(
+            self.dir, f"{self.marker_prefix}_{safe}_{digest}.json"
+        )
+
+    def append(self, n: int, entry: dict, batch_id: object | None = None) -> None:
+        """Write entry ``n``, then its batch marker, then the pointer.
+        The caller holds the log's lock and sets ``entry["batch_id"]``."""
+        write_json_atomic(self.path(n), entry)
+        if batch_id is not None:
+            write_json_atomic(
+                self.marker(batch_id),
+                {"batch_id": str(batch_id), self.number_key: n},
+            )
+        write_json_atomic(self.pointer, {self.number_key: n})
+
+    def batch_number(self, batch_id: object) -> int | None:
+        """The entry a batch id committed, or None. The marker answers
+        in O(1) when its entry still exists; otherwise (a new id, a
+        marker lost in a crash, or a stale marker without its entry)
+        the retained entries are scanned newest first. Replay
+        protection therefore lasts exactly as long as the entry is
+        retained."""
+        raw = str(batch_id)
+        try:
+            with open(self.marker(batch_id)) as f:
+                d = json.load(f)
+            if d.get("batch_id") == raw and os.path.isfile(
+                self.path(int(d[self.number_key]))
+            ):
+                return int(d[self.number_key])
+        except (OSError, ValueError, KeyError):
+            pass
+        for n in reversed(self.numbers()):
+            try:
+                with open(self.path(n)) as f:
+                    e = json.load(f)
+            except (OSError, ValueError):
+                continue
+            if e.get("batch_id") == raw:
+                return n
+        return None
+
+    def drop(self, numbers: list[int], keep: list[int]) -> None:
+        """Remove entries ``numbers``; ``keep`` is every entry that
+        stays. Points the head pointer at ``keep[-1]`` (healing a
+        lagging one), removes every marker whose entry is not kept
+        (strays from earlier crashes too), then unlinks the entries —
+        markers first, so a crash leaves an entry without a marker
+        (the scan still finds it), never a marker without an entry.
+        The caller holds the log's lock."""
+        if keep:
+            write_json_atomic(self.pointer, {self.number_key: keep[-1]})
+        if not numbers:
+            return
+        kept = set(keep)
+        for name in os.listdir(self.dir):
+            if name.startswith(self.marker_prefix + "_") and name.endswith(".json"):
+                full = os.path.join(self.dir, name)
+                try:
+                    with open(full) as f:
+                        n = int(json.load(f)[self.number_key])
+                except (OSError, ValueError, KeyError):
+                    continue
+                if n not in kept:
+                    try:
+                        os.remove(full)
+                    except OSError:
+                        pass
+        for n in numbers:
+            os.remove(self.path(n))
 
 
 class CompactionConflict(RuntimeError):
@@ -374,8 +544,7 @@ def check_and_bump_versions(
     (callers do; the lock is what removes the validate→write→bump
     window). With ``bump=False`` only validates (the fail-fast check
     before the merge job); with ``bump=True`` validates and advances
-    every touched key, persisting the manifest atomically
-    (tmp + ``os.replace``)."""
+    every touched key, persisting the manifest atomically."""
     cur = partition_versions(path)
     if expected_versions is not None:
         stale = {
@@ -400,10 +569,7 @@ def check_and_bump_versions(
     parent = os.path.dirname(_manifest_path(path))
     if parent:
         os.makedirs(parent, exist_ok=True)
-    tmp = _manifest_path(path) + f".tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(cur, f, sort_keys=True)
-    os.replace(tmp, _manifest_path(path))
+    write_json_atomic(_manifest_path(path), cur, sort_keys=True)
 
 
 def unescape_path_name(s: str) -> str:

@@ -11,9 +11,10 @@ for the engine's parquet layout:
 
 - **Commit log** (``<path>.__snaplog/v000001.json`` …): one entry per
   content commit, recording the dataset's complete data-file set
-  (relative path + size) at that commit. Written atomically
-  (tmp + ``os.replace``) under the dataset lock, so versions are a
-  gap-free monotone sequence and never interleave.
+  (relative path + size) at that commit. An
+  :class:`~weatherflow_spark.operators.commit.NumberedLog` appended
+  under the dataset lock, so versions are a gap-free monotone
+  sequence and never interleave.
 - **Retention store** (``<path>.__retain/<relpath>``): every committed
   data file is HARD-LINKED (same inode — zero data copy; ``copy2``
   fallback for cross-device) into a directory that mirrors the live
@@ -72,12 +73,25 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from weatherflow_spark.operators.commit import (
+    NumberedLog,
+    dataset_lock,
+    write_atomic,
+    write_json_atomic,
+)
+
 
 def _log_dir(path: str) -> str:
     # Siblings of the dataset dir (like the lock + version manifest):
     # they survive full overwrites and compaction's directory swap,
     # and are invisible to Spark's file index by construction.
     return path.rstrip("/") + ".__snaplog"
+
+
+def _log(path: str) -> NumberedLog:
+    # v000001.json entries, the _last_checkpoint head pointer and
+    # b_<batch id>.json replay markers.
+    return NumberedLog(_log_dir(path), "v", "_last_checkpoint", "version", "b")
 
 
 def _retain_dir(path: str) -> str:
@@ -134,14 +148,7 @@ def init_snapshot_log(path: str, mode: str = "mirror") -> None:
         os.makedirs(_retain_dir(path), exist_ok=True)
     mode_file = os.path.join(_log_dir(path), "MODE")
     if not os.path.isfile(mode_file):
-        tmp = mode_file + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            f.write(mode + "\n")
-        os.replace(tmp, mode_file)
-
-
-def _entry_path(path: str, version: int) -> str:
-    return os.path.join(_log_dir(path), f"v{version:06d}.json")
+        write_atomic(mode_file, mode + "\n")
 
 
 def _seg_dir(path: str) -> str:
@@ -194,10 +201,7 @@ def _write_segments(
         full = os.path.join(segdir, name)
         if not os.path.exists(full):
             os.makedirs(segdir, exist_ok=True)
-            tmp = full + f".tmp.{os.getpid()}"
-            with open(tmp, "w") as f:
-                f.write(content)
-            os.replace(tmp, full)
+            write_atomic(full, content)
         out[dirkey] = name
     return out
 
@@ -207,8 +211,8 @@ def _segment_files(path: str, name: str) -> list[tuple[str, int]]:
         return [tuple(x) for x in json.load(f)["files"]]
 
 
-# Write-once entry cache (r14, verdict r13 #1): entries land via
-# os.replace and are never modified (vacuum deletes whole files), so
+# Write-once entry cache: entries land atomically and are never
+# modified (vacuum deletes whole files), so
 # an unchanged (mtime_ns, size, inode) signature proves a cached
 # parse is current. One commit parses its predecessor up to three
 # times (stats carry, segment carry, DV carry) and every keyed-upsert
@@ -221,7 +225,7 @@ _ENTRY_CACHE_MAX = 256
 
 
 def _load_entry(path: str, version: int) -> dict:
-    p = _entry_path(path, version)
+    p = _log(path).path(version)
     st = os.stat(p)
     sig = (st.st_mtime_ns, st.st_size, st.st_ino)
     hit = _ENTRY_CACHE.get(p)
@@ -231,7 +235,7 @@ def _load_entry(path: str, version: int) -> dict:
         entry = json.load(f)
     if len(_ENTRY_CACHE) >= _ENTRY_CACHE_MAX:
         # Tolerate concurrent eviction: overlapped suite branches
-        # (r14) parse entries from several driver threads; two
+        # parse entries from several driver threads; two
         # evictors racing on the same first key must not raise.
         try:
             _ENTRY_CACHE.pop(next(iter(_ENTRY_CACHE)), None)
@@ -242,13 +246,8 @@ def _load_entry(path: str, version: int) -> dict:
 
 
 def _entry_segments(path: str, entry: dict) -> dict[str, str]:
-    """The entry's {dirkey: segment name} map. A pre-segmentation
-    entry (inline ``files`` list) is materialized into segments on
-    first touch — a one-time O(its files) migration per legacy
-    version, after which every consumer is segment-based."""
-    if "segments" in entry:
-        return dict(entry["segments"])
-    return _write_segments(path, [tuple(x) for x in entry["files"]])
+    """A copy of the entry's {dirkey: segment name} map."""
+    return dict(entry["segments"])
 
 
 def _dv_dir(path: str) -> str:
@@ -441,8 +440,6 @@ def record_dv_commit(
     (:func:`_merge_dir_dvs`, r13 verdict #4) so reads pay one
     anti-join per directory regardless of how many deletes landed
     since the last fold."""
-    from weatherflow_spark.operators.commit import dataset_lock
-
     if not snapshot_enabled(path):
         raise ValueError(
             f"{path}: snapshot log not initialised (init_snapshot_log)"
@@ -479,16 +476,7 @@ def record_dv_commit(
         entry: dict = {"version": n, "segments": segments, "dv": dv}
         if batch_id is not None:
             entry["batch_id"] = str(batch_id)
-        tmp = _entry_path(path, n) + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(entry, f)
-        os.replace(tmp, _entry_path(path, n))
-        if batch_id is not None:
-            btmp = _batch_marker(path, batch_id) + f".tmp.{os.getpid()}"
-            with open(btmp, "w") as f:
-                json.dump({"batch_id": str(batch_id), "version": n}, f)
-            os.replace(btmp, _batch_marker(path, batch_id))
-        _write_checkpoint(path, n)
+        _log(path).append(n, entry, batch_id)
         # The live tree did not change, so an existing dirstamp still
         # describes exactly what the (carried) segments list — keep it.
         return n
@@ -518,10 +506,7 @@ def set_stats_columns(path: str, cols: list[str]) -> None:
         raise ValueError(
             f"{path}: snapshot log not initialised (init_snapshot_log)"
         )
-    tmp = _stats_cols_path(path) + f".tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(sorted(cols), f)
-    os.replace(tmp, _stats_cols_path(path))
+    write_json_atomic(_stats_cols_path(path), sorted(cols))
 
 
 def stats_columns(path: str) -> list[str]:
@@ -809,7 +794,7 @@ def _resolve_version(
         version = head_version(path)
         if version is None:
             raise ValueError(f"{path}: no committed versions")
-    elif not os.path.isfile(_entry_path(path, version)):
+    elif not os.path.isfile(_log(path).path(version)):
         vs = versions(path)
         if not vs:
             raise ValueError(f"{path}: no committed versions")
@@ -842,11 +827,7 @@ def _read_retained(spark: SparkSession, base: str, rels: list[str]) -> DataFrame
 
 
 def _dirstamp_path(path: str) -> str:
-    # dirstamp2: the r12.2 format ({"clean": true, "dirs": {...}});
-    # a DIFFERENT name than the short-lived plain-dict dirstamp.json
-    # so a pre-r12.2 reader on shared storage keeps hitting its own
-    # (absent) file and falls back to the walk instead of crashing on
-    # the new shape (r12 review #4).
+    # {"clean": true, "dirs": {...}}
     return os.path.join(_log_dir(path), "dirstamp2.json")
 
 
@@ -907,20 +888,10 @@ def _clean_fingerprint(path: str) -> dict[str, int] | None:
 
 
 def _write_dirstamp(path: str, fp: dict[str, int]) -> None:
-    # "clean" versions the format: pre-r12.2 stamps (plain dict, which
-    # the old code could legitimately leave RACY after its bounded
-    # retries) must not be trusted by the new unconditional reader —
-    # they lack the marker and read as None (one fallback walk, then
-    # the next commit rewrites them in the new format).
-    dst = _dirstamp_path(path)
-    tmp = dst + f".tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump({"clean": True, "dirs": fp}, f)
-    os.replace(tmp, dst)
-    try:  # sweep the short-lived pre-r12.2 stamp (nothing reads it)
-        os.unlink(os.path.join(_log_dir(path), "dirstamp.json"))
-    except OSError:
-        pass
+    # "clean" versions the format: a stamp without it is not trusted
+    # (stored_dirstamp reads it as None: one fallback walk, then the
+    # next commit rewrites it).
+    write_json_atomic(_dirstamp_path(path), {"clean": True, "dirs": fp})
 
 
 def _drop_dirstamp(path: str) -> None:
@@ -952,80 +923,25 @@ def stored_dirstamp(path: str) -> dict[str, int] | None:
 
 
 def entry_files(path: str, version: int) -> list[tuple[str, int]]:
-    """The COMPLETE (relpath, size) set a committed version recorded
-    — the one supported way to read an entry's file list (entries are
-    segmented since r12; inline-list legacy entries still resolve)."""
-    entry = _load_entry(path, version)
-    if "files" in entry:
-        return [tuple(x) for x in entry["files"]]
+    """The COMPLETE (relpath, size) set a committed version recorded,
+    gathered from the entry's segments."""
     out: list[tuple[str, int]] = []
-    for name in entry["segments"].values():
+    for name in _load_entry(path, version)["segments"].values():
         out.extend(_segment_files(path, name))
     return sorted(out)
 
 
 def versions(path: str) -> list[int]:
-    """Committed version numbers, ascending (empty if log absent).
-    O(#versions) directory listing — full-history consumers (vacuum,
-    feed export, restore validation) need the complete list; HEAD
-    resolution should use :func:`head_version` instead, which is
-    O(since-checkpoint)."""
-    try:
-        names = os.listdir(_log_dir(path))
-    except OSError:
-        return []
-    out = []
-    for n in names:
-        if n.startswith("v") and n.endswith(".json"):
-            try:
-                out.append(int(n[1:-5]))
-            except ValueError:
-                continue
-    return sorted(out)
-
-
-def _ckpt_path(path: str) -> str:
-    return os.path.join(_log_dir(path), "_last_checkpoint")
-
-
-def _write_checkpoint(path: str, version: int) -> None:
-    """Atomically record ``version`` as the known head — the
-    Delta-style ``_last_checkpoint`` pointer (r12 verdict #6). Our
-    entries are already self-contained full-state maps (segments +
-    stats + DVs), so the pointer alone makes every head-resolving
-    read O(since-checkpoint) instead of an O(#versions) listdir; at
-    the reference's 288-loads/day cadence a year of history is ~10^5
-    entries per table, paid on EVERY read without this. Written
-    after the entry lands (a crash in between leaves a lagging
-    pointer, which the forward probe self-heals)."""
-    tmp = _ckpt_path(path) + f".tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump({"version": version}, f)
-    os.replace(tmp, _ckpt_path(path))
+    """Committed version numbers, ascending (empty if log absent). Lists
+    the log: full-history callers only; :func:`head_version` reads the
+    head pointer instead."""
+    return _log(path).numbers()
 
 
 def head_version(path: str) -> int | None:
-    """The newest committed version, resolved in O(commits since the
-    last checkpoint pointer): read ``_last_checkpoint``, then probe
-    FORWARD (entries are a gap-free monotone sequence above the
-    pointer — vacuum only drops prefixes) until the first missing
-    entry. Falls back to the full :func:`versions` listing when the
-    pointer is absent (pre-r13 log), corrupt, or points at a
-    vacuumed entry with no successor (a pathologically stale
-    pointer). None when the log has no versions."""
-    try:
-        with open(_ckpt_path(path)) as f:
-            v = int(json.load(f)["version"])
-    except (OSError, ValueError, KeyError, TypeError):
-        vs = versions(path)
-        return vs[-1] if vs else None
-    n = v
-    while os.path.isfile(_entry_path(path, n + 1)):
-        n += 1
-    if not os.path.isfile(_entry_path(path, n)):
-        vs = versions(path)  # stale pointer: self-heal via the listing
-        return vs[-1] if vs else None
-    return n
+    """The newest committed version (None when there is none), from the
+    ``_last_checkpoint`` pointer plus a forward probe."""
+    return _log(path).head()
 
 
 def _walk_data_files(
@@ -1055,66 +971,13 @@ def _walk_data_files(
     return out
 
 
-def batch_marker_filename(prefix: str, batch_id: object) -> str:
-    """Collision-proof marker file name for a batch id: sanitized
-    name PLUS a hash of the raw id — sanitization alone can collide
-    distinct ids ('8.1' and '8_1' both → 8_1), and a collision would
-    make a replay check treat a never-committed batch as committed —
-    silent data loss (r10 review). Shared by the snaplog version
-    markers and the whlog load markers so the two schemes cannot
-    drift (r11 review)."""
-    import hashlib
-
-    raw = str(batch_id)
-    safe = "".join(c if c.isalnum() or c in "-_" else "_" for c in raw)[:40]
-    digest = hashlib.sha256(raw.encode()).hexdigest()[:12]
-    return f"{prefix}_{safe}_{digest}.json"
-
-
-def _batch_marker(path: str, batch_id: object) -> str:
-    # The raw id is also stored inside the marker and re-checked on
-    # read.
-    return os.path.join(_log_dir(path), batch_marker_filename("b", batch_id))
-
-
 def committed_batch_version(path: str, batch_id: object) -> int | None:
     """The version a replay-keyed commit minted for ``batch_id``, or
-    None if that batch never committed. Lets exactly-once sinks
-    (foreachBatch) skip re-delivered micro-batches.
-
-    The VERSION ENTRY is the source of truth (``record_commit``
-    writes the batch id into the entry json in the same atomic
-    rename); the marker file is only a fast index, written second —
-    a crash between the two steps loses the marker but not the
-    commit, so this falls back to scanning the retained entries.
-    Replay protection therefore extends exactly as far as version
-    retention: a batch whose version was vacuumed is out of contract
-    (streaming checkpoints only replay recent batches) and would
-    re-commit."""
-    raw = str(batch_id)
-    try:
-        with open(_batch_marker(path, batch_id)) as f:
-            d = json.load(f)
-        if d.get("batch_id") == raw and os.path.isfile(
-            # The marker is only an index: a vacuum that crashed
-            # between dropping the entry and GC'ing the marker must
-            # not let a stale marker vouch for a gone version —
-            # post-retention id recycling would be silently swallowed
-            # (r11 review).
-            _entry_path(path, int(d["version"]))
-        ):
-            return int(d["version"])
-    except (OSError, ValueError, KeyError):
-        pass
-    for v in reversed(versions(path)):
-        try:
-            with open(_entry_path(path, v)) as f:
-                e = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if e.get("batch_id") == raw:
-            return v
-    return None
+    None if that batch never committed, so exactly-once sinks
+    (foreachBatch) can skip re-delivered micro-batches. Replay
+    protection lasts exactly as long as the version is retained: a
+    batch whose version was vacuumed would re-commit."""
+    return _log(path).batch_number(batch_id)
 
 
 _STAMP_SELF = object()  # sentinel: record_commit takes its own basis
@@ -1149,23 +1012,19 @@ def record_commit(
       is nothing to carry from).
     - neither: full O(total files) walk (bulk builds, seeds).
 
-    Entries are SEGMENTED (r12): the file list is split into one
+    Entries are SEGMENTED: the file list is split into one
     immutable content-addressed segment file per partition directory
     (``seg/s_<hash>.json``); the entry records only {dir: segment
     name}. A scoped commit re-references untouched directories'
     segments BY NAME — their lists are never read or re-written — so
-    entry I/O per commit is O(directories) + O(touched files), where
-    the inline list was O(total files) read + write per commit.
-    Unreferenced segments are GC'd by vacuum. Pre-r12 inline entries
-    still resolve through :func:`entry_files`.
+    entry I/O per commit is O(directories) + O(touched files).
+    Unreferenced segments are GC'd by vacuum.
 
     ``batch_id`` makes the commit replay-keyed: if this id already
     minted a version (a re-delivered foreachBatch micro-batch), no
     new version is created and the recorded one is returned —
     exactly-once version history under at-least-once delivery.
     """
-    from weatherflow_spark.operators.commit import dataset_lock
-
     if not snapshot_enabled(path):
         raise ValueError(
             f"{path}: snapshot log not initialised (init_snapshot_log)"
@@ -1224,13 +1083,11 @@ def record_commit(
                     "complete files= list"
                 )
             touched = _walk_data_files(path, subdirs=scope)
-            # Segment carry-forward (r11 verdict #3): untouched
-            # directories re-reference the previous entry's IMMUTABLE
-            # segments BY NAME — their file lists are never read, so
-            # a micro-batch commit writes O(touched files) segment
-            # bytes + an O(directories) entry, where the pre-r12
-            # inline list re-wrote (and first re-read) O(total files)
-            # per commit (~GB json per micro-batch at 10⁷ files).
+            # Segment carry-forward: untouched directories
+            # re-reference the previous entry's IMMUTABLE segments BY
+            # NAME — their file lists are never read, so a micro-batch
+            # commit writes O(touched files) segment bytes + an
+            # O(directories) entry.
             scope_keys = [s.rstrip("/") for s in scope]
 
             def covered(dirkey: str) -> bool:
@@ -1333,20 +1190,8 @@ def record_commit(
                 if dv_carry:
                     entry["dv"] = dv_carry
         if batch_id is not None:
-            # inside the entry = atomically recorded with the version
-            # (the marker below is only an index; see
-            # committed_batch_version)
             entry["batch_id"] = str(batch_id)
-        tmp = _entry_path(path, n) + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(entry, f)
-        os.replace(tmp, _entry_path(path, n))
-        if batch_id is not None:
-            btmp = _batch_marker(path, batch_id) + f".tmp.{os.getpid()}"
-            with open(btmp, "w") as f:
-                json.dump({"batch_id": str(batch_id), "version": n}, f)
-            os.replace(btmp, _batch_marker(path, batch_id))
-        _write_checkpoint(path, n)
+        _log(path).append(n, entry, batch_id)
         if not manifest:
             # O(dirs) reuse stamp for the multi-table coordinator —
             # written only when the pre-listing fingerprint is still
@@ -1422,8 +1267,6 @@ def pinned_version(path: str, version: int):
     pinned version number. Pins are advisory files named with
     pid+nonce, so a crashed reader's stale pin is diagnosable (and
     removable) by an operator without ambiguity."""
-    from weatherflow_spark.operators.commit import dataset_lock
-
     with dataset_lock(path):
         if version not in versions(path):
             raise ValueError(
@@ -1452,7 +1295,7 @@ def version_as_of(path: str, ts) -> int:
     ``ts`` is a ``datetime`` or an ISO-8601 string; NAIVE values are
     UTC (the engine pins every session to UTC — session.py). Entry
     commit times are the entry files' own mtimes (entries land once
-    via os.replace and are never modified, so the mtime IS the commit
+    atomically and are never modified, so the mtime IS the commit
     instant; ``clone_table`` copies them with copy2, preserving
     history times). Resolution walks BACKWARD from the checkpoint
     head — O(versions newer than ts), never a log listing — and stops
@@ -1479,7 +1322,7 @@ def version_as_of(path: str, ts) -> int:
     v = head
     while v >= 1:
         try:
-            st = os.stat(_entry_path(path, v))
+            st = os.stat(_log(path).path(v))
         except OSError:
             break  # below the vacuum horizon
         if st.st_mtime_ns <= epoch_ns:
@@ -1623,8 +1466,6 @@ def clone_table(src: str, dst: str, with_history: bool = False) -> int:
         raise ValueError(f"{src}: no such table to clone")
     if os.path.exists(dst) and not os.path.isdir(dst):
         raise ValueError(f"{dst}: destination exists and is not a directory")
-    from weatherflow_spark.operators.commit import dataset_lock
-
     n = 0
     # Lock BOTH sides, in sorted-path order (two concurrent clones in
     # opposite directions otherwise deadlock): the source lock makes
@@ -1746,7 +1587,8 @@ def export_change_feed(
             ptr = int(json.load(f)["version"])
     except (OSError, ValueError, KeyError, TypeError):
         ptr = None
-    head = head_version(path)
+    log = _log(path)
+    head = log.head()
     if ptr is not None and head is not None:
         # entries above the pointer probe directly (retained ⇔ the
         # entry file exists); the isfile filter also absorbs a
@@ -1754,7 +1596,7 @@ def export_change_feed(
         vs = [
             v
             for v in range(ptr + 1, head + 1)
-            if os.path.isfile(_entry_path(path, v))
+            if os.path.isfile(log.path(v))
         ]
     else:
         vs = versions(path)
@@ -1769,7 +1611,7 @@ def export_change_feed(
         # (mapreduce.fileoutputcommitter.marksuccessfuljobs=false).
         if os.path.isfile(os.path.join(part, "_WF_EXPORTED")):
             continue
-        if os.path.isfile(_entry_path(path, v - 1)):
+        if os.path.isfile(log.path(v - 1)):
             # retained ⇔ entry exists (the old `v-1 in vs` test, made
             # pointer-compatible: the bounded list omits versions at
             # or below the pointer, which ARE retained)
@@ -1807,29 +1649,25 @@ def export_change_feed(
         # the two re-exports the version, never leaves a marked
         # partition without its stamp): consumers use it to fail fast
         # when an E94 evolution lands mid-stream (r10 verdict #7).
-        stmp = os.path.join(part, "_WF_SCHEMA")
-        with open(stmp + ".tmp", "w") as f:
-            json.dump({"version": v, "columns": feed.columns}, f)
-        os.replace(stmp + ".tmp", stmp)
-        mtmp = os.path.join(part, "_WF_EXPORTED") + f".tmp.{os.getpid()}"
-        with open(mtmp, "w") as f:
-            # row count lets consumers detect a partially copied
-            # partition (marker present, data missing — a sorted-order
-            # copier lands '_WF_EXPORTED' before 'part-*', r12 review);
-            # tmp+replace so marker existence implies complete content
-            # (a torn marker would silently disable the check forever:
-            # the export skip is keyed on the marker's existence)
-            json.dump({"version": v, "n_rows": n_rows}, f)
-        os.replace(mtmp, os.path.join(part, "_WF_EXPORTED"))
+        write_json_atomic(
+            os.path.join(part, "_WF_SCHEMA"),
+            {"version": v, "columns": feed.columns},
+        )
+        # The row count lets consumers detect a partially copied
+        # partition (marker present, data missing: a sorted-order
+        # copier lands '_WF_EXPORTED' before 'part-*'). Atomic, so the
+        # marker's existence implies complete content: the export
+        # skip is keyed on it, and a torn marker would disable the
+        # check forever.
+        write_json_atomic(
+            os.path.join(part, "_WF_EXPORTED"), {"version": v, "n_rows": n_rows}
+        )
         exported.append(v)
     if vs:
         # complete pass: everything retained up to the highest seen
         # version is now exported (monotone: never moves backwards)
         new_ptr = vs[-1] if ptr is None else max(ptr, vs[-1])
-        tmp = ptr_path + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump({"version": new_ptr}, f)
-        os.replace(tmp, ptr_path)
+        write_json_atomic(ptr_path, {"version": new_ptr})
     return exported
 
 
@@ -2037,8 +1875,6 @@ def vacuum_versions(
     """
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    from weatherflow_spark.operators.commit import dataset_lock
-
     with dataset_lock(path):
         vs = versions(path)
         pinned = pinned_versions(path)
@@ -2075,11 +1911,6 @@ def vacuum_versions(
                 "drop": list(drop),
             }
         keep = [v for v in vs if v not in drop]
-        # Refresh the head pointer while the full listing is in hand
-        # (vacuum is the one reader that pays it anyway): heals any
-        # pre-r13 or lagging pointer so reads stay O(1).
-        if keep:
-            _write_checkpoint(path, keep[-1])
         referenced: set[str] = set()
         referenced_segs: set[str] = set()
         referenced_dv: set[str] = set()
@@ -2089,8 +1920,9 @@ def vacuum_versions(
             referenced.update(rel for rel, _ in entry_files(path, v))
             for names in _entry_dv(entry).values():
                 referenced_dv.update(names)
-        for v in drop:
-            os.unlink(_entry_path(path, v))
+        # Replay protection intentionally ends with retention (see
+        # committed_batch_version).
+        _log(path).drop(drop, keep)
         # GC segment files no surviving entry references (dropped
         # versions' exclusive segments, plus orphans from crashed
         # commits — a segment written before its entry's rename is
@@ -2119,30 +1951,6 @@ def vacuum_versions(
                     )
         except OSError:
             pass
-        # GC batch markers whose version is gone: they would otherwise
-        # grow the log dir without bound under a long-running stream
-        # and point readers at vacuumed versions (r10 review). Replay
-        # protection intentionally ends with retention (see
-        # committed_batch_version). Matching "not in keep" (rather
-        # than this run's drop set) self-heals markers stranded by a
-        # vacuum that crashed between entry removal and marker GC;
-        # the loop is guarded so a no-op vacuum doesn't pay O(markers)
-        # reads (r11 review).
-        kept = set(keep)
-        if drop:
-            for nme in os.listdir(_log_dir(path)):
-                if nme.startswith("b_") and nme.endswith(".json"):
-                    full = os.path.join(_log_dir(path), nme)
-                    try:
-                        with open(full) as f:
-                            mv = int(json.load(f)["version"])
-                    except (OSError, ValueError, KeyError):
-                        continue
-                    if mv not in kept:
-                        try:
-                            os.unlink(full)
-                        except OSError:
-                            pass
         removed = 0
         if snapshot_mode(path) == "manifest":
             # Manifest mode: vacuum is the ONE deleter — unlink LIVE
@@ -2220,11 +2028,7 @@ def table_status(path: str) -> dict:
     )
     out["dv_dirs"] = len(dv)
     out["dv_files"] = len({n for names in dv.values() for n in names})
-    try:
-        with open(_ckpt_path(path)) as f:
-            out["checkpoint_fresh"] = int(json.load(f)["version"]) == head
-    except (OSError, ValueError, KeyError, TypeError):
-        pass
+    out["checkpoint_fresh"] = _log(path).pointed() == head
     return out
 
 
@@ -2358,7 +2162,7 @@ def table_history(path: str, limit: int = 20) -> list[dict]:
          "batch_id": str|None}
 
     ``committed_at`` is the entry file's mtime — entries land once
-    via ``os.replace`` and are never modified (the same clock
+    atomically and are never modified (the same clock
     ``version_as_of`` travels by)."""
     import datetime as _dt
 
@@ -2370,9 +2174,8 @@ def table_history(path: str, limit: int = 20) -> list[dict]:
     out: list[dict] = []
     v = head
     while v >= 1 and len(out) < max(1, limit):
-        p = _entry_path(path, v)
         try:
-            st = os.stat(p)
+            st = os.stat(_log(path).path(v))
             entry = _load_entry(path, v)
         except (OSError, ValueError):
             break  # vacuum horizon: older history is gone

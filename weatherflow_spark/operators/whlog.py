@@ -1,21 +1,22 @@
-"""Cross-table consistent snapshots (E97): warehouse-level time
-travel over multi-table loads.
+"""Cross-table consistent snapshots: warehouse-level time travel over
+multi-table loads.
 
 The reference loads each record inside ONE MySQL transaction spanning
 all five star tables (reference dags/utils/database.py:25-34,
 SQL/create_tables.sql:11-18) — its warehouse is always cross-table
-consistent, but keeps no history. The E90 snapshot log
+consistent, but keeps no history. The snapshot log
 (operators/snaplog.py) gives each table independent history — and
 thereby a NEW inconsistency: a time-travel read of fact-at-version-N
 joined to dim-at-head silently mixes commit points, and "the
-warehouse as of load N" is unanswerable (r10 verdict, missing #1).
+warehouse as of load N" is unanswerable.
 
 This module is the missing coordinator — one LOGICAL LOAD entry
 mapping table → snapshot version, the Iceberg/Delta multi-table
 transaction shape re-derived on the engine's own primitives:
 
-- **Load entry** (``<wh>/.__whlog/L000001.json`` …): written
-  atomically (tmp + ``os.replace``) while holding EVERY member
+- **Load entry** (``<wh>/.__whlog/L000001.json`` …, a
+  :class:`~weatherflow_spark.operators.commit.NumberedLog` with the
+  ``_last_load`` head pointer): appended while holding EVERY member
   table's commit lock (sorted-path order, so two warehouse commits —
   or a warehouse commit racing a clone — can never deadlock) plus a
   warehouse-level lock that serializes load numbering. Because all
@@ -48,11 +49,11 @@ jobs (those run before, under their own per-table write discipline).
 The all-locks-held window is file-METADATA work: manifest-mode
 members reuse their head version (O(1)); mirror-mode members whose
 writers record commits at the choke points reuse via the O(dirs)
-directory-fingerprint stamp (r12 — zero file stats under the locks),
+directory-fingerprint stamp (zero file stats under the locks),
 falling back to one stat walk only when the stamp is stale or a bulk
 write bypassed the log; the mirror is pre-linked lock-free
-beforehand — including members first initialised by this very commit
-(r12 advice) — so a first commit never bulk-links under the locks.
+beforehand — including members first initialised by this very
+commit — so a first commit never bulk-links under the locks.
 """
 
 from __future__ import annotations
@@ -63,13 +64,25 @@ from contextlib import ExitStack, contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from weatherflow_spark.operators.commit import (
+    NumberedLog,
+    dataset_lock,
+    write_json_atomic,
+)
 from weatherflow_spark.operators.overlap import overlap_branches
 
 
-def _wh_log_dir(wh_dir: str) -> str:
-    # Dot-prefixed sibling INSIDE the warehouse dir: invisible to any
-    # Spark file index, wiped together with the warehouse.
-    return os.path.join(wh_dir, ".__whlog")
+def _loads(wh_dir: str) -> NumberedLog:
+    # Dot-prefixed INSIDE the warehouse dir: invisible to any Spark
+    # file index, wiped together with the warehouse.
+    return NumberedLog(
+        os.path.join(wh_dir, ".__whlog"), "L", "_last_load", "load", "B"
+    )
+
+
+def _bundle(bundle_dir: str) -> NumberedLog:
+    # A feed bundle's copies of the load entries (no pointer, no markers).
+    return NumberedLog(os.path.join(bundle_dir, "loads"), "L")
 
 
 def _wh_lock_base(wh_dir: str) -> str:
@@ -78,88 +91,45 @@ def _wh_lock_base(wh_dir: str) -> str:
     return os.path.join(wh_dir, "__warehouse")
 
 
-def _load_path(wh_dir: str, n: int) -> str:
-    return os.path.join(_wh_log_dir(wh_dir), f"L{n:06d}.json")
-
-
 def init_warehouse_log(wh_dir: str) -> None:
     """Opt this warehouse directory into logical-load commits
     (idempotent). Member tables are plain datasets under ``wh_dir``;
     they are opted into per-table snapshot logs automatically on
     first commit."""
-    os.makedirs(_wh_log_dir(wh_dir), exist_ok=True)
+    os.makedirs(_loads(wh_dir).dir, exist_ok=True)
 
 
 def warehouse_loads(wh_dir: str) -> list[int]:
-    """Committed logical-load numbers, ascending. O(#loads) listing —
-    full-history consumers (vacuum, bundle export, restore) need it;
-    head resolution uses :func:`head_load` (O(since-pointer), r13)."""
-    try:
-        names = os.listdir(_wh_log_dir(wh_dir))
-    except OSError:
-        return []
-    out = []
-    for n in names:
-        if n.startswith("L") and n.endswith(".json"):
-            try:
-                out.append(int(n[1:-5]))
-            except ValueError:
-                continue
-    return sorted(out)
-
-
-def _load_ckpt_path(wh_dir: str) -> str:
-    return os.path.join(_wh_log_dir(wh_dir), "_last_load")
-
-
-def _write_load_checkpoint(wh_dir: str, n: int) -> None:
-    tmp = _load_ckpt_path(wh_dir) + f".tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump({"load": n}, f)
-    os.replace(tmp, _load_ckpt_path(wh_dir))
+    """Committed logical-load numbers, ascending. Lists the log:
+    full-history callers (vacuum, bundle export, restore) only."""
+    return _loads(wh_dir).numbers()
 
 
 def head_load(wh_dir: str) -> int | None:
-    """The newest committed load, resolved in O(loads since the
-    ``_last_load`` pointer) — the warehouse analog of the snapshot
-    log's ``_last_checkpoint`` (r13): at the reference's 288-loads/day
-    cadence, resolving "the latest load" by listing the log directory
-    pays ~10^5 entries/year on EVERY warehouse read. Pointer +
-    forward probe (loads are gap-free above it — vacuum only drops
-    prefixes); a lagging pointer self-heals, a corrupt/missing/
-    stale-past-vacuum pointer falls back to the full listing."""
-    try:
-        with open(_load_ckpt_path(wh_dir)) as f:
-            v = int(json.load(f)["load"])
-    except (OSError, ValueError, KeyError, TypeError):
-        ls = warehouse_loads(wh_dir)
-        return ls[-1] if ls else None
-    n = v
-    while os.path.isfile(_load_path(wh_dir, n + 1)):
-        n += 1
-    if not os.path.isfile(_load_path(wh_dir, n)):
-        ls = warehouse_loads(wh_dir)
-        return ls[-1] if ls else None
-    return n
+    """The newest committed load, from the ``_last_load`` pointer plus
+    a forward probe: at the reference's 288-loads/day cadence, listing
+    the log would cost ~10^5 entries a year on every warehouse read."""
+    return _loads(wh_dir).head()
 
 
 def load_entry(wh_dir: str, load: int | None = None) -> dict:
     """The load entry (``{"load": N, "tables": {name: version}, ...}``);
     default latest. Head resolution and explicit-load validation are
-    O(since-pointer) / one entry stat (r13) — the listing only runs
-    to build the error message."""
+    O(since-pointer) / one entry stat — the listing only runs to build
+    the error message."""
+    log = _loads(wh_dir)
     if load is None:
-        load = head_load(wh_dir)
+        load = log.head()
         if load is None:
             raise ValueError(f"{wh_dir}: no committed warehouse loads")
-    elif not os.path.isfile(_load_path(wh_dir, load)):
-        ls = warehouse_loads(wh_dir)
+    elif not os.path.isfile(log.path(load)):
+        ls = log.numbers()
         if not ls:
             raise ValueError(f"{wh_dir}: no committed warehouse loads")
         raise ValueError(
             f"{wh_dir}: load {load} not in log (have {ls[0]}..{ls[-1]})"
         )
-    with open(_load_path(wh_dir, load)) as f:
+    with open(log.path(load)) as f:
         return json.load(f)
 
 
@@ -172,8 +142,8 @@ def _record_or_reuse(path: str, batch_id: object | None) -> int:
 
     Manifest-mode members reuse the head UNCONDITIONALLY when one
     exists: their live tree also holds superseded files, so a raw
-    walk would record a version resurrecting replaced rows (r11
-    review) — and the manifest contract already guarantees every
+    walk would record a version resurrecting replaced rows — and the
+    manifest contract already guarantees every
     content commit recorded a version, so the head IS the current
     state. An unversioned manifest member seeds via the full walk
     (valid: replace-writers refuse manifest tables with no seed, so
@@ -196,21 +166,21 @@ def _record_or_reuse(path: str, batch_id: object | None) -> int:
             return head
         return record_commit(path, batch_id=batch_id)
     if head is not None:
-        # O(dirs) fast path (r11 verdict #5): every engine content
+        # O(dirs) fast path: every engine content
         # writer records a commit at the choke points, and
         # record_commit stamps the directory fingerprint after each
         # entry — fingerprint equality therefore means no write of
         # ANY kind (choke-point or bulk: both add/remove files, which
         # bumps a directory mtime) happened since the head version,
         # so the head is the current state and the stat walk is
-        # skipped entirely. Stale/missing stamps (pre-r12 tables, a
-        # crash between entry and stamp) only cost the fallback walk,
-        # never a wrong reuse.
+        # skipped entirely. Stale/missing stamps (a crash between
+        # entry and stamp) only cost the fallback walk, never a wrong
+        # reuse.
         stamp = stored_dirstamp(path)
         if stamp is not None and stamp == dir_fingerprint(path):
             return head
-    # Same basis-before-listing discipline as record_commit's stamp
-    # (r12 review): the fingerprint that may be persisted below must
+    # Same basis-before-listing discipline as record_commit's stamp:
+    # the fingerprint that may be persisted below must
     # predate the walk, or a bulk write between walk and stamp would
     # be vouched for by a stamp whose entry excludes it.
     pre_fp = _clean_fingerprint(path)
@@ -227,20 +197,10 @@ def _record_or_reuse(path: str, batch_id: object | None) -> int:
             return head
     # files= commits must carry the pre-walk basis into record_commit
     # (its own fingerprint would be post-listing — the wrong-reuse
-    # hole again, r12 review #3); record_commit re-verifies the tree
-    # is still exactly this before stamping.
+    # hole again); record_commit re-verifies the tree is still
+    # exactly this before stamping.
     return record_commit(
         path, files=cur, batch_id=batch_id, stamp_basis=pre_fp
-    )
-
-
-def _load_batch_marker(wh_dir: str, batch_id: object) -> str:
-    # Shared naming with snaplog's batch markers (one sanitize+hash
-    # scheme to maintain, r11 review).
-    from weatherflow_spark.operators.snaplog import batch_marker_filename
-
-    return os.path.join(
-        _wh_log_dir(wh_dir), batch_marker_filename("B", batch_id)
     )
 
 
@@ -248,12 +208,9 @@ def committed_load(wh_dir: str, batch_id: object) -> int | None:
     """The load number a replay-keyed commit minted for ``batch_id``,
     or None. Loaders call this BEFORE touching any member table: a
     late-redelivered OLD batch must short-circuit here, not after its
-    upserts have already rewritten current rows back to stale values
-    (r11 review).
-
-    O(1) via a marker index (entry = source of truth, marker written
-    second — a crash between the two falls back to the scan), so a
-    long-lived stream never pays an O(loads) log scan per batch.
+    upserts have already rewritten current rows back to stale values.
+    A marker answers a replayed id in O(1); a new id scans the retained
+    entries (:meth:`~weatherflow_spark.operators.commit.NumberedLog.batch_number`).
 
     Contract boundaries (identical to snaplog's batch keying): replay
     protection extends exactly as far as LOAD RETENTION — a batch
@@ -264,29 +221,7 @@ def committed_load(wh_dir: str, batch_id: object) -> int | None:
     numbering, so callers must scope ids by query identity (the
     engine's stream sink keys by checkpoint path) or old entries
     would silently swallow new batches."""
-    raw = str(batch_id)
-    try:
-        with open(_load_batch_marker(wh_dir, batch_id)) as f:
-            d = json.load(f)
-        if d.get("batch_id") == raw and os.path.isfile(
-            # Verify the ENTRY still exists: a vacuum that crashed
-            # between entry removal and marker GC must not let a
-            # stale marker swallow a post-retention recycled id
-            # (r11 review).
-            _load_path(wh_dir, int(d["load"]))
-        ):
-            return int(d["load"])
-    except (OSError, ValueError, KeyError):
-        pass
-    for n in reversed(warehouse_loads(wh_dir)):
-        try:
-            with open(_load_path(wh_dir, n)) as f:
-                e = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if e.get("batch_id") == raw:
-            return n
-    return None
+    return _loads(wh_dir).batch_number(batch_id)
 
 
 def commit_warehouse(
@@ -298,7 +233,6 @@ def commit_warehouse(
     held across every per-table version record AND the entry write —
     the consistency guarantee (module doc). ``batch_id`` keys the
     load for exactly-once replay."""
-    from weatherflow_spark.operators.commit import dataset_lock
     from weatherflow_spark.operators.snaplog import (
         init_snapshot_log,
         snapshot_enabled,
@@ -306,7 +240,8 @@ def commit_warehouse(
 
     if not tables:
         raise ValueError("commit_warehouse needs at least one table")
-    if not os.path.isdir(_wh_log_dir(wh_dir)):
+    log = _loads(wh_dir)
+    if not os.path.isdir(log.dir):
         raise ValueError(
             f"{wh_dir}: warehouse log not initialised (init_warehouse_log)"
         )
@@ -317,12 +252,12 @@ def commit_warehouse(
     # Pre-warm the retention mirrors LOCK-FREE (idempotent links; a
     # superseded pre-link is garbage vacuum sweeps): the all-locks
     # window below then pays only the listing delta and the entry
-    # writes, not a first-commit bulk link pass (r11 review). Members
+    # writes, not a first-commit bulk link pass. Members
     # not yet snapshot-enabled are initialised HERE (init is
     # idempotent metadata) — prelink is a mode-gated no-op on an
     # uninitialised table, so deferring init to the locked loop would
     # silently re-open the bulk-link-under-all-locks window for every
-    # first-time member (r12 advice).
+    # first-time member.
     from weatherflow_spark.operators.snaplog import (
         dir_fingerprint,
         prelink_retained,
@@ -333,7 +268,7 @@ def commit_warehouse(
         if not snapshot_enabled(p):
             init_snapshot_log(p)
         # Skip the O(files) prelink walk when the dirstamp proves the
-        # table unchanged since its last commit (r12 review): every
+        # table unchanged since its last commit: every
         # file present at that commit was linked by it (full-walk
         # commits link everything; scoped commits link their touched
         # files with carried files linked inductively), so a matching
@@ -361,23 +296,12 @@ def commit_warehouse(
             if not snapshot_enabled(p):
                 init_snapshot_log(p)
             table_versions[t] = _record_or_reuse(p, batch_id)
-        h = head_load(wh_dir)  # pointer-resolved: no O(#loads) listdir
+        h = log.head()
         n = (h if h is not None else 0) + 1
         entry = {"load": n, "tables": table_versions}
         if batch_id is not None:
             entry["batch_id"] = str(batch_id)
-        tmp = _load_path(wh_dir, n) + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(entry, f)
-        os.replace(tmp, _load_path(wh_dir, n))
-        if batch_id is not None:
-            # fast replay index, written AFTER the entry (see
-            # committed_load: the entry is the source of truth)
-            mtmp = _load_batch_marker(wh_dir, batch_id) + f".tmp.{os.getpid()}"
-            with open(mtmp, "w") as f:
-                json.dump({"batch_id": str(batch_id), "load": n}, f)
-            os.replace(mtmp, _load_batch_marker(wh_dir, batch_id))
-        _write_load_checkpoint(wh_dir, n)
+        log.append(n, entry, batch_id)
         return n
 
 
@@ -408,7 +332,7 @@ def vacuum_warehouse(
     """Bound warehouse history WITHOUT breaking any retained load: a
     bare per-table ``vacuum_versions`` is load-blind — it can drop a
     member version an older load entry still references, silently
-    turning ``read_warehouse(load)`` into an error (r11). This is the
+    turning ``read_warehouse(load)`` into an error. This is the
     load-aware form: drop load entries beyond ``keep_last_loads``,
     then vacuum every member table that appears in any entry with
     ``keep_versions`` = every version the SURVIVING loads reference —
@@ -418,8 +342,8 @@ def vacuum_warehouse(
     ``{table: vacuum counts}`` plus a ``"__loads__"`` entry.
 
     ``require_exported`` maps member table → change-feed directory
-    (the warehouse form of ``vacuum_versions(require_exported=...)``,
-    r11 verdict #4): a load-aware vacuum must not drop a member
+    (the warehouse form of ``vacuum_versions(require_exported=...)``):
+    a load-aware vacuum must not drop a member
     version whose CDC diff was never exported — that silently
     truncates the replication trail ``foreach_batch_apply_change_feed``
     consumers depend on. EVERY mapped member is pre-flighted with a
@@ -427,19 +351,15 @@ def vacuum_warehouse(
     dropped, so the vacuum either proceeds everywhere or refuses
     atomically with a per-table report — a mid-loop raise would leave
     some members vacuumed and the load entries half-dropped."""
-    from weatherflow_spark.operators.commit import dataset_lock
     from weatherflow_spark.operators.snaplog import vacuum_versions
 
     if keep_last_loads < 1:
         raise ValueError("keep_last_loads must be >= 1")
     with dataset_lock(_wh_lock_base(wh_dir)):
-        ls = warehouse_loads(wh_dir)
+        log = _loads(wh_dir)
+        ls = log.numbers()
         drop = ls[:-keep_last_loads]
         keep = [n for n in ls if n not in drop]
-        if keep:
-            # refresh the head pointer while the full listing is in
-            # hand — heals any pre-r13 or lagging pointer (r13)
-            _write_load_checkpoint(wh_dir, keep[-1])
         referenced: dict[str, set[int]] = {}
         for n in keep:
             for t, v in load_entry(wh_dir, n)["tables"].items():
@@ -450,7 +370,7 @@ def vacuum_warehouse(
         for n in drop:
             for t in load_entry(wh_dir, n)["tables"]:
                 referenced.setdefault(t, set())
-        # Feed-export pre-flight (r11 verdict #4): dry-run EVERY
+        # Feed-export pre-flight: dry-run EVERY
         # member BEFORE the first mutation — same decision logic as
         # the real vacuum (keep_versions included), raising with a
         # per-table report while nothing has been dropped yet. The
@@ -458,8 +378,8 @@ def vacuum_warehouse(
         # as allowed_drop: pin releases are lock-free, so a drop set
         # recomputed later could have grown past what the pre-flight
         # cleared and re-raise mid-loop with entries half-dropped —
-        # exactly the state the pre-flight exists to exclude (r12
-        # review). Newly droppable versions wait for the next vacuum.
+        # exactly the state the pre-flight exists to exclude. Newly
+        # droppable versions wait for the next vacuum.
         bad: dict[str, str] = {}
         frozen_drop: dict[str, set[int]] = {}
         for t, keep_vs in sorted(referenced.items()):
@@ -481,29 +401,7 @@ def vacuum_warehouse(
                 f"not fully exported for {len(bad)} member table(s) "
                 f"[{details}]"
             )
-        # GC batch markers BEFORE removing entries (a crash in
-        # between then leaves an entry without a marker — the scan
-        # fallback still resolves it — never a marker without an
-        # entry, which the fast path additionally guards against).
-        # "not in keep" self-heals strays; guarded so a no-op vacuum
-        # pays nothing (r11 review).
-        kept = set(keep)
-        if drop:
-            for nme in os.listdir(_wh_log_dir(wh_dir)):
-                if nme.startswith("B_") and nme.endswith(".json"):
-                    full = os.path.join(_wh_log_dir(wh_dir), nme)
-                    try:
-                        with open(full) as f:
-                            ml = int(json.load(f)["load"])
-                    except (OSError, ValueError, KeyError):
-                        continue
-                    if ml not in kept:
-                        try:
-                            os.remove(full)
-                        except OSError:
-                            pass
-        for n in drop:
-            os.remove(_load_path(wh_dir, n))
+        log.drop(drop, keep)
         out: dict[str, dict[str, int]] = {
             "__loads__": {"dropped_loads": len(drop)}
         }
@@ -526,9 +424,8 @@ def export_warehouse_feed(
     bundle_dir: str,
     key_cols: dict[str, list[str]],
 ) -> dict[str, int]:
-    """Per-LOAD multi-table replication bundle (E95 × E97, r12 —
-    VERDICT r11 #7): after E97 the natural replication unit is the
-    logical LOAD, not the single table — a replica that applies
+    """Per-LOAD multi-table replication bundle: with a load log the
+    natural replication unit is the logical LOAD, not the single table — a replica that applies
     table feeds independently can pair fact-at-load-N with
     dim-at-load-M, exactly the mixed cut the warehouse log exists to
     prevent. The bundle is (a) one standard change feed per member
@@ -587,34 +484,19 @@ def export_warehouse_feed(
         (lambda t=t, mv=max_v: _export_one(t, mv))
         for t, max_v in sorted(referenced.items())
     ])
-    loads_dir = os.path.join(bundle_dir, "loads")
-    os.makedirs(loads_dir, exist_ok=True)
+    bundle = _bundle(bundle_dir)
+    os.makedirs(bundle.dir, exist_ok=True)
     n_new = 0
     for n, e in sorted(entries.items()):
-        dst = os.path.join(loads_dir, f"L{n:06d}.json")
-        if os.path.exists(dst):
+        if os.path.exists(bundle.path(n)):
             continue  # immutable once written
-        tmp = dst + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(e, f)
-        os.replace(tmp, dst)
+        write_json_atomic(bundle.path(n), e)
         n_new += 1
     return {"loads_exported": n_new, "tables": len(referenced)}
 
 
 def bundle_loads(bundle_dir: str) -> list[int]:
-    try:
-        names = os.listdir(os.path.join(bundle_dir, "loads"))
-    except OSError:
-        return []
-    out = []
-    for n in names:
-        if n.startswith("L") and n.endswith(".json"):
-            try:
-                out.append(int(n[1:-5]))
-            except ValueError:
-                continue
-    return sorted(out)
+    return _bundle(bundle_dir).numbers()
 
 
 def apply_warehouse_feed(
@@ -640,7 +522,7 @@ def apply_warehouse_feed(
       the newest load are excluded (they belong to no load yet).
     - **schema fail-fast + evolution**: per-version column stamps are
       checked before each table's merge; evolved columns replicate
-      via ``merge_schema`` (E94 × E95).
+      via ``merge_schema``.
     - **exactly-once**: replayed loads short-circuit on the replica's
       load log BEFORE touching any table.
 
@@ -653,24 +535,24 @@ def apply_warehouse_feed(
     )
     from weatherflow_spark.operators.upsert import apply_changes
 
-    ls = bundle_loads(bundle_dir)
+    bundle = _bundle(bundle_dir)
+    ls = bundle.numbers()
     if not ls:
         raise ValueError(f"{bundle_dir}: no load entries in bundle")
     init_warehouse_log(replica_wh)
     applied: list[int] = []
     prev: dict[str, int] = {}
     # markers are immutable for the apply's duration: list each
-    # table's feed once, not per (load, table) (r12 review #3)
+    # table's feed once, not per (load, table)
     have_cache: dict[str, set[int]] = {}
     for n in ls:
-        with open(os.path.join(bundle_dir, "loads", f"L{n:06d}.json")) as f:
+        with open(bundle.path(n)) as f:
             entry = json.load(f)
         tables = entry["tables"]
         if committed_load(replica_wh, f"whfeed:{n}") is not None:
             # update, never reassign: a member absent from THIS load
             # keeps its watermark, or the next load containing it
-            # would re-apply its whole feed history from version 0
-            # (r12 review).
+            # would re-apply its whole feed history from version 0.
             prev.update({t: int(v) for t, v in tables.items()})
             continue
         def _apply_table(t: str) -> None:
@@ -683,11 +565,11 @@ def apply_warehouse_feed(
             # partial feed partition): applying up to a LOWER version
             # and then recording the load would pin the divergence
             # forever — the exactly-once key makes the rerun a no-op
-            # even after the bundle completes (r12 review). The check
+            # even after the bundle completes. The check
             # keys on the feed's COMMIT MARKERS, not data rows — a
             # compaction version (empty logical diff) or an
             # empty-at-seed table legitimately exports a version with
-            # zero rows (r12 review #2).
+            # zero rows.
             if t not in have_cache:
                 have_cache[t] = exported_feed_versions(feed_dir)
             have = have_cache[t]
@@ -710,7 +592,7 @@ def apply_warehouse_feed(
                 .agg(F.count(F.lit(1)).alias("n"))
                 .collect()
             }
-            # partial-copy detection (r12 review #3): a sorted-order
+            # partial-copy detection: a sorted-order
             # copier lands '_WF_EXPORTED' before 'part-*', so a marker
             # alone cannot vouch for the data; the marker's stamped
             # row count must match what the bundle actually holds
@@ -788,7 +670,7 @@ def maintain_warehouse(
     keep_last_loads: int | None = None,
     batch_id: object | None = None,
 ) -> dict:
-    """BETWEEN-LOADS warehouse maintenance (E103): the one entry point
+    """BETWEEN-LOADS warehouse maintenance: the one entry point
     a streaming warehouse schedules after every N micro-batch loads,
     composing the engine's maintenance primitives in the only order
     that preserves every retention contract:
@@ -801,9 +683,9 @@ def maintain_warehouse(
        ``sort_cols`` maps a member to its clustering column so the
        rewrite (including a DV fold) PRESERVES the member's
        range-sorted file layout instead of collapsing each partition
-       to one wide-min/max file (r13 verdict #2). ``recluster=True``
-       (r14) additionally plans partitions whose live files OVERLAP
-       on the member's sort column as offenders (the clustering-decay
+       to one wide-min/max file. ``recluster=True`` additionally
+       plans partitions whose live files OVERLAP on the member's
+       sort column as offenders (the clustering-decay
        class — append traffic decays file skipping long before file
        counts trip ``max_files``); it applies to exactly the members
        mapped in ``sort_cols``, since a re-sort-less rewrite cannot
@@ -904,8 +786,8 @@ def restore_warehouse_load(
     partition_cols: dict[str, list[str]] | None = None,
     batch_id: object | None = None,
 ) -> dict:
-    """RESTORE the whole warehouse to an earlier LOAD as a new load
-    (E104 × E97): every member rolls back to the version the target
+    """RESTORE the whole warehouse to an earlier LOAD as a new load:
+    every member rolls back to the version the target
     load entry recorded — each an O(changed partitions) CDC restore
     (:func:`~weatherflow_spark.operators.upsert.restore_version`),
     never a table rewrite — and ONE new load entry pairs the restored
