@@ -132,7 +132,6 @@ STILL_TAGGED = {
     "curate.py",
     "io.py",
     "jobs.py",
-    "operators/commit.py",
     "operators/indexing.py",
     "operators/ivm.py",
     "operators/layout.py",
@@ -140,7 +139,6 @@ STILL_TAGGED = {
     "operators/sig_index.py",
     "operators/snaplog.py",
     "operators/star.py",
-    "operators/upsert.py",
     "operators/vec_index.py",
     "operators/zorder.py",
     "plans/__init__.py",

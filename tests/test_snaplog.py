@@ -726,10 +726,13 @@ def test_batch_markers_collision_proof_and_crash_safe(spark, tmpdir, snap_mode):
     v2 = record_commit(path, batch_id="8_1")
     assert v2 == v1 + 1  # a real new version, not a skipped replay
 
-    # crash window: marker lost after the entry landed
+    # crash window: the entry landed, its marker and the head pointer
+    # did not
     v3 = record_commit(path, batch_id="later")
     for m in glob.glob(path + ".__snaplog/b_later_*.json"):
         _os.unlink(m)
+    with open(path + ".__snaplog/_last_checkpoint", "w") as f:
+        f.write('{"version": %d}' % v2)
     assert committed_batch_version(path, "later") == v3  # entry fallback
     assert record_commit(path, batch_id="later") == v3  # replay: no mint
     assert versions(path)[-1] == v3

@@ -124,11 +124,14 @@ def test_load_star_warehouse_is_one_transaction(spark, tmp_path):
 
 
 # Spark jobs one load of a small two-date batch into an existing
-# partitioned warehouse may run: five keyed merges (batch checkpoint,
-# key check, touched-partition collect, merge checkpoint, write) plus
-# the load commit. A change that brings back a rescan of the batch
-# exceeds it.
-STAR_LOAD_JOB_BUDGET = 55
+# partitioned warehouse may run: five keyed merges of ten jobs each,
+# two apiece (a shuffle or broadcast stage, then the action) for the
+# batch checkpoint, the key check, the touched-partition collect, the
+# merge checkpoint and the write. The merge's read of the table and the
+# load commit run none: the table's schema comes from its head
+# version's log entry. A change that brings back a rescan of the batch
+# or a schema inference exceeds it.
+STAR_LOAD_JOB_BUDGET = 50
 
 
 def _poll(spark, minute: int, stations: int = 20):

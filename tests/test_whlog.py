@@ -254,12 +254,17 @@ def test_batch_markers_and_recycled_id_scoping(spark, wh):
     assert commit_warehouse(wh, ["fact", "dim"], batch_id="q2:0") == 2
     assert warehouse_loads(wh) == [1, 2]
 
-    # marker index exists and resolves; losing it falls back to scan
+    # marker index exists and resolves; a crash that lost the newest
+    # load's marker and pointer falls back to reading that entry
     assert committed_load(wh, "q1:0") == 1
     markers = glob.glob(os.path.join(wh, ".__whlog", "B_q1_0_*.json"))
     assert len(markers) == 1
+    markers = glob.glob(os.path.join(wh, ".__whlog", "B_q2_0_*.json"))
     os.remove(markers[0])
-    assert committed_load(wh, "q1:0") == 1  # entry fallback
+    with open(os.path.join(wh, ".__whlog", "_last_load"), "w") as f:
+        f.write('{"load": 1}')
+    assert committed_load(wh, "q2:0") == 2  # entry fallback
+    assert commit_warehouse(wh, ["fact", "dim"], batch_id="q2:0") == 2
     assert commit_warehouse(wh, ["fact", "dim"], batch_id="q1:0") == 1
 
     # vacuum drops load 1 (and its markers); replay protection for

@@ -94,7 +94,12 @@ class NumberedLog:
       a marker ``<marker_prefix>_<id>_<hash>.json`` holding
       ``{"batch_id", number_key}`` indexes it. The entry is the source
       of truth: the marker is written after it, and a marker is
-      believed only while its entry exists."""
+      believed only while its entry exists.
+    - Every batch entry at or below the pointer has its marker: the
+      pointer is written after the marker, and a pointer that moves
+      past entries a crash left unmarked (see :meth:`_heal_markers`)
+      marks them first. So a batch id without a marker can only sit
+      above the pointer, and :meth:`batch_number` scans only there."""
 
     dir: str
     entry_prefix: str
@@ -161,9 +166,60 @@ class NumberedLog:
             self.dir, f"{self.marker_prefix}_{safe}_{digest}.json"
         )
 
+    def _marked(self, batch_id: object) -> int | None:
+        """The number the batch id's marker names, if that entry still
+        exists."""
+        try:
+            with open(self.marker(batch_id)) as f:
+                d = json.load(f)
+            n = int(d[self.number_key])
+        except (OSError, ValueError, KeyError, TypeError):
+            return None
+        if d.get("batch_id") == str(batch_id) and os.path.isfile(self.path(n)):
+            return n
+        return None
+
+    def _above_pointer(self) -> list[int]:
+        """The entries a pointer move has not yet covered: a forward
+        probe from the pointer, or every entry when there is none."""
+        n = self.pointed()
+        if n is None:
+            return self.numbers()
+        out = []
+        while os.path.isfile(self.path(n + 1)):
+            n += 1
+            out.append(n)
+        return out
+
+    def _read(self, n: int) -> dict | None:
+        try:
+            with open(self.path(n)) as f:
+                return json.load(f)
+        except (OSError, ValueError):
+            return None
+
+    def _heal_markers(self, upto: int) -> None:
+        """Write the missing marker of every batch entry above the
+        pointer and at or below ``upto``, before the pointer moves
+        past them. Costs nothing when the pointer is current."""
+        if not self.marker_prefix:
+            return
+        for n in self._above_pointer():
+            if n > upto:
+                break
+            e = self._read(n)
+            if e is None or e.get("batch_id") is None:
+                continue
+            if self._marked(e["batch_id"]) is None:
+                write_json_atomic(
+                    self.marker(e["batch_id"]),
+                    {"batch_id": e["batch_id"], self.number_key: n},
+                )
+
     def append(self, n: int, entry: dict, batch_id: object | None = None) -> None:
         """Write entry ``n``, then its batch marker, then the pointer.
         The caller holds the log's lock and sets ``entry["batch_id"]``."""
+        self._heal_markers(n - 1)
         write_json_atomic(self.path(n), entry)
         if batch_id is not None:
             write_json_atomic(
@@ -174,40 +230,32 @@ class NumberedLog:
 
     def batch_number(self, batch_id: object) -> int | None:
         """The entry a batch id committed, or None. The marker answers
-        in O(1) when its entry still exists; otherwise (a new id, a
-        marker lost in a crash, or a stale marker without its entry)
-        the retained entries are scanned newest first. Replay
-        protection therefore lasts exactly as long as the entry is
-        retained."""
+        a committed id; a missing marker is only possible for an entry
+        above the pointer (a crash before its marker), so only those
+        entries are read. A new id costs one marker probe plus the
+        forward probe, however long the log. Replay protection lasts
+        exactly as long as the entry is retained."""
+        n = self._marked(batch_id)
+        if n is not None:
+            return n
         raw = str(batch_id)
-        try:
-            with open(self.marker(batch_id)) as f:
-                d = json.load(f)
-            if d.get("batch_id") == raw and os.path.isfile(
-                self.path(int(d[self.number_key]))
-            ):
-                return int(d[self.number_key])
-        except (OSError, ValueError, KeyError):
-            pass
-        for n in reversed(self.numbers()):
-            try:
-                with open(self.path(n)) as f:
-                    e = json.load(f)
-            except (OSError, ValueError):
-                continue
-            if e.get("batch_id") == raw:
+        for n in reversed(self._above_pointer()):
+            e = self._read(n)
+            if e is not None and e.get("batch_id") == raw:
                 return n
         return None
 
     def drop(self, numbers: list[int], keep: list[int]) -> None:
         """Remove entries ``numbers``; ``keep`` is every entry that
         stays. Points the head pointer at ``keep[-1]`` (healing a
-        lagging one), removes every marker whose entry is not kept
-        (strays from earlier crashes too), then unlinks the entries —
-        markers first, so a crash leaves an entry without a marker
-        (the scan still finds it), never a marker without an entry.
-        The caller holds the log's lock."""
+        lagging one and its entries' markers), removes every marker
+        whose entry is not kept (strays from earlier crashes too),
+        then unlinks the entries. A crash in between leaves dropped
+        entries below the pointer without markers: their ids no longer
+        answer, as after a completed drop. The caller holds the log's
+        lock."""
         if keep:
+            self._heal_markers(keep[-1])
             write_json_atomic(self.pointer, {self.number_key: keep[-1]})
         if not numbers:
             return
@@ -258,11 +306,11 @@ def _lock_path(path: str) -> str:
 # Per-THREAD reentrancy: a writer that takes the lock for its whole
 # read-modify-write calls helpers (overwrite_partitions) that take it
 # again — the inner acquisition must not deadlock on our own lock.
-# Keyed by (lock path, thread ident), not lock path alone (r12
-# ADVICE): with in-process multithreading (ThreadPoolExecutor dim
-# merges in star.py lock DISTINCT paths, but nothing enforced that),
-# a path-only key let two threads writing the SAME dataset both pass
-# the "already ours" check and enter the critical section together.
+# Keyed by (lock path, thread ident), not lock path alone: with
+# in-process multithreading (ThreadPoolExecutor dim merges in star.py
+# lock DISTINCT paths, but nothing enforced that), a path-only key
+# would let two threads writing the SAME dataset both pass the
+# "already ours" check and enter the critical section together.
 # Cross-thread same-path acquisitions now fall through to the O_EXCL
 # file and block until the holder thread releases (the holder's own
 # pid is alive, so the waiter never expires it as dead).
@@ -314,7 +362,7 @@ def _holder_alive(lp: str) -> bool:
         # Host check BEFORE parsing the pid: a token whose second
         # field isn't an int (foreign format, pre-token writers) must
         # not fall through to "dead" — for anything not provably ours
-        # the heartbeat/age is the only safe signal (r9 review).
+        # the heartbeat/age is the only safe signal.
         if parts[0] != socket.gethostname():
             return True  # foreign holder: only the heartbeat can expire it
         pid = int(parts[1])
@@ -336,8 +384,8 @@ def dataset_lock(path: str, timeout: float = 60.0, stale_after: float = 3600.0):
     Acquisition is O_EXCL file creation (atomic on POSIX and HDFS-like
     stores). The lock file records a ``hostname pid nonce`` token: the
     pid-liveness fast path applies only to same-host holders (a
-    foreign host's live writer must never look dead locally — r8
-    ADVICE), a heartbeat thread refreshes the file's mtime every
+    foreign host's live writer must never look dead locally), a
+    heartbeat thread refreshes the file's mtime every
     ``stale_after/4`` so a live holder of ANY duration never ages
     into staleness, and release re-reads the file and unlinks only if
     the token is still ours — a broken-then-superseded holder cannot
@@ -401,7 +449,7 @@ def dataset_lock(path: str, timeout: float = 60.0, stale_after: float = 3600.0):
         while not stop.wait(interval):
             try:
                 # Verify the file still carries OUR token before each
-                # refresh (r9 ADVICE): a holder that resumes after its
+                # refresh: a holder that resumes after its
                 # stale lock was broken would otherwise refresh the
                 # SUCCESSOR'S lock file mtime — if that successor then
                 # crashes, its lock can't age into staleness until the
@@ -423,9 +471,9 @@ def dataset_lock(path: str, timeout: float = 60.0, stale_after: float = 3600.0):
         # Release ONLY our own acquisition: if a waiter broke this
         # lock as stale and re-acquired, the file now carries ITS
         # token — unlinking it would let a third writer in while two
-        # are still committing (the r8 ADVICE lost-update window).
+        # are still committing (a lost-update window).
         # A name-based unlink cannot be made atomic with the token
-        # read (r9 review); we shrink the residual window to
+        # read; we shrink the residual window to
         # practical zero by also requiring our heartbeat to still be
         # LIVE (fresh mtime): a holder that was suspended past
         # stale_after — the only way it can have been broken — skips
@@ -493,7 +541,7 @@ def escape_path_name(s: str) -> str:
     emptied-partition rmtree paths all match the directory names
     Spark actually writes — a raw ``c=va:lue`` string matches nothing
     on disk and a scoped commit would silently re-record the previous
-    state (r10 ADVICE)."""
+    state."""
     return "".join(
         f"%{ord(c):02X}" if c in _PATH_ESCAPE_CHARS else c for c in s
     )
@@ -505,8 +553,8 @@ def partition_key(partition_cols: list[str] | None, values: tuple) -> str:
     hive-escaped via :func:`escape_path_name`; NULL **and the empty
     string** → ``__HIVE_DEFAULT_PARTITION__``, matching Spark's
     getPartitionPathString, which routes both to the default
-    partition — a bare ``c=`` key would match nothing on disk, r11
-    review), or ``__TABLE__`` for an unpartitioned table."""
+    partition — a bare ``c=`` key would match nothing on disk), or
+    ``__TABLE__`` for an unpartitioned table."""
     if not partition_cols:
         return "__TABLE__"
     return "/".join(
@@ -586,7 +634,7 @@ def unescape_path_name(s: str) -> str:
         # int(s, 16) also tolerates whitespace/sign/unicode-digit
         # forms ('% 4', '%+4', '%٤٤') that Spark rejects, so decoding
         # them here would break the byte-exact round trip that
-        # compact_partitions relies on (r12 ADVICE).
+        # compact_partitions relies on.
         if c == "%" and i + 3 <= len(s) and s[i + 1] in hexd and s[i + 2] in hexd:
             out.append(chr(int(s[i + 1 : i + 3], 16)))
             i += 3

@@ -203,6 +203,7 @@ def _manifest_rewrite(
         dataset_snapshot,
     )
     from weatherflow_spark.operators.snaplog import record_commit
+    from weatherflow_spark.operators.upsert import _data_schema
 
     if snap0 is None:
         # Callers MUST take the token BEFORE resolving the source's
@@ -262,7 +263,10 @@ def _manifest_rewrite(
                     size = os.path.getsize(full)
                     os.rename(full, dst)
                     moved.append((rel, size))
-            record_commit(path, files=sorted(moved))
+            record_commit(
+                path, files=sorted(moved),
+                schema=_data_schema(out, partition_cols),
+            )
         return len(moved)
     finally:
         # Unconditional: success leaves only empty dirs in tmp; every
@@ -438,7 +442,7 @@ def compact(
             )
 
             if snapshot_enabled(path):
-                record_commit(path)
+                record_commit(path, schema=out.schema)
     except (CompactionConflict, DatasetLockTimeout):
         raise
     except Exception as e:
@@ -628,9 +632,12 @@ def rewrite_widen(
                 record_commit,
                 snapshot_enabled,
             )
+            from weatherflow_spark.operators.upsert import _data_schema
 
             if snapshot_enabled(path):
-                record_commit(path)
+                record_commit(
+                    path, schema=_data_schema(out, partition_cols)
+                )
     finally:
         if not swapped:
             shutil.rmtree(tmp, ignore_errors=True)

@@ -11,7 +11,8 @@ for the engine's parquet layout:
 
 - **Commit log** (``<path>.__snaplog/v000001.json`` …): one entry per
   content commit, recording the dataset's complete data-file set
-  (relative path + size) at that commit. An
+  (relative path + size) and its data-file schema at that commit, so
+  version reads never run Spark's schema inference. An
   :class:`~weatherflow_spark.operators.commit.NumberedLog` appended
   under the dataset lock, so versions are a gap-free monotone
   sequence and never interleave.
@@ -72,6 +73,7 @@ import shutil
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from weatherflow_spark.operators.commit import (
     NumberedLog,
@@ -211,6 +213,143 @@ def _segment_files(path: str, name: str) -> list[tuple[str, int]]:
         return [tuple(x) for x in json.load(f)["files"]]
 
 
+def _schema_dir(path: str) -> str:
+    return os.path.join(_log_dir(path), "schema")
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    """``dt`` with every field and element nullable, as Spark reads any
+    parquet file back."""
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _merge_types(left: DataType, right: DataType) -> DataType:
+    """Spark's footer-merge rule (``StructType.merge``): struct fields
+    match by case-insensitive name, keep ``left``'s order and append
+    ``right``'s new fields; arrays and maps merge element-wise. Where
+    Spark would refuse two leaf types, ``right`` (the newer files') wins."""
+    if isinstance(left, StructType) and isinstance(right, StructType):
+        rfields = {f.name.lower(): f for f in right.fields}
+        lnames = {f.name.lower() for f in left.fields}
+        fields = [
+            StructField(
+                f.name,
+                _merge_types(f.dataType, rfields[f.name.lower()].dataType)
+                if f.name.lower() in rfields
+                else f.dataType,
+                True,
+                f.metadata,
+            )
+            for f in left.fields
+        ]
+        fields += [f for f in right.fields if f.name.lower() not in lnames]
+        return StructType(fields)
+    if isinstance(left, ArrayType) and isinstance(right, ArrayType):
+        return ArrayType(_merge_types(left.elementType, right.elementType), True)
+    if isinstance(left, MapType) and isinstance(right, MapType):
+        return MapType(
+            _merge_types(left.keyType, right.keyType),
+            _merge_types(left.valueType, right.valueType),
+            True,
+        )
+    return right
+
+
+def _write_schema(path: str, schema: StructType) -> str:
+    """Persist ``schema`` as an immutable content-addressed file under
+    ``<log>/schema/`` and return its name; versions with one schema
+    share one file."""
+    import hashlib
+
+    content = schema.json()
+    name = "t_" + hashlib.sha256(content.encode()).hexdigest()[:20] + ".json"
+    full = os.path.join(_schema_dir(path), name)
+    if not os.path.exists(full):
+        os.makedirs(_schema_dir(path), exist_ok=True)
+        write_atomic(full, content)
+    return name
+
+
+def _entry_schema(path: str, entry: dict) -> StructType:
+    """The version's data-file schema: what a mergeSchema read of its
+    files infers for the footer columns. Partition columns are not in
+    it; Spark types them from the directory names at read time."""
+    name = entry.get("schema")
+    if name is None:
+        raise ValueError(
+            f"{path}: version {entry.get('version')} records no schema; "
+            "its log predates schema-carrying entries — re-seed it"
+        )
+    with open(os.path.join(_schema_dir(path), name)) as f:
+        return StructType.fromJson(json.load(f))
+
+
+def _infer_data_schema(path: str, rels: list[str]) -> StructType:
+    """The merged footer schema of ``rels`` (one Spark job). The leaf
+    files are read without a basePath, so no partition column is
+    derived."""
+    if not rels:
+        return StructType([])
+    spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
+    return (
+        spark.read.option("mergeSchema", "true")
+        .parquet(*[os.path.join(path, r) for r in rels])
+        .schema
+    )
+
+
+def _keeps_files(
+    path: str, prev_segs: dict[str, str], segments: dict[str, str]
+) -> bool:
+    """True when the version listing ``segments`` still lists a file of
+    the version listing ``prev_segs``."""
+    for k, name in segments.items():
+        old = prev_segs.get(k)
+        if old is None:
+            continue
+        if old == name or {r for r, _ in _segment_files(path, old)} & {
+            r for r, _ in _segment_files(path, name)
+        }:
+            return True
+    return False
+
+
+def _version_schema(
+    path: str,
+    prev: dict | None,
+    segments: dict[str, str],
+    written: StructType | None,
+) -> str:
+    """The schema file name for a new version listing ``segments``.
+    ``written`` is the data schema of the files this commit wrote; it
+    merges into the previous version's schema when the new version
+    keeps some of that version's files, because their footers still
+    count. A writer that knows no schema gets the one its files infer,
+    once, here."""
+    if written is None:
+        rels = [
+            rel for name in segments.values() for rel, _ in _segment_files(path, name)
+        ]
+        return _write_schema(path, _infer_data_schema(path, rels))
+    schema = _as_nullable(written)
+    if (
+        prev is not None
+        and prev.get("schema") is not None
+        and _keeps_files(path, _entry_segments(path, prev), segments)
+    ):
+        schema = _merge_types(_entry_schema(path, prev), schema)
+    return _write_schema(path, schema)
+
+
 # Write-once entry cache: entries land atomically and are never
 # modified (vacuum deletes whole files), so
 # an unchanged (mtime_ns, size, inode) signature proves a cached
@@ -307,6 +446,7 @@ def _read_files_with_dv(
     base: str,
     rels: list[str],
     dv: dict[str, list[str]],
+    schema: StructType,
 ) -> DataFrame:
     """Version read with deletion vectors applied: files in covered
     directories anti-join their DV keys (broadcast — DVs are victim
@@ -325,11 +465,12 @@ def _read_files_with_dv(
             plain.append(rel)
     branches = []
     if plain:
-        branches.append(_read_retained(spark, base, plain))
+        branches.append(_read_retained(spark, base, plain, schema))
     for names, group in sorted(by_dvset.items()):
         branches.append(
             _apply_dvs(
-                spark, path, _read_retained(spark, base, group), list(names)
+                spark, path, _read_retained(spark, base, group, schema),
+                list(names),
             )
         )
     out = branches[0]
@@ -473,7 +614,10 @@ def record_dv_commit(
         # not one per delete since the last fold
         _merge_dir_dvs(path, dv, dirkeys)
         n = head + 1
-        entry: dict = {"version": n, "segments": segments, "dv": dv}
+        entry: dict = {
+            "version": n, "segments": segments, "schema": prev.get("schema"),
+            "dv": dv,
+        }
         if batch_id is not None:
             entry["batch_id"] = str(batch_id)
         _log(path).append(n, entry, batch_id)
@@ -728,6 +872,7 @@ def scan_version(
         predicates = [(col, lo, hi)]
     version, files, base = _resolve_version(path, version)
     entry = _load_entry(path, version)
+    schema = _entry_schema(path, entry)
     stats = _entry_stats(path, entry)
     dv = _entry_dv(entry)
     norm: list[tuple] = []
@@ -764,14 +909,16 @@ def scan_version(
     if not kept:
         # empty selection: preserve the schema via an always-false
         # filter over one file (cheap — footer only)
-        df = _read_retained(spark, base, [files[0][0]]).where(F.lit(False))
+        df = _read_retained(spark, base, [files[0][0]], schema).where(
+            F.lit(False)
+        )
         return df, {"files_total": len(files), "files_scanned": 0}
     # Deletion vectors apply to the PRUNED read too — a skipped scan
     # must never resurrect DV-deleted rows its full-read twin hides.
     df = (
-        _read_files_with_dv(spark, path, base, kept, dv)
+        _read_files_with_dv(spark, path, base, kept, dv, schema)
         if dv
-        else _read_retained(spark, base, kept)
+        else _read_retained(spark, base, kept, schema)
     )
     return df, {"files_total": len(files), "files_scanned": len(kept)}
 
@@ -813,15 +960,16 @@ def _resolve_version(
     return version, files, base
 
 
-def _read_retained(spark: SparkSession, base: str, rels: list[str]) -> DataFrame:
-    # mergeSchema: an E94 add-column evolution leaves untouched
-    # partitions' pre-evolution footers in the version's file list
-    # forever — a sampled-footer read would silently drop the evolved
-    # column from time-travel results (r10 review). Merging is
-    # footer-metadata work over an explicitly bounded file list.
+def _read_retained(
+    spark: SparkSession, base: str, rels: list[str], schema: StructType
+) -> DataFrame:
+    # The version's recorded schema covers every footer in its file
+    # list, so files written before an add-column evolution read the
+    # new column as NULL, and no Spark job infers it. Partition columns
+    # are typed from the directory names under basePath.
     return (
-        spark.read.option("basePath", base)
-        .option("mergeSchema", "true")
+        spark.read.schema(schema)
+        .option("basePath", base)
         .parquet(*[os.path.join(base, r) for r in rels])
     )
 
@@ -922,6 +1070,15 @@ def stored_dirstamp(path: str) -> dict[str, int] | None:
         return None
 
 
+def live_is_head(path: str) -> bool:
+    """True when the live tree provably holds exactly the head
+    version's files: the stamp the head's commit left still matches
+    the tree's directory fingerprint (O(directories), no file stat).
+    False for manifest-mode tables, which keep no stamp."""
+    stamp = stored_dirstamp(path)
+    return stamp is not None and stamp == dir_fingerprint(path)
+
+
 def entry_files(path: str, version: int) -> list[tuple[str, int]]:
     """The COMPLETE (relpath, size) set a committed version recorded,
     gathered from the entry's segments."""
@@ -989,6 +1146,7 @@ def record_commit(
     scope: list[str] | None = None,
     batch_id: object | None = None,
     stamp_basis=_STAMP_SELF,
+    schema: StructType | None = None,
 ) -> int:
     """Record the dataset's CURRENT file set as the next version and
     retain every NEW file. Runs under the dataset lock (reentrant —
@@ -1024,6 +1182,12 @@ def record_commit(
     minted a version (a re-delivered foreachBatch micro-batch), no
     new version is created and the recorded one is returned —
     exactly-once version history under at-least-once delivery.
+
+    Every entry names its version's data-file schema, which readers
+    use instead of inferring one. ``schema`` is the data schema
+    (partition columns excluded) of the files this commit wrote; a
+    commit without it infers the schema from the version's files,
+    which costs one Spark job.
     """
     if not snapshot_enabled(path):
         raise ValueError(
@@ -1139,7 +1303,12 @@ def record_commit(
             except OSError:
                 shutil.copy2(src, dst)  # cross-device fallback
         n = (head if head is not None else 0) + 1
-        entry = {"version": n, "segments": segments}
+        prev_entry = _load_entry(path, head) if head is not None else None
+        entry = {
+            "version": n,
+            "segments": segments,
+            "schema": _version_schema(path, prev_entry, segments, schema),
+        }
         if head is not None:
             # Deletion-vector carry: a directory whose segment NAME is
             # unchanged (content-addressed — identical file list) was
@@ -1149,7 +1318,6 @@ def record_commit(
             # (read_version / read_live / _read_and_evolve), so the
             # delete is materialized in the new files and the DV must
             # drop, or re-inserted keys would be wrongly hidden.
-            prev_entry = _load_entry(path, head)
             prev_dv = _entry_dv(prev_entry)
             if prev_dv:
                 prev_segs = _entry_segments(path, prev_entry)
@@ -1361,10 +1529,12 @@ def read_version(
         version = version_as_of(path, as_of)
     version, files, base = _resolve_version(path, version)
     rels = [rel for rel, _ in files]
-    dv = _entry_dv(_load_entry(path, version))
+    entry = _load_entry(path, version)
+    schema = _entry_schema(path, entry)
+    dv = _entry_dv(entry)
     if dv:
-        return _read_files_with_dv(spark, path, base, rels, dv)
-    return _read_retained(spark, base, rels)
+        return _read_files_with_dv(spark, path, base, rels, dv, schema)
+    return _read_retained(spark, base, rels, schema)
 
 
 def read_live(spark: SparkSession, path: str) -> DataFrame:
@@ -1914,30 +2084,37 @@ def vacuum_versions(
         referenced: set[str] = set()
         referenced_segs: set[str] = set()
         referenced_dv: set[str] = set()
+        referenced_schemas: set[str] = set()
         for v in keep:
             entry = _load_entry(path, v)
             referenced_segs.update(_entry_segments(path, entry).values())
+            referenced_schemas.add(entry.get("schema"))
             referenced.update(rel for rel, _ in entry_files(path, v))
             for names in _entry_dv(entry).values():
                 referenced_dv.update(names)
         # Replay protection intentionally ends with retention (see
         # committed_batch_version).
         _log(path).drop(drop, keep)
-        # GC segment files no surviving entry references (dropped
-        # versions' exclusive segments, plus orphans from crashed
-        # commits — a segment written before its entry's rename is
+        # GC segment and schema files no surviving entry references
+        # (dropped versions' exclusive ones, plus orphans from crashed
+        # commits — a file written before its entry's rename is
         # garbage by definition). Runs under the same dataset lock as
         # every committer, so an in-flight commit can't lose its
-        # not-yet-referenced segments.
-        try:
-            for nme in os.listdir(_seg_dir(path)):
-                if nme.startswith("s_") and nme not in referenced_segs:
+        # not-yet-referenced files.
+        for d, live in (
+            (_seg_dir(path), referenced_segs),
+            (_schema_dir(path), referenced_schemas),
+        ):
+            try:
+                names = os.listdir(d)
+            except OSError:
+                continue
+            for nme in names:
+                if nme.endswith(".json") and nme not in live:
                     try:
-                        os.unlink(os.path.join(_seg_dir(path), nme))
+                        os.unlink(os.path.join(d, nme))
                     except OSError:
                         pass
-        except OSError:
-            pass
         # GC deletion-vector datasets no surviving entry references
         # (folded by a later rewrite/compaction, or orphaned by a
         # crashed delete). Same lock as the committers, so an

@@ -29,35 +29,45 @@ import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from weatherflow_spark.operators.caching import release_checkpoint
+
+
+def _data_schema(df: DataFrame, partition_cols: list[str] | None) -> StructType:
+    """The schema of the data files a write of ``df`` leaves: its
+    columns minus the partition columns, which live in directory
+    names."""
+    part = set(partition_cols or [])
+    return StructType([f for f in df.schema.fields if f.name not in part])
 
 
 def _record_snapshot(
     path: str,
     scope: list[str] | None = None,
     batch_id: object | None = None,
+    schema: StructType | None = None,
 ) -> None:
-    """Versioned tables (E90, opt-in): EVERY content commit — through
-    the dynamic-overwrite choke point, the unpartitioned full
-    overwrites, AND the table-seed first writes (r9 ADVICE: the seed
-    and unpartitioned branches used to bypass this, so snapshot-enabled
-    unpartitioned tables silently got no versions and a full overwrite
-    made the old state unrecoverable) — lands in the snapshot log.
-    No-op unless init_snapshot_log ran for this dataset.
+    """Versioned tables (opt-in): EVERY content commit — through the
+    dynamic-overwrite choke point, the unpartitioned full overwrites,
+    AND the table-seed first writes — lands in the snapshot log, or a
+    full overwrite would make the old state unrecoverable. No-op
+    unless init_snapshot_log ran for this dataset.
 
     ``scope`` (hive partition dirs, ``commit.partition_key`` form) is
     the touched-slice hint: partitioned commits pass the partitions
     they may have changed so the version listing walks only that
     slice and carries the rest from the previous entry — O(touched
-    files) per micro-batch commit, never a full-tree walk."""
+    files) per micro-batch commit, never a full-tree walk. ``schema``
+    is the data schema of what the commit wrote
+    (:func:`~weatherflow_spark.operators.snaplog.record_commit`)."""
     from weatherflow_spark.operators.snaplog import (
         record_commit,
         snapshot_enabled,
     )
 
     if snapshot_enabled(path):
-        record_commit(path, scope=scope, batch_id=batch_id)
+        record_commit(path, scope=scope, batch_id=batch_id, schema=schema)
 
 
 def _manifest_mode(path: str) -> bool:
@@ -86,8 +96,6 @@ def _manifest_overwrite_partitions(
     the dataset lock; superseded files stay on disk for time travel
     until :func:`~weatherflow_spark.operators.snaplog.
     vacuum_versions` sweeps them."""
-    import json
-
     from weatherflow_spark.operators.commit import (
         check_and_bump_versions,
         dataset_lock,
@@ -103,7 +111,7 @@ def _manifest_overwrite_partitions(
         all_replaced = sorted(set(keys) | set(replaced_keys))
         head = head_version(path)  # pointer-resolved: no per-commit listdir
         if head is None and _walk_data_files(path):
-            # BEFORE the physical append (r11 review #3): raising
+            # BEFORE the physical append: raising
             # after it would strand the batch's files in the live
             # tree, where the error's own recovery step (a full-walk
             # seed record_commit) would list them as live alongside
@@ -129,6 +137,7 @@ def _manifest_overwrite_partitions(
             path,
             files=carried + new_files,
             batch_id=snapshot_batch_id,
+            schema=_data_schema(df, partition_cols),
         )
 
 
@@ -160,6 +169,7 @@ def _manifest_full_replace(
             path,
             files=sorted(after - before),
             batch_id=snapshot_batch_id,
+            schema=merged.schema,
         )
 
 
@@ -178,7 +188,7 @@ def overwrite_partitions(
     untouched. Idempotent: re-running the same batch rewrites the
     same partitions to the same content.
 
-    Version choke point (r9 review): EVERY content writer that goes
+    Version choke point: EVERY content writer that goes
     through this helper — keyed upserts, CDC applies, rollup refresh
     and late-merge — bumps the touched partitions' versions in the
     dataset's manifest here, under the same lock as the write. A CAS
@@ -201,8 +211,8 @@ def overwrite_partitions(
         if touched_keys is not None
         else _touched_keys(df, partition_cols)[1]
     )
-    # Cluster the batch by its partition values before the write
-    # (r12): a dynamic overwrite otherwise emits one file per
+    # Cluster the batch by its partition values before the write:
+    # a dynamic overwrite otherwise emits one file per
     # (upstream task × touched partition) — a 32-task batch touching
     # 32 date partitions writes ~1000 tiny files, and every later
     # scoped read, snapshot walk, and manifest entry pays for them
@@ -211,7 +221,7 @@ def overwrite_partitions(
     # them). A genuinely huge single partition lands in one task —
     # that's compaction's resize job, not the merge's.
     # ``presorted`` callers (the clustering-preserving fold,
-    # layout.compact_partitions sort_col — r13 verdict #2) have
+    # layout.compact_partitions sort_col) have
     # already range-arranged the batch's task layout so each task
     # writes one range-disjoint sorted file; the one-file-per-
     # partition clustering here would collapse that back to a single
@@ -232,13 +242,11 @@ def overwrite_partitions(
         return
 
     # The dynamic-overwrite mode rides on the WRITER as a data-source
-    # option, not a session-conf mutation (r12): the former global
-    # set/restore made concurrent merges into DIFFERENT tables unsafe
-    # — one thread's restore-to-static could land while another's
-    # write was still planning, silently turning its scoped overwrite
-    # into a whole-table replace. Per-writer scoping removes the race
-    # entirely (and the engine no longer mutates shared session state
-    # inside its hottest choke point).
+    # option, not a session-conf mutation: a global set/restore makes
+    # concurrent merges into DIFFERENT tables unsafe — one thread's
+    # restore-to-static could land while another's write was still
+    # planning, silently turning its scoped overwrite into a
+    # whole-table replace.
     #
     # The advisory commit lock serializes this write against a
     # concurrent compaction's validate-and-swap (commit.py): a
@@ -254,9 +262,12 @@ def overwrite_partitions(
         # NOT finished at this point (apply_changes with emptied
         # partitions still to rmtree) defer the version until the
         # live tree matches the logical result — otherwise the
-        # head snapshot would resurrect deleted rows (r9 ADVICE).
+        # head snapshot would resurrect deleted rows.
         if record_snapshot:
-            _record_snapshot(path, scope=keys, batch_id=snapshot_batch_id)
+            _record_snapshot(
+                path, scope=keys, batch_id=snapshot_batch_id,
+                schema=_data_schema(df, partition_cols),
+            )
 
 
 def upsert_by_key(
@@ -281,7 +292,7 @@ def upsert_by_key(
     Deterministic given deterministic keys: re-running the same batch
     is a no-op on content.
 
-    Conflict detection (r9): every commit bumps the touched
+    Conflict detection: every commit bumps the touched
     partitions' versions in the dataset's manifest
     (``commit.partition_versions``). A caller whose batch was
     COMPUTED from a read of the table passes the versions it read as
@@ -337,8 +348,8 @@ def _require_unique_keys(
     — a silently key-duplicated table, the exact corruption the keyed
     upsert exists to prevent. NULL keys are refused by the same
     check: the anti-join is null-UNSAFE, so a NULL-key batch row
-    would never match an existing NULL-key row and would duplicate it
-    (r10 review). One tiny aggregation over the (small by contract)
+    would never match an existing NULL-key row and would duplicate
+    it. One tiny aggregation over the (small by contract)
     batch, aliased so key columns named ``count`` don't collide,
     catches both before anything is written. Runs BEFORE the dataset
     lock — validation must not lengthen the critical section."""
@@ -373,32 +384,38 @@ def _read_and_evolve(
     merge_schema: bool,
     what: str,
 ) -> DataFrame:
-    """Read the existing table and apply the ADD-COLUMN evolution
-    contract (E94, shared by keyed upsert and CDC apply — one
-    definition so the two paths cannot drift, r10 review): with
-    ``merge_schema`` the read schema-merges across part files
-    (untouched partitions keep pre-evolution footers forever) and
-    columns the incoming frame adds appear on the table side as
-    NULLs; case-variant "adds" raise (Spark's case-insensitive
-    resolution would replace the original with NULLs); without the
-    flag an unknown incoming column raises instead of being silently
-    dropped. Type CHANGES stay out of scope by design — int32/int64
-    footers cannot be schema-merged at read time, so widening on
-    plain parquet is a table rewrite —
+    """Read the existing table and apply the add-column evolution
+    contract (shared by keyed upsert and CDC apply, so the two paths
+    cannot drift): columns the incoming frame adds appear on the table
+    side as NULLs under ``merge_schema``; case-variant "adds" raise
+    (Spark's case-insensitive resolution would replace the original
+    with NULLs); without the flag an unknown incoming column raises
+    instead of being silently dropped. Type CHANGES stay out of scope
+    by design — int32/int64 footers cannot be schema-merged at read
+    time, so widening on plain parquet is a table rewrite —
     :func:`weatherflow_spark.operators.layout.rewrite_widen` (one
-    partition-preserving validate-and-swap rewrite, r11; upserts with
-    the wide type are accepted afterwards)."""
-    from weatherflow_spark.operators.snaplog import head_dv, read_version
+    partition-preserving validate-and-swap rewrite; upserts with the
+    wide type are accepted afterwards).
 
-    if _manifest_mode(path) or head_dv(path):
-        # A manifest-mode live tree also holds superseded files, and a
-        # mirror-mode tree with live DELETION VECTORS still physically
-        # holds the deleted rows — either way the ONLY correct read is
-        # the head version (always schema-merged, the read_version
-        # contract; DVs anti-joined). This is also what makes the DV
-        # carry rule sound: every partition this writer rewrites was
-        # read post-DV, so dropping its DVs materializes the delete
-        # instead of losing it.
+    A versioned table whose live tree is provably its head version is
+    read AS the head version, with the schema its entry records, so no
+    Spark job infers one. So is a manifest-mode table (its live tree
+    also holds superseded files) and one with live deletion vectors
+    (its live files still hold the deleted rows); for those the head
+    read is the only correct one, and it is what makes the DV carry
+    rule sound: every partition this writer rewrites was read post-DV,
+    so dropping its DVs materializes the delete instead of losing it.
+    Any other tree (unversioned, or ahead of its head after an
+    unrecorded bulk write) is read from the directory, with its schema
+    inferred: the head's schema could miss a column the bulk write
+    added."""
+    from weatherflow_spark.operators.snaplog import (
+        head_dv,
+        live_is_head,
+        read_version,
+    )
+
+    if _manifest_mode(path) or head_dv(path) or live_is_head(path):
         current = read_version(spark, path)
     else:
         reader = spark.read
@@ -514,8 +531,7 @@ def _upsert_locked(
     # read-modify-write must run inside the caller's hold.
     if not _commit.lock_held_by_me(path):
         # RuntimeError, not assert: python -O would compile an assert
-        # away and silently reopen the deferred-snapshot window (r11
-        # review).
+        # away and silently reopen the deferred-snapshot window.
         raise RuntimeError(
             f"{path}: _upsert_locked requires the caller to hold the "
             "dataset lock (use upsert_by_key)"
@@ -537,7 +553,10 @@ def _upsert_locked(
             writer.parquet(path)
             check_and_bump_versions(path, keys)
             # seed = the table's first version
-            _record_snapshot(path, batch_id=snapshot_batch_id)
+            _record_snapshot(
+                path, batch_id=snapshot_batch_id,
+                schema=_data_schema(new_batch, partition_cols),
+            )
         return
 
     # Evolution + type alignment: shared contract (helpers above).
@@ -593,8 +612,10 @@ def _upsert_locked(
                 check_and_bump_versions(path, keys)
                 # Unpartitioned full overwrite DELETES the old files —
                 # without this record the pre-merge state would be
-                # unrecoverable on a versioned table (r9 ADVICE).
-                _record_snapshot(path, batch_id=snapshot_batch_id)
+                # unrecoverable on a versioned table.
+                _record_snapshot(
+                    path, batch_id=snapshot_batch_id, schema=merged.schema
+                )
     finally:
         release_checkpoint(merged)
 
@@ -611,8 +632,8 @@ def apply_changes(
     merge_schema: bool = False,
     allow_missing_columns: bool = False,
 ) -> None:
-    """CDC APPLY (r8): merge a change feed carrying upserts AND
-    deletes into a parquet table — the consumer half of the E61
+    """CDC APPLY: merge a change feed carrying upserts AND
+    deletes into a parquet table — the consumer half of the
     snapshot diff (``MERGE ... WHEN MATCHED AND op = 'D' THEN DELETE
     WHEN MATCHED THEN UPDATE WHEN NOT MATCHED THEN INSERT`` without a
     transactional table format). ``changes`` carries the table's
@@ -674,7 +695,7 @@ def _apply_changes_locked(
     # past overwrite_partitions — sound only because apply_changes
     # wraps this whole function in one reentrant dataset_lock hold,
     # so no concurrent writer can record a version of the
-    # half-applied state in between (r10 ADVICE). Assert the
+    # half-applied state in between. Assert the
     # invariant so a future direct caller can't silently reopen the
     # window.
     if not _commit.lock_held_by_me(path):
@@ -697,22 +718,25 @@ def _apply_changes_locked(
             writer.parquet(path)
             check_and_bump_versions(path, keys)
             # seed = the table's first version
-            _record_snapshot(path, batch_id=snapshot_batch_id)
+            _record_snapshot(
+                path, batch_id=snapshot_batch_id,
+                schema=_data_schema(upserts, partition_cols),
+            )
         return
 
-    # Same ADD-COLUMN evolution contract as _upsert_locked (E94):
+    # Same add-column evolution contract as _upsert_locked:
     # evolved reads schema-merge, U rows may add columns, table-side
     # columns the feed lacks NULL-backfill — under the flag only.
     # Evolution + type alignment: shared contract (helpers above).
     current = _read_and_evolve(spark, path, upserts, merge_schema, "feed")
     # Align the feed's PARTITION and KEY column types to the table's
     # BEFORE the touched-set / anti-join / emptied-partition
-    # comparisons (r14 review): a string-typed partition value in a
-    # date-partitioned feed flowed into ``touched`` as a string while
-    # ``remaining`` collected dates from the merged output — every
-    # touched partition compared "emptied" and its directory was
-    # removed AFTER the merge wrote it: the delete path silently
-    # dropped whole partitions. Casts that fail produce NULL, which
+    # comparisons: a string-typed partition value in a
+    # date-partitioned feed would flow into ``touched`` as a string
+    # while ``remaining`` collects dates from the merged output — every
+    # touched partition would compare "emptied" and its directory be
+    # removed AFTER the merge wrote it, silently dropping whole
+    # partitions. Casts that fail produce NULL, which
     # would redirect rows to the NULL partition — refuse loudly
     # instead.
     cur_types = dict(current.dtypes)
@@ -808,7 +832,7 @@ def _apply_changes_locked(
             # the emptied directories are removed below — defer the
             # snapshot record to that point, or the head version would
             # still list the deleted rows' files and read_version() at
-            # the head would resurrect deleted data (r9 ADVICE, high).
+            # the head would resurrect deleted data.
             overwrite_partitions(
                 merged, path, partition_cols, record_snapshot=not emptied,
                 snapshot_batch_id=snapshot_batch_id,
@@ -820,8 +844,7 @@ def _apply_changes_locked(
                         # partition_key hive-escapes values exactly as
                         # Spark wrote the directory — a raw f-string path
                         # for a ':'-valued partition matches nothing and
-                        # the "deleted" files would silently survive
-                        # (r10 ADVICE).
+                        # the "deleted" files would silently survive.
                         sub = os.path.join(path, partition_key(partition_cols, t))
                         shutil.rmtree(sub, ignore_errors=True)
                     # Emptied partitions are content changes too, but they
@@ -849,7 +872,9 @@ def _apply_changes_locked(
                 merged.write.mode("overwrite").parquet(path)
                 check_and_bump_versions(path, keys)
                 # full overwrite deletes old files
-                _record_snapshot(path, batch_id=snapshot_batch_id)
+                _record_snapshot(
+                    path, batch_id=snapshot_batch_id, schema=merged.schema
+                )
     finally:
         release_checkpoint(merged)
 
@@ -865,7 +890,7 @@ def delete_where(
     serializable: bool = False,
     use_dv: bool = False,
 ) -> dict[str, int]:
-    """Predicate-scoped row-level DELETE (E102): remove every row
+    """Predicate-scoped row-level DELETE: remove every row
     matching ``predicate`` from a parquet table — the
     right-to-be-forgotten / bad-ingest-rollback operation a
     training-data warehouse runs routinely (``DELETE FROM t WHERE
@@ -876,7 +901,7 @@ def delete_where(
     Two-phase, each phase the scale-correct shape:
 
     1. **Victim scan** — one column-pruned pass finds matching rows.
-       On a versioned table that records file-skipping stats (E100),
+       On a versioned table that records file-skipping stats,
        ``prune=(col, lo, hi)`` — a caller-supplied SUPERSET bound on
        the predicate — routes the scan through
        :func:`~weatherflow_spark.operators.snaplog.scan_version`, so
@@ -886,7 +911,7 @@ def delete_where(
        superset by contract: a too-wide bound only scans more, never
        misses a victim; the predicate is always re-applied. ``prune``
        also accepts a LIST of ``(col, lo, hi)`` ranges, ANDed at file
-       granularity (r13, E106) — on a Z-ordered layout a
+       granularity — on a Z-ordered layout a
        date×key victim rectangle opens the intersection's files, not
        one axis's whole stripe.
     2. **Scoped rewrite** — victims become full-row ``op='D'``
@@ -925,7 +950,7 @@ def delete_where(
       ``vacuum_versions`` drops them — that retention is a feature
       for rollback and a liability for erasure; run the vacuum when
       the grace window closes.
-    - **Warehouse loads** (E97 members): ``read_warehouse`` serves
+    - **Warehouse loads** (warehouse members): ``read_warehouse`` serves
       the LOAD ENTRY's recorded version, which predates the delete —
       re-cut a load (``commit_warehouse`` directly — pure metadata
       via version reuse; ``maintain_warehouse`` re-cuts too, but only
@@ -940,7 +965,7 @@ def delete_where(
       erasure of old feed partitions is the feed owner's
       retention/redaction step.
 
-    ``use_dv=True`` switches to **merge-on-read** (r12 verdict #1, the
+    ``use_dv=True`` switches to **merge-on-read** (the
     Delta deletion-vector / Iceberg positional-delete shape re-derived
     for keyed parquet): instead of rewriting every victim partition,
     the victim KEYS land as one small parquet sidecar
@@ -991,7 +1016,7 @@ def delete_where(
     src = None
     versioned = snapshot_enabled(path) and head_version(path) is not None
     if prune is not None and versioned:
-        # E102×E106: prune may be ONE (col, lo, hi) or a LIST of them
+        # prune may be ONE (col, lo, hi) or a LIST of them
         # — a multi-dimensional victim bound over a Z-ordered layout
         # prunes on every axis (a date×key rectangle opens the
         # intersection's files, not one axis's stripe). Ranges whose
@@ -1017,11 +1042,11 @@ def delete_where(
     # below and apply_changes' own jobs (key validation, touched-set
     # collect, the merge checkpoint) would otherwise each re-run the
     # victim scan — an unpruned delete on a large table would pay the
-    # full table read four or five times (r12.2 review). Victims are
+    # full table read four or five times. Victims are
     # small by the delete contract (a user's rows, a bad batch), so
     # pinning them is cheap; the three report counters collapse into
     # ONE aggregation job over the pinned set.
-    # Pinning mode depends on recompute safety (r12 ADVICE): versioned
+    # Pinning mode depends on recompute safety: versioned
     # reads are vacuum-protected immutable file sets, so persist() —
     # whose blocks can be dropped and recomputed — is safe. An
     # UNVERSIONED read serves the live directory; once apply_changes
@@ -1055,8 +1080,8 @@ def delete_where(
             # rewrite at all — the anti-join is null-UNSAFE, so its
             # tombstone would match nothing and the row would
             # silently survive while the report claimed it deleted
-            # (and countDistinct would skip it from keys_deleted,
-            # r12.2 review). Refuse loudly; such a row can only
+            # (and countDistinct would skip it from keys_deleted).
+            # Refuse loudly; such a row can only
             # come from a table written OUTSIDE the keyed choke
             # points, which validate keys non-null on every batch.
             raise ValueError(
@@ -1236,7 +1261,7 @@ def restore_version(
     batch_id: object | None = None,
 ) -> dict[str, int]:
     """RESTORE a versioned table to an earlier version AS A NEW
-    COMMIT (E104, the Delta ``RESTORE TABLE ... VERSION AS OF``
+    COMMIT (the Delta ``RESTORE TABLE ... VERSION AS OF``
     verb): the rollback every warehouse needs the day a bad load
     lands. Nothing is rewound — the restore derives the CDC feed
     that transforms the current head into the target
@@ -1266,8 +1291,8 @@ def restore_version(
         versions,
     )
 
-    # The whole resolve→diff→apply runs under the dataset lock (r12
-    # ADVICE): head resolution and the diff computed from it must not
+    # The whole resolve→diff→apply runs under the dataset lock:
+    # head resolution and the diff computed from it must not
     # race a writer committing in between, or the restore applies a
     # STALE diff over the new commit — the result is neither the
     # target version nor a consistent head. Restore is a rare

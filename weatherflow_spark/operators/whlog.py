@@ -155,9 +155,9 @@ def _record_or_reuse(path: str, batch_id: object | None) -> int:
         dir_fingerprint,
         entry_files,
         head_version,
+        live_is_head,
         record_commit,
         snapshot_mode,
-        stored_dirstamp,
     )
 
     head = head_version(path)  # pointer-resolved: no per-load listdir
@@ -176,8 +176,7 @@ def _record_or_reuse(path: str, batch_id: object | None) -> int:
         # skipped entirely. Stale/missing stamps (a crash between
         # entry and stamp) only cost the fallback walk, never a wrong
         # reuse.
-        stamp = stored_dirstamp(path)
-        if stamp is not None and stamp == dir_fingerprint(path):
+        if live_is_head(path):
             return head
     # Same basis-before-listing discipline as record_commit's stamp:
     # the fingerprint that may be persisted below must
@@ -209,8 +208,9 @@ def committed_load(wh_dir: str, batch_id: object) -> int | None:
     or None. Loaders call this BEFORE touching any member table: a
     late-redelivered OLD batch must short-circuit here, not after its
     upserts have already rewritten current rows back to stale values.
-    A marker answers a replayed id in O(1); a new id scans the retained
-    entries (:meth:`~weatherflow_spark.operators.commit.NumberedLog.batch_number`).
+    A marker answers a replayed id, and a new id reads only the entries
+    above the head pointer, so both cost O(1) however many loads are
+    retained (:meth:`~weatherflow_spark.operators.commit.NumberedLog.batch_number`).
 
     Contract boundaries (identical to snaplog's batch keying): replay
     protection extends exactly as far as LOAD RETENTION — a batch
@@ -259,9 +259,8 @@ def commit_warehouse(
     # silently re-open the bulk-link-under-all-locks window for every
     # first-time member.
     from weatherflow_spark.operators.snaplog import (
-        dir_fingerprint,
+        live_is_head,
         prelink_retained,
-        stored_dirstamp,
     )
 
     for p in paths.values():
@@ -274,8 +273,7 @@ def commit_warehouse(
         # files with carried files linked inductively), so a matching
         # fingerprint means the mirror is already complete and a
         # pure-metadata load is genuinely O(dirs) end to end.
-        stamp = stored_dirstamp(p)
-        if stamp is not None and stamp == dir_fingerprint(p):
+        if live_is_head(p):
             continue
         prelink_retained(p)
     with ExitStack() as stack:
