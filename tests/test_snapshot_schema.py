@@ -142,6 +142,30 @@ def test_every_writer_path_records_the_inferred_schema(spark, tmpdir, mode):
     assert read_version(spark, dst).schema == read_version(spark, path).schema
 
 
+def test_merge_after_an_unrecorded_bulk_write_reads_the_live_tree(spark, tmpdir):
+    """A live tree ahead of its head version (a bulk append the log
+    never recorded) is merged from the directory, not from the head:
+    the head lists neither the appended rows nor their new column."""
+    path = os.path.join(tmpdir, "t")
+    init_snapshot_log(path)
+    upsert_by_key(
+        spark,
+        spark.createDataFrame([(i, f"a{i}", "2024-01-01") for i in range(4)], SCHEMA),
+        path, ["k"], ["d"],
+    )
+    spark.createDataFrame(
+        [(10, "bulk", "2024-01-01", 5)], SCHEMA + ", extra int"
+    ).write.mode("append").partitionBy("d").parquet(path)
+    upsert_by_key(
+        spark,
+        spark.createDataFrame([(1, "u", "2024-01-01", 6)], SCHEMA + ", extra int"),
+        path, ["k"], ["d"], merge_schema=True,
+    )
+    got = {r.k: r.extra for r in read_version(spark, path).collect()}
+    assert got == {0: None, 1: 6, 2: None, 3: None, 10: 5}
+    _checked(spark, path, set())
+
+
 def test_warehouse_feed_apply_records_the_inferred_schema(spark, tmpdir):
     from weatherflow_spark.operators.whlog import (
         apply_warehouse_feed,
