@@ -134,10 +134,7 @@ STILL_TAGGED = {
     "jobs.py",
     "operators/indexing.py",
     "operators/ivm.py",
-    "operators/layout.py",
-    "operators/rollup.py",
     "operators/sig_index.py",
-    "operators/snaplog.py",
     "operators/star.py",
     "operators/vec_index.py",
     "operators/zorder.py",

@@ -17,7 +17,7 @@ def _mk(spark, rows):
     return spark.createDataFrame([Row(**r) for r in rows])
 
 
-def _seed(spark, path, mode="mirror"):
+def _seed(spark, path):
     from weatherflow_spark.operators.snaplog import (
         init_snapshot_log,
         record_commit,
@@ -32,7 +32,7 @@ def _seed(spark, path, mode="mirror"):
     _mk(spark, rows).repartition(1).write.mode("overwrite").partitionBy(
         "day"
     ).parquet(path)
-    init_snapshot_log(path, mode=mode)
+    init_snapshot_log(path)
     set_stats_columns(path, ["k"])
     record_commit(path)
     return rows
@@ -49,8 +49,7 @@ def _inodes(path):
     return out
 
 
-@pytest.mark.parametrize("mode", ["mirror", "manifest"])
-def test_dv_delete_rewrites_zero_files_and_time_travels(spark, tmp_path, mode):
+def test_dv_delete_rewrites_zero_files_and_time_travels(spark, tmp_path):
     from weatherflow_spark.operators.snaplog import (
         head_dv,
         read_live,
@@ -61,7 +60,7 @@ def test_dv_delete_rewrites_zero_files_and_time_travels(spark, tmp_path, mode):
     from weatherflow_spark.operators.upsert import delete_where
 
     path = str(tmp_path / "t")
-    _seed(spark, path, mode=mode)
+    _seed(spark, path)
     v1 = versions(path)[-1]
     before = _inodes(path)
 
@@ -79,7 +78,7 @@ def test_dv_delete_rewrites_zero_files_and_time_travels(spark, tmp_path, mode):
 
     got = {r["k"] for r in read_version(spark, path).collect()}
     assert got == {i for i in range(30) if i % 10 != 3}
-    # read_live agrees (mirror live tree still holds the rows physically)
+    # read_live agrees (the live tree still holds the rows physically)
     assert {r["k"] for r in read_live(spark, path).collect()} == got
     # pruned scan applies the DV too
     df, info = scan_version(spark, path, "k", lo=0, hi=29)
@@ -116,8 +115,7 @@ def test_dv_batch_id_replay_returns_prior_version(spark, tmp_path):
     assert versions(path)[-1] == head  # nothing minted, k=8 survives
 
 
-@pytest.mark.parametrize("mode", ["mirror", "manifest"])
-def test_upsert_folds_dv_on_touched_partition_only(spark, tmp_path, mode):
+def test_upsert_folds_dv_on_touched_partition_only(spark, tmp_path):
     """A keyed upsert into a covered partition reads post-DV content,
     rewrites it, and the new entry drops THAT partition's DV while
     untouched partitions carry theirs — re-inserted keys come back."""
@@ -125,7 +123,7 @@ def test_upsert_folds_dv_on_touched_partition_only(spark, tmp_path, mode):
     from weatherflow_spark.operators.upsert import delete_where, upsert_by_key
 
     path = str(tmp_path / "t")
-    _seed(spark, path, mode=mode)
+    _seed(spark, path)
     delete_where(
         spark, path, "k % 10 = 3", ["k"], partition_cols=["day"],
         use_dv=True,
@@ -141,8 +139,7 @@ def test_upsert_folds_dv_on_touched_partition_only(spark, tmp_path, mode):
     assert 13 not in rows and 23 not in rows  # carried DVs still apply
 
 
-@pytest.mark.parametrize("mode", ["mirror", "manifest"])
-def test_compaction_folds_dvs_and_vacuum_gcs_them(spark, tmp_path, mode):
+def test_compaction_folds_dvs_and_vacuum_gcs_them(spark, tmp_path):
     from weatherflow_spark.operators.layout import compact_partitions
     from weatherflow_spark.operators.snaplog import (
         _dv_dir,
@@ -154,7 +151,7 @@ def test_compaction_folds_dvs_and_vacuum_gcs_them(spark, tmp_path, mode):
     from weatherflow_spark.operators.upsert import delete_where
 
     path = str(tmp_path / "t")
-    _seed(spark, path, mode=mode)
+    _seed(spark, path)
     delete_where(
         spark, path, "k % 10 = 3", ["k"], partition_cols=["day"],
         use_dv=True,
@@ -360,13 +357,13 @@ def test_table_status_reports_dv_and_checkpoint_state(spark, tmp_path):
     bare = str(tmp_path / "bare")
     _mk(spark, [{"k": 1, "day": "d", "v": 1.0}]).write.parquet(bare)
     assert table_status(bare) == {
-        "versioned": False, "mode": None, "head_version": None,
+        "versioned": False, "head_version": None,
     }
 
     path = str(tmp_path / "t")
     _seed(spark, path)
     st = table_status(path)
-    assert st["versioned"] and st["mode"] == "mirror"
+    assert st["versioned"]
     assert st["head_version"] == 1 and st["n_versions"] == 1
     assert st["partitions"] == 3 and st["files"] >= 3
     assert st["bytes"] > 0 and st["dv_dirs"] == 0
@@ -388,8 +385,7 @@ def test_table_status_reports_dv_and_checkpoint_state(spark, tmp_path):
     assert st["checkpoint_fresh"]
 
 
-@pytest.mark.parametrize("mode", ["mirror", "manifest"])
-def test_compact_swap_conflicts_on_concurrent_dv_delete(spark, tmp_path, mode):
+def test_compact_swap_conflicts_on_concurrent_dv_delete(spark, tmp_path):
     """A merge-on-read DV delete rewrites ZERO data files, so the
     file-set fingerprint alone waves it through compact()'s swap-time
     re-check — the pre-DV rewrite would then swap in un-deleted rows
@@ -402,7 +398,7 @@ def test_compact_swap_conflicts_on_concurrent_dv_delete(spark, tmp_path, mode):
     from weatherflow_spark.operators.upsert import delete_where
 
     path = str(tmp_path / "t")
-    _seed(spark, path, mode=mode)
+    _seed(spark, path)
 
     def racing_dv_delete():
         delete_where(
@@ -422,8 +418,7 @@ def test_compact_swap_conflicts_on_concurrent_dv_delete(spark, tmp_path, mode):
     assert {r["k"] for r in read_version(spark, path).collect()} == got
 
 
-@pytest.mark.parametrize("mode", ["mirror", "manifest"])
-def test_widen_swap_conflicts_on_concurrent_dv_delete(spark, tmp_path, mode):
+def test_widen_swap_conflicts_on_concurrent_dv_delete(spark, tmp_path):
     """Same race as the compact form, through rewrite_widen's swap."""
     from weatherflow_spark.operators.commit import CompactionConflict
     from weatherflow_spark.operators.layout import rewrite_widen
@@ -431,7 +426,7 @@ def test_widen_swap_conflicts_on_concurrent_dv_delete(spark, tmp_path, mode):
     from weatherflow_spark.operators.upsert import delete_where
 
     path = str(tmp_path / "t")
-    _seed(spark, path, mode=mode)
+    _seed(spark, path)
 
     def racing_dv_delete():
         delete_where(
@@ -561,8 +556,7 @@ def test_dv_fold_preserves_range_clustering(spark, tmp_path):
     }
 
 
-@pytest.mark.parametrize("mode", ["mirror", "manifest"])
-def test_dv_commit_merges_same_schema_sidecars(spark, tmp_path, mode):
+def test_dv_commit_merges_same_schema_sidecars(spark, tmp_path):
     """K deletes between folds must cost ONE anti-join per covered
     directory, not K (r13 verdict #4): same-key-schema sidecars merge
     at DV-commit time; a heterogeneous-key DV stays separate (a
@@ -575,7 +569,7 @@ def test_dv_commit_merges_same_schema_sidecars(spark, tmp_path, mode):
     from weatherflow_spark.operators.upsert import delete_where
 
     path = str(tmp_path / "t")
-    _seed(spark, path, mode=mode)
+    _seed(spark, path)
     # three scattered-key deletes, each covering ALL three day dirs
     for pred in ["k % 10 = 3", "k % 10 = 4", "k % 10 = 5"]:
         delete_where(

@@ -288,8 +288,7 @@ def test_heartbeat_never_refreshes_a_successors_lock(tmp_path):
     os.unlink(lp)
 
 
-@pytest.mark.parametrize("mode", ["mirror", "manifest"])
-def test_compact_partitions_plans_from_segments(spark, tmpdir, mode):
+def test_compact_partitions_plans_from_segments(spark, tmpdir):
     """E101 (r12): partition-scoped small-file compaction planned
     entirely from the head entry's segments — only partitions over
     the file threshold are rewritten (one file each, one scoped
@@ -320,7 +319,7 @@ def test_compact_partitions_plans_from_segments(spark, tmpdir, mode):
     orders.where(F.col("o_orderpriority") == hot).repartition(12).write.mode(
         "append"
     ).partitionBy("o_orderpriority").parquet(path)
-    init_snapshot_log(path, mode=mode)
+    init_snapshot_log(path)
     record_commit(path)  # v1
 
     def digest():
@@ -357,9 +356,8 @@ def test_compact_partitions_plans_from_segments(spark, tmpdir, mode):
     for p, m in before.items():
         if f"o_orderpriority={hot}" not in p:
             assert after.get(p) == m, f"cold partition touched: {p}"
-    # the hot partition's LIVE file count really dropped (mirror mode
-    # deletes the replaced files; manifest keeps them for v1 but the
-    # head entry lists one)
+    # the hot partition's LIVE file count really dropped (the head
+    # entry lists one)
     from weatherflow_spark.operators.snaplog import entry_files
 
     hot_live = [

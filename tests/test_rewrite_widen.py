@@ -80,6 +80,11 @@ def test_widen_preserves_partitions_history_and_accepts_wide_upserts(
     assert got.amount == 5_000_000_000
     assert versions(path) == [1, 2, 3]
 
+    # vacuum sweeps the retained narrow footers; the head still reads
+    out = vacuum_versions(path, keep_last=1)
+    assert out["removed_files"] > 0
+    assert read_version(spark, path).count() == 20
+
 
 def test_widen_refuses_lossy_and_unknown_and_partition_columns(
     spark, tmpdir
@@ -173,53 +178,3 @@ def test_widen_token_precedes_listing(spark, tmpdir):
     live = spark.read.parquet(path)
     assert dict(live.dtypes)["amount"] == "int"  # swap never happened
     assert live.count() == 21  # the racing commit's row survived
-
-
-def test_compact_manifest_without_versions_is_a_clear_error(spark, tmpdir):
-    """r12 advice (low): compact()/widen on a manifest-mode table with
-    zero committed versions must raise a clear ValueError, not a bare
-    IndexError from versions(path)[-1]."""
-    from weatherflow_spark.operators.layout import compact
-
-    path = f"{tmpdir}/t"
-    _seed(spark, path)
-    init_snapshot_log(path, mode="manifest")  # enabled, nothing committed
-    with pytest.raises(ValueError, match="no committed versions"):
-        compact(spark, path)
-
-
-def test_widen_manifest_mode_keeps_old_footers_readable(spark, tmpdir):
-    """Manifest-mode widen (r11): no directory swap — the widened
-    files MOVE into the live tree, a version lists only them, the
-    narrow footers stay on disk for time travel, and nothing was ever
-    hard-linked into a mirror."""
-    import os
-
-    path = f"{tmpdir}/m"
-    _seed(spark, path)
-    init_snapshot_log(path, mode="manifest")
-    record_commit(path)  # v1: narrow
-
-    rewrite_widen(spark, path, {"amount": "bigint"}, ["grp"])
-    assert versions(path) == [1, 2]
-    assert dict(read_version(spark, path).dtypes)["amount"] == "bigint"
-    assert read_version(spark, path).count() == 20
-    v1 = read_version(spark, path, 1)
-    assert dict(v1.dtypes)["amount"] == "int"
-    assert v1.count() == 20
-    # object-store contract: no mirror, no links, old files still live
-    assert not os.path.isdir(path + ".__retain") or not any(
-        fs for _, _, fs in os.walk(path + ".__retain")
-    )
-
-    # widened upsert accepted; vacuum then sweeps the narrow footers
-    from weatherflow_spark.operators.upsert import upsert_by_key
-
-    wide = spark.createDataFrame(
-        [(3, "p1", 6_000_000_000)], "k int, grp string, amount bigint"
-    )
-    upsert_by_key(spark, wide, path, ["k"], ["grp"])
-    assert read_version(spark, path).where("k = 3").first().amount == 6_000_000_000
-    out = vacuum_versions(path, keep_last=1)
-    assert out["removed_files"] > 0
-    assert read_version(spark, path).count() == 20

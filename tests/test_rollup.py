@@ -359,11 +359,9 @@ def test_merge_rollup_preserves_null_date_bucket(spark, tmpdir):
     assert got[(dt.date(2024, 1, 1), "view")] == (1, 1.0)
 
 
-def test_rollup_maintenance_is_manifest_safe(spark, tmp_path):
-    """r11 review #1: merge_rollup/read_rollup on a MANIFEST-mode
-    rollup table must read the head version, not the raw live tree —
-    superseded partials would fold in twice and inflate every merged
-    bucket."""
+def test_versioned_rollup_merge_matches_full_recompute(spark, tmp_path):
+    """On a versioned rollup table every maintenance write mints one
+    version, and the merged partials still equal a full recompute."""
     from pyspark.sql import functions as F
 
     from weatherflow_spark.io import load_table
@@ -375,8 +373,8 @@ def test_rollup_maintenance_is_manifest_safe(spark, tmp_path):
     from weatherflow_spark.operators.snaplog import init_snapshot_log, versions
     from tests.conftest import SF_SMALL
 
-    path = str(tmp_path / "partials_manifest")
-    init_snapshot_log(path, mode="manifest")
+    path = str(tmp_path / "partials")
+    init_snapshot_log(path)
     events = load_table(spark, SF_SMALL, "events")
     half = events.where(F.col("event_id") % 2 == 0)
     late = events.where(F.col("event_id") % 2 == 1)
@@ -403,7 +401,7 @@ def test_rollup_maintenance_is_manifest_safe(spark, tmp_path):
             )
         ).collect()
     }
-    assert got == want  # raw-read double counting would inflate n
+    assert got == want
 
 
 _SCRATCH_CHILD = textwrap.dedent(

@@ -32,69 +32,6 @@ def tmpdir():
     shutil.rmtree(d, ignore_errors=True)
 
 
-@pytest.fixture(params=["mirror", "manifest"])
-def snap_mode(request, tmpdir, monkeypatch):
-    """Run the suite in BOTH retention modes (r10 verdict #3): every
-    bare init_snapshot_log in the test (and in the engine, e.g. the
-    clone seeding path) defaults to the active mode. Teardown asserts
-    the manifest mode made ZERO hard links — no retention mirror may
-    exist with files in it."""
-    import weatherflow_spark.operators.snaplog as S
-
-    real = S.init_snapshot_log
-    mode = request.param
-
-    def init_with_mode(path, mode=mode):
-        real(path, mode=mode)
-
-    monkeypatch.setattr(S, "init_snapshot_log", init_with_mode)
-    monkeypatch.setitem(globals(), "init_snapshot_log", init_with_mode)
-    yield mode
-    if mode == "manifest":
-        # Zero-hard-link audit: no MANIFEST-mode dataset may have put
-        # a single file into a retention mirror. (A mirror-mode
-        # dataset created explicitly inside a test — e.g. a clone of
-        # an unversioned source — keeps its links legitimately.)
-        for root, dirs, _ in os.walk(tmpdir):
-            for d in dirs:
-                if not d.endswith(".__retain"):
-                    continue
-                log_mode = os.path.join(
-                    root, d[: -len(".__retain")] + ".__snaplog", "MODE"
-                )
-                try:
-                    with open(log_mode) as fh:
-                        if fh.read().strip() != "manifest":
-                            continue
-                except OSError:
-                    continue
-                links = [
-                    f
-                    for r, _, fs in os.walk(os.path.join(root, d))
-                    for f in fs
-                ]
-                assert not links, (
-                    f"manifest mode hard-linked {len(links)} files "
-                    f"into {d} — the mirror must stay empty"
-                )
-
-
-def _live(spark, path):
-    """The table's CURRENT logical content: a raw directory read in
-    mirror mode (or for unversioned tables), the head version in
-    manifest mode — where the live tree also holds superseded files
-    that a raw read would double-count."""
-    from weatherflow_spark.operators.snaplog import (
-        read_version,
-        snapshot_mode,
-        versions as _vs,
-    )
-
-    if snapshot_mode(path) == "manifest" and _vs(path):
-        return read_version(spark, path)
-    return spark.read.parquet(path)
-
-
 def _digest(df):
     r = df.agg(
         F.count(F.lit(1)).alias("n"),
@@ -123,7 +60,7 @@ def _build_versioned(spark, path):
     return orders, base, batch
 
 
-def test_commits_become_versions_and_time_travel_reads(spark, tmpdir, snap_mode):
+def test_commits_become_versions_and_time_travel_reads(spark, tmpdir):
     path = f"{tmpdir}/tt"
     orders, base, batch = _build_versioned(spark, path)
     assert snapshot_enabled(path)
@@ -140,12 +77,12 @@ def test_commits_become_versions_and_time_travel_reads(spark, tmpdir, snap_mode)
     ).unionByName(batch)
     v2 = read_version(spark, path, 2)
     assert _digest(v2) == _digest(merged)
-    assert _digest(v2) == _digest(_live(spark, path))
+    assert _digest(v2) == _digest(spark.read.parquet(path))
     # default = latest
     assert _digest(read_version(spark, path)) == _digest(v2)
 
 
-def test_versions_survive_compaction_and_replay(spark, tmpdir, snap_mode):
+def test_versions_survive_compaction_and_replay(spark, tmpdir):
     from weatherflow_spark.operators.layout import compact
 
     path = f"{tmpdir}/tt"
@@ -166,14 +103,11 @@ def test_versions_survive_compaction_and_replay(spark, tmpdir, snap_mode):
     assert _digest(read_version(spark, path, 4)) == d2
 
 
-def test_vacuum_bounds_history_and_gcs_files(spark, tmpdir, snap_mode):
+def test_vacuum_bounds_history_and_gcs_files(spark, tmpdir):
     path = f"{tmpdir}/tt"
     _build_versioned(spark, path)
     d2 = _digest(read_version(spark, path, 2))
-    # vacuum's GC root differs by mode: the retention mirror holds the
-    # reclaimable files in mirror mode, the LIVE tree (superseded
-    # files accumulate there) in manifest mode.
-    gc_root = path + (".__retain" if snap_mode == "mirror" else "")
+    gc_root = path + ".__retain"
 
     def _n_gc_files():
         return sum(
@@ -195,9 +129,8 @@ def test_vacuum_bounds_history_and_gcs_files(spark, tmpdir, snap_mode):
         read_version(spark, path, 1)
     n_after = _n_gc_files()
     assert n_after < n_before
-    # logical head untouched (manifest-mode vacuum DOES sweep the
-    # superseded live files; the head content must not move)
-    assert _digest(_live(spark, path)) == d2
+    # logical head untouched: vacuum sweeps only the retention mirror
+    assert _digest(spark.read.parquet(path)) == d2
 
 
 def test_unversioned_tables_pay_nothing(spark, tmpdir):
@@ -214,7 +147,7 @@ def test_unversioned_tables_pay_nothing(spark, tmpdir):
         read_version(spark, path)
 
 
-def test_unpartitioned_table_round_trip(spark, tmpdir, snap_mode):
+def test_unpartitioned_table_round_trip(spark, tmpdir):
     path = f"{tmpdir}/flat"
     nation = load_table(spark, SF_SMALL, "nation")
     nation.write.mode("overwrite").parquet(path)
@@ -225,7 +158,7 @@ def test_unpartitioned_table_round_trip(spark, tmpdir, snap_mode):
     assert got.count() == nation.count()
 
 
-def test_emptied_partition_head_version_matches_live(spark, tmpdir, snap_mode):
+def test_emptied_partition_head_version_matches_live(spark, tmpdir):
     """r10 ADVICE fix (high): a CDC apply whose deletes EMPTY a
     partition must record the snapshot AFTER the emptied directory is
     removed — the head version previously still listed the deleted
@@ -260,7 +193,7 @@ def test_emptied_partition_head_version_matches_live(spark, tmpdir, snap_mode):
         partition_cols=["n_regionkey"],
     )
 
-    live = _live(spark, path)
+    live = spark.read.parquet(path)
     assert live.where(F.col("n_regionkey") == 0).count() == 0
     head = read_version(spark, path)  # latest version
     assert head.where(F.col("n_regionkey") == 0).count() == 0
@@ -271,7 +204,7 @@ def test_emptied_partition_head_version_matches_live(spark, tmpdir, snap_mode):
     ).count() == nation.where(F.col("n_regionkey") == 0).count()
 
 
-def test_unpartitioned_upsert_records_versions(spark, tmpdir, snap_mode):
+def test_unpartitioned_upsert_records_versions(spark, tmpdir):
     """r10 ADVICE fix (medium): unpartitioned upsert_by_key (and the
     seed branch) now route through the snapshot choke point — a full
     overwrite deletes the old files, so without a recorded version
@@ -296,7 +229,7 @@ def test_unpartitioned_upsert_records_versions(spark, tmpdir, snap_mode):
     )
 
 
-def test_partitioned_seed_and_cdc_record_versions(spark, tmpdir, snap_mode):
+def test_partitioned_seed_and_cdc_record_versions(spark, tmpdir):
     """Seed-branch + unpartitioned apply_changes coverage of the same
     choke-point contract (r10 ADVICE, medium)."""
     from weatherflow_spark.operators.upsert import apply_changes
@@ -322,7 +255,7 @@ def test_partitioned_seed_and_cdc_record_versions(spark, tmpdir, snap_mode):
     assert read_version(spark, flat, 1).count() == nation.count()
 
 
-def test_partition_commit_walks_only_touched_scope(spark, tmpdir, snap_mode):
+def test_partition_commit_walks_only_touched_scope(spark, tmpdir):
     """r9 verdict #4: the upsert/CDC choke points pass their touched
     partition list into record_commit(scope=...), so a one-partition
     micro-batch commit walks ONLY that partition directory — never the
@@ -387,7 +320,7 @@ def test_partition_commit_walks_only_touched_scope(spark, tmpdir, snap_mode):
     assert untouched_v1 <= v2_files
 
 
-def test_batch_keyed_commit_is_replay_idempotent(spark, tmpdir, snap_mode):
+def test_batch_keyed_commit_is_replay_idempotent(spark, tmpdir):
     """record_commit(batch_id=...) must mint exactly one version per
     batch id: a re-delivered micro-batch returns the original version
     instead of a duplicate (the foreachBatch exactly-once contract)."""
@@ -406,7 +339,7 @@ def test_batch_keyed_commit_is_replay_idempotent(spark, tmpdir, snap_mode):
     assert versions(path) == [1, 2]
 
 
-def test_pinned_reader_survives_concurrent_vacuum(spark, tmpdir, snap_mode):
+def test_pinned_reader_survives_concurrent_vacuum(spark, tmpdir):
     """r9 verdict #3: a reader pinned to version N survives a vacuum
     whose keep_last would drop N — the pin is taken under the dataset
     lock, vacuum honors it, and once released the next vacuum reclaims
@@ -443,7 +376,7 @@ def test_pinned_reader_survives_concurrent_vacuum(spark, tmpdir, snap_mode):
             raise AssertionError("must not yield for a vacuumed version")
 
 
-def test_streaming_versioned_upsert_replay_mints_no_duplicate_version(spark, tmpdir, snap_mode):
+def test_streaming_versioned_upsert_replay_mints_no_duplicate_version(spark, tmpdir):
     """r9 verdict #7: the foreachBatch snapshot sink records exactly
     one version per micro-batch id — a re-delivered batch neither
     duplicates rows nor mints a duplicate version, and each version
@@ -471,14 +404,14 @@ def test_streaming_versioned_upsert_replay_mints_no_duplicate_version(spark, tmp
     sink(b0, 0)  # -> v1
     sink(b1, 1)  # -> v2
     assert versions(path) == [1, 2]
-    d2 = _digest(_live(spark, path))
+    d2 = _digest(spark.read.parquet(path))
 
     # at-least-once re-delivery of BOTH batches: no new versions, no
     # content change
     sink(b0, 0)
     sink(b1, 1)
     assert versions(path) == [1, 2]
-    assert _digest(_live(spark, path)) == d2
+    assert _digest(spark.read.parquet(path)) == d2
 
     # each version is the table as of that batch
     assert _digest(read_version(spark, path, 1)) == _digest(b0)
@@ -493,7 +426,7 @@ def test_streaming_versioned_upsert_replay_mints_no_duplicate_version(spark, tmp
     assert versions(path) == [1, 2, 3]
 
 
-def test_diff_versions_emits_exact_cdc_feed_and_round_trips(spark, tmpdir, snap_mode):
+def test_diff_versions_emits_exact_cdc_feed_and_round_trips(spark, tmpdir):
     """E91 (r10): diff_versions between two retained versions yields
     exactly the U/D feed that transforms the older into the newer —
     changed rows carry NEW values, deletes carry OLD rows (partition
@@ -520,7 +453,7 @@ def test_diff_versions_emits_exact_cdc_feed_and_round_trips(spark, tmpdir, snap_
 
     # now delete some keys -> v3; diff(2,3) must be pure tombstones
     doomed = (
-        _live(spark, path)
+        spark.read.parquet(path)
         .where(F.col("o_orderkey") % 4 == 0)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
         .withColumn("op", F.lit("D"))
@@ -545,7 +478,7 @@ def test_diff_versions_emits_exact_cdc_feed_and_round_trips(spark, tmpdir, snap_
     apply_changes(
         spark, feed13, rt, ["o_orderkey"], "op", ["o_orderpriority"]
     )
-    assert _digest(_live(spark, rt)) == _digest(
+    assert _digest(spark.read.parquet(rt)) == _digest(
         read_version(spark, path, 3)
     )
 
@@ -606,7 +539,7 @@ def test_delta_update_agg_matches_direct_reaggregation(spark):
     assert "d" in got  # new group created
 
 
-def test_streaming_version_trail_drives_incremental_aggregate(spark, tmpdir, snap_mode):
+def test_streaming_version_trail_drives_incremental_aggregate(spark, tmpdir):
     """Composition (r10): the E90 streaming version trail feeds E91
     diffs into E92 delta maintenance — a continuously-maintained
     aggregate that tracks a micro-batch stream without ever rescanning
@@ -699,12 +632,12 @@ def test_streaming_version_trail_drives_incremental_aggregate(spark, tmpdir, sna
     }
     want = {
         r.o_orderpriority: (r.n_rows, r.sum_cents, r.key_xor)
-        for r in direct(_live(spark, path)).collect()
+        for r in direct(spark.read.parquet(path)).collect()
     }
     assert got == want
 
 
-def test_batch_markers_collision_proof_and_crash_safe(spark, tmpdir, snap_mode):
+def test_batch_markers_collision_proof_and_crash_safe(spark, tmpdir):
     """r10 review fixes: (1) distinct batch ids that sanitize to the
     same name must not collide ('8.1' vs '8_1'); (2) the version
     entry is the replay-key source of truth — losing the marker file
@@ -746,7 +679,7 @@ def test_batch_markers_collision_proof_and_crash_safe(spark, tmpdir, snap_mode):
     assert committed_batch_version(path, "later") == v3
 
 
-def test_stale_marker_never_vouches_for_a_gone_version(spark, tmpdir, snap_mode):
+def test_stale_marker_never_vouches_for_a_gone_version(spark, tmpdir):
     """The snapshot-log twin of test_whlog's stale-marker test: a
     marker whose version entry is gone must not answer
     committed_batch_version, and the recycled batch id must then
@@ -768,7 +701,7 @@ def test_stale_marker_never_vouches_for_a_gone_version(spark, tmpdir, snap_mode)
     assert committed_batch_version(path, "r:0") == 1
 
 
-def test_change_feed_streams_with_checkpoint_continuity(spark, tmpdir, snap_mode):
+def test_change_feed_streams_with_checkpoint_continuity(spark, tmpdir):
     """E95 (r10): the materialized change feed is stream-consumable —
     a file-source stream over the feed dir delivers every exported
     change, and after MORE versions are exported a resumed stream
@@ -836,7 +769,7 @@ def test_change_feed_streams_with_checkpoint_continuity(spark, tmpdir, snap_mode
     )
 
 
-def test_change_feed_replicates_table_end_to_end(spark, tmpdir, snap_mode):
+def test_change_feed_replicates_table_end_to_end(spark, tmpdir):
     """E95 composition: streaming the materialized change feed into a
     replica via foreachBatch apply_changes reproduces the source table
     — CDC replication on plain parquet, replayed micro-batches and
@@ -881,13 +814,13 @@ def test_change_feed_replicates_table_end_to_end(spark, tmpdir, snap_mode):
         .start()
     )
     q.awaitTermination()
-    assert _digest(_live(spark, replica)) == _digest(
-        _live(spark, path)
+    assert _digest(spark.read.parquet(replica)) == _digest(
+        spark.read.parquet(path)
     )
 
     # source advances (incl. deletes); only the feed flows to the replica
     feed2 = (
-        _live(spark, path)
+        spark.read.parquet(path)
         .where(F.col("o_orderkey") % 4 == 0)
         .withColumn("op", F.lit("D"))
     )
@@ -903,12 +836,12 @@ def test_change_feed_replicates_table_end_to_end(spark, tmpdir, snap_mode):
         .start()
     )
     q.awaitTermination()
-    assert _digest(_live(spark, replica)) == _digest(
-        _live(spark, path)
+    assert _digest(spark.read.parquet(replica)) == _digest(
+        spark.read.parquet(path)
     )
 
 
-def test_export_marker_and_partial_export_recovery(spark, tmpdir, snap_mode):
+def test_export_marker_and_partial_export_recovery(spark, tmpdir):
     """r10 third-review fixes: a crashed partial export (directory
     exists, no completion marker) is re-exported instead of skipped
     forever; the marker is the engine's own file, independent of the
@@ -966,7 +899,7 @@ def test_export_marker_and_partial_export_recovery(spark, tmpdir, snap_mode):
         )
 
 
-def test_clone_table_zero_copy_and_divergence_isolation(spark, tmpdir, snap_mode):
+def test_clone_table_zero_copy_and_divergence_isolation(spark, tmpdir):
     """E96 (r10): shallow clone hard-links the source's files (same
     inodes — zero copy), refuses non-empty destinations, diverges
     safely in BOTH directions (writers replace files, never modify
@@ -1036,42 +969,9 @@ def test_clone_table_zero_copy_and_divergence_isolation(spark, tmpdir, snap_mode
     with pytest.raises(ValueError, match="not a directory"):
         clone_table(src, f_dst)
 
-    # manifest-mode source (r11): the live tree holds SUPERSEDED
-    # files — the clone must be the head version's file list, not the
-    # raw walk, and with_history inherits the manifest mode (so the
-    # clone links zero files into any mirror).
-    if snap_mode == "manifest":
-        msrc = f"{tmpdir}/msrc"
-        nation.write.mode("overwrite").partitionBy("n_regionkey").parquet(
-            msrc
-        )
-        init_snapshot_log(msrc)  # -> manifest via the fixture default
-        from weatherflow_spark.operators.snaplog import record_commit
-
-        record_commit(msrc)  # v1
-        mb = nation.limit(4).withColumn("n_name", F.lower(F.col("n_name")))
-        upsert_by_key(spark, mb, msrc, ["n_nationkey"], ["n_regionkey"])
-        # the live tree now holds v1's superseded files too
-        n_live = sum(
-            1
-            for r, _, fs in os.walk(msrc)
-            for f in fs
-            if not f.startswith(("_", "."))
-        )
-        mdst = f"{tmpdir}/mdst"
-        n_cloned = clone_table(msrc, mdst, with_history=True)
-        assert n_cloned < n_live, "clone copied superseded files"
-        assert _live(spark, mdst).count() == nation.count()
-        assert (
-            _live(spark, mdst)
-            .where(F.col("n_name") == F.lower(F.col("n_name")))
-            .count()
-            == 4
-        )
-
 
 def test_scoped_commit_entry_io_bounded_by_touched_partitions(
-    spark, tmpdir, snap_mode
+    spark, tmpdir
 ):
     """r11 verdict #3 (segmented manifests): a partition-scoped commit
     must not re-read or re-write the untouched partitions' file lists.
@@ -1081,9 +981,7 @@ def test_scoped_commit_entry_io_bounded_by_touched_partitions(
     recorded dir is the touched partition, (b) no pre-existing log
     file changed (immutability), (c) the commit's new log bytes are a
     fraction of v1's full listing, and (d) both versions still
-    reconstruct exactly. Runs in BOTH retention modes — manifest mode
-    reuses untouched segments via content addressing, mirror mode
-    carries them by name."""
+    reconstruct exactly: untouched segments carry by name."""
     import json
 
     path = f"{tmpdir}/seg"
@@ -1154,7 +1052,7 @@ def test_scoped_commit_entry_io_bounded_by_touched_partitions(
     )
 
 
-def test_file_skipping_stats_prune_and_carry(spark, tmpdir, snap_mode):
+def test_file_skipping_stats_prune_and_carry(spark, tmpdir):
     """E100 (r12): file-skipping statistics ride the segments. A
     range-partitioned seed records per-file o_orderkey min/max;
     scan_version over a selective range opens only intersecting files
@@ -1207,7 +1105,7 @@ def test_file_skipping_stats_prune_and_carry(spark, tmpdir, snap_mode):
 
 
 def test_file_skipping_stats_carry_across_scoped_commits(
-    spark, tmpdir, snap_mode, monkeypatch
+    spark, tmpdir, monkeypatch
 ):
     """E100 carry contract (r12 review: the first test never exercised
     it): a partition-scoped upsert computes footer stats ONLY for its

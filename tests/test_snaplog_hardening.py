@@ -481,10 +481,7 @@ def test_string_zone_maps_prune_without_false_drops(spark, tmpdir):
     assert info3["files_scanned"] < info3["files_total"]
 
 
-@pytest.mark.parametrize("mode", ["mirror", "manifest"])
-def test_checkpoint_pointer_bounds_head_resolution_io(
-    spark, tmpdir, monkeypatch, mode
-):
+def test_checkpoint_pointer_bounds_head_resolution_io(spark, tmpdir, monkeypatch):
     """r12 verdict #6: snapshot-log checkpoints. Entries are already
     self-contained state maps, so the ``_last_checkpoint`` pointer is
     the whole fix: head resolution (read_version / head_version /
@@ -501,15 +498,10 @@ def test_checkpoint_pointer_bounds_head_resolution_io(
     def _ckpt_path(p):
         return _log(p).pointer
 
-    path = f"{tmpdir}/ckpt_{mode}"
+    path = f"{tmpdir}/ckpt"
     s = "k int, v string"
-    init_snapshot_log(path)
-    # manifest mode forbids plain overwrites after the seed — drive
-    # commits through the keyed choke point in both modes.
     spark.createDataFrame([(1, "a"), (2, "b")], s).write.parquet(path)
-    # re-init with the requested mode BEFORE the seed commit
-    shutil.rmtree(path + ".__snaplog", ignore_errors=True)
-    init_snapshot_log(path, mode=mode)
+    init_snapshot_log(path)
     record_commit(path)
     for i in range(2, 6):
         upsert_by_key(

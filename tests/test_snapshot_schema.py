@@ -16,9 +16,11 @@ from tests.conftest import group_jobs
 from weatherflow_spark.operators.snaplog import (
     _resolve_version,
     clone_table,
+    head_dv,
     head_version,
     init_snapshot_log,
     read_version,
+    record_commit,
     versions,
 )
 from weatherflow_spark.operators.upsert import (
@@ -66,14 +68,24 @@ def _checked(spark, path, seen: set[int], hidden=None) -> None:
         if v not in seen:
             _assert_exact(spark, path, v, hidden)
             seen.add(v)
+    if not head_dv(path):
+        # The live tree IS the head version: any parquet reader of the
+        # directory sees exactly the committed table.
+        head = read_version(spark, path)
+        live = spark.read.option("mergeSchema", "true").parquet(path)
+        assert sorted(live.dtypes) == sorted(head.dtypes), (
+            live.schema.simpleString(), head.schema.simpleString()
+        )
+        live = live.select(*head.columns)
+        assert live.exceptAll(head).count() == 0
+        assert head.exceptAll(live).count() == 0
 
 
-@pytest.mark.parametrize("mode", ["mirror", "manifest"])
-def test_every_writer_path_records_the_inferred_schema(spark, tmpdir, mode):
+def test_every_writer_path_records_the_inferred_schema(spark, tmpdir):
     from weatherflow_spark.operators.layout import compact_partitions
 
     path = os.path.join(tmpdir, "t")
-    init_snapshot_log(path, mode=mode)
+    init_snapshot_log(path)
     seen: set[int] = set()
     rows = [(i, f"a{i}", f"2024-01-0{1 + i % 3}") for i in range(1, 13)]
     # seed: partition values are strings in the frame, dates on read
@@ -199,6 +211,31 @@ def test_warehouse_feed_apply_records_the_inferred_schema(spark, tmpdir):
     rfact = os.path.join(replica, "fact")
     _checked(spark, rfact, set())
     assert "tag" in read_version(spark, rfact).columns
+
+
+def test_partition_compaction_infers_no_schema(spark, tmpdir):
+    """Compacting a versioned table reads each offender partition with
+    the head entry's schema and rewrites it by name: three jobs per
+    offender (the staging write and the clustered rewrite's two), no
+    schema inference and no partition-key collect."""
+    from weatherflow_spark.operators.layout import compact_partitions
+
+    path = os.path.join(tmpdir, "t")
+    for i in range(3):
+        spark.createDataFrame(
+            [(10 * i + j, f"v{i}", f"2024-01-0{1 + j % 3}") for j in range(6)],
+            SCHEMA,
+        ).coalesce(1).write.mode("append").partitionBy("d").parquet(path)
+    init_snapshot_log(path)
+    record_commit(path)
+    out = {}
+    jobs = group_jobs(
+        spark, "compact-partitions-jobs",
+        lambda: out.update(compact_partitions(spark, path, ["d"], max_files=2)),
+    )
+    assert out == {"partitions_compacted": 3, "files_before": 9, "files_after": 3}
+    assert jobs == 3 * 3, jobs
+    _checked(spark, path, set())
 
 
 def test_version_reads_start_no_job(spark, tmpdir):

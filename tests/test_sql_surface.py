@@ -18,7 +18,7 @@ def _mk(spark, rows):
     return spark.createDataFrame([Row(**r) for r in rows])
 
 
-def _seed(spark, path, mode="mirror"):
+def _seed(spark, path):
     from weatherflow_spark.operators.snaplog import (
         init_snapshot_log,
         record_commit,
@@ -31,16 +31,15 @@ def _seed(spark, path, mode="mirror"):
     _mk(spark, rows).repartition(1).write.mode("overwrite").partitionBy(
         "day"
     ).parquet(path)
-    init_snapshot_log(path, mode=mode)
+    init_snapshot_log(path)
     record_commit(path)
 
 
-@pytest.mark.parametrize("mode", ["mirror", "manifest"])
-def test_sql_delete_time_travel_restore_cycle(spark, tmp_path, mode):
+def test_sql_delete_time_travel_restore_cycle(spark, tmp_path):
     """The full operator loop — DV delete, as-of reads of both sides,
     rollback — driven purely through SQL strings."""
     path = str(tmp_path / "t")
-    _seed(spark, path, mode=mode)
+    _seed(spark, path)
 
     rep = wf_sql.execute(
         spark,

@@ -536,7 +536,7 @@ def test_duplicate_key_batches_are_refused(spark, tmp_path):
 # delete_where: predicate-scoped row-level delete.
 
 
-def _dw_seed(spark, path, versioned=True, mode="mirror"):
+def _dw_seed(spark, path, versioned=True):
     from weatherflow_spark.operators.snaplog import (
         init_snapshot_log,
         record_commit,
@@ -551,19 +551,18 @@ def _dw_seed(spark, path, versioned=True, mode="mirror"):
         "day"
     ).parquet(path)
     if versioned:
-        init_snapshot_log(path, mode=mode)
+        init_snapshot_log(path)
         set_stats_columns(path, ["k"])
         record_commit(path)
     return rows
 
 
-@pytest.mark.parametrize("mode", ["mirror", "manifest"])
-def test_delete_where_scoped_and_time_travels(spark, tmp_path, mode):
+def test_delete_where_scoped_and_time_travels(spark, tmp_path):
     from weatherflow_spark.operators.snaplog import read_version, versions
     from weatherflow_spark.operators.upsert import delete_where
 
     path = str(tmp_path / "t")
-    _dw_seed(spark, path, mode=mode)
+    _dw_seed(spark, path)
     v1 = versions(path)[-1]
 
     def day_files(day):
@@ -588,12 +587,12 @@ def test_delete_where_scoped_and_time_travels(spark, tmp_path, mode):
     assert 0 <= rep["files_scanned"] <= rep["files_total"]
     # untouched partition byte-identical
     assert day_files("2026-01-02") == cold_before
-    # deleted keys gone at head, present at v1 (read_version: a
-    # manifest-mode live tree keeps superseded files until vacuum)
+    # deleted keys gone at head (and from the live tree), present at v1
     head = read_version(spark, path)
     assert head.where((F.col("day") == "2026-01-01")).count() == 5
     assert read_version(spark, path, v1).count() == 30
     assert read_version(spark, path).count() == 25
+    assert spark.read.parquet(path).count() == 25
     # replay: victims gone -> zero matches, no new version
     n_vs = len(versions(path))
     rep2 = delete_where(
@@ -605,13 +604,12 @@ def test_delete_where_scoped_and_time_travels(spark, tmp_path, mode):
     assert len(versions(path)) == n_vs
 
 
-@pytest.mark.parametrize("mode", ["mirror", "manifest"])
-def test_delete_where_can_empty_a_partition(spark, tmp_path, mode):
+def test_delete_where_can_empty_a_partition(spark, tmp_path):
     from weatherflow_spark.operators.snaplog import read_version, versions
     from weatherflow_spark.operators.upsert import delete_where
 
     path = str(tmp_path / "t")
-    _dw_seed(spark, path, mode=mode)
+    _dw_seed(spark, path)
     v1 = versions(path)[-1]
     rep = delete_where(
         spark, path, F.col("day") == "2026-01-03", ["k"],
@@ -835,7 +833,7 @@ def test_star_load_dim_failure_writes_no_fact(
 
 @pytest.mark.parametrize(
     "branch",
-    ["seed", "partitioned", "unpartitioned", "manifest", "manifest_unpartitioned"],
+    ["seed", "partitioned", "unpartitioned", "versioned", "versioned_unpartitioned"],
 )
 def test_before_write_gates_every_write_branch(spark, tmp_path, branch):
     """upsert_by_key calls before_write once on every write branch,
@@ -843,6 +841,7 @@ def test_before_write_gates_every_write_branch(spark, tmp_path, branch):
     files and versions as they were."""
     from weatherflow_spark.operators.commit import partition_versions
     from weatherflow_spark.operators.snaplog import (
+        head_version,
         init_snapshot_log,
         record_commit,
     )
@@ -852,10 +851,11 @@ def test_before_write_gates_every_write_branch(spark, tmp_path, branch):
     if branch != "seed":
         writer = _mk(spark, DAY1 + DAY2).write
         (writer.partitionBy(*pc) if pc else writer).parquet(path)
-        if branch.startswith("manifest"):
-            init_snapshot_log(path, mode="manifest")
+        if branch.startswith("versioned"):
+            init_snapshot_log(path)
             record_commit(path)
     files, versions = _data_files(path), partition_versions(path)
+    head = head_version(path)
     batch = _mk(spark, [{"k": 1, "day": "2026-01-01", "v": 99.0}])
 
     def closed():
@@ -865,6 +865,7 @@ def test_before_write_gates_every_write_branch(spark, tmp_path, branch):
         upsert_by_key(spark, batch, path, ["k"], pc, before_write=closed)
     assert _data_files(path) == files
     assert partition_versions(path) == versions
+    assert head_version(path) == head
 
     calls = []
     upsert_by_key(
@@ -914,13 +915,12 @@ def test_delete_where_refuses_null_key_victims(spark, tmp_path):
 # restore_version: roll a versioned table back as a new commit.
 
 
-@pytest.mark.parametrize("mode", ["mirror", "manifest"])
-def test_restore_version_rolls_back_as_new_commit(spark, tmp_path, mode):
+def test_restore_version_rolls_back_as_new_commit(spark, tmp_path):
     from weatherflow_spark.operators.snaplog import read_version, versions
     from weatherflow_spark.operators.upsert import restore_version
 
     path = str(tmp_path / "t")
-    _dw_seed(spark, path, mode=mode)  # 30 rows over 3 day partitions
+    _dw_seed(spark, path)  # 30 rows over 3 day partitions
     v1 = versions(path)[-1]
 
     def day_files(day):

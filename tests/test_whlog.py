@@ -112,6 +112,9 @@ def test_commit_reuses_existing_versions(spark, wh):
     assert e["tables"]["fact"] == max(versions(os.path.join(wh, "fact")))
     assert versions(os.path.join(wh, "fact")) == v_fact + [v_fact[-1] + 1]
     assert versions(os.path.join(wh, "dim")) == [1]  # unchanged: reused
+    t2 = read_warehouse(spark, wh, 2)
+    assert t2["fact"].count() == 30  # the replaced row is not resurrected
+    assert t2["fact"].where("k = 1").first().amt == 5.0
 
 
 def test_replayed_load_is_exactly_once(spark, wh):
@@ -173,33 +176,6 @@ def test_pinned_load_survives_vacuum_and_stale_load_raises(spark, wh):
     with pytest.raises(ValueError, match="version"):
         read_warehouse(spark, wh, 1)
     assert _joined_digest(read_warehouse(spark, wh, 2))[0] == 30
-
-
-def test_manifest_mode_member_reuses_head_never_raw_walk(spark, wh):
-    """A manifest-mode member's live tree holds superseded files; the
-    warehouse commit must record the HEAD version, never a raw walk
-    that would resurrect replaced rows (r11 review)."""
-    from weatherflow_spark.operators.snaplog import init_snapshot_log, record_commit
-
-    _seed(spark, wh)
-    fact_p = os.path.join(wh, "fact")
-    init_snapshot_log(fact_p, mode="manifest")
-    record_commit(fact_p)  # seed v1
-    # replace k=1 through the keyed choke point: old file stays on disk
-    upsert_by_key(
-        spark,
-        spark.createDataFrame([(1, 0, 999.0)], "k long, cust long, amt double"),
-        fact_p,
-        ["k"],
-    )
-    assert versions(fact_p) == [1, 2]
-    commit_warehouse(wh, ["fact", "dim"])
-    e = load_entry(wh, 1)
-    assert e["tables"]["fact"] == 2  # head reused, nothing minted
-    t1 = read_warehouse(spark, wh, 1)
-    assert t1["fact"].count() == 30  # no resurrected duplicates
-    assert t1["fact"].where("k = 1").count() == 1
-    assert t1["fact"].where("k = 1").first().amt == 999.0
 
 
 def test_vacuum_warehouse_keeps_retained_loads_readable(spark, wh):

@@ -196,10 +196,7 @@ def test_write_zordered_validates_bit_width(spark, tmp_path):
     assert info["files_scanned"] <= 4
 
 
-@pytest.mark.parametrize("mode", ["mirror", "manifest"])
-def test_compact_zorder_folds_dv_and_preserves_two_axis_pruning(
-    spark, tmp_path, mode
-):
+def test_compact_zorder_folds_dv_and_preserves_two_axis_pruning(spark, tmp_path):
     """E113 (r14): an unpartitioned Z-ordered table folds its
     deletion vectors only through the whole-table rewrite (root files
     are not a partition, so compact_partitions never plans them), and
@@ -223,7 +220,7 @@ def test_compact_zorder_folds_dv_and_preserves_two_axis_pruning(
         "a long, b long, v double",
     )
     write_zordered(df, path, "a", "b", num_files=16, bits=None)
-    init_snapshot_log(path, mode=mode)
+    init_snapshot_log(path)
     set_stats_columns(path, ["a", "b"])
     record_commit(path)
     band = [("a", 0, 511), ("b", 0, 511)]

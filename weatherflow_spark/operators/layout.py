@@ -30,6 +30,7 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 
 def write_range_sorted(
@@ -63,69 +64,6 @@ def parquet_files(path: str) -> list[str]:
     ]
 
 
-def _manifest_table_root(path: str) -> str | None:
-    """The manifest-mode table root ``path`` sits inside (itself
-    included), or None. Guards the per-partition-directory rewrite
-    idiom: a subdirectory of a manifest table has no snapshot log of
-    its own, so a naive mode check would route it through the
-    mirror-mode swap and physically DELETE files every retained
-    version still references — with no mirror links to fall back on
-    (r11 review)."""
-    from weatherflow_spark.operators.snaplog import snapshot_mode
-
-    p = os.path.abspath(path.rstrip("/"))
-    while True:
-        if snapshot_mode(p) == "manifest":
-            return p
-        parent = os.path.dirname(p)
-        if parent == p:
-            return None
-        p = parent
-
-
-def _head_version(path: str) -> int:
-    """The manifest table's head version number, with a clear error
-    when the snapshot log has no committed versions yet — the raw
-    ``versions(path)[-1]`` would raise a bare IndexError (r12 advice)."""
-    from weatherflow_spark.operators.snaplog import versions
-
-    vs = versions(path)
-    if not vs:
-        raise ValueError(
-            f"{path}: manifest-mode table has no committed versions — "
-            "record_commit the seed first"
-        )
-    return vs[-1]
-
-
-def _head_partition_cols(path: str) -> list[str] | None:
-    """The hive partition column sequence of a manifest table's HEAD
-    version, inferred from its file list (``c1=v1/c2=v2/part-…``), or
-    None for an unpartitioned layout. Raises on a mixed layout — a
-    rewrite that guessed wrong would flatten the table and break
-    every later partition carve-out (r11 review)."""
-    from weatherflow_spark.operators.snaplog import entry_files
-
-    files = entry_files(path, _head_version(path))
-
-    def cols_of(rel: str) -> list[str]:
-        return [
-            d.split("=", 1)[0]
-            for d in rel.split("/")[:-1]
-            if "=" in d
-        ]
-
-    first = cols_of(files[0][0])
-    for rel, _ in files:
-        if cols_of(rel) != first:
-            raise ValueError(
-                f"{path}: head version mixes partition layouts "
-                f"({cols_of(rel)} vs {first}) — cannot infer a "
-                "partition-preserving rewrite"
-            )
-    return first or None
-
-
 def _head_token(path: str) -> int | None:
     """The versioned head number (None for an unversioned table) —
     the METADATA half of the optimistic swap token. ``dataset_snapshot``
@@ -134,8 +72,8 @@ def _head_token(path: str) -> int | None:
     rewrites ZERO data files — slips straight past the file-set
     re-check; the rewrite (read pre-DV) would then swap in un-deleted
     rows and its full-walk ``record_commit`` would drop the fresh DV
-    (every segment name changed), silently losing an RTBF delete
-    (r13 advice, high). Re-checking the head version at swap time
+    (every segment name changed), silently losing an RTBF delete.
+    Re-checking the head version at swap time
     catches any commit, file-touching or not. O(1): checkpoint
     pointer + forward probe."""
     from weatherflow_spark.operators.snaplog import (
@@ -146,136 +84,6 @@ def _head_token(path: str) -> int | None:
     if not snapshot_enabled(path):
         return None
     return head_version(path)
-
-
-def _compact_out(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int,
-    sort_col: str | None,
-    zorder: tuple[str, str] | None = None,
-) -> DataFrame:
-    """The compacted-output plan for a MANIFEST-mode table: source =
-    the head version's file list (the live tree also holds superseded
-    files, which must neither be read nor counted toward sizing)."""
-    from weatherflow_spark.operators.snaplog import entry_files, read_version
-    from weatherflow_spark.operators.zorder import zorder_arrange
-
-    total_bytes = sum(
-        max(int(sz), 0)
-        for _, sz in entry_files(path, _head_version(path))
-    )
-    n_files = max(1, math.ceil(total_bytes / target_file_bytes))
-    df = read_version(spark, path)
-    if zorder is not None:
-        return zorder_arrange(df, zorder[0], zorder[1], n_files, bits=None)
-    if sort_col is not None:
-        return df.repartitionByRange(
-            n_files, F.col(sort_col)
-        ).sortWithinPartitions(sort_col)
-    return df.repartition(n_files)
-
-
-_HEAD_SELF = object()  # sentinel: _manifest_rewrite takes its own token
-
-
-def _manifest_rewrite(
-    spark: SparkSession,
-    path: str,
-    out: DataFrame,
-    partition_cols: list[str] | None = None,
-    snap0: frozenset | None = None,
-    head0=_HEAD_SELF,
-    _before_swap=None,
-) -> int:
-    """Manifest-mode full-table rewrite commit (shared by compaction
-    and the widen rewrite): write ``out`` to a sibling scratch, then —
-    under the dataset lock, after the same optimistic file-set
-    validation as the mirror-mode swap — MOVE the new files into the
-    live tree (job-unique names, no collisions) and record a version
-    listing only them. Nothing is deleted: superseded files stay
-    readable for every retained version until vacuum, which is the
-    object-store contract (immutable PUTs + manifest commit +
-    deferred deletes). Returns the new file count."""
-    from weatherflow_spark.operators.commit import (
-        CompactionConflict,
-        dataset_lock,
-        dataset_snapshot,
-    )
-    from weatherflow_spark.operators.snaplog import record_commit
-    from weatherflow_spark.operators.upsert import _data_schema
-
-    if snap0 is None:
-        # Callers MUST take the token BEFORE resolving the source's
-        # head version (compact/rewrite_widen do): taken here it
-        # would include a commit that landed after the head was
-        # resolved, and the swap-time re-check would wave through a
-        # rewrite of the stale head — silently dropping that commit's
-        # rows (r11 review #2). This fallback exists only for sources
-        # built in the same expression as the call.
-        snap0 = dataset_snapshot(path)
-    if head0 is _HEAD_SELF:
-        head0 = _head_token(path)
-    tmp = path.rstrip("/") + "__rewriting"
-    shutil.rmtree(tmp, ignore_errors=True)
-    try:
-        writer = out.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        try:
-            writer.parquet(tmp)
-        except Exception as e:
-            # A concurrent vacuum can unlink superseded files the
-            # unlocked rewrite is still reading — translate into the
-            # retryable type callers handle, like the mirror path.
-            if isinstance(e, FileNotFoundError) or "FileNotFoundException" in str(e):
-                raise CompactionConflict(
-                    f"{path}: files changed under the unlocked rewrite; re-run"
-                ) from e
-            raise
-        if _before_swap is not None:
-            _before_swap()
-        with dataset_lock(path):
-            if dataset_snapshot(path) != snap0:
-                raise CompactionConflict(
-                    f"{path}: dataset changed during the rewrite; re-run"
-                )
-            if _head_token(path) != head0:
-                # metadata-only commit (merge-on-read DV delete): zero
-                # data files changed, so only the head token sees it —
-                # the rewrite read pre-DV and would erase the delete
-                raise CompactionConflict(
-                    f"{path}: a version committed during the rewrite "
-                    "(metadata-only, e.g. a deletion-vector delete); "
-                    "re-run"
-                )
-            moved: list[tuple[str, int]] = []
-            for root, _, files in os.walk(tmp):
-                for f in files:
-                    if f.startswith(("_", ".")):
-                        continue
-                    full = os.path.join(root, f)
-                    rel = os.path.relpath(full, tmp)
-                    dst = os.path.join(path, rel)
-                    parent = os.path.dirname(dst)
-                    if parent:
-                        os.makedirs(parent, exist_ok=True)
-                    size = os.path.getsize(full)
-                    os.rename(full, dst)
-                    moved.append((rel, size))
-            record_commit(
-                path, files=sorted(moved),
-                schema=_data_schema(out, partition_cols),
-            )
-        return len(moved)
-    finally:
-        # Unconditional: success leaves only empty dirs in tmp; every
-        # failure exit (conflict, mid-write crash) reclaims the whole
-        # scratch. A crash BETWEEN moves strands already-moved files
-        # in the live tree with no version referencing them — garbage
-        # that vacuum sweeps, the documented manifest-mode failure
-        # shape.
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def compact(
@@ -291,12 +99,12 @@ def compact(
     size (compressed) to pick the file count, so the rewrite is one
     job with no second pass. ``sort_col`` re-sorts during the rewrite
     to restore min/max clustering that incremental appends destroyed.
-    ``zorder=(col_a, col_b)`` re-MORTONS instead (r14, E113): an
-    unpartitioned Z-ordered table (the E106 layout) can only fold a
+    ``zorder=(col_a, col_b)`` re-MORTONS instead: an
+    unpartitioned Z-ordered table can only fold a
     deletion vector through THIS whole-table rewrite — its root files
     are not a partition, so ``compact_partitions`` never plans them —
     and a 1-D ``sort_col`` rewrite would silently destroy the
-    two-axis rectangles E106's pruning certifies; the z form folds
+    two-axis rectangles its pruning relies on; the z form folds
     the DVs AND reproduces the interleaved clustering (bit width
     re-derived from the key maxima). Mutually exclusive with
     ``sort_col``.
@@ -306,7 +114,7 @@ def compact(
     directory (partition values don't change, so this composes with
     dynamic partition overwrite — operators/upsert.py).
 
-    Concurrent-writer safe (r8): optimistic validate-and-swap under
+    Concurrent-writer safe: optimistic validate-and-swap under
     the dataset's advisory commit lock (operators/commit.py). The
     file set is snapshotted before the read; the rewrite runs
     UNLOCKED (loads proceed freely); the swap happens only if — still
@@ -322,47 +130,17 @@ def compact(
         dataset_lock,
         dataset_snapshot,
     )
-    from weatherflow_spark.operators.snaplog import snapshot_mode
 
     if zorder is not None and sort_col is not None:
         raise ValueError(
             "pass either sort_col (1-D range clustering) or zorder "
             "(two-axis Morton clustering), not both"
         )
-    root = _manifest_table_root(path)
-    if root is not None and root != os.path.abspath(path.rstrip("/")):
-        raise ValueError(
-            f"{path}: inside the manifest-mode table {root} — compact "
-            "the table root; a subdirectory swap would delete files "
-            "retained versions still reference"
-        )
-    if snapshot_mode(path) == "manifest":
-        # Token BEFORE the head resolves (r11 review #2): a commit
-        # landing between head-resolution and a later snapshot would
-        # otherwise survive the swap-time re-check while the rewrite
-        # reproduces the stale head — dropping that commit's rows.
-        # Both halves: the file-set fingerprint AND the head version
-        # (a DV delete changes only the latter — r13 advice, high).
-        snap0 = dataset_snapshot(path)
-        head0 = _head_token(path)
-        # Partition-preserving: the flattened mirror-style rewrite
-        # would leave root-level files no partition carve-out ever
-        # matches — every later overwrite would resurrect replaced
-        # rows (r11 review).
-        return _manifest_rewrite(
-            spark, path,
-            _compact_out(spark, path, target_file_bytes, sort_col, zorder),
-            partition_cols=_head_partition_cols(path),
-            snap0=snap0,
-            head0=head0,
-            _before_swap=_before_swap,
-        )
-
     snap0 = dataset_snapshot(path)
     head0 = _head_token(path)
     # Per-file guard: a concurrent dynamic overwrite can delete a part
     # file between the listing and the stat (the dataset_snapshot
-    # sentinel race, r9 review) — a vanished file contributes 0 bytes
+    # sentinel race) — a vanished file contributes 0 bytes
     # and the swap-time snapshot comparison catches the change.
     total_bytes = 0
     for f in parquet_files(path):
@@ -374,9 +152,9 @@ def compact(
     from weatherflow_spark.operators.snaplog import head_dv, read_version
 
     if head_dv(path):
-        # Mirror-mode live files still hold DV-deleted rows physically
+        # Live files still hold DV-deleted rows physically
         # — read the post-DV head so the rewrite FOLDS the deletes
-        # (the post-swap full-walk commit then drops every DV, r13).
+        # (the post-swap full-walk commit then drops every DV).
         df = read_version(spark, path)
     else:
         df = spark.read.parquet(path)
@@ -414,7 +192,7 @@ def compact(
                 # invisible to the file-set fingerprint above — but the
                 # rewrite read pre-DV; swapping would resurrect its
                 # victims and the full-walk record_commit below would
-                # drop the fresh DV (r13 advice, high).
+                # drop the fresh DV.
                 raise CompactionConflict(
                     f"{path}: a version committed during compaction "
                     "(metadata-only, e.g. a deletion-vector delete); "
@@ -431,7 +209,7 @@ def compact(
             os.rename(path, old)
             os.rename(tmp, path)
             swapped = True
-            # Versioned tables (E90): the rewrite changed every file
+            # Versioned tables: the rewrite changed every file
             # name, so record the compacted layout as a new version —
             # time-travel readers keep pre-compaction versions via
             # the retained links (same inodes; the rename-aside and
@@ -487,8 +265,8 @@ def rewrite_widen(
     partition_cols: list[str] | None = None,
     _before_swap=None,
 ) -> None:
-    """WIDEN column types via a full table rewrite (E94's missing
-    half, r10 verdict #4): the keyed upsert refuses type changes by
+    """WIDEN column types via a full table rewrite (the half the
+    add-column evolution leaves out): the keyed upsert refuses type changes by
     design — int32 and int64 parquet footers cannot be schema-merged
     at read time, so on plain parquet widening IS a rewrite, exactly
     like a Delta/Iceberg ``ALTER COLUMN TYPE`` on formats without
@@ -514,40 +292,21 @@ def rewrite_widen(
         dataset_lock,
         dataset_snapshot,
     )
-    from weatherflow_spark.operators.snaplog import (
-        read_version,
-        snapshot_mode,
-        versions,
-    )
+    from weatherflow_spark.operators.snaplog import head_dv, read_version
 
-    root = _manifest_table_root(path)
-    if root is not None and root != os.path.abspath(path.rstrip("/")):
-        raise ValueError(
-            f"{path}: inside the manifest-mode table {root} — widen "
-            "the table root; a subdirectory swap would delete files "
-            "retained versions still reference"
-        )
-    from weatherflow_spark.operators.snaplog import head_dv
-
-    manifest = snapshot_mode(path) == "manifest"
-    manifest_snap0 = None
-    # Token BEFORE the source resolves (r11 review principle; the r12
-    # advice caught the mirror path inverting it): Spark freezes the
+    # Token BEFORE the source resolves: Spark freezes the
     # parquet file listing at DataFrame creation, so a commit landing
     # between the listing and the token would be INCLUDED in the token
     # yet EXCLUDED from the rewrite — the swap-time re-check would pass
     # while silently dropping that commit's rows. Taking the token
     # first makes any post-listing commit fail the swap comparison.
     # The head-version half catches metadata-only commits (DV deletes
-    # rewrite zero data files — r13 advice, high).
+    # rewrite zero data files).
     snap0 = dataset_snapshot(path)
     head0 = _head_token(path)
-    if manifest and versions(path):
-        manifest_snap0 = snap0
-        df = read_version(spark, path)  # superseded files must not be read
-    elif head_dv(path):
-        # live mirror files still hold DV-deleted rows — the widen
-        # rewrite must fold them, not resurrect them (r13)
+    if head_dv(path):
+        # live files still hold DV-deleted rows — the widen
+        # rewrite must fold them, not resurrect them
         df = read_version(spark, path)
     else:
         df = spark.read.option("mergeSchema", "true").parquet(path)
@@ -578,27 +337,6 @@ def rewrite_widen(
             for c in df.columns
         ]
     )
-    if manifest:
-        # Object-store form: no swap — new files move in, a version
-        # lists only them, old footers stay readable for time travel.
-        # Partition layout: never trust an omitted partition_cols —
-        # a flattened rewrite would leave root files every later
-        # carve-out misses, resurrecting replaced rows (r11 review);
-        # infer from the head entry like compact, and refuse a
-        # mismatch between the caller's claim and the actual layout.
-        head_cols = _head_partition_cols(path) if versions(path) else None
-        if partition_cols and head_cols and list(partition_cols) != head_cols:
-            raise ValueError(
-                f"{path}: partition_cols={list(partition_cols)} does not "
-                f"match the head version's hive layout {head_cols}"
-            )
-        _manifest_rewrite(
-            spark, path, out, partition_cols or head_cols,
-            snap0=manifest_snap0,
-            head0=head0,
-            _before_swap=_before_swap,
-        )
-        return
     tmp = path.rstrip("/") + "__widening"
     old = path.rstrip("/") + "__old_widen"
     swapped = False
@@ -654,7 +392,7 @@ def compact_partitions(
     recluster: bool = False,
 ) -> dict[str, int]:
     """Partition-scoped small-file maintenance PLANNED from the head
-    entry's segments (E101, r12): the snapshot log already records
+    entry's segments: the snapshot log already records
     every partition directory's live file list in an immutable
     segment, so deciding WHICH partitions need compaction is O(dirs)
     of metadata — not a single directory listing or file stat at any
@@ -680,7 +418,7 @@ def compact_partitions(
     its own hold before rewriting — a concurrent writer that touched
     the partition in between just makes this run skip it (the next
     maintenance pass re-plans), and writers never wait behind more
-    than one partition's rewrite (r12 review). ``partition_cols``
+    than one partition's rewrite. ``partition_cols``
     must name the table's FULL partition layout — a subset would
     dynamic-overwrite (and carve out) whole parent directories whose
     sibling sub-partitions were never read; every planned dirkey is
@@ -691,10 +429,9 @@ def compact_partitions(
     "files_before": b, "files_after": a}`` (counted over the
     compacted partitions only).
 
-    ``sort_col`` makes the rewrite CLUSTERING-PRESERVING (r13 verdict
-    #2): without it, each offender collapses to one file per
+    ``sort_col`` makes the rewrite CLUSTERING-PRESERVING: without it, each offender collapses to one file per
     partition whose min/max spans the whole partition — after a DV
-    fold on a range-clustered table (the E100/E106 layouts), file
+    fold on a range-clustered or Z-ordered table, file
     skipping silently decays until a full re-sort; the maintenance
     loop un-maintains the layout it maintains. With it, each
     offender rewrites as N range-disjoint files sorted on
@@ -704,7 +441,7 @@ def compact_partitions(
     deliberately) and resizes by ``target_file_bytes`` for a genuine
     small-file offender.
 
-    ``recluster=True`` (r14, requires ``sort_col``) adds a THIRD
+    ``recluster=True`` (requires ``sort_col``) adds a THIRD
     offender class beyond small-files and DV-coverage: partitions
     whose live files OVERLAP on ``sort_col``'s recorded zone maps
     (:func:`~weatherflow_spark.operators.snaplog._interval_depth`
@@ -717,11 +454,14 @@ def compact_partitions(
     stats can't be assessed and don't trigger the class on their
     own (like pruning, the diagnostic is an optimization surface)."""
     from weatherflow_spark.operators.commit import (
+        check_and_bump_versions,
         dataset_lock,
         partition_key_values,
     )
     from weatherflow_spark.operators.snaplog import (
+        _dv_dir,
         _entry_dv,
+        _entry_schema,
         _entry_segments,
         _interval_depth,
         _load_entry,
@@ -731,7 +471,10 @@ def compact_partitions(
         segment_stats,
         snapshot_enabled,
     )
-    from weatherflow_spark.operators.upsert import overwrite_partitions
+    from weatherflow_spark.operators.upsert import (
+        _record_snapshot,
+        overwrite_partitions,
+    )
 
     if not snapshot_enabled(path):
         raise ValueError(
@@ -762,7 +505,7 @@ def compact_partitions(
                 # A SUBSET (or re-ordered) partition_cols would
                 # dynamic-overwrite whole parent dirs whose sibling
                 # sub-partitions were never read — silent data loss,
-                # not a maintenance op (r12 review).
+                # not a maintenance op.
                 raise ValueError(
                     f"{path}: partition layout in the log is {keys} "
                     f"but partition_cols={list(partition_cols)} — pass "
@@ -774,11 +517,11 @@ def compact_partitions(
             dv_names = tuple(sorted(head_dvs.get(dirkey) or ()))
             # DV-covered partitions are offenders regardless of file
             # count: compaction is where merge-on-read deletes FOLD
-            # into data files (r12 verdict #1) — every read of a
+            # into data files — every read of a
             # covered partition pays the anti-join until then.
             decayed = False
             if recluster and not dv_names and n_files <= max_files:
-                # third offender class (r14): files overlapping on
+                # third offender class: files overlapping on
                 # sort_col's zone maps — pure metadata from the
                 # partition's own segment stats
                 sst = segment_stats(path, segname)
@@ -821,35 +564,40 @@ def compact_partitions(
                 # directory spells them: type inference would re-type
                 # 'hour=00' to int 0 and the rewrite would land under
                 # a DIFFERENT directory (hour=0) while the scoped
-                # carve-out kept the old one — every row duplicated
-                # (r12 review). r12.2: read the leaf files WITHOUT a
-                # basePath (no partition columns derived, so no
-                # inference to disable) and attach the values decoded
-                # from the dirkey itself — byte-exact by construction,
-                # and no session-conf set/restore: the old global
-                # toggle raced every concurrent partitioned READ in
-                # the process (a second streaming query's merge could
-                # plan its date column as STRING mid-window) once
-                # maintenance moved inside the sink (r12.2 review).
-                df = spark.read.option("mergeSchema", "true").parquet(
+                # carve-out kept the old one — every row duplicated.
+                # So the leaf files are read WITHOUT a basePath (no
+                # partition columns derived, so no inference to
+                # disable) and the values decoded from the dirkey
+                # itself are attached — byte-exact by construction,
+                # and no session-conf set/restore, which would race
+                # every concurrent partitioned READ in the process (a
+                # second streaming query's merge could plan its date
+                # column as STRING mid-window). The head entry's
+                # recorded schema types the read, so no Spark job
+                # infers one.
+                part_cols_set = {c for c, _ in partition_key_values(dirkey)}
+                schema = StructType([
+                    f for f in _entry_schema(path, head_e).fields
+                    if f.name not in part_cols_set
+                ])
+                df = spark.read.schema(schema).parquet(
                     *[os.path.join(live, rel) for rel, _ in files]
                 )
-                # partition values attach BEFORE the DV fold (r13
-                # review): a DV whose key_cols include a partition
-                # column would otherwise anti-join against a frame
-                # that lacks the column entirely (this leaf read has
-                # no basePath, so partition columns exist only in the
-                # directory name) and the fold would raise forever.
+                # partition values attach BEFORE the DV fold: a DV
+                # whose key_cols include a partition column would
+                # otherwise anti-join against a frame that lacks the
+                # column entirely (this leaf read has no basePath, so
+                # partition columns exist only in the directory name)
+                # and the fold would raise forever.
                 for col, val in partition_key_values(dirkey):
                     df = df.withColumn(col, F.lit(val).cast("string"))
-                part_cols_set = {c for c, _ in partition_key_values(dirkey)}
                 if dv_names:
                     # FOLD the partition's deletion vectors: the
                     # rewrite is the merge-on-read delete's merge
                     # half — one broadcast anti-join PER DV on its
                     # own key columns (heterogeneous key sets must
                     # not union, see snaplog._apply_dvs). Partition
-                    # key columns compare TYPED (r13 advice, medium):
+                    # key columns compare TYPED:
                     # cast the attached dir-spelled string to the DV
                     # column's type — string→T parses every standard
                     # hive spelling — never T→string, because Spark's
@@ -862,10 +610,6 @@ def compact_partitions(
                     # scoped commit below then drops the dir's DVs
                     # (its segment changed).
                     for dv_name in dv_names:
-                        from weatherflow_spark.operators.snaplog import (
-                            _dv_dir,
-                        )
-
                         dvk = spark.read.parquet(
                             os.path.join(_dv_dir(path), dv_name)
                         )
@@ -888,41 +632,27 @@ def compact_partitions(
                     # nothing and the scoped commit would carry the
                     # old segment — delete the directory explicitly,
                     # exactly like apply_changes' emptied-partition
-                    # branch (mirror), or carve it out of the new
-                    # entry (manifest).
-                    from weatherflow_spark.operators.snaplog import (
-                        snapshot_mode as _sm,
+                    # branch.
+                    shutil.rmtree(
+                        os.path.join(live, dirkey), ignore_errors=True
                     )
-                    from weatherflow_spark.operators.upsert import (
-                        _record_snapshot,
-                    )
-                    from weatherflow_spark.operators.commit import (
-                        check_and_bump_versions,
-                    )
-
-                    if _sm(path) == "manifest":
-                        overwrite_partitions(
-                            df, path, partition_cols,
-                            replaced_keys=[dirkey],
-                        )
-                    else:
-                        shutil.rmtree(
-                            os.path.join(live, dirkey), ignore_errors=True
-                        )
-                        check_and_bump_versions(path, [dirkey])
-                        _record_snapshot(path, scope=[dirkey])
+                    check_and_bump_versions(path, [dirkey])
+                    _record_snapshot(path, scope=[dirkey])
                     compacted.append(dirkey)
                     continue
                 # Stage on DISK, not localCheckpoint: the rewrite
                 # replaces the very files this read lists, and a
                 # long maintenance loop must not pin every
                 # compacted partition's data in executor storage
-                # until GC (r12 review). Deterministic cleanup.
+                # until GC. Deterministic cleanup. The staged read
+                # takes the schema it was written with, and the
+                # rewrite names its one partition, so neither infers
+                # nor collects anything.
                 shutil.rmtree(scratch, ignore_errors=True)
                 df.write.mode("overwrite").parquet(scratch)
-                staged = spark.read.parquet(scratch)
+                staged = spark.read.schema(df.schema).parquet(scratch)
                 if sort_col is not None and sort_col in staged.columns:
-                    # Clustering-preserving rewrite (r13 verdict #2):
+                    # Clustering-preserving rewrite:
                     # range-arrange on the STAGED read (a plain read
                     # would let Spark's small-file split packing mix
                     # ranges within one task) so each task writes one
@@ -944,10 +674,13 @@ def compact_partitions(
                         n_out, F.col(sort_col)
                     ).sortWithinPartitions(sort_col)
                     overwrite_partitions(
-                        staged, path, partition_cols, presorted=True
+                        staged, path, partition_cols, presorted=True,
+                        touched_keys=[dirkey],
                     )
                 else:
-                    overwrite_partitions(staged, path, partition_cols)
+                    overwrite_partitions(
+                        staged, path, partition_cols, touched_keys=[dirkey]
+                    )
                 compacted.append(dirkey)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)

@@ -81,7 +81,7 @@ def refresh_rollup(
 def merge_rollup(
     spark: SparkSession, late_batch: DataFrame, path: str, scale: int = 100
 ) -> None:
-    """Late-data maintenance (r8, closes the documented-only remedy):
+    """Late-data maintenance:
     fold a batch of NEW facts for already-materialized buckets into
     the partial table WITHOUT re-reading any facts — the whole point
     of keeping the state mergeable. The batch's partials merge with
@@ -112,13 +112,12 @@ def merge_rollup(
         # so that bucket's existing partials would be skipped and the
         # dynamic overwrite would replace them with batch-only
         # partials — silent loss (the upsert_by_key NULL-partition
-        # fix, applied here too; r8 ADVICE).
+        # fix, applied here too).
         pred = F.lit(False)
         for v in touched:
             pred = pred | F.col("event_date").eqNullSafe(F.lit(v))
-        # read_live: on a manifest-mode rollup table the live tree
-        # also holds superseded partials — a raw read would fold them
-        # in twice and inflate every merged bucket (r11 review).
+        # read_live: on a rollup table with deletion vectors the live
+        # files still hold the deleted partials.
         from weatherflow_spark.operators.snaplog import read_live
 
         existing = read_live(spark, path).where(pred)  # partition-pruned
@@ -156,7 +155,7 @@ def read_rollup(
     from weatherflow_spark.operators.snaplog import read_live
 
     p = float(scale)
-    partials = read_live(spark, path)  # manifest-safe (r11 review)
+    partials = read_live(spark, path)  # deletion vectors applied
     if grain == "event_date":
         keys = [F.col("event_date")]
     else:

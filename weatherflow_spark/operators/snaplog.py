@@ -1,9 +1,9 @@
-"""Snapshot log + time-travel reads (E90): versioned datasets on top
-of the commit protocol.
+"""Snapshot log + time-travel reads: versioned datasets on top of the
+commit protocol.
 
 The reference's warehouse has no history at all — every load mutates
 the MySQL tables in place (reference dags/utils/database.py:25-34), so
-"what did the table say yesterday" is unanswerable. The r9 commit
+"what did the table say yesterday" is unanswerable. The commit
 protocol (operators/commit.py) already gives each dataset an advisory
 commit lock and a partition-version manifest; this module adds the
 remaining lakehouse piece, the public Delta/Iceberg pattern re-derived
@@ -25,6 +25,10 @@ for the engine's parquet layout:
   Spark part-file names carry job-unique task UUIDs, a relpath is
   never reused for different content — "already linked" is a safe
   skip.
+- **Live tree**: writers replace files in place, so the dataset
+  directory always holds exactly the head version's files. A plain
+  ``spark.read.parquet(path)`` reads the head version, minus the rows
+  its deletion vectors hide (:func:`read_live` applies those).
 - **Time-travel read** (:func:`read_version`): reads a version's file
   list straight FROM the retention mirror with ``basePath`` set to it,
   so hive partition columns are recovered by Spark's own partition
@@ -32,7 +36,7 @@ for the engine's parquet layout:
   lock (writers never modify retained inodes, they only add links).
   A version-N read is therefore isolated from every concurrent
   upsert/compaction — but NOT from a concurrent vacuum, which unlinks
-  retained files (r9 verdict). A reader that must outlive vacuums
+  retained files. A reader that must outlive vacuums
   wraps the read in :func:`pinned_version`: the pin is taken under
   the dataset lock (so it either lands before a racing vacuum decides,
   or fails deterministically BEFORE any file is read if the version is
@@ -45,24 +49,22 @@ for the engine's parquet layout:
 
 Opt-in by design: :func:`init_snapshot_log` creates the log dirs, and
 the shared write choke point (``upsert.overwrite_partitions`` — every
-keyed upsert, CDC apply, and rollup refresh routes through it, r9)
+keyed upsert, CDC apply, and rollup refresh routes through it)
 records a commit automatically ONLY when the log exists, so tables
 that don't want history pay nothing.
 
 Scale posture (100 TB): the log entry is O(files) metadata, not data;
 linking is an exists-check skip for every unchanged file, so a
 micro-batch touching one hour of a table links only that hour's new
-files. On an object store (no hard links, but PUTs are immutable and
-never overwrite), the retention store degenerates to the manifest
-alone — the log's file list IS the snapshot, the Iceberg manifest-list
-shape. The local/HDFS link form here keeps the same read API. A
-partition-touching commit passes ``scope`` (the touched partition
-directories — the write choke point knows them) so the listing walks
-only the touched slice and carries the rest forward from the previous
-version's entry: version cost is O(touched files) per commit, never a
-full-tree walk (r9 verdict #4). ``files`` remains for writers that
-know their COMPLETE file set (it must be complete — see
-:func:`record_commit`).
+files. A partition-touching commit passes ``scope`` (the touched
+partition directories — the write choke point knows them) so the
+listing walks only the touched slice and carries the rest forward
+from the previous version's entry: version cost is O(touched files)
+per commit, never a full-tree walk. ``files`` remains for writers
+that know their COMPLETE file set (it must be complete — see
+:func:`record_commit`). An object store has no hard links; a port
+there would start from the entry's file list, which already names
+every file a version reads.
 """
 
 from __future__ import annotations
@@ -105,52 +107,13 @@ def snapshot_enabled(path: str) -> bool:
     return os.path.isdir(_log_dir(path))
 
 
-def snapshot_mode(path: str) -> str | None:
-    """``"mirror"`` (hard-linked retention store), ``"manifest"``
-    (object-store form: the log's file list IS the snapshot, no
-    links), or None when the dataset has no snapshot log."""
-    if not snapshot_enabled(path):
-        return None
-    try:
-        with open(os.path.join(_log_dir(path), "MODE")) as f:
-            return f.read().strip() or "mirror"
-    except OSError:
-        return "mirror"  # pre-r11 logs carry no MODE file
-
-
-def init_snapshot_log(path: str, mode: str = "mirror") -> None:
-    """Opt this dataset into versioned commits (idempotent).
-
-    ``mode="mirror"`` (default, the local/HDFS form): every committed
-    file is hard-linked into a retention store sibling, so versions
-    survive writers that physically delete replaced files.
-
-    ``mode="manifest"`` (the object-store form, r10 verdict #3): no
-    links, no mirror — each version entry's file list IS the
-    snapshot, read straight from the LIVE tree (the Iceberg
-    manifest-list shape). This requires writers that NEVER delete
-    committed files until vacuum; the engine's write choke points
-    detect the mode and switch to append-new-files + logical-replace
-    (operators/upsert.py), compaction moves its output in without
-    removing the input (operators/layout.py), and
-    :func:`vacuum_versions` becomes the ONLY deleter — it unlinks
-    live files referenced by no surviving version. On S3-class
-    storage this is the mode that runs as-is: immutable PUTs, list
-    from the manifest, deferred deletes."""
-    if mode not in ("mirror", "manifest"):
-        raise ValueError(f"unknown snapshot mode {mode!r}")
-    prior = snapshot_mode(path)
-    if prior is not None and prior != mode:
-        raise ValueError(
-            f"{path}: snapshot log already initialised in {prior!r} mode; "
-            "switching modes mid-history is not supported"
-        )
+def init_snapshot_log(path: str) -> None:
+    """Opt this dataset into versioned commits (idempotent): create its
+    log and the retention mirror that every committed file is
+    hard-linked into, so versions survive writers that physically
+    delete replaced files."""
     os.makedirs(_log_dir(path), exist_ok=True)
-    if mode == "mirror":
-        os.makedirs(_retain_dir(path), exist_ok=True)
-    mode_file = os.path.join(_log_dir(path), "MODE")
-    if not os.path.isfile(mode_file):
-        write_atomic(mode_file, mode + "\n")
+    os.makedirs(_retain_dir(path), exist_ok=True)
 
 
 def _seg_dir(path: str) -> str:
@@ -174,9 +137,9 @@ def _write_segments(
     name}. Segments are content-addressed (name = hash of the sorted
     group), so a directory whose file set did not change maps to the
     SAME segment file and costs zero writes — the Iceberg
-    manifest-reuse shape (r11 verdict #3): entry I/O per commit is
+    manifest-reuse shape: entry I/O per commit is
     O(directories) names + O(touched files) segment bytes, never
-    O(total files). ``stats`` (rel → {col: [min, max]}, E100) rides
+    O(total files). ``stats`` (rel → {col: [min, max]}) rides
     inside each segment so version readers can FILE-SKIP without
     opening a single footer."""
     import hashlib
@@ -407,7 +370,7 @@ def _entry_dv(entry: dict) -> dict[str, list[str]]:
 def head_dv(path: str) -> dict[str, list[str]]:
     """The HEAD version's deletion-vector map (empty when the table
     has no versions or no live DVs). Writers that read the live tree
-    of a mirror-mode table directly must check this: with active DVs
+    of a versioned table directly must check this: with active DVs
     the live files still hold the deleted rows physically, so the
     only correct current-content read is :func:`read_version`."""
     if not snapshot_enabled(path):
@@ -426,7 +389,7 @@ def _apply_dvs(
 ) -> DataFrame:
     """Anti-join ``df`` against each deletion vector in ``names`` —
     one broadcast anti-join PER DV, each on that DV's OWN key columns
-    (r13 review: two DVs written with different key_cols must not be
+    (two DVs written with different key_cols must not be
     unioned into one null-padded frame — the null-unsafe anti-join
     would match nothing and resurrect every victim of both deletes).
     No dedup on the build side: anti-join semantics ignore build-side
@@ -482,8 +445,7 @@ def _read_files_with_dv(
 def _merge_dir_dvs(
     path: str, dv: dict[str, list[str]], dirkeys: list[str]
 ) -> None:
-    """Cap covered reads at ONE anti-join per directory (r13 verdict
-    #4): K RTBF deletes between folds previously stacked K broadcast
+    """Cap covered reads at ONE anti-join per directory: K RTBF deletes between folds previously stacked K broadcast
     anti-joins on every covered read (one per DV name —
     :func:`_apply_dvs`). When a directory's DV list holds several
     sidecars with IDENTICAL key schemas, union their key sets into
@@ -491,7 +453,7 @@ def _merge_dir_dvs(
     pays, zero data files touched — and reference only the merged
     name. Sidecars with different key columns (heterogeneous deletes)
     stay separate: unioning them would null-pad and the null-unsafe
-    anti-join would resurrect every victim (r13 review). Old sidecars
+    anti-join would resurrect every victim). Old sidecars
     stay on disk for time travel (prior entries reference them);
     vacuum GCs them once unreferenced. Mutates ``dv`` in place;
     inductively, a directory holds at most one DV per distinct key
@@ -578,7 +540,7 @@ def record_dv_commit(
     the same replay-keyed exactly-once contract as
     :func:`record_commit`. Same-key-schema DVs already covering a
     directory merge with the new one into a single sidecar
-    (:func:`_merge_dir_dvs`, r13 verdict #4) so reads pay one
+    (:func:`_merge_dir_dvs`) so reads pay one
     anti-join per directory regardless of how many deletes landed
     since the last fold."""
     if not snapshot_enabled(path):
@@ -609,8 +571,8 @@ def record_dv_commit(
             names = dv.setdefault(k, [])
             if dv_name not in names:
                 names.append(dv_name)
-        # same-schema sidecars on a covered directory merge into one
-        # (r13 verdict #4) — covered reads pay one anti-join per dir,
+        # same-schema sidecars on a covered directory merge into one —
+        # covered reads pay one anti-join per dir,
         # not one per delete since the last fold
         _merge_dir_dvs(path, dv, dirkeys)
         n = head + 1
@@ -631,7 +593,7 @@ def _stats_cols_path(path: str) -> str:
 
 
 def set_stats_columns(path: str, cols: list[str]) -> None:
-    """Opt the table into FILE-SKIPPING statistics (E100, the zone-map
+    """Opt the table into FILE-SKIPPING statistics (the zone-map
     / Iceberg-metrics shape on the segmented log): from the next
     commit on, every newly listed data file's parquet-footer min/max
     for ``cols`` is recorded inside its segment, and
@@ -642,7 +604,7 @@ def set_stats_columns(path: str, cols: list[str]) -> None:
     immutable and keep theirs), so the per-commit cost is O(touched
     files) footer reads. Numeric / date / timestamp columns record
     exact bounds; STRING columns record truncation-aware bounds
-    (r13 — lower truncated to :data:`STR_STAT_TRUNC` chars, upper
+    (lower truncated to :data:`STR_STAT_TRUNC` chars, upper
     truncated-then-incremented per the Iceberg truncate(k) contract,
     see :func:`_file_stats`), so priority/mktsegment-style string
     ranges prune safely. Bytes columns are ineligible."""
@@ -675,7 +637,7 @@ def _jsonable_stat(v, side: str = "min"):
     if isinstance(v, decimal.Decimal):
         # float() rounds to NEAREST — a min rounded up (or max
         # rounded down) would prune a file holding in-range rows
-        # (r12 review). Widen each bound outward instead.
+        # Widen each bound outward instead.
         f = float(v)
         if side == "min" and decimal.Decimal(f) > v:
             return math.nextafter(f, -math.inf)
@@ -726,7 +688,7 @@ def _file_stats(path: str, rel: str, cols: list[str]) -> dict:
     statistics — bounds over all row groups; a column with any
     row group missing min/max is omitted (no stats ⇒ never pruned).
 
-    STRING columns (r13, VERDICT r12 #3) record truncation-aware
+    STRING columns record truncation-aware
     bounds: min truncated to :data:`STR_STAT_TRUNC` chars (still a
     valid lower bound), max truncated-then-incremented
     (:func:`_trunc_upper` — a guaranteed superset). This is safe even
@@ -778,8 +740,8 @@ def _collect_stats(
 ) -> dict[str, dict] | None:
     """Stats map for a commit: new files read their footers once;
     files already covered by the previous entry's segments reuse
-    those bounds verbatim (manifest full-list commits re-list carried
-    files, which must not re-pay footer reads)."""
+    those bounds verbatim (full-list commits re-list carried files,
+    which must not re-pay footer reads)."""
     cols = stats_columns(path)
     if not cols:
         return None
@@ -814,8 +776,7 @@ def _scan_cmp_key(x):
     space-separator str(datetime) form normalizes to 'T' (only a REAL
     time-of-day qualifies — arbitrary 'YYYY-MM-DD text' strings are
     never mutated), reduced-precision ISO pads to seconds, and an
-    all-zero fraction drops (it equals the second). r12 reviews
-    #3-#5."""
+    all-zero fraction drops (it equals the second)."""
     import re as _re
 
     if isinstance(x, str):
@@ -841,7 +802,7 @@ def scan_version(
     version: int | None = None,
     predicates: list[tuple] | None = None,
 ) -> tuple[DataFrame, dict[str, int]]:
-    """FILE-SKIPPING version read (E100): return the version's rows
+    """FILE-SKIPPING version read: return the version's rows
     whose files can contain ``col ∈ [lo, hi]`` — files whose recorded
     [min, max] cannot intersect the range are never opened (a file
     with no recorded stats is always kept — pruning is only ever an
@@ -858,7 +819,7 @@ def scan_version(
     only keep an extra file, never drop one.
 
     ``predicates=[(col, lo, hi), ...]`` is the CONJUNCTIVE
-    multi-column form (r12 verdict #2): a file is opened only if
+    multi-column form: a file is opened only if
     EVERY range can intersect its recorded bounds — the read shape a
     Z-ordered layout exists for (operators/zorder.py gives each file
     a small rectangle of the two-column key space, so a
@@ -926,14 +887,12 @@ def scan_version(
 def _resolve_version(
     path: str, version: int | None
 ) -> tuple[int, list[tuple[str, int]], str]:
-    """Shared version-read plumbing (read_version + scan_version, r12
-    review): validate the version, load its non-empty file list, and
-    resolve the read base — the LIVE tree in manifest mode (the
-    entry's list IS the snapshot; committed files are never deleted
-    until vacuum), the hard-linked retention mirror otherwise.
+    """Shared version-read plumbing (read_version + scan_version):
+    validate the version, load its non-empty file list, and return
+    the read base, the hard-linked retention mirror.
 
     Head resolution and explicit-version validation are both
-    O(since-checkpoint) (r13): the pointer + forward probe for the
+    O(since-checkpoint): the pointer + forward probe for the
     head, a single entry-file stat for an explicit version — never a
     full log listing on the read path (the listing only runs to
     build the error message)."""
@@ -952,12 +911,7 @@ def _resolve_version(
     files = entry_files(path, version)
     if not files:
         raise ValueError(f"{path}: version {version} recorded no files")
-    base = (
-        path.rstrip("/")
-        if snapshot_mode(path) == "manifest"
-        else _retain_dir(path)
-    )
-    return version, files, base
+    return version, files, _retain_dir(path)
 
 
 def _read_retained(
@@ -988,7 +942,7 @@ def dir_fingerprint(path: str) -> dict[str, int]:
     fingerprint equality means the live content is exactly what the
     last commit recorded. The multi-table coordinator uses this to
     reuse a member's head version with O(dirs) metadata instead of an
-    O(files) stat walk under the all-locks window (r11 verdict #5)."""
+    O(files) stat walk under the all-locks window."""
     out: dict[str, int] = {}
     for root, dirs, _ in os.walk(path):
         dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
@@ -1006,7 +960,7 @@ def _clean_fingerprint(path: str) -> dict[str, int] | None:
     after the scan lands a dir mtime >= the probe tick > every
     recorded value — so a later fingerprint comparison MUST detect it
     (the same-granule blind spot of comparing against the stamp
-    file's own mtime, r12 review). Freshly written trees need the
+    file's own mtime). Freshly written trees need the
     clock to tick past the write; wait bounded ~ms, None if the tree
     never quiets (a concurrent bulk writer) — callers then simply
     don't stamp, which only costs the fallback walk."""
@@ -1015,7 +969,7 @@ def _clean_fingerprint(path: str) -> dict[str, int] | None:
     if not os.path.isdir(_log_dir(path)):
         # never CREATE the log dir from a read-style probe — isdir of
         # the log dir IS snapshot_enabled, and a probe must not opt an
-        # uninitialised table into versioning (r12 review #3)
+        # uninitialised table into versioning
         return None
     probe = os.path.join(_log_dir(path), f".probe.{os.getpid()}")
     try:
@@ -1051,7 +1005,7 @@ def _drop_dirstamp(path: str) -> None:
 
 def stored_dirstamp(path: str) -> dict[str, int] | None:
     """The persisted fingerprint, or None when missing/corrupt. Sound
-    by CONSTRUCTION rather than by a read-time guard (r12 review):
+    by CONSTRUCTION rather than by a read-time guard:
     record_commit only stamps a :func:`_clean_fingerprint` — taken
     BEFORE its file listing and re-verified unchanged after the entry
     lands — so the stamp always describes exactly the tree state the
@@ -1073,8 +1027,7 @@ def stored_dirstamp(path: str) -> dict[str, int] | None:
 def live_is_head(path: str) -> bool:
     """True when the live tree provably holds exactly the head
     version's files: the stamp the head's commit left still matches
-    the tree's directory fingerprint (O(directories), no file stat).
-    False for manifest-mode tables, which keep no stamp."""
+    the tree's directory fingerprint (O(directories), no file stat)."""
     stamp = stored_dirstamp(path)
     return stamp is not None and stamp == dir_fingerprint(path)
 
@@ -1158,7 +1111,7 @@ def record_commit(
     - ``files``: the COMPLETE (relpath, size) set of the dataset at
       this commit — not just the touched files; a partial list would
       be recorded verbatim and ``read_version`` would silently drop
-      every untouched file (r9 ADVICE). Writers that only know what
+      every untouched file. Writers that only know what
       they touched should pass ``scope`` instead.
     - ``scope``: dataset-relative directories (hive partition form,
       ``commit.partition_key``) this commit may have CHANGED —
@@ -1193,32 +1146,29 @@ def record_commit(
         raise ValueError(
             f"{path}: snapshot log not initialised (init_snapshot_log)"
         )
-    manifest = snapshot_mode(path) == "manifest"
     with dataset_lock(path):
         if batch_id is not None:
             prior = committed_batch_version(path, batch_id)
             if prior is not None:
                 return prior
-        # The reuse stamp's basis must predate the LISTING (r12
-        # review): a fingerprint taken after the entry lands could
+        # The reuse stamp's basis must predate the LISTING: a
+        # fingerprint taken after the entry lands could
         # absorb a lock-free bulk write that the listing missed, and
         # the stamp would then vouch for a head entry that excludes
         # those files. Proven-quiescent fingerprint first; stamp only
         # if it is still exactly current after the entry is durable.
         # files= commits did their LISTING IN THE CALLER — a basis
-        # taken here would already be post-listing (the same hole, r12
-        # review #3), so they must pass their own pre-walk basis via
+        # taken here would already be post-listing (the same hole), so
+        # they must pass their own pre-walk basis via
         # ``stamp_basis`` (possibly None: then no stamp is written).
-        if manifest:
-            stamp_fp = None
-        elif files is not None:
+        if files is not None:
             stamp_fp = None if stamp_basis is _STAMP_SELF else stamp_basis
         else:
             stamp_fp = _clean_fingerprint(path)
-        # Head via the checkpoint pointer (r13): a commit must not pay
+        # Head via the checkpoint pointer: a commit must not pay
         # an O(#versions) listdir just to find its predecessor.
         head = head_version(path)
-        # E100 file-skipping stats: footers are read once per NEW
+        # File-skipping stats: footers are read once per NEW
         # file; files carried from the previous entry reuse their
         # recorded bounds (and untouched segments aren't rewritten at
         # all, so their stats ride for free).
@@ -1234,18 +1184,6 @@ def record_commit(
                 path, listed, stats=_collect_stats(path, listed, prev_stats)
             )
         elif scope is not None and head is not None:
-            if manifest:
-                # A manifest-mode writer never deletes, so touched
-                # directories still hold the SUPERSEDED files — a
-                # scoped walk would list them as live and the new
-                # version would resurrect replaced rows. Manifest
-                # writers know their exact file set (append before /
-                # after diff at the choke point) and must pass it.
-                raise ValueError(
-                    f"{path}: scope-based commits are mirror-mode "
-                    "only; manifest-mode writers must pass the "
-                    "complete files= list"
-                )
             touched = _walk_data_files(path, subdirs=scope)
             # Segment carry-forward: untouched directories
             # re-reference the previous entry's IMMUTABLE segments BY
@@ -1277,18 +1215,12 @@ def record_commit(
             # need links.
             to_link = touched
         else:
-            # Full walk: every on-disk data file is live. True for
-            # bulk builds and seeds in both modes; in manifest mode a
-            # post-seed full walk is only correct right after a
-            # vacuum (no superseded files on disk) — the engine's
-            # writers all pass files= after the seed.
+            # Full walk: every on-disk data file is live.
             listed = _walk_data_files(path)
             to_link = listed
             segments = _write_segments(
                 path, listed, stats=_collect_stats(path, listed, prev_stats)
             )
-        if manifest:
-            to_link = []  # the file list IS the snapshot; nothing to copy
         retain = _retain_dir(path)
         for rel, _size in to_link:
             dst = os.path.join(retain, rel)
@@ -1330,8 +1262,8 @@ def record_commit(
                         continue
                     # Segment changed → the DV drops, on the
                     # convention that every engine writer REWRITES a
-                    # covered directory from a post-DV read. Tripwire
-                    # (r13 advice, low): an APPEND-style commit that
+                    # covered directory from a post-DV read. Tripwire:
+                    # an APPEND-style commit that
                     # kept old files plus new ones would also change
                     # the content-addressed segment — dropping the DV
                     # then resurrects the deleted rows still sitting
@@ -1360,32 +1292,30 @@ def record_commit(
         if batch_id is not None:
             entry["batch_id"] = str(batch_id)
         _log(path).append(n, entry, batch_id)
-        if not manifest:
-            # O(dirs) reuse stamp for the multi-table coordinator —
-            # written only when the pre-listing fingerprint is still
-            # exactly current, so the stamp describes precisely the
-            # tree this entry listed; any interleaved write (its dir
-            # mtime >= the pre-scan probe tick > every recorded
-            # value) voids it and the stale stamp is dropped instead
-            # (fallback walk — never a wrong reuse).
-            if stamp_fp is not None and dir_fingerprint(path) == stamp_fp:
-                _write_dirstamp(path, stamp_fp)
-            else:
-                _drop_dirstamp(path)
+        # O(dirs) reuse stamp for the multi-table coordinator — written
+        # only when the pre-listing fingerprint is still exactly
+        # current, so the stamp describes precisely the tree this entry
+        # listed; any interleaved write (its dir mtime >= the pre-scan
+        # probe tick > every recorded value) voids it and the stale
+        # stamp is dropped instead (fallback walk — never a wrong reuse).
+        if stamp_fp is not None and dir_fingerprint(path) == stamp_fp:
+            _write_dirstamp(path, stamp_fp)
+        else:
+            _drop_dirstamp(path)
         return n
 
 
 def prelink_retained(path: str) -> int:
     """Best-effort, LOCK-FREE pre-linking of the live tree into the
-    retention mirror (mirror mode only; manifest-mode no-op). Linking
+    retention mirror (no-op for an unversioned table). Linking
     is idempotent and additive — a pre-linked file that a later write
     supersedes is just an unreferenced link vacuum sweeps — so this
     can run with no lock at all. Multi-table commits
     (operators/whlog.py) call it BEFORE taking every member's lock,
     shrinking the all-locks-held window to the listing delta + entry
-    writes instead of a full first-commit link pass (r11 review).
+    writes instead of a full first-commit link pass.
     Returns the number of files linked."""
-    if snapshot_mode(path) != "mirror":
+    if not snapshot_enabled(path):
         return 0
     retain = _retain_dir(path)
     n = 0
@@ -1457,7 +1387,7 @@ def pinned_version(path: str, version: int):
 
 
 def version_as_of(path: str, ts) -> int:
-    """TIMESTAMP AS OF resolution (r14): the newest committed version
+    """TIMESTAMP AS OF resolution: the newest committed version
     whose entry landed at or before ``ts`` — the second travel axis
     every Delta/Iceberg console exposes next to ``VERSION AS OF``.
     ``ts`` is a ``datetime`` or an ISO-8601 string; NAIVE values are
@@ -1538,17 +1468,11 @@ def read_version(
 
 
 def read_live(spark: SparkSession, path: str) -> DataFrame:
-    """The table's CURRENT logical content regardless of retention
-    mode: a raw directory read for plain / mirror-mode tables, the
-    HEAD version for manifest-mode tables — whose live tree also
-    holds superseded files a raw read would double-count (r11
-    review) — and for mirror-mode tables with live DELETION VECTORS,
-    whose live files still physically hold the DV-deleted rows (r13).
-    Every engine read of a possibly-manifest / possibly-DV table must
-    go through this (or read_version directly)."""
-    if snapshot_enabled(path) and head_version(path) is not None and (
-        snapshot_mode(path) == "manifest" or head_dv(path)
-    ):
+    """The table's CURRENT logical content: a raw directory read, or the
+    HEAD version when it carries DELETION VECTORS, whose live files
+    still physically hold the DV-deleted rows. Every engine read of a
+    possibly-DV table must go through this (or read_version directly)."""
+    if head_dv(path):
         return read_version(spark, path)
     return spark.read.parquet(path)
 
@@ -1560,13 +1484,13 @@ def diff_versions(
     v_to: int,
     key_cols: list[str],
 ) -> DataFrame:
-    """The CDC feed that transforms version ``v_from`` into ``v_to``
-    (E91): rows with ``op='U'`` (insert-or-replace by key) and
+    """The CDC feed that transforms version ``v_from`` into ``v_to``:
+    rows with ``op='U'`` (insert-or-replace by key) and
     ``op='D'`` (tombstones carrying the OLD row's values — including
     its partition columns, so :func:`~weatherflow_spark.operators.
     upsert.apply_changes` can prune to the touched partitions, the
     standard CDC contract). Applying the feed to a copy of ``v_from``
-    reconstructs ``v_to`` exactly — the round-trip law the E91
+    reconstructs ``v_to`` exactly — the round-trip law the version-diff
     certification query pins through real writes.
 
     Semantics are multiset-exact, not hash-approximate: U = the rows
@@ -1582,14 +1506,14 @@ def diff_versions(
     """
     b = read_version(spark, path, v_to)
     a = read_version(spark, path, v_from)
-    # Schema evolution between the versions (E94): the feed's schema
+    # Schema evolution between the versions: the feed's schema
     # is v_to's. A column ADDED after v_from reads back only on the b
     # side — align a with NULLs (exactly what the evolved rows held),
-    # or the projection would raise / silently drop it (r10 review).
+    # or the projection would raise / silently drop it.
     # A column DROPPED after v_from (external rewrite; the engine's
     # own upserts never drop) is simply projected away: padding b
     # with NULLs instead would make EVERY v_to row differ from its
-    # v_from image and explode U to the whole table (r10 review #2).
+    # v_from image and explode U to the whole table.
     b_types = dict(b.dtypes)
     for c in b.columns:
         if c not in a.columns:
@@ -1600,8 +1524,8 @@ def diff_versions(
     # version diff can run over externally written tables. A plain
     # `on=key_cols` anti-join is null-UNSAFE — an unchanged NULL-key
     # row in v_from would never match itself in v_to and would emit a
-    # spurious tombstone every diff, breaking the round-trip law (r10
-    # ADVICE). eqNullSafe conditions make NULL = NULL for the key
+    # spurious tombstone every diff, breaking the round-trip law.
+    # eqNullSafe conditions make NULL = NULL for the key
     # match; exceptAll on the U side is already null-safe (set
     # semantics treat NULLs as equal).
     keys_b = b.select(*key_cols).distinct()
@@ -1614,7 +1538,7 @@ def diff_versions(
 
 
 def clone_table(src: str, dst: str, with_history: bool = False) -> int:
-    """Zero-copy table clone (E96, the Delta SHALLOW CLONE shape on
+    """Zero-copy table clone (the Delta SHALLOW CLONE shape on
     plain parquet): hard-link every data file of ``src`` into ``dst``
     (``copy2`` fallback across devices) — no bytes move, the clone is
     ready in O(files) metadata time at any table size. Safe to
@@ -1642,8 +1566,7 @@ def clone_table(src: str, dst: str, with_history: bool = False) -> int:
     # the linked file set one consistent commit (no upsert can swap
     # files mid-walk), the destination lock closes the TOCTOU between
     # the emptiness check and the link loop (two clones into the same
-    # dst would otherwise interleave into a silently mixed table —
-    # r10 review).
+    # dst would otherwise interleave into a silently mixed table).
     first, second = sorted([src.rstrip("/"), dst.rstrip("/")])
     with dataset_lock(first), dataset_lock(second):
         if os.path.isdir(dst) and any(
@@ -1654,8 +1577,8 @@ def clone_table(src: str, dst: str, with_history: bool = False) -> int:
         # (rmtree removes the data dir, never the siblings) would
         # graft the dead table's history, retention files, and CAS
         # counters onto the clone — versions would continue from the
-        # dead table's max and read_version would serve its data (r10
-        # review). The data dir is empty here, so those siblings are
+        # dead table's max and read_version would serve its data. The
+        # data dir is empty here, so those siblings are
         # definitionally orphaned: clear them.
         shutil.rmtree(_log_dir(dst), ignore_errors=True)
         shutil.rmtree(_retain_dir(dst), ignore_errors=True)
@@ -1668,21 +1591,13 @@ def clone_table(src: str, dst: str, with_history: bool = False) -> int:
             # would resurrect every DV-deleted row (the files still
             # hold them physically). Folding DVs is a rewrite — the
             # opposite of a zero-copy clone — so refuse and point at
-            # the fold instead of silently linking deleted data (r13).
+            # the fold instead of silently linking deleted data.
             raise ValueError(
                 f"{src}: head version carries deletion vectors — fold "
                 "them first (compact_partitions rewrites covered "
                 "partitions), then clone"
             )
-        if snapshot_mode(src) == "manifest" and versions(src):
-            # A manifest-mode live tree also holds SUPERSEDED files
-            # (writers never delete until vacuum) — the clone must be
-            # the head VERSION's file list, not the raw walk, or it
-            # would resurrect replaced rows.
-            src_files = entry_files(src, versions(src)[-1])
-        else:
-            src_files = _walk_data_files(src)
-        for rel, _size in src_files:
+        for rel, _size in _walk_data_files(src):
             d = os.path.join(dst, rel)
             parent = os.path.dirname(d)
             if parent:
@@ -1698,10 +1613,7 @@ def clone_table(src: str, dst: str, with_history: bool = False) -> int:
                 shutil.copy2(os.path.join(src, rel), d)
             n += 1
     if with_history:
-        # The clone inherits the source's retention mode: its tree is
-        # exactly one clean version's files, so the seed full-walk is
-        # correct in both modes.
-        init_snapshot_log(dst, mode=snapshot_mode(src) or "mirror")
+        init_snapshot_log(dst)
         record_commit(dst)
     return n
 
@@ -1709,7 +1621,7 @@ def clone_table(src: str, dst: str, with_history: bool = False) -> int:
 def export_change_feed(
     spark: SparkSession, path: str, feed_dir: str, key_cols: list[str]
 ) -> list[int]:
-    """Materialize the dataset's CHANGE DATA FEED (E95, the Delta CDF
+    """Materialize the dataset's CHANGE DATA FEED (the Delta CDF
     shape re-derived): one ``change_version=N`` partition per
     committed version, holding the U/D feed that transforms N-1 into
     N (:func:`diff_versions`); version 1 (the seed) exports as
@@ -1729,7 +1641,7 @@ def export_change_feed(
     are retained — export before vacuum, which
     ``vacuum_versions(require_exported=feed_dir)`` enforces.
 
-    Seed rule (r10 ADVICE): the seed is the FIRST RETAINED version,
+    Seed rule: the seed is the FIRST RETAINED version,
     not literally version 1 — on a vacuumed table a fresh feed
     bootstraps from ``versions(path)[0]`` as all-'U' inserts. Two
     underivable states raise instead of exporting silently-wrong
@@ -1740,7 +1652,7 @@ def export_change_feed(
     diff base nor a clean seed point exists past it."""
     os.makedirs(feed_dir, exist_ok=True)
     exported = []
-    # Export pointer (r14, VERDICT r13 'What's missing' #3): the feed
+    # Export pointer: the feed
     # records the highest version below which EVERY retained version
     # is already exported, so a scheduled export pays O(new versions)
     # — entry-file probes — instead of an O(#versions) log listing
@@ -1748,7 +1660,7 @@ def export_change_feed(
     # the reference's cadence). Written only after a COMPLETE pass
     # (any raise propagates first), so versions at or below it can
     # never be retained-but-unexported; absent/corrupt pointer falls
-    # back to the full listing (first run, pre-r14 feeds). Vacuum
+    # back to the full listing (first run, feeds without one). Vacuum
     # itself legitimately keeps the full listing — it deletes the
     # history, it must see all of it.
     ptr_path = os.path.join(feed_dir, "_WF_LAST_EXPORT")
@@ -1775,7 +1687,7 @@ def export_change_feed(
         # "already exported" means COMMITTED: a crashed partial export
         # leaves the directory (Spark creates it at job start) without
         # a completion marker, and skipping on bare isdir would drop
-        # that version from the feed forever (r10 review). The marker
+        # that version from the feed forever. The marker
         # is OUR OWN (written after the Spark write returns), so the
         # check keeps working when deployments suppress _SUCCESS files
         # (mapreduce.fileoutputcommitter.marksuccessfuljobs=false).
@@ -1791,7 +1703,7 @@ def export_change_feed(
             # bootstrap here — the full snapshot as all-'U' inserts.
             # (Literal `v == 1` would make a fresh feed on any
             # vacuumed table unbootstrappable: diff_versions(v-1, v)
-            # raises on the vacuumed base — r10 ADVICE. A non-first
+            # raises on the vacuumed base. A non-first
             # retained version only reaches this arm when pins left a
             # gap; seeding there is still a complete snapshot.)
             feed = read_version(spark, path, v).withColumn(
@@ -1813,12 +1725,12 @@ def export_change_feed(
         feed.write.mode("overwrite").parquet(part)
         # ground truth from the WRITTEN partition (footer-metadata
         # count — no second scan, no checkpoint pinning a seed-sized
-        # snapshot in the block manager, r12 review #4)
+        # snapshot in the block manager)
         n_rows = spark.read.parquet(part).count()
         # Schema stamp BEFORE the completion marker (a crash between
         # the two re-exports the version, never leaves a marked
         # partition without its stamp): consumers use it to fail fast
-        # when an E94 evolution lands mid-stream (r10 verdict #7).
+        # when an add-column evolution lands mid-stream.
         write_json_atomic(
             os.path.join(part, "_WF_SCHEMA"),
             {"version": v, "columns": feed.columns},
@@ -1843,13 +1755,12 @@ def export_change_feed(
 
 def feed_version_rows(feed_dir: str, version: int) -> int | None:
     """The row count stamped on one exported feed version; None ONLY
-    for pre-r12.2 legacy markers (bare "v\\n" content — older feeds
+    for legacy markers (bare "v\\n" content — older feeds
     keep working, partial-copy detection just can't protect them) or
     a missing marker. A marker that exists but fails to parse as
     either format RAISES: a truncated JSON marker is precisely the
     partial-copy evidence this check exists for, and mapping it to
-    None would disable the guard in its own target scenario (r12
-    review #4)."""
+    None would disable the guard in its own target scenario."""
     m = os.path.join(feed_dir, f"change_version={version}", "_WF_EXPORTED")
     try:
         with open(m) as f:
@@ -1886,8 +1797,8 @@ def feed_version_columns(feed_dir: str, version: int) -> list[str] | None:
 
 def check_feed_schema(feed_dir: str, consumer_columns, versions_in_batch=None):
     """Fail fast when the feed evolved past a consumer's pinned
-    schema (r10 verdict #7): a parquet file stream FIXES its schema
-    at start, so an E94 add-column evolution exported after the
+    schema: a parquet file stream FIXES its schema
+    at start, so an add-column evolution exported after the
     consumer started would be SILENTLY DROPPED from every micro-batch
     until restart — for a CDC consumer that means writing rows with
     the new column nulled while believing it replicated them.
@@ -1959,12 +1870,12 @@ def read_change_feed(
     directory can't be probed); without it, an empty feed raises a
     clear error instead of Spark's opaque inference failure.
 
-    Schema-PIN caveat (r10 review): a file stream fixes its schema at
-    start — an E94 column evolution exported AFTER the consumer
+    Schema-PIN caveat: a file stream fixes its schema at
+    start — an add-column evolution exported AFTER the consumer
     started will not appear in its micro-batches until the consumer
     restarts (or was started with a ``schema`` that already includes
     the column). The batch form schema-merges live. Two guards close
-    the silent-drop window (r10 verdict #7): at start, the pinned
+    the silent-drop window: at start, the pinned
     schema is validated against every exported version's stamp
     (:func:`check_feed_schema` — an explicit ``schema=`` lacking an
     already-exported column raises here instead of nulling it
@@ -2019,7 +1930,7 @@ def vacuum_versions(
     (``{"dropped_versions": d, "removed_files": r}``).
 
     ``require_exported`` (a change-feed directory) interlocks vacuum
-    with :func:`export_change_feed` (r10 verdict #8): dropping a
+    with :func:`export_change_feed`: dropping a
     version whose diff was never exported destroys the CDC trail
     forever — and dropping version v also destroys v+1's DIFF BASE,
     so v is only droppable once v's own partition AND v+1's are both
@@ -2036,8 +1947,8 @@ def vacuum_versions(
     ``require_exported`` refusal — but mutates nothing and returns
     ``removed_files=0`` plus the decided ``drop`` list; the warehouse
     vacuum pre-flights every member with it so a multi-table vacuum
-    either proceeds everywhere or refuses before touching any member
-    (r12). ``allowed_drop`` CAPS the drop set to a previously decided
+    either proceeds everywhere or refuses before touching any member.
+    ``allowed_drop`` CAPS the drop set to a previously decided
     one — pin releases are lock-free, so between a dry run and the
     real run the computed drop set can GROW past what was checked;
     capping makes the real run drop at most what the pre-flight
@@ -2129,17 +2040,7 @@ def vacuum_versions(
         except OSError:
             pass
         removed = 0
-        if snapshot_mode(path) == "manifest":
-            # Manifest mode: vacuum is the ONE deleter — unlink LIVE
-            # data files no surviving version references (writers
-            # only ever add; superseded files accumulate until here).
-            # Runs under the dataset lock, and writers commit under
-            # the same lock, so no uncommitted-but-live file can be
-            # swept except a crashed writer's orphans — which are
-            # garbage by definition.
-            gc_root = path.rstrip("/")
-        else:
-            gc_root = _retain_dir(path)
+        gc_root = _retain_dir(path)
         for root, _, files in os.walk(gc_root, topdown=False):
             for f in files:
                 if f.startswith(("_", ".")):
@@ -2157,12 +2058,11 @@ def vacuum_versions(
 
 
 def table_status(path: str) -> dict:
-    """DESCRIBE DETAIL for a versioned table (r13): one metadata-only
+    """DESCRIBE DETAIL for a versioned table: one metadata-only
     call an operator runs before deciding maintenance — no Spark job,
     no data reads, O(head entry) I/O. Returns::
 
-        {"versioned": bool, "mode": "mirror"|"manifest"|None,
-         "head_version": int|None, "n_versions": int,
+        {"versioned": bool, "head_version": int|None, "n_versions": int,
          "files": int, "bytes": int, "partitions": int,
          "dv_dirs": int, "dv_files": int,        # live deletion vectors
          "stats_columns": [...], "pinned_versions": [...],
@@ -2172,16 +2072,16 @@ def table_status(path: str) -> dict:
     merge-on-read anti-join until the next compaction folds them —
     the signal ``maintain_warehouse``-style schedulers act on.
     ``checkpoint_fresh`` False means head reads fall back to an
-    O(#versions) listing (pre-r13 log or a crashed commit) — the next
+    O(#versions) listing (a log without a pointer, or a crashed
+    commit) — the next
     commit or vacuum heals it. ``n_versions`` is the one O(#versions)
     listing in here, acceptable for an explicitly diagnostic call."""
     if not snapshot_enabled(path):
-        return {"versioned": False, "mode": None, "head_version": None}
+        return {"versioned": False, "head_version": None}
     vs = versions(path)
     head = vs[-1] if vs else None
     out: dict = {
         "versioned": True,
-        "mode": snapshot_mode(path),
         "head_version": head,
         "n_versions": len(vs),
         "files": 0,
@@ -2233,7 +2133,7 @@ def _interval_depth(ivals: list[tuple]) -> tuple[int, int]:
 def segment_stats(path: str, name: str) -> dict[str, dict]:
     """rel → {col: [min, max]} recorded inside ONE segment — the
     per-partition slice of the zone maps (the clustering-decay
-    planner's input, r14)."""
+    planner's input)."""
     try:
         with open(os.path.join(_seg_dir(path), name)) as f:
             return json.load(f).get("stats", {})
@@ -2244,8 +2144,8 @@ def segment_stats(path: str, name: str) -> dict[str, dict]:
 def clustering_status(
     path: str, cols: list[str], version: int | None = None
 ) -> dict:
-    """Clustering-health diagnostic (r14; the operator question the
-    E106/E110/E113 layouts leave open: *has append traffic decayed my
+    """Clustering-health diagnostic (the operator question the
+    range and Z-order layouts leave open: *has append traffic decayed my
     range/Morton clustering enough that file skipping stopped
     paying, i.e. is it time to re-cluster?*). Pure metadata — one
     entry read plus the already-recorded per-file zone maps, no Spark
@@ -2325,7 +2225,7 @@ def clustering_status(
 
 
 def table_history(path: str, limit: int = 20) -> list[dict]:
-    """DESCRIBE HISTORY for a versioned table (r14): the last
+    """DESCRIBE HISTORY for a versioned table: the last
     ``limit`` versions' metadata, newest first — the audit view an
     operator reads before a RESTORE or vacuum decision. BOUNDED I/O
     by construction: resolves the head through the checkpoint pointer

@@ -70,116 +70,12 @@ def _record_snapshot(
         record_commit(path, scope=scope, batch_id=batch_id, schema=schema)
 
 
-def _manifest_mode(path: str) -> bool:
-    from weatherflow_spark.operators.snaplog import snapshot_mode
-
-    return snapshot_mode(path) == "manifest"
-
-
-def _manifest_overwrite_partitions(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    keys: list[str],
-    replaced_keys: list[str],
-    snapshot_batch_id: object | None,
-) -> None:
-    """The manifest-mode (object-store) form of the partition
-    overwrite: committed files are NEVER deleted — the batch is
-    APPENDED under job-unique part names and the logical replace
-    happens in the version entry (new version = previous entry minus
-    every replaced partition's files, plus exactly the files this
-    append created). ``keys`` are the partitions present in ``df``;
-    ``replaced_keys`` adds any partitions a delete emptied (present
-    in neither the output nor the new file walk, so the carve-out is
-    the only thing that removes them). Runs under
-    the dataset lock; superseded files stay on disk for time travel
-    until :func:`~weatherflow_spark.operators.snaplog.
-    vacuum_versions` sweeps them."""
-    from weatherflow_spark.operators.commit import (
-        check_and_bump_versions,
-        dataset_lock,
-    )
-    from weatherflow_spark.operators.snaplog import (
-        _walk_data_files,
-        entry_files,
-        head_version,
-        record_commit,
-    )
-
-    with dataset_lock(path):
-        all_replaced = sorted(set(keys) | set(replaced_keys))
-        head = head_version(path)  # pointer-resolved: no per-commit listdir
-        if head is None and _walk_data_files(path):
-            # BEFORE the physical append: raising
-            # after it would strand the batch's files in the live
-            # tree, where the error's own recovery step (a full-walk
-            # seed record_commit) would list them as live alongside
-            # the rows they were meant to replace.
-            raise ValueError(
-                f"{path}: manifest-mode table has data but no seed "
-                "version — record_commit the initial build first"
-            )
-        before = set(_walk_data_files(path, subdirs=all_replaced))
-        df.write.mode("append").partitionBy(*partition_cols).parquet(path)
-        after = set(_walk_data_files(path, subdirs=all_replaced))
-        new_files = sorted(after - before)
-        if head is not None:
-            prev = entry_files(path, head)
-            prefixes = tuple(k.rstrip("/") + "/" for k in all_replaced)
-            carried = [
-                (r, sz) for r, sz in prev if not r.startswith(prefixes)
-            ]
-        else:
-            carried = []  # fresh empty table: this write IS the seed
-        check_and_bump_versions(path, all_replaced)
-        record_commit(
-            path,
-            files=carried + new_files,
-            batch_id=snapshot_batch_id,
-            schema=_data_schema(df, partition_cols),
-        )
-
-
-def _manifest_full_replace(
-    merged: DataFrame,
-    path: str,
-    keys: list[str],
-    snapshot_batch_id: object | None,
-) -> None:
-    """Manifest-mode unpartitioned full overwrite: append the new
-    content under job-unique names and record a version listing ONLY
-    the appended files (full-replace semantics carry nothing) — the
-    old files stay on disk for time travel until vacuum."""
-    from weatherflow_spark.operators.commit import (
-        check_and_bump_versions,
-        dataset_lock,
-    )
-    from weatherflow_spark.operators.snaplog import (
-        _walk_data_files,
-        record_commit,
-    )
-
-    with dataset_lock(path):
-        before = set(_walk_data_files(path))
-        merged.write.mode("append").parquet(path)
-        after = set(_walk_data_files(path))
-        check_and_bump_versions(path, keys)
-        record_commit(
-            path,
-            files=sorted(after - before),
-            batch_id=snapshot_batch_id,
-            schema=merged.schema,
-        )
-
-
 def overwrite_partitions(
     df: DataFrame,
     path: str,
     partition_cols: list[str],
     record_snapshot: bool = True,
     snapshot_batch_id: object | None = None,
-    replaced_keys: list[str] | None = None,
     presorted: bool = False,
     touched_keys: list[str] | None = None,
 ) -> None:
@@ -215,7 +111,7 @@ def overwrite_partitions(
     # a dynamic overwrite otherwise emits one file per
     # (upstream task × touched partition) — a 32-task batch touching
     # 32 date partitions writes ~1000 tiny files, and every later
-    # scoped read, snapshot walk, and manifest entry pays for them
+    # scoped read, snapshot walk, and log entry pays for them
     # forever. Hashing on the partition key bounds it to one file per
     # partition dir (hash collisions co-locate dirs, never split
     # them). A genuinely huge single partition lands in one task —
@@ -229,18 +125,6 @@ def overwrite_partitions(
     # silently decays.
     if not presorted:
         df = df.repartition(*partition_cols)
-    if _manifest_mode(path):
-        # Object-store discipline: append + logical replace, no
-        # physical delete of committed files. record_snapshot=False
-        # has no meaning here — there is no emptied-dir rmtree to
-        # defer past, the carve-out already excludes emptied
-        # partitions — so the version is always recorded here.
-        _manifest_overwrite_partitions(
-            df, path, partition_cols, keys, replaced_keys or [],
-            snapshot_batch_id,
-        )
-        return
-
     # The dynamic-overwrite mode rides on the WRITER as a data-source
     # option, not a session-conf mutation: a global set/restore makes
     # concurrent merges into DIFFERENT tables unsafe — one thread's
@@ -399,9 +283,8 @@ def _read_and_evolve(
 
     A versioned table whose live tree is provably its head version is
     read AS the head version, with the schema its entry records, so no
-    Spark job infers one. So is a manifest-mode table (its live tree
-    also holds superseded files) and one with live deletion vectors
-    (its live files still hold the deleted rows); for those the head
+    Spark job infers one. So is a table with live deletion vectors
+    (its live files still hold the deleted rows); for it the head
     read is the only correct one, and it is what makes the DV carry
     rule sound: every partition this writer rewrites was read post-DV,
     so dropping its DVs materializes the delete instead of losing it.
@@ -415,7 +298,7 @@ def _read_and_evolve(
         read_version,
     )
 
-    if _manifest_mode(path) or head_dv(path) or live_is_head(path):
+    if head_dv(path) or live_is_head(path):
         current = read_version(spark, path)
     else:
         reader = spark.read
@@ -604,8 +487,6 @@ def _upsert_locked(
                 snapshot_batch_id=snapshot_batch_id,
                 touched_keys=keys,
             )
-        elif _manifest_mode(path):
-            _manifest_full_replace(merged, path, keys, snapshot_batch_id)
         else:
             with dataset_lock(path):
                 merged.write.mode("overwrite").parquet(path)
@@ -812,21 +693,6 @@ def _apply_changes_locked(
             }
             emptied = [t for t in touched if t not in remaining]
             merged_keys = [partition_key(partition_cols, t) for t in remaining]
-            if _manifest_mode(path):
-                # Manifest mode needs no rmtree and no deferred record:
-                # passing the emptied partitions as replaced_keys carves
-                # their files out of the new version's list — the logical
-                # delete IS the manifest change, the files stay for time
-                # travel until vacuum.
-                overwrite_partitions(
-                    merged, path, partition_cols,
-                    snapshot_batch_id=snapshot_batch_id,
-                    replaced_keys=[
-                        partition_key(partition_cols, t) for t in emptied
-                    ],
-                    touched_keys=merged_keys,
-                )
-                return
             # takes the lock; bumps the MERGED partitions' versions. When
             # deletes empty a partition the commit is NOT complete until
             # the emptied directories are removed below — defer the
@@ -865,8 +731,6 @@ def _apply_changes_locked(
                         ],
                         batch_id=snapshot_batch_id,
                     )
-        elif _manifest_mode(path):
-            _manifest_full_replace(merged, path, keys, snapshot_batch_id)
         else:
             with dataset_lock(path):
                 merged.write.mode("overwrite").parquet(path)
@@ -919,7 +783,7 @@ def delete_where(
        hardened property of the CDC choke point verbatim: only
        partitions holding victims are read and rewritten (dynamic
        overwrite), partitions emptied by the delete are really
-       removed (mirror) or carved out of the manifest, the commit is
+       removed, the commit is
        versioned so the pre-delete state still time-travels until
        vacuum, and the whole read-modify-write runs under the dataset
        lock.
@@ -1029,10 +893,9 @@ def delete_where(
             src, info = scan_version(spark, path, predicates=eligible)
             scanned, total = info["files_scanned"], info["files_total"]
     if src is None:
-        # The versioned read serves the committed head — mandatory on
-        # a manifest-mode table, whose LIVE tree keeps superseded
-        # files until vacuum: a plain directory read would re-match
-        # (and re-delete) rows that were already replaced.
+        # The versioned read serves the committed head with its
+        # recorded schema (no inference job) and its deletion vectors
+        # applied.
         src = (
             read_version(spark, path)
             if versioned

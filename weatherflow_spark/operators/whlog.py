@@ -46,8 +46,7 @@ Scale posture (100 TB): a load entry is O(tables) metadata on top of
 O(touched files) per-table commits — the coordinator adds no data
 I/O and no shuffle, and never holds locks across the load's Spark
 jobs (those run before, under their own per-table write discipline).
-The all-locks-held window is file-METADATA work: manifest-mode
-members reuse their head version (O(1)); mirror-mode members whose
+The all-locks-held window is file-METADATA work: members whose
 writers record commits at the choke points reuse via the O(dirs)
 directory-fingerprint stamp (zero file stats under the locks),
 falling back to one stat walk only when the stamp is stale or a bulk
@@ -138,16 +137,7 @@ def _record_or_reuse(path: str, batch_id: object | None) -> int:
     version when the live file set is unchanged (the table's own
     content writers already versioned it — the common case), mint one
     otherwise (bulk-written tables with no explicit record). Caller
-    holds the table's lock.
-
-    Manifest-mode members reuse the head UNCONDITIONALLY when one
-    exists: their live tree also holds superseded files, so a raw
-    walk would record a version resurrecting replaced rows — and the
-    manifest contract already guarantees every
-    content commit recorded a version, so the head IS the current
-    state. An unversioned manifest member seeds via the full walk
-    (valid: replace-writers refuse manifest tables with no seed, so
-    an unversioned tree holds no superseded files)."""
+    holds the table's lock."""
     from weatherflow_spark.operators.snaplog import (
         _clean_fingerprint,
         _walk_data_files,
@@ -157,14 +147,9 @@ def _record_or_reuse(path: str, batch_id: object | None) -> int:
         head_version,
         live_is_head,
         record_commit,
-        snapshot_mode,
     )
 
     head = head_version(path)  # pointer-resolved: no per-load listdir
-    if snapshot_mode(path) == "manifest":
-        if head is not None:
-            return head
-        return record_commit(path, batch_id=batch_id)
     if head is not None:
         # O(dirs) fast path: every engine content
         # writer records a commit at the choke points, and
@@ -254,7 +239,7 @@ def commit_warehouse(
     # window below then pays only the listing delta and the entry
     # writes, not a first-commit bulk link pass. Members
     # not yet snapshot-enabled are initialised HERE (init is
-    # idempotent metadata) — prelink is a mode-gated no-op on an
+    # idempotent metadata) — prelink is a no-op on an
     # uninitialised table, so deferring init to the locked loop would
     # silently re-open the bulk-link-under-all-locks window for every
     # first-time member.

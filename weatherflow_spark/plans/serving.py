@@ -432,8 +432,15 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-upsert and pre-delete states exactly, scoped commits carry
     untouched files correctly (twice), and replay changes content
     never history semantics. 100 TB posture: versions are O(touched
-    files) metadata + hard links, reads are manifest-driven scans —
+    files) metadata + hard links, reads are log-listed scans —
     nothing here rescans or copies data."""
+    return _time_travel_walk(spark, sf_dir, "tt_tbl")
+
+
+def _time_travel_walk(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Build the versioned orders table at scratch ``name``, walk it
+    through the commit family :func:`q_time_travel` describes, and
+    return its per-(version, priority) digests."""
     from weatherflow_spark.operators.snaplog import (
         init_snapshot_log,
         read_version,
@@ -441,7 +448,7 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from weatherflow_spark.operators.upsert import apply_changes, upsert_by_key
 
-    path = os.path.join(_scratch_dir(sf_dir), "tt_tbl")
+    path = os.path.join(_scratch_dir(sf_dir), name)
     # Reset the dataset AND its sibling state (log, retention mirror,
     # lock, version manifest): the query must be replayable per run.
     for d in (path, path + ".__snaplog", path + ".__retain"):
@@ -498,9 +505,9 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         head_read = read_version(spark, path)
     finally:
         os.listdir = real_listdir
-    log_listings = [
-        c for c in calls if c.rstrip("/").endswith(".__snaplog")
-    ]
+    # Only this table's log counts: suite branches running beside
+    # this one list their own logs through the same spy.
+    log_listings = [c for c in calls if c.rstrip("/") == path + ".__snaplog"]
     if log_listings:
         raise RuntimeError(
             "E108 regressed: head resolution listed the snapshot log "
@@ -553,79 +560,12 @@ ORACLE_TIME_TRAVEL = f"""
 
 
 def q_time_travel_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E99 driver row: the OBJECT-STORE retention mode certified
-    through the exact commit walk E90 certifies in mirror mode — same
-    seed → scoped-equivalent upsert → replay → CDC delete sequence,
-    but on a table initialised with ``init_snapshot_log(mode=
-    "manifest")``: writers never delete committed files (the upsert
-    APPENDS and logically replaces via the version entry; the delete
-    that empties keys carves them out with no rmtree), ``read_version``
-    serves every version from the LIVE tree's manifest-listed files,
-    and the query RAISES unless the retention mirror stayed completely
-    empty (zero hard links — the property that makes this mode run
-    as-is on S3-class storage, where links don't exist). The oracle is
-    ORACLE_TIME_TRAVEL **verbatim**: both modes must reconstruct
-    identical logical history, so one hash certifies the manifest
-    read path AND its equivalence to the mirror form."""
-    from weatherflow_spark.operators.snaplog import (
-        init_snapshot_log,
-        read_version,
-        record_commit,
-    )
-    from weatherflow_spark.operators.upsert import apply_changes, upsert_by_key
-
-    path = os.path.join(_scratch_dir(sf_dir), "tt_tbl_manifest")
-    for d in (path, path + ".__snaplog", path + ".__retain"):
-        shutil.rmtree(d, ignore_errors=True)
-    for f_ in (path + ".__versions.json", path + ".__lock"):
-        try:
-            os.unlink(f_)
-        except OSError:
-            pass
-
-    cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"]
-    orders = load_table(spark, sf_dir, "orders").select(*cols)
-    k = F.col("o_orderkey")
-    base = orders.where(k % UPSERT_DEL_MOD != 0)
-    base.write.mode("overwrite").partitionBy("o_orderpriority").parquet(path)
-    init_snapshot_log(path, mode="manifest")
-    record_commit(path)  # v1 (clean tree: full walk is exact)
-
-    batch = orders.where(k % UPSERT_BATCH_MOD == 0).select(
-        "o_orderkey",
-        "o_custkey",
-        (F.col("o_totalprice") + F.lit(1.0)).alias("o_totalprice"),
-        "o_orderpriority",
-    )
-    upsert_by_key(spark, batch, path, ["o_orderkey"], ["o_orderpriority"])  # v2
-    upsert_by_key(spark, batch, path, ["o_orderkey"], ["o_orderpriority"])  # v3
-    deletes = orders.where(k % TT_DEL_MOD == 0).select(
-        *cols, F.lit("D").alias("op")
-    )
-    apply_changes(
-        spark, deletes, path, ["o_orderkey"], "op", ["o_orderpriority"]
-    )  # v4
-
-    # The mode's defining property, checked with teeth: NOTHING was
-    # ever hard-linked into a mirror.
-    retain = path + ".__retain"
-    if os.path.isdir(retain) and any(
-        fs for _, _, fs in os.walk(retain)
-    ):
-        raise RuntimeError(
-            "manifest-mode table hard-linked files into its retention "
-            "mirror — the object-store contract regressed"
-        )
-
-    def digest(df: DataFrame, tag: str) -> DataFrame:
-        return _priority_digest(df, "version_tag", tag)
-
-    return (
-        digest(read_version(spark, path, 1), "v1")
-        .unionByName(digest(read_version(spark, path, 2), "v2"))
-        .unionByName(digest(read_version(spark, path, 3), "v3"))
-        .unionByName(digest(read_version(spark, path), "head"))
-    )
+    """The :func:`q_time_travel` walk on a second scratch table,
+    certified by ORACLE_TIME_TRAVEL verbatim. ``q_warehouse_suite``
+    runs it beside its two warehouse branches, so the hash also shows
+    that concurrent multi-table commits leave a versioned table's
+    history untouched."""
+    return _time_travel_walk(spark, sf_dir, "tt_tbl_manifest")
 
 
 VDIFF_DEL_MOD = 7  # version-diff feed: DELETE %7 keys (not re-upserted)
@@ -3788,7 +3728,7 @@ def q_lakehouse_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_warehouse_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WAREHOUSE-tier certification row (r13, split out of
     ``q_lakehouse_suite`` — VERDICT r12 'What's wrong' #1): the three
-    multi-table / object-store branches, LONG format, each keeping
+    multi-table / time-travel branches, LONG format, each keeping
     its raise checks:
 
     - ``warehouse_snapshot`` (E97): cross-table consistent snapshots
@@ -3798,9 +3738,8 @@ def q_warehouse_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
       rebuilt purely from the per-load multi-table feed bundle —
       load-atomic apply, exactly-once replay (raise-checked), digests
       == the SOURCE's own oracle verbatim.
-    - ``manifest_travel`` (E99): the object-store retention mode
-      walking E90's exact commit sequence — zero hard links
-      (raise-checked), oracle == ORACLE_TIME_TRAVEL verbatim.
+    - ``manifest_travel``: the ``q_time_travel`` commit walk on its
+      own table, oracle == ORACLE_TIME_TRAVEL verbatim.
 
     E97 + its replica certify against the SAME two-load scenario by
     construction — the source warehouse is built once for both rows
@@ -4157,8 +4096,7 @@ SERVING_ORACLES: dict[str, str] = {
     "q_tpch_q21_bucketed": ORACLE_TPCH_Q21,
     "q_tpch_q13_bucketed": ORACLE_TPCH_Q13,
     "q_tpch_q10_bucketed": ORACLE_TPCH_Q10,
-    # E99: the manifest-mode walk must reconstruct the SAME logical
-    # history as the mirror-mode walk — oracle reused verbatim.
+    # the same walk on a second table: oracle reused verbatim
     "q_time_travel_manifest": ORACLE_TIME_TRAVEL,
     "q_star_transaction": _oracle_star_transaction(),
 }

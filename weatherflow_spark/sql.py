@@ -47,7 +47,7 @@ def execute(spark: SparkSession, sql: str) -> DataFrame:
       anywhere a table may appear — the ``VERSION AS OF`` /
       ``TIMESTAMP AS OF`` read: each occurrence resolves through
       :func:`~weatherflow_spark.operators.snaplog.read_version`
-      (retention-mirror / manifest file sets, deletion vectors
+      (retention-mirror file sets, deletion vectors
       applied; timestamps via
       :func:`~weatherflow_spark.operators.snaplog.version_as_of` —
       naive ISO strings are UTC) and is substituted as a temp view
