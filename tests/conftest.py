@@ -45,3 +45,12 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@pytest.fixture(params=["mirror"])
+def snap_mode(request):
+    """The snapshot-retention mode a versioned-table test runs under.
+
+    The hard-linked retention mirror is the only mode, so this has a
+    single value; it keeps the mode visible in the test ids."""
+    return request.param

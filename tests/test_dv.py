@@ -49,7 +49,7 @@ def _inodes(path):
     return out
 
 
-def test_dv_delete_rewrites_zero_files_and_time_travels(spark, tmp_path):
+def test_dv_delete_rewrites_zero_files_and_time_travels(spark, tmp_path, snap_mode):
     from weatherflow_spark.operators.snaplog import (
         head_dv,
         read_live,
@@ -115,7 +115,7 @@ def test_dv_batch_id_replay_returns_prior_version(spark, tmp_path):
     assert versions(path)[-1] == head  # nothing minted, k=8 survives
 
 
-def test_upsert_folds_dv_on_touched_partition_only(spark, tmp_path):
+def test_upsert_folds_dv_on_touched_partition_only(spark, tmp_path, snap_mode):
     """A keyed upsert into a covered partition reads post-DV content,
     rewrites it, and the new entry drops THAT partition's DV while
     untouched partitions carry theirs — re-inserted keys come back."""
@@ -139,7 +139,7 @@ def test_upsert_folds_dv_on_touched_partition_only(spark, tmp_path):
     assert 13 not in rows and 23 not in rows  # carried DVs still apply
 
 
-def test_compaction_folds_dvs_and_vacuum_gcs_them(spark, tmp_path):
+def test_compaction_folds_dvs_and_vacuum_gcs_them(spark, tmp_path, snap_mode):
     from weatherflow_spark.operators.layout import compact_partitions
     from weatherflow_spark.operators.snaplog import (
         _dv_dir,
@@ -385,7 +385,7 @@ def test_table_status_reports_dv_and_checkpoint_state(spark, tmp_path):
     assert st["checkpoint_fresh"]
 
 
-def test_compact_swap_conflicts_on_concurrent_dv_delete(spark, tmp_path):
+def test_compact_swap_conflicts_on_concurrent_dv_delete(spark, tmp_path, snap_mode):
     """A merge-on-read DV delete rewrites ZERO data files, so the
     file-set fingerprint alone waves it through compact()'s swap-time
     re-check — the pre-DV rewrite would then swap in un-deleted rows
@@ -418,7 +418,7 @@ def test_compact_swap_conflicts_on_concurrent_dv_delete(spark, tmp_path):
     assert {r["k"] for r in read_version(spark, path).collect()} == got
 
 
-def test_widen_swap_conflicts_on_concurrent_dv_delete(spark, tmp_path):
+def test_widen_swap_conflicts_on_concurrent_dv_delete(spark, tmp_path, snap_mode):
     """Same race as the compact form, through rewrite_widen's swap."""
     from weatherflow_spark.operators.commit import CompactionConflict
     from weatherflow_spark.operators.layout import rewrite_widen
@@ -556,7 +556,7 @@ def test_dv_fold_preserves_range_clustering(spark, tmp_path):
     }
 
 
-def test_dv_commit_merges_same_schema_sidecars(spark, tmp_path):
+def test_dv_commit_merges_same_schema_sidecars(spark, tmp_path, snap_mode):
     """K deletes between folds must cost ONE anti-join per covered
     directory, not K (r13 verdict #4): same-key-schema sidecars merge
     at DV-commit time; a heterogeneous-key DV stays separate (a

@@ -288,7 +288,7 @@ def test_heartbeat_never_refreshes_a_successors_lock(tmp_path):
     os.unlink(lp)
 
 
-def test_compact_partitions_plans_from_segments(spark, tmpdir):
+def test_compact_partitions_plans_from_segments(spark, tmpdir, snap_mode):
     """E101 (r12): partition-scoped small-file compaction planned
     entirely from the head entry's segments — only partitions over
     the file threshold are rewritten (one file each, one scoped

@@ -60,7 +60,7 @@ def _build_versioned(spark, path):
     return orders, base, batch
 
 
-def test_commits_become_versions_and_time_travel_reads(spark, tmpdir):
+def test_commits_become_versions_and_time_travel_reads(spark, tmpdir, snap_mode):
     path = f"{tmpdir}/tt"
     orders, base, batch = _build_versioned(spark, path)
     assert snapshot_enabled(path)
@@ -82,7 +82,7 @@ def test_commits_become_versions_and_time_travel_reads(spark, tmpdir):
     assert _digest(read_version(spark, path)) == _digest(v2)
 
 
-def test_versions_survive_compaction_and_replay(spark, tmpdir):
+def test_versions_survive_compaction_and_replay(spark, tmpdir, snap_mode):
     from weatherflow_spark.operators.layout import compact
 
     path = f"{tmpdir}/tt"
@@ -103,7 +103,7 @@ def test_versions_survive_compaction_and_replay(spark, tmpdir):
     assert _digest(read_version(spark, path, 4)) == d2
 
 
-def test_vacuum_bounds_history_and_gcs_files(spark, tmpdir):
+def test_vacuum_bounds_history_and_gcs_files(spark, tmpdir, snap_mode):
     path = f"{tmpdir}/tt"
     _build_versioned(spark, path)
     d2 = _digest(read_version(spark, path, 2))
@@ -147,7 +147,7 @@ def test_unversioned_tables_pay_nothing(spark, tmpdir):
         read_version(spark, path)
 
 
-def test_unpartitioned_table_round_trip(spark, tmpdir):
+def test_unpartitioned_table_round_trip(spark, tmpdir, snap_mode):
     path = f"{tmpdir}/flat"
     nation = load_table(spark, SF_SMALL, "nation")
     nation.write.mode("overwrite").parquet(path)
@@ -158,7 +158,7 @@ def test_unpartitioned_table_round_trip(spark, tmpdir):
     assert got.count() == nation.count()
 
 
-def test_emptied_partition_head_version_matches_live(spark, tmpdir):
+def test_emptied_partition_head_version_matches_live(spark, tmpdir, snap_mode):
     """r10 ADVICE fix (high): a CDC apply whose deletes EMPTY a
     partition must record the snapshot AFTER the emptied directory is
     removed — the head version previously still listed the deleted
@@ -204,7 +204,7 @@ def test_emptied_partition_head_version_matches_live(spark, tmpdir):
     ).count() == nation.where(F.col("n_regionkey") == 0).count()
 
 
-def test_unpartitioned_upsert_records_versions(spark, tmpdir):
+def test_unpartitioned_upsert_records_versions(spark, tmpdir, snap_mode):
     """r10 ADVICE fix (medium): unpartitioned upsert_by_key (and the
     seed branch) now route through the snapshot choke point — a full
     overwrite deletes the old files, so without a recorded version
@@ -229,7 +229,7 @@ def test_unpartitioned_upsert_records_versions(spark, tmpdir):
     )
 
 
-def test_partitioned_seed_and_cdc_record_versions(spark, tmpdir):
+def test_partitioned_seed_and_cdc_record_versions(spark, tmpdir, snap_mode):
     """Seed-branch + unpartitioned apply_changes coverage of the same
     choke-point contract (r10 ADVICE, medium)."""
     from weatherflow_spark.operators.upsert import apply_changes
@@ -255,7 +255,7 @@ def test_partitioned_seed_and_cdc_record_versions(spark, tmpdir):
     assert read_version(spark, flat, 1).count() == nation.count()
 
 
-def test_partition_commit_walks_only_touched_scope(spark, tmpdir):
+def test_partition_commit_walks_only_touched_scope(spark, tmpdir, snap_mode):
     """r9 verdict #4: the upsert/CDC choke points pass their touched
     partition list into record_commit(scope=...), so a one-partition
     micro-batch commit walks ONLY that partition directory — never the
@@ -320,7 +320,7 @@ def test_partition_commit_walks_only_touched_scope(spark, tmpdir):
     assert untouched_v1 <= v2_files
 
 
-def test_batch_keyed_commit_is_replay_idempotent(spark, tmpdir):
+def test_batch_keyed_commit_is_replay_idempotent(spark, tmpdir, snap_mode):
     """record_commit(batch_id=...) must mint exactly one version per
     batch id: a re-delivered micro-batch returns the original version
     instead of a duplicate (the foreachBatch exactly-once contract)."""
@@ -339,7 +339,7 @@ def test_batch_keyed_commit_is_replay_idempotent(spark, tmpdir):
     assert versions(path) == [1, 2]
 
 
-def test_pinned_reader_survives_concurrent_vacuum(spark, tmpdir):
+def test_pinned_reader_survives_concurrent_vacuum(spark, tmpdir, snap_mode):
     """r9 verdict #3: a reader pinned to version N survives a vacuum
     whose keep_last would drop N — the pin is taken under the dataset
     lock, vacuum honors it, and once released the next vacuum reclaims
@@ -376,7 +376,7 @@ def test_pinned_reader_survives_concurrent_vacuum(spark, tmpdir):
             raise AssertionError("must not yield for a vacuumed version")
 
 
-def test_streaming_versioned_upsert_replay_mints_no_duplicate_version(spark, tmpdir):
+def test_streaming_versioned_upsert_replay_mints_no_duplicate_version(spark, tmpdir, snap_mode):
     """r9 verdict #7: the foreachBatch snapshot sink records exactly
     one version per micro-batch id — a re-delivered batch neither
     duplicates rows nor mints a duplicate version, and each version
@@ -426,7 +426,7 @@ def test_streaming_versioned_upsert_replay_mints_no_duplicate_version(spark, tmp
     assert versions(path) == [1, 2, 3]
 
 
-def test_diff_versions_emits_exact_cdc_feed_and_round_trips(spark, tmpdir):
+def test_diff_versions_emits_exact_cdc_feed_and_round_trips(spark, tmpdir, snap_mode):
     """E91 (r10): diff_versions between two retained versions yields
     exactly the U/D feed that transforms the older into the newer —
     changed rows carry NEW values, deletes carry OLD rows (partition
@@ -539,7 +539,7 @@ def test_delta_update_agg_matches_direct_reaggregation(spark):
     assert "d" in got  # new group created
 
 
-def test_streaming_version_trail_drives_incremental_aggregate(spark, tmpdir):
+def test_streaming_version_trail_drives_incremental_aggregate(spark, tmpdir, snap_mode):
     """Composition (r10): the E90 streaming version trail feeds E91
     diffs into E92 delta maintenance — a continuously-maintained
     aggregate that tracks a micro-batch stream without ever rescanning
@@ -637,7 +637,7 @@ def test_streaming_version_trail_drives_incremental_aggregate(spark, tmpdir):
     assert got == want
 
 
-def test_batch_markers_collision_proof_and_crash_safe(spark, tmpdir):
+def test_batch_markers_collision_proof_and_crash_safe(spark, tmpdir, snap_mode):
     """r10 review fixes: (1) distinct batch ids that sanitize to the
     same name must not collide ('8.1' vs '8_1'); (2) the version
     entry is the replay-key source of truth — losing the marker file
@@ -679,7 +679,7 @@ def test_batch_markers_collision_proof_and_crash_safe(spark, tmpdir):
     assert committed_batch_version(path, "later") == v3
 
 
-def test_stale_marker_never_vouches_for_a_gone_version(spark, tmpdir):
+def test_stale_marker_never_vouches_for_a_gone_version(spark, tmpdir, snap_mode):
     """The snapshot-log twin of test_whlog's stale-marker test: a
     marker whose version entry is gone must not answer
     committed_batch_version, and the recycled batch id must then
@@ -701,7 +701,7 @@ def test_stale_marker_never_vouches_for_a_gone_version(spark, tmpdir):
     assert committed_batch_version(path, "r:0") == 1
 
 
-def test_change_feed_streams_with_checkpoint_continuity(spark, tmpdir):
+def test_change_feed_streams_with_checkpoint_continuity(spark, tmpdir, snap_mode):
     """E95 (r10): the materialized change feed is stream-consumable —
     a file-source stream over the feed dir delivers every exported
     change, and after MORE versions are exported a resumed stream
@@ -769,7 +769,7 @@ def test_change_feed_streams_with_checkpoint_continuity(spark, tmpdir):
     )
 
 
-def test_change_feed_replicates_table_end_to_end(spark, tmpdir):
+def test_change_feed_replicates_table_end_to_end(spark, tmpdir, snap_mode):
     """E95 composition: streaming the materialized change feed into a
     replica via foreachBatch apply_changes reproduces the source table
     — CDC replication on plain parquet, replayed micro-batches and
@@ -841,7 +841,7 @@ def test_change_feed_replicates_table_end_to_end(spark, tmpdir):
     )
 
 
-def test_export_marker_and_partial_export_recovery(spark, tmpdir):
+def test_export_marker_and_partial_export_recovery(spark, tmpdir, snap_mode):
     """r10 third-review fixes: a crashed partial export (directory
     exists, no completion marker) is re-exported instead of skipped
     forever; the marker is the engine's own file, independent of the
@@ -899,7 +899,7 @@ def test_export_marker_and_partial_export_recovery(spark, tmpdir):
         )
 
 
-def test_clone_table_zero_copy_and_divergence_isolation(spark, tmpdir):
+def test_clone_table_zero_copy_and_divergence_isolation(spark, tmpdir, snap_mode):
     """E96 (r10): shallow clone hard-links the source's files (same
     inodes — zero copy), refuses non-empty destinations, diverges
     safely in BOTH directions (writers replace files, never modify
@@ -971,7 +971,7 @@ def test_clone_table_zero_copy_and_divergence_isolation(spark, tmpdir):
 
 
 def test_scoped_commit_entry_io_bounded_by_touched_partitions(
-    spark, tmpdir
+    spark, tmpdir, snap_mode
 ):
     """r11 verdict #3 (segmented manifests): a partition-scoped commit
     must not re-read or re-write the untouched partitions' file lists.
@@ -1052,7 +1052,7 @@ def test_scoped_commit_entry_io_bounded_by_touched_partitions(
     )
 
 
-def test_file_skipping_stats_prune_and_carry(spark, tmpdir):
+def test_file_skipping_stats_prune_and_carry(spark, tmpdir, snap_mode):
     """E100 (r12): file-skipping statistics ride the segments. A
     range-partitioned seed records per-file o_orderkey min/max;
     scan_version over a selective range opens only intersecting files
@@ -1105,7 +1105,7 @@ def test_file_skipping_stats_prune_and_carry(spark, tmpdir):
 
 
 def test_file_skipping_stats_carry_across_scoped_commits(
-    spark, tmpdir, monkeypatch
+    spark, tmpdir, monkeypatch, snap_mode
 ):
     """E100 carry contract (r12 review: the first test never exercised
     it): a partition-scoped upsert computes footer stats ONLY for its

@@ -481,7 +481,7 @@ def test_string_zone_maps_prune_without_false_drops(spark, tmpdir):
     assert info3["files_scanned"] < info3["files_total"]
 
 
-def test_checkpoint_pointer_bounds_head_resolution_io(spark, tmpdir, monkeypatch):
+def test_checkpoint_pointer_bounds_head_resolution_io(spark, tmpdir, monkeypatch, snap_mode):
     """r12 verdict #6: snapshot-log checkpoints. Entries are already
     self-contained state maps, so the ``_last_checkpoint`` pointer is
     the whole fix: head resolution (read_version / head_version /

@@ -81,7 +81,7 @@ def _checked(spark, path, seen: set[int], hidden=None) -> None:
         assert head.exceptAll(live).count() == 0
 
 
-def test_every_writer_path_records_the_inferred_schema(spark, tmpdir):
+def test_every_writer_path_records_the_inferred_schema(spark, tmpdir, snap_mode):
     from weatherflow_spark.operators.layout import compact_partitions
 
     path = os.path.join(tmpdir, "t")

@@ -35,7 +35,7 @@ def _seed(spark, path):
     record_commit(path)
 
 
-def test_sql_delete_time_travel_restore_cycle(spark, tmp_path):
+def test_sql_delete_time_travel_restore_cycle(spark, tmp_path, snap_mode):
     """The full operator loop — DV delete, as-of reads of both sides,
     rollback — driven purely through SQL strings."""
     path = str(tmp_path / "t")

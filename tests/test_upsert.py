@@ -557,7 +557,7 @@ def _dw_seed(spark, path, versioned=True):
     return rows
 
 
-def test_delete_where_scoped_and_time_travels(spark, tmp_path):
+def test_delete_where_scoped_and_time_travels(spark, tmp_path, snap_mode):
     from weatherflow_spark.operators.snaplog import read_version, versions
     from weatherflow_spark.operators.upsert import delete_where
 
@@ -604,7 +604,7 @@ def test_delete_where_scoped_and_time_travels(spark, tmp_path):
     assert len(versions(path)) == n_vs
 
 
-def test_delete_where_can_empty_a_partition(spark, tmp_path):
+def test_delete_where_can_empty_a_partition(spark, tmp_path, snap_mode):
     from weatherflow_spark.operators.snaplog import read_version, versions
     from weatherflow_spark.operators.upsert import delete_where
 
@@ -915,7 +915,7 @@ def test_delete_where_refuses_null_key_victims(spark, tmp_path):
 # restore_version: roll a versioned table back as a new commit.
 
 
-def test_restore_version_rolls_back_as_new_commit(spark, tmp_path):
+def test_restore_version_rolls_back_as_new_commit(spark, tmp_path, snap_mode):
     from weatherflow_spark.operators.snaplog import read_version, versions
     from weatherflow_spark.operators.upsert import restore_version
 

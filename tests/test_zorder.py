@@ -196,7 +196,7 @@ def test_write_zordered_validates_bit_width(spark, tmp_path):
     assert info["files_scanned"] <= 4
 
 
-def test_compact_zorder_folds_dv_and_preserves_two_axis_pruning(spark, tmp_path):
+def test_compact_zorder_folds_dv_and_preserves_two_axis_pruning(spark, tmp_path, snap_mode):
     """E113 (r14): an unpartitioned Z-ordered table folds its
     deletion vectors only through the whole-table rewrite (root files
     are not a partition, so compact_partitions never plans them), and
