@@ -135,7 +135,6 @@ STILL_TAGGED = {
     "operators/indexing.py",
     "operators/ivm.py",
     "operators/sig_index.py",
-    "operators/star.py",
     "operators/vec_index.py",
     "operators/zorder.py",
     "plans/__init__.py",

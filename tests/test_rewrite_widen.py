@@ -178,3 +178,24 @@ def test_widen_token_precedes_listing(spark, tmpdir):
     live = spark.read.parquet(path)
     assert dict(live.dtypes)["amount"] == "int"  # swap never happened
     assert live.count() == 21  # the racing commit's row survived
+
+
+def test_widen_translates_vanished_files_into_conflict(spark, tmpdir):
+    """A file the unlocked rewrite listed can vanish under a concurrent
+    dynamic overwrite; the widen raises the retryable
+    CompactionConflict, as compact does, and leaves no sibling dir."""
+    from weatherflow_spark.operators.commit import CompactionConflict
+
+    path = f"{tmpdir}/t"
+    _seed(spark, path)
+
+    def vanished():
+        raise FileNotFoundError("part-00000.parquet")
+
+    with pytest.raises(CompactionConflict, match="files changed"):
+        rewrite_widen(
+            spark, path, {"amount": "bigint"}, ["grp"],
+            _before_swap=vanished,
+        )
+    assert dict(spark.read.parquet(path).dtypes)["amount"] == "int"
+    assert not os.path.exists(path.rstrip("/") + "__widening")

@@ -260,7 +260,7 @@ def test_apply_changes_deferred_snapshot_stays_locked(spark, tmpdir, monkeypatch
     assert read_version(spark, path).count() == 5  # head matches live
 
     with pytest.raises(RuntimeError, match="requires the caller"):
-        upsert_mod._apply_changes_locked(
+        upsert_mod._merge_locked(
             spark, changes, path, ["k"], "op", ["grp"]
         )
 

@@ -531,6 +531,18 @@ def test_duplicate_key_batches_are_refused(spark, tmp_path):
     apply_changes(spark, mixed, path, ["n_nationkey"], "op", ["n_regionkey"])
     assert spark.read.parquet(path).count() == nation.count()
 
+    # keys distinct as strings collide once cast to the table's int key
+    ipath = str(tmp_path / "int_key")
+    spark.createDataFrame([(7, "a"), (8, "b")], "k int, v string").write.mode(
+        "overwrite"
+    ).parquet(ipath)
+    cast_dup = spark.createDataFrame(
+        [("7", "x", "U"), ("07", "y", "U")], "k string, v string, op string"
+    )
+    with pytest.raises(ValueError, match="after type alignment"):
+        apply_changes(spark, cast_dup, ipath, ["k"], "op")
+    assert spark.read.parquet(ipath).where("k = 7").count() == 1
+
 
 # ---------------------------------------------------------------- E102
 # delete_where: predicate-scoped row-level delete.
@@ -996,7 +1008,7 @@ def test_apply_changes_aligns_feed_partition_types(spark, tmp_path):
         read_version,
         record_commit,
     )
-    from weatherflow_spark.operators.upsert import apply_changes
+    from weatherflow_spark.operators.upsert import apply_changes, upsert_by_key
 
     path = str(tmp_path / "t")
     spark.createDataFrame(
@@ -1027,3 +1039,8 @@ def test_apply_changes_aligns_feed_partition_types(spark, tmp_path):
     bad = spark.createDataFrame([Row(k=1, day="not-a-date", v=1.0, op="D")])
     with pytest.raises(ValueError, match="do not cast"):
         apply_changes(spark, bad, path, ["k"], "op", ["day"])
+    # the keyed upsert refuses the same value by name, not with a raw
+    # cast error from inside the merge
+    with pytest.raises(ValueError, match="do not cast"):
+        upsert_by_key(spark, bad.drop("op"), path, ["k"], ["day"])
+    assert read_version(spark, path).count() == 29

@@ -494,25 +494,14 @@ def dataset_snapshot(path: str) -> frozenset[tuple[str, int]]:
     """The dataset's data-file set as (relative path, size) pairs —
     the optimistic-concurrency token. Spark part files carry unique
     task UUIDs, so ANY commit (append, dynamic overwrite, upsert)
-    changes this set; success/CRC markers are excluded."""
-    out = []
-    for root, _, files in os.walk(path):
-        for f in files:
-            if f.startswith(("_", ".")):
-                continue
-            full = os.path.join(root, f)
-            try:
-                size = os.path.getsize(full)
-            except OSError:
-                # The file vanished between the walk listing and the
-                # stat (a concurrent dynamic overwrite deleting part
-                # files). Record a sentinel instead of crashing: the
-                # set will differ from any post-rewrite snapshot, so
-                # the swap-time comparison fails — the conservative
-                # outcome the optimistic protocol wants.
-                size = -1
-            out.append((os.path.relpath(full, path), size))
-    return frozenset(out)
+    changes this set; success/CRC markers are excluded. A file that
+    vanishes between the walk and its stat (a concurrent dynamic
+    overwrite) gets size -1, so the set differs from any later
+    snapshot and the swap-time comparison fails — the conservative
+    outcome the optimistic protocol wants."""
+    from weatherflow_spark.operators.snaplog import _walk_data_files
+
+    return frozenset(_walk_data_files(path))
 
 
 # ---------------------------------------------------------------------------

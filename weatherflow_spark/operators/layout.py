@@ -86,6 +86,119 @@ def _head_token(path: str) -> int | None:
     return head_version(path)
 
 
+def _swap_token(path: str) -> tuple[frozenset, int | None]:
+    """The optimistic swap token: the live data-file set plus the
+    versioned head. Take it BEFORE the rewrite's source resolves —
+    Spark freezes the file listing at DataFrame creation, so a commit
+    landing between the listing and a later token would be inside
+    the token yet outside the rewrite, and the swap-time re-check
+    would pass while dropping that commit's rows."""
+    from weatherflow_spark.operators.commit import dataset_snapshot
+
+    return dataset_snapshot(path), _head_token(path)
+
+
+def _validated_swap(
+    path: str,
+    out: DataFrame,
+    partition_cols: list[str] | None,
+    token: tuple[frozenset, int | None],
+    scratch: str,
+    what: str,
+    before_swap=None,
+) -> None:
+    """Write ``out`` to the sibling dir ``<path>__<scratch>``, then,
+    under the dataset lock, swap it in only if ``token`` still
+    matches (:func:`_swap_token`), and record the swapped layout as a
+    new version on a versioned table. The write runs UNLOCKED, so
+    loads proceed freely during the rewrite; the source stays
+    readable until the metadata-only rename. (On an object store,
+    swap via a catalog pointer instead — renames aren't atomic there;
+    this file-system path is the local/HDFS form.) Any non-success
+    exit removes the sibling dir. ``before_swap`` is a test seam for
+    injecting a race between the write and the swap."""
+    from weatherflow_spark.operators.commit import (
+        CompactionConflict,
+        DatasetLockTimeout,
+        dataset_lock,
+    )
+    from weatherflow_spark.operators.snaplog import (
+        record_commit,
+        snapshot_enabled,
+    )
+    from weatherflow_spark.operators.upsert import _data_schema
+
+    tmp = f"{path.rstrip('/')}__{scratch}"
+    old = f"{path.rstrip('/')}__old_{scratch}"
+    swapped = False
+    try:
+        writer = out.write.mode("overwrite")
+        if partition_cols:
+            writer = writer.partitionBy(*partition_cols)
+        writer.parquet(tmp)
+        if before_swap is not None:
+            before_swap()
+        with dataset_lock(path):
+            files, head = _swap_token(path)
+            # Optimistic validation: any load that committed since the
+            # token changed the data-file set (part-file names carry
+            # task UUIDs) — swapping now would discard its rows.
+            if files != token[0]:
+                raise CompactionConflict(
+                    f"{path}: dataset changed during {what}; re-run"
+                )
+            if head != token[1]:
+                # A merge-on-read DV delete rewrites ZERO data files —
+                # invisible to the file-set fingerprint above — but the
+                # rewrite read pre-DV; swapping would resurrect its
+                # victims and the full-walk record_commit below would
+                # drop the fresh DV.
+                raise CompactionConflict(
+                    f"{path}: a version committed during {what} "
+                    "(metadata-only, e.g. a deletion-vector delete); "
+                    "re-run"
+                )
+            # Swap via rename-aside, not delete-then-rename: with
+            # rmtree(path) first, a crash between the two calls loses
+            # the dataset and concurrent readers see the table vanish.
+            # Renaming the old copy aside keeps a complete copy on
+            # disk at every instant; the stale aside dir is removed
+            # last and is safe to re-remove on retry.
+            if os.path.exists(old):
+                shutil.rmtree(old)
+            os.rename(path, old)
+            os.rename(tmp, path)
+            swapped = True
+            # The rewrite changed every file name, so the swapped
+            # layout is a new version; time-travel readers keep the
+            # earlier versions via the retained links (same inodes;
+            # the rename-aside and its rmtree cannot touch them).
+            if snapshot_enabled(path):
+                record_commit(path, schema=_data_schema(out, partition_cols))
+    except (CompactionConflict, DatasetLockTimeout):
+        raise
+    except Exception as e:
+        # A concurrent dynamic overwrite can delete part files the
+        # unlocked read already listed — Spark surfaces that as a
+        # FileNotFound from deep in the scan. Translate it into the
+        # one retryable error type callers already handle; anything
+        # else propagates unchanged.
+        # isinstance covers Python-side FileNotFoundError (its str()
+        # lacks the class name); the string match covers Java traces.
+        if isinstance(e, FileNotFoundError) or "FileNotFoundException" in str(e):
+            raise CompactionConflict(
+                f"{path}: files changed under the unlocked rewrite; re-run"
+            ) from e
+        raise
+    finally:
+        # Every non-success exit (conflict, lock timeout, mid-rewrite
+        # failure) must reclaim the scratch dir — leaking it turns
+        # retries into disk-pressure incidents at warehouse scale.
+        if not swapped:
+            shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(old)
+
+
 def compact(
     spark: SparkSession,
     path: str,
@@ -124,20 +237,12 @@ def compact(
     ``_before_swap`` is a test seam for injecting that race
     deterministically.
     """
-    from weatherflow_spark.operators.commit import (
-        CompactionConflict,
-        DatasetLockTimeout,
-        dataset_lock,
-        dataset_snapshot,
-    )
-
     if zorder is not None and sort_col is not None:
         raise ValueError(
             "pass either sort_col (1-D range clustering) or zorder "
             "(two-axis Morton clustering), not both"
         )
-    snap0 = dataset_snapshot(path)
-    head0 = _head_token(path)
+    token = _swap_token(path)
     # Per-file guard: a concurrent dynamic overwrite can delete a part
     # file between the listing and the stat (the dataset_snapshot
     # sentinel race) — a vanished file contributes 0 bytes
@@ -168,81 +273,9 @@ def compact(
         )
     else:
         out = df.repartition(n_files)
-    # Write to a sibling dir, then swap: the source stays readable for
-    # the whole rewrite job and the swap is a metadata-only rename.
-    # (On an object store, swap via a catalog pointer instead — renames
-    # aren't atomic there; this file-system path is the local/HDFS form.)
-    tmp = path.rstrip("/") + "__compacting"
-    old = path.rstrip("/") + "__old"
-    swapped = False
-    try:
-        out.write.mode("overwrite").parquet(tmp)
-        if _before_swap is not None:
-            _before_swap()
-        with dataset_lock(path):
-            # Optimistic validation: any load that committed since the
-            # snapshot changed the data-file set (part-file names carry
-            # task UUIDs) — swapping now would discard its rows.
-            if dataset_snapshot(path) != snap0:
-                raise CompactionConflict(
-                    f"{path}: dataset changed during compaction; re-run"
-                )
-            if _head_token(path) != head0:
-                # A merge-on-read DV delete rewrites ZERO data files —
-                # invisible to the file-set fingerprint above — but the
-                # rewrite read pre-DV; swapping would resurrect its
-                # victims and the full-walk record_commit below would
-                # drop the fresh DV.
-                raise CompactionConflict(
-                    f"{path}: a version committed during compaction "
-                    "(metadata-only, e.g. a deletion-vector delete); "
-                    "re-run"
-                )
-            # Swap via rename-aside, not delete-then-rename: with
-            # rmtree(path) first, a crash between the two calls loses
-            # the dataset and concurrent readers see the table vanish.
-            # Renaming the old copy aside keeps a complete copy on
-            # disk at every instant; the stale __old dir is removed
-            # last and is safe to re-remove on retry.
-            if os.path.exists(old):
-                shutil.rmtree(old)
-            os.rename(path, old)
-            os.rename(tmp, path)
-            swapped = True
-            # Versioned tables: the rewrite changed every file
-            # name, so record the compacted layout as a new version —
-            # time-travel readers keep pre-compaction versions via
-            # the retained links (same inodes; the rename-aside and
-            # rmtree of __old cannot touch them).
-            from weatherflow_spark.operators.snaplog import (
-                record_commit,
-                snapshot_enabled,
-            )
-
-            if snapshot_enabled(path):
-                record_commit(path, schema=out.schema)
-    except (CompactionConflict, DatasetLockTimeout):
-        raise
-    except Exception as e:
-        # A concurrent dynamic overwrite can delete part files the
-        # unlocked read already listed — Spark surfaces that as a
-        # FileNotFound from deep in the scan. Translate it into the
-        # one retryable error type callers already handle; anything
-        # else propagates unchanged.
-        # isinstance covers Python-side FileNotFoundError (its str()
-        # lacks the class name); the string match covers Java traces.
-        if isinstance(e, FileNotFoundError) or "FileNotFoundException" in str(e):
-            raise CompactionConflict(
-                f"{path}: files changed under the unlocked rewrite; re-run"
-            ) from e
-        raise
-    finally:
-        # Every non-success exit (conflict, lock timeout, mid-rewrite
-        # failure) must reclaim the scratch dir — leaking it turns
-        # retries into disk-pressure incidents at warehouse scale.
-        if not swapped:
-            shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old)
+    _validated_swap(
+        path, out, None, token, "compacting", "compaction", _before_swap
+    )
     return len(parquet_files(path))
 
 
@@ -287,23 +320,9 @@ def rewrite_widen(
     the directory swap). A widened batch upsert is accepted
     afterwards with no ``merge_schema`` flag: every live footer now
     carries the wide type."""
-    from weatherflow_spark.operators.commit import (
-        CompactionConflict,
-        dataset_lock,
-        dataset_snapshot,
-    )
     from weatherflow_spark.operators.snaplog import head_dv, read_version
 
-    # Token BEFORE the source resolves: Spark freezes the
-    # parquet file listing at DataFrame creation, so a commit landing
-    # between the listing and the token would be INCLUDED in the token
-    # yet EXCLUDED from the rewrite — the swap-time re-check would pass
-    # while silently dropping that commit's rows. Taking the token
-    # first makes any post-listing commit fail the swap comparison.
-    # The head-version half catches metadata-only commits (DV deletes
-    # rewrite zero data files).
-    snap0 = dataset_snapshot(path)
-    head0 = _head_token(path)
+    token = _swap_token(path)  # before the source resolves
     if head_dv(path):
         # live files still hold DV-deleted rows — the widen
         # rewrite must fold them, not resurrect them
@@ -337,49 +356,10 @@ def rewrite_widen(
             for c in df.columns
         ]
     )
-    tmp = path.rstrip("/") + "__widening"
-    old = path.rstrip("/") + "__old_widen"
-    swapped = False
-    try:
-        writer = out.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(tmp)
-        if _before_swap is not None:
-            _before_swap()
-        with dataset_lock(path):
-            if dataset_snapshot(path) != snap0:
-                raise CompactionConflict(
-                    f"{path}: dataset changed during the widen rewrite; "
-                    "re-run"
-                )
-            if _head_token(path) != head0:
-                # metadata-only commit (DV delete) — zero data files
-                # changed; swapping the pre-DV rewrite would erase it
-                raise CompactionConflict(
-                    f"{path}: a version committed during the widen "
-                    "rewrite (metadata-only, e.g. a deletion-vector "
-                    "delete); re-run"
-                )
-            if os.path.exists(old):
-                shutil.rmtree(old)
-            os.rename(path, old)
-            os.rename(tmp, path)
-            swapped = True
-            from weatherflow_spark.operators.snaplog import (
-                record_commit,
-                snapshot_enabled,
-            )
-            from weatherflow_spark.operators.upsert import _data_schema
-
-            if snapshot_enabled(path):
-                record_commit(
-                    path, schema=_data_schema(out, partition_cols)
-                )
-    finally:
-        if not swapped:
-            shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old)
+    _validated_swap(
+        path, out, partition_cols, token, "widening", "the widen rewrite",
+        _before_swap,
+    )
 
 
 def compact_partitions(

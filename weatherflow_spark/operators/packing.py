@@ -50,16 +50,11 @@ def exclusive_prefix_sum(
     value_col: str,
     bucket_size: int = 8192,
     out_col: str = "cum_before",
-    broadcast_base: bool = True,
 ) -> DataFrame:
     """Per-stream exclusive running total of ``value_col`` in
     ``order_col`` order, bucket-decomposed (see module docstring).
-    Output = input columns + ``out_col`` (long).
-
-    ``broadcast_base``: the (stream, bucket) base-offset table has
-    ~N/bucket_size rows; broadcast it while that fits (default), or
-    pass False to let the join shuffle on (stream, bucket) — a key the
-    level-2 window re-uses, so the big side still exchanges once.
+    Output = input columns + ``out_col`` (long). The (stream, bucket)
+    base-offset table has ~N/bucket_size rows and is broadcast.
     """
     bucket = F.expr(f"{order_col} DIV {bucket_size}")
 
@@ -79,9 +74,6 @@ def exclusive_prefix_sum(
             "_base"
         ),
     )
-    if broadcast_base:
-        base = F.broadcast(base)
-
     w_in = (
         Window.partitionBy(stream_col, "_bucket")
         .orderBy(order_col)
@@ -89,7 +81,7 @@ def exclusive_prefix_sum(
     )
     return (
         df.withColumn("_bucket", bucket)
-        .join(base, [stream_col, "_bucket"])
+        .join(F.broadcast(base), [stream_col, "_bucket"])
         .withColumn(
             out_col,
             F.col("_base")

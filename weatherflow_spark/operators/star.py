@@ -55,7 +55,7 @@ def with_star_keys(
     )
 
 
-# The denormalized date-layout column (r11 verdict #1): the reference
+# The denormalized date-layout column: the reference
 # fact is keys-only (create_tables.sql:11-18), so an unpartitioned
 # star pays a FULL five-table read-modify-write per 5-minute load
 # (etl.py:129, catchup=False :131) — O(T²/b) cumulative. Carrying the
@@ -193,14 +193,14 @@ def load_star_warehouse(
     batch_id: object | None = None,
     partition_cols: dict[str, list[str]] | None = None,
 ) -> int:
-    """ONE logical star load (E97 × K1-K3): merge every star table by
+    """ONE logical star load (reference K1-K3): merge every star table by
     its surrogate key, then commit all five as a single warehouse
     load entry — the engine's analog of the reference's per-record
     transaction spanning the same five tables (reference
     dags/utils/database.py:25-34, create_tables.sql:11-55). The load
     entry exists only after EVERY table committed under all five
     locks, so ``read_warehouse(wh_dir, load)`` can never observe a
-    fact batch without its dims. Hardened per the r11 review:
+    fact batch without its dims. Further guarantees:
 
     - ``batch_id`` short-circuits BEFORE any table is touched — a
       late-redelivered OLD batch must not rewrite current rows back
@@ -239,6 +239,7 @@ def load_star_warehouse(
     the load number."""
     import os
 
+    from weatherflow_spark.operators.snaplog import init_snapshot_log
     from weatherflow_spark.operators.upsert import upsert_by_key
     from weatherflow_spark.operators.whlog import (
         commit_warehouse,
@@ -254,13 +255,18 @@ def load_star_warehouse(
     bad_pc = sorted(set(partition_cols or {}) - set(STAR_KEYS))
     if bad_pc:
         # A typo'd table name would otherwise silently degrade that
-        # table to an unpartitioned full rewrite per load (r11 review).
+        # table to an unpartitioned full rewrite per load.
         raise ValueError(f"partition_cols for unknown star tables: {bad_pc}")
     init_warehouse_log(wh_dir)
     if batch_id is not None:
         prior = committed_load(wh_dir, batch_id)
         if prior is not None:
             return prior  # replayed load: nothing touched
+    # Version every member from its first write: a seed merge then
+    # records the schema it wrote, and commit_warehouse reuses that
+    # head instead of inferring each member's schema with a Spark job.
+    for name in tables:
+        init_snapshot_log(os.path.join(wh_dir, name))
     from concurrent.futures import ThreadPoolExecutor
 
     def _merge(name: str, before_write=None) -> None:

@@ -174,7 +174,9 @@ def upsert_by_key(
     broadcast), unioned with the batch, and dynamically overwritten.
 
     Deterministic given deterministic keys: re-running the same batch
-    is a no-op on content.
+    is a no-op on content. The merge itself is the one keyed-merge
+    body :func:`apply_changes` (and so :func:`delete_where`) runs too:
+    the batch is a change set with no delete rows.
 
     Conflict detection: every commit bumps the touched
     partitions' versions in the dataset's manifest
@@ -215,8 +217,8 @@ def upsert_by_key(
         # version bump run under this same hold, so there is no
         # validate→write→bump window.
         with dataset_lock(path):
-            _upsert_locked(
-                spark, batch, path, key_cols, partition_cols,
+            _merge_locked(
+                spark, batch, path, key_cols, None, partition_cols,
                 expected_versions, snapshot_batch_id, merge_schema,
                 allow_missing_columns, before_write,
             )
@@ -334,32 +336,26 @@ def _read_and_evolve(
 def _align_to_table(
     incoming: DataFrame,
     current: DataFrame,
-    key_cols: list[str],
     allow_missing_columns: bool,
     what: str,
     path: str,
 ) -> DataFrame:
     """Cast the incoming frame to the table's column types (partition
-    value inference can shift them), recheck key uniqueness when a
-    KEY column's type actually moved (caller-distinct keys can
-    collide after the cast — '7' and '07' → int 7), and NULL-backfill
-    table columns the frame lacks only under the explicit
-    ``allow_missing_columns`` opt-in (a whole-row replace would
-    otherwise null-overwrite matched keys)."""
+    value inference can shift them) and NULL-backfill table columns
+    the frame lacks only under the explicit ``allow_missing_columns``
+    opt-in (a whole-row replace would otherwise null-overwrite matched
+    keys). A column the table lacks (a change set's op column) passes
+    through unchanged."""
     cur_types = dict(current.dtypes)
     pre_cast_types = dict(incoming.dtypes)
     incoming = incoming.select(
         *[
             F.col(c).cast(cur_types[c]).alias(c)
-            if pre_cast_types[c] != cur_types[c]
+            if c in cur_types and pre_cast_types[c] != cur_types[c]
             else F.col(c)
             for c in incoming.columns
         ]
     )
-    if any(pre_cast_types[k] != cur_types[k] for k in key_cols):
-        _require_unique_keys(
-            incoming, key_cols, f"{what} (after type alignment)", path
-        )
     short = [c for c in current.columns if c not in incoming.columns]
     if short:
         if not allow_missing_columns:
@@ -391,11 +387,12 @@ def _touched_keys(
     return touched, [partition_key(partition_cols, t) for t in touched]
 
 
-def _upsert_locked(
+def _merge_locked(
     spark: SparkSession,
-    new_batch: DataFrame,
+    changes: DataFrame,
     path: str,
     key_cols: list[str],
+    op_col: str | None,
     partition_cols: list[str] | None,
     expected_versions: dict[str, int] | None = None,
     snapshot_batch_id: object | None = None,
@@ -403,32 +400,50 @@ def _upsert_locked(
     allow_missing_columns: bool = False,
     before_write: Callable[[], None] | None = None,
 ) -> None:
-    from weatherflow_spark.operators import commit as _commit
+    """The keyed merge behind :func:`upsert_by_key` and
+    :func:`apply_changes` (and so :func:`delete_where` and
+    :func:`restore_version`). ``changes`` carries the table's columns
+    plus, when ``op_col`` names one, an op ∈ {'U', 'D'} per row; with
+    ``op_col=None`` every row is an upsert — a change set with no
+    deletes. The caller validated the upsert side's keys and holds
+    the dataset lock for the whole read-modify-write."""
     from weatherflow_spark.operators.commit import (
         check_and_bump_versions,
         dataset_lock,
+        lock_held_by_me,
+        partition_key,
     )
 
-    gate = before_write or (lambda: None)
-    # Same lock contract as _apply_changes_locked: the whole
-    # read-modify-write must run inside the caller's hold.
-    if not _commit.lock_held_by_me(path):
-        # RuntimeError, not assert: python -O would compile an assert
-        # away and silently reopen the deferred-snapshot window.
+    # The emptied-partition branch below DEFERS the snapshot record
+    # past overwrite_partitions — sound only because the caller's one
+    # reentrant hold keeps any concurrent writer from recording a
+    # version of the half-applied state in between. RuntimeError, not
+    # assert: python -O would compile an assert away and silently
+    # reopen that window.
+    if not lock_held_by_me(path):
         raise RuntimeError(
-            f"{path}: _upsert_locked requires the caller to hold the "
-            "dataset lock (use upsert_by_key)"
+            f"{path}: _merge_locked requires the caller to hold the "
+            "dataset lock (use upsert_by_key or apply_changes)"
         )
+    what = "batch" if op_col is None else "feed"
+
+    def upsert_side(df: DataFrame) -> DataFrame:
+        if op_col is None:
+            return df
+        return df.where(F.col(op_col) == "U").drop(op_col)
+
+    gate = before_write or (lambda: None)
     exists = os.path.exists(path) and any(
         not n.startswith(("_", ".")) for n in os.listdir(path)
     )
     if not exists:
-        touched, keys = _touched_keys(new_batch, partition_cols)
+        seed = upsert_side(changes)
+        _, keys = _touched_keys(seed, partition_cols)
         check_and_bump_versions(path, keys, expected_versions, bump=False)
         if partition_cols:
             # same per-partition-dir clustering as overwrite_partitions
-            new_batch = new_batch.repartition(*partition_cols)
-        writer = new_batch.write.mode("overwrite")
+            seed = seed.repartition(*partition_cols)
+        writer = seed.write.mode("overwrite")
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
         gate()
@@ -438,25 +453,74 @@ def _upsert_locked(
             # seed = the table's first version
             _record_snapshot(
                 path, batch_id=snapshot_batch_id,
-                schema=_data_schema(new_batch, partition_cols),
+                schema=_data_schema(seed, partition_cols),
             )
         return
 
-    # Evolution + type alignment: shared contract (helpers above).
-    current = _read_and_evolve(spark, path, new_batch, merge_schema, "batch")
-    new_batch = _align_to_table(
-        new_batch, current, key_cols, allow_missing_columns, "batch", path
+    current = _read_and_evolve(
+        spark, path, upsert_side(changes), merge_schema, what
     )
-    touched, keys = _touched_keys(new_batch, partition_cols)
+    # Align the PARTITION and KEY column types to the table's BEFORE
+    # the touched-set / anti-join / emptied-partition comparisons: a
+    # string-typed partition value against a date-partitioned table
+    # would flow into ``touched`` as a string while ``remaining``
+    # collects dates from the merged output — every touched partition
+    # would compare "emptied" and its directory be removed AFTER the
+    # merge wrote it. Casts that fail produce NULL, which would
+    # redirect rows to the NULL partition — refuse loudly instead.
+    # No job runs when the types already match.
+    cur_types = dict(current.dtypes)
+    in_types = dict(changes.dtypes)
+    misaligned = [
+        c
+        for c in [*(partition_cols or []), *key_cols]
+        if c in cur_types and c in in_types and in_types[c] != cur_types[c]
+    ]
+    if misaligned:
+        # try_cast, not cast: under ANSI (the session default) a bad
+        # value would throw a raw DateTimeException mid-job instead
+        # of this check's named refusal
+        bad = changes.agg(*[
+            F.sum(
+                (
+                    F.col(c).isNotNull()
+                    & F.col(c).try_cast(cur_types[c]).isNull()
+                ).cast("long")
+            ).alias(c)
+            for c in misaligned
+        ]).first()
+        badcols = [c for c in misaligned if bad[c]]
+        if badcols:
+            raise ValueError(
+                f"{path}: {what} column(s) {badcols} carry values that "
+                f"do not cast to the table's type(s) "
+                f"({ {c: cur_types[c] for c in badcols} }) — a NULL "
+                "cast would silently redirect rows to the NULL "
+                "partition / match no key"
+            )
+        for c in misaligned:
+            changes = changes.withColumn(c, F.col(c).try_cast(cur_types[c]))
+    changes = _align_to_table(
+        changes, current, allow_missing_columns, what, path
+    )
+    upserts = upsert_side(changes)
+    if any(in_types.get(k) != cur_types.get(k) for k in key_cols):
+        # keys distinct before the cast can collide after it ('7' and
+        # '07' → int 7)
+        _require_unique_keys(
+            upserts, key_cols, f"{what} (after type alignment)", path
+        )
+    # The touched set comes from every row: deletes prune too.
+    touched, keys = _touched_keys(changes, partition_cols)
     # Fail-fast CAS validate BEFORE the merge job runs (nothing to
     # undo); the bump lands after the successful write, all under the
     # outer lock hold.
     check_and_bump_versions(path, keys, expected_versions, bump=False)
     if partition_cols:
         # Prune the existing side to touched partitions: a literal
-        # IN-list of the batch's partition values (typed to match, so
-        # it constant-folds into a partition filter — no full-table
-        # read). Batches touch few partitions, so collecting the
+        # IN-list of the change set's partition values (typed to match,
+        # so it constant-folds into a partition filter — no full-table
+        # read). Change sets touch few partitions, so collecting the
         # distinct values is tiny.
         cond = None
         for t in touched:
@@ -470,24 +534,19 @@ def _upsert_locked(
                 clause = eq if clause is None else (clause & eq)
             cond = clause if cond is None else (cond | clause)
         current = current.where(cond)  # untouched partitions never read
-    kept = current.join(F.broadcast(new_batch.select(*key_cols)), on=key_cols, how="anti")
-    merged = kept.unionByName(new_batch.select(*current.columns))
+    # The existing side drops EVERY change key, delete and upsert alike;
+    # duplicate keys on the build side do not change an anti-join.
+    kept = current.join(
+        F.broadcast(changes.select(*key_cols)), on=key_cols, how="anti"
+    )
+    merged = kept.unionByName(upserts.select(*current.columns))
     # Materialize before overwrite: the merged plan reads the same files
     # the overwrite replaces. localCheckpoint bounds the materialized
     # slice to the touched partitions (executor-local, spill-backed).
     merged = merged.localCheckpoint(eager=True)
     try:
         gate()
-        if partition_cols:
-            # takes the lock; bumps the touched versions (choke point).
-            # merged holds exactly the touched partitions (the batch
-            # has rows in each), so the keys need no second collect.
-            overwrite_partitions(
-                merged, path, partition_cols,
-                snapshot_batch_id=snapshot_batch_id,
-                touched_keys=keys,
-            )
-        else:
+        if not partition_cols:
             with dataset_lock(path):
                 merged.write.mode("overwrite").parquet(path)
                 check_and_bump_versions(path, keys)
@@ -496,6 +555,59 @@ def _upsert_locked(
                 # unrecoverable on a versioned table.
                 _record_snapshot(
                     path, batch_id=snapshot_batch_id, schema=merged.schema
+                )
+            return
+        # Dynamic partition overwrite only rewrites partitions PRESENT
+        # in the output: deletes that empty a touched partition (and
+        # land no upsert in it) leave zero merged rows there, so its
+        # old files would silently survive. Only a change set with an
+        # op column can empty one.
+        emptied = []
+        if op_col is not None:
+            remaining = {
+                tuple(r[c] for c in partition_cols)
+                for r in merged.select(*partition_cols).distinct().collect()
+            }
+            emptied = [t for t in touched if t not in remaining]
+        # takes the lock; bumps the merged partitions' versions. When
+        # deletes empty a partition the commit is NOT complete until
+        # the emptied directories are removed below — defer the
+        # snapshot record to that point, or the head version would
+        # still list the deleted rows' files and read_version() at the
+        # head would resurrect deleted data.
+        overwrite_partitions(
+            merged, path, partition_cols, record_snapshot=not emptied,
+            snapshot_batch_id=snapshot_batch_id,
+            touched_keys=[
+                partition_key(partition_cols, t)
+                for t in touched
+                if t not in emptied
+            ],
+        )
+        if emptied:
+            import shutil
+
+            with dataset_lock(path):
+                for t in emptied:
+                    # partition_key hive-escapes values exactly as
+                    # Spark wrote the directory — a raw f-string path
+                    # for a ':'-valued partition matches nothing and
+                    # the "deleted" files would silently survive.
+                    sub = os.path.join(path, partition_key(partition_cols, t))
+                    shutil.rmtree(sub, ignore_errors=True)
+                # Emptied partitions are content changes too, but they
+                # are absent from the merged output — bump them here.
+                check_and_bump_versions(
+                    path,
+                    [partition_key(partition_cols, t) for t in emptied],
+                )
+                # Deferred from overwrite_partitions: the live tree
+                # now matches the logical post-delete result. Scope =
+                # every touched partition (merged AND emptied —
+                # emptied dirs walk to nothing, which is exactly the
+                # deletion the carried list must not resurrect).
+                _record_snapshot(
+                    path, scope=keys, batch_id=snapshot_batch_id
                 )
     finally:
         release_checkpoint(merged)
@@ -522,9 +634,9 @@ def apply_changes(
     by key, 'D' rows remove the key (their non-key columns are
     ignored — a real feed often ships key-only tombstones).
 
-    Same bounded read-modify-write shape as :func:`upsert_by_key`
-    (and the same commit-lock discipline via the shared write paths):
-    when partitioned, ONLY partitions the feed touches are read —
+    Runs the same keyed-merge body as :func:`upsert_by_key` (and so
+    the same commit-lock discipline and type checks): when
+    partitioned, ONLY partitions the feed touches are read —
     which requires 'D' rows to carry their partition values, the
     standard CDC contract (a tombstone without a partition cannot be
     pruned to one). The existing side drops EVERY feed key (delete
@@ -546,201 +658,11 @@ def apply_changes(
         path,
     )
     with dataset_lock(path):
-        _apply_changes_locked(
+        _merge_locked(
             spark, changes, path, key_cols, op_col, partition_cols,
             expected_versions, snapshot_batch_id, merge_schema,
             allow_missing_columns,
         )
-
-
-def _apply_changes_locked(
-    spark: SparkSession,
-    changes: DataFrame,
-    path: str,
-    key_cols: list[str],
-    op_col: str,
-    partition_cols: list[str] | None,
-    expected_versions: dict[str, int] | None = None,
-    snapshot_batch_id: object | None = None,
-    merge_schema: bool = False,
-    allow_missing_columns: bool = False,
-) -> None:
-    from weatherflow_spark.operators import commit as _commit
-    from weatherflow_spark.operators.commit import (
-        check_and_bump_versions,
-        dataset_lock,
-        partition_key,
-    )
-
-    # The emptied-partition branch below DEFERS the snapshot record
-    # past overwrite_partitions — sound only because apply_changes
-    # wraps this whole function in one reentrant dataset_lock hold,
-    # so no concurrent writer can record a version of the
-    # half-applied state in between. Assert the
-    # invariant so a future direct caller can't silently reopen the
-    # window.
-    if not _commit.lock_held_by_me(path):
-        raise RuntimeError(
-            f"{path}: _apply_changes_locked requires the caller to "
-            "hold the dataset lock (use apply_changes)"
-        )
-
-    exists = os.path.exists(path) and any(
-        not n.startswith(("_", ".")) for n in os.listdir(path)
-    )
-    upserts = changes.where(F.col(op_col) == "U").drop(op_col)
-    if not exists:
-        _, keys = _touched_keys(upserts, partition_cols)
-        check_and_bump_versions(path, keys, expected_versions, bump=False)
-        writer = upserts.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        with dataset_lock(path):
-            writer.parquet(path)
-            check_and_bump_versions(path, keys)
-            # seed = the table's first version
-            _record_snapshot(
-                path, batch_id=snapshot_batch_id,
-                schema=_data_schema(upserts, partition_cols),
-            )
-        return
-
-    # Same add-column evolution contract as _upsert_locked:
-    # evolved reads schema-merge, U rows may add columns, table-side
-    # columns the feed lacks NULL-backfill — under the flag only.
-    # Evolution + type alignment: shared contract (helpers above).
-    current = _read_and_evolve(spark, path, upserts, merge_schema, "feed")
-    # Align the feed's PARTITION and KEY column types to the table's
-    # BEFORE the touched-set / anti-join / emptied-partition
-    # comparisons: a string-typed partition value in a
-    # date-partitioned feed would flow into ``touched`` as a string
-    # while ``remaining`` collects dates from the merged output — every
-    # touched partition would compare "emptied" and its directory be
-    # removed AFTER the merge wrote it, silently dropping whole
-    # partitions. Casts that fail produce NULL, which
-    # would redirect rows to the NULL partition — refuse loudly
-    # instead.
-    cur_types = dict(current.dtypes)
-    feed_types = dict(changes.dtypes)
-    misaligned = [
-        c
-        for c in [*(partition_cols or []), *key_cols]
-        if c in cur_types
-        and c in feed_types
-        and feed_types[c] != cur_types[c]
-    ]
-    if misaligned:
-        # try_cast, not cast: under ANSI (the session default) a bad
-        # value would throw a raw DateTimeException mid-job instead
-        # of this check's named refusal
-        bad = changes.agg(*[
-            F.sum(
-                (
-                    F.col(c).isNotNull()
-                    & F.col(c).try_cast(cur_types[c]).isNull()
-                ).cast("long")
-            ).alias(c)
-            for c in misaligned
-        ]).first()
-        badcols = [c for c in misaligned if bad[c]]
-        if badcols:
-            raise ValueError(
-                f"{path}: feed column(s) {badcols} carry values that "
-                f"do not cast to the table's type(s) "
-                f"({ {c: cur_types[c] for c in badcols} }) — a NULL "
-                "cast would silently redirect rows to the NULL "
-                "partition / match no key"
-            )
-        for c in misaligned:
-            changes = changes.withColumn(
-                c, F.col(c).try_cast(cur_types[c])
-            )
-        upserts = changes.where(F.col(op_col) == "U").drop(op_col)
-    upserts = _align_to_table(
-        upserts, current, key_cols, allow_missing_columns, "feed", path
-    )
-    # Touched set from the WHOLE feed (deletes prune partitions too).
-    touched, keys = _touched_keys(
-        changes.drop(op_col) if partition_cols else changes, partition_cols
-    )
-    check_and_bump_versions(path, keys, expected_versions, bump=False)
-    if partition_cols:
-        cond = None
-        for t in touched:
-            clause = None
-            for c, v in zip(partition_cols, t):
-                eq = F.col(c).eqNullSafe(F.lit(v))  # NULL partitions too
-                clause = eq if clause is None else (clause & eq)
-            cond = clause if cond is None else (cond | clause)
-        current = current.where(cond)
-    all_keys = changes.select(*key_cols).distinct()
-    kept = current.join(F.broadcast(all_keys), on=key_cols, how="anti")
-    merged = kept.unionByName(upserts.select(*current.columns))
-    merged = merged.localCheckpoint(eager=True)
-    try:
-        if partition_cols:
-            # Dynamic partition overwrite only rewrites partitions PRESENT
-            # in the output: a feed whose deletes empty a touched partition
-            # (and land no upsert in it) produces zero merged rows there,
-            # so the old files would silently survive the 'delete'. Remove
-            # those now-empty partition directories explicitly, under the
-            # same commit lock as the overwrite.
-            import shutil
-
-            remaining = {
-                tuple(r[c] for c in partition_cols)
-                for r in merged.select(*partition_cols).distinct().collect()
-            }
-            emptied = [t for t in touched if t not in remaining]
-            merged_keys = [partition_key(partition_cols, t) for t in remaining]
-            # takes the lock; bumps the MERGED partitions' versions. When
-            # deletes empty a partition the commit is NOT complete until
-            # the emptied directories are removed below — defer the
-            # snapshot record to that point, or the head version would
-            # still list the deleted rows' files and read_version() at
-            # the head would resurrect deleted data.
-            overwrite_partitions(
-                merged, path, partition_cols, record_snapshot=not emptied,
-                snapshot_batch_id=snapshot_batch_id,
-                touched_keys=merged_keys,
-            )
-            if emptied:
-                with dataset_lock(path):
-                    for t in emptied:
-                        # partition_key hive-escapes values exactly as
-                        # Spark wrote the directory — a raw f-string path
-                        # for a ':'-valued partition matches nothing and
-                        # the "deleted" files would silently survive.
-                        sub = os.path.join(path, partition_key(partition_cols, t))
-                        shutil.rmtree(sub, ignore_errors=True)
-                    # Emptied partitions are content changes too, but they
-                    # are absent from the merged output — bump them here.
-                    check_and_bump_versions(
-                        path,
-                        [partition_key(partition_cols, t) for t in emptied],
-                    )
-                    # Deferred from overwrite_partitions: the live tree
-                    # now matches the logical post-delete result. Scope =
-                    # every feed-touched partition (merged AND emptied —
-                    # emptied dirs walk to nothing, which is exactly the
-                    # deletion the carried list must not resurrect).
-                    _record_snapshot(
-                        path,
-                        scope=[
-                            partition_key(partition_cols, t) for t in touched
-                        ],
-                        batch_id=snapshot_batch_id,
-                    )
-        else:
-            with dataset_lock(path):
-                merged.write.mode("overwrite").parquet(path)
-                check_and_bump_versions(path, keys)
-                # full overwrite deletes old files
-                _record_snapshot(
-                    path, batch_id=snapshot_batch_id, schema=merged.schema
-                )
-    finally:
-        release_checkpoint(merged)
 
 
 def delete_where(
